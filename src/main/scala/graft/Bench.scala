@@ -54,7 +54,7 @@ object Bench {
 
   /** Shuffle files on tmpfs when available: the scaling runs measure the
     * engine, not the sandbox's virtual disk. */
-  private val localDir: String = {
+  private lazy val localDir: String = {
     val shm = new java.io.File("/dev/shm/spark-local")
     if (shm.isDirectory || shm.mkdirs()) shm.getAbsolutePath
     else System.getProperty("java.io.tmpdir")
@@ -69,6 +69,26 @@ object Bench {
     val a = f
     (a, (System.nanoTime() - t0) / 1e9)
   }
+
+  /** Best-of-2 wall seconds per query (second run skipped above 10 s to
+    * bound the section): the per-round regression gate diffs these
+    * numbers, and r4's "streaming 2x regression" turned out to be a
+    * single-shot window artifact — a same-window jar A/B showed the r4 jar
+    * at or under r3's times. A query that throws is a failure, never a
+    * time: its name lands in the second list, not among the timings. */
+  private[graft] def timeQueries(queries: Seq[(String, () => Long)])
+      : (Seq[(String, Double)], Seq[String]) =
+    queries.partitionMap { case (name, run) =>
+      progress(s"query $name")
+      try {
+        val (_, s1) = time(run())
+        Left(name -> (if (s1 < 10.0) math.min(s1, time(run())._2) else s1))
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          progress(s"query $name FAILED: $e")
+          Right(name)
+      }
+    }
 
   private def codeDf(spark: SparkSession, rows: Long, parts: Int): DataFrame =
     CodeTableGen.generate(spark, rows, parts).toDF()
@@ -262,34 +282,20 @@ object Bench {
     progress(f"parquet bytes plain=$plainFileBytes auto=$autoFileBytes " +
       f"(${autoFileBytes.toDouble / plainFileBytes}%.4f)")
 
-    // best-of-2 per query (second run skipped above 10 s to bound the
-    // section): the per-round regression gate diffs these numbers, and r4's
-    // "streaming 2x regression" turned out to be a single-shot window
-    // artifact — a same-window jar A/B showed the r4 jar at or under r3's
-    // times. Queries allocate fresh temp dirs per invocation, so reruns
-    // are side-effect-safe.
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      progress(s"query $name")
-      val (_, s1) = time {
-        try { fn(sHi, sfDir).count() } catch { case _: Throwable => -1.0 }
-      }
-      val secs = if (s1 < 10.0) {
-        val (_, s2) = time {
-          try { fn(sHi, sfDir).count() } catch { case _: Throwable => -1.0 }
-        }
-        math.min(s1, s2)
-      } else s1
-      name -> secs
-    }
+    // queries allocate fresh temp dirs per invocation, so reruns are
+    // side-effect-safe
+    val (results, failed) = timeQueries(SparkEntry.queries.toSeq.sortBy(_._1)
+      .map { case (name, fn) => name -> (() => fn(sHi, sfDir).count()) })
     val qJson = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
       .mkString("{", ",", "}")
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val totalQ = results.map(_._2).sum
     sHi.stop()
 
     val effJson = effSamples.map(e => f"$e%.3f").mkString("[", ",", "]")
     val effSatJson = effSatSamples.map(e => f"$e%.3f").mkString("[", ",", "]")
     val json =
-      f"""{"metric":"encode_throughput_gbps","value":$gbpsHi%.4f,"unit":"GB/s","queries":$qJson,"sf":"$sfDir","total_query_sec":$totalQ%.2f,"bench_rows":$benchRows,"raw_gb":${rawHi / 1e9}%.3f,"encode_gbps_p$tinyCpus":$gbpsTiny%.4f,"encode_gbps_p$smallCpus":$gbpsLo%.4f,"encode_gbps_p$cpus":$gbpsHi%.4f,"encode_sec_p$tinyCpus":$secsTiny%.2f,"encode_sec_p$smallCpus":$secsLo%.2f,"encode_sec_p$cpus":$secsHi%.2f,"scaling_efficiency":$scalingEff%.3f,"scaling_samples_p${tinyCpus}_p$smallCpus":$effJson,"scaling_efficiency_p${smallCpus}_p$cpus":$scalingEffSaturated%.3f,"scaling_samples_p${smallCpus}_p$cpus":$effSatJson,"compression_ratio":${encHi.toDouble / rawHi}%.4f,"ref_policy_ratio":${refLo.toDouble / rawLo}%.4f,"decode_gbps":$decGbps%.4f,"scan_gbps":$scanGbps%.4f,"scan_gbps_spark_native":$scanSparkGbps%.4f,"parquet_plain_bytes":$plainFileBytes,"parquet_auto_bytes":$autoFileBytes,"parquet_auto_vs_plain":${autoFileBytes.toDouble / plainFileBytes}%.4f}"""
+      f"""{"metric":"encode_throughput_gbps","value":$gbpsHi%.4f,"unit":"GB/s","queries":$qJson,"failed":$failedJson,"sf":"$sfDir","total_query_sec":$totalQ%.2f,"bench_rows":$benchRows,"raw_gb":${rawHi / 1e9}%.3f,"encode_gbps_p$tinyCpus":$gbpsTiny%.4f,"encode_gbps_p$smallCpus":$gbpsLo%.4f,"encode_gbps_p$cpus":$gbpsHi%.4f,"encode_sec_p$tinyCpus":$secsTiny%.2f,"encode_sec_p$smallCpus":$secsLo%.2f,"encode_sec_p$cpus":$secsHi%.2f,"scaling_efficiency":$scalingEff%.3f,"scaling_samples_p${tinyCpus}_p$smallCpus":$effJson,"scaling_efficiency_p${smallCpus}_p$cpus":$scalingEffSaturated%.3f,"scaling_samples_p${smallCpus}_p$cpus":$effSatJson,"compression_ratio":${encHi.toDouble / rawHi}%.4f,"ref_policy_ratio":${refLo.toDouble / rawLo}%.4f,"decode_gbps":$decGbps%.4f,"scan_gbps":$scanGbps%.4f,"scan_gbps_spark_native":$scanSparkGbps%.4f,"parquet_plain_bytes":$plainFileBytes,"parquet_auto_bytes":$autoFileBytes,"parquet_auto_vs_plain":${autoFileBytes.toDouble / plainFileBytes}%.4f}"""
     println(json)
     // Survive any invocation style (sbt log prefixes, stdout capture bugs):
     // the same line lands in BENCH_RESULT.json in the working directory.
@@ -298,5 +304,6 @@ object Bench {
     catch { case e: Throwable =>
       System.err.println(s"[bench] BENCH_RESULT.json write failed: $e")
     }
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

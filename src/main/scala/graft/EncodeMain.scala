@@ -33,7 +33,8 @@ import graft.operators.{ChunkRow, DecodeJob, EncodeJob, Verifier}
   *   [--no-resume]               full re-encode (default resumes from the
   *                               outDir/lineage checkpoint; every completed
   *                               TASK is durable, so a crash loses only
-  *                               in-flight partitions)
+  *                               in-flight partitions — a killed
+  *                               --no-resume run resumes the same way)
   *   [--verify k1,k2,...]        decode chunks back and compare per-row
   *                               sha256 of every non-key column against the
   *                               input, joined on the (unique) key columns;
@@ -41,7 +42,7 @@ import graft.operators.{ChunkRow, DecodeJob, EncodeJob, Verifier}
   * }}}
   *
   * One run per `outDir` at a time: the startup sweep deletes stale
-  * `.inprogress` staging files on the assumption that no other attempt is
+  * staging files on the assumption that no other attempt is
   * alive (a second concurrent run would sweep the first's in-flight
   * stages — its tasks then fail fast on the missing stage file rather
   * than corrupt anything, but the pair of runs wastes work; serialize
@@ -182,25 +183,18 @@ object EncodeMain {
     }
 
     val t0 = System.nanoTime()
-    if (resume) {
-      EncodeJob.encodeResumable(df, outDir, partitions, pKeys, sKeys,
-        blockCodec = blockCodec)
-    } else {
-      // the destructive overwrite invalidates any routing marker from an
-      // earlier resumable run, so delete it BEFORE the first write starts:
-      // a driver kill mid-overwrite then leaves old lineage WITHOUT a
-      // marker, which the resumable path refuses (no-marker guard) instead
-      // of matching the stale marker against a half-rewritten chunks dir
-      // and declaring it complete
+    if (!resume) {
+      // delete the routing marker BEFORE clearing: a kill mid-clear then
+      // leaves leftover lineage WITHOUT a marker, which the resumable path
+      // refuses (no-marker guard) instead of matching the stale marker
+      // against a half-cleared checkpoint. Chunks go before lineage for
+      // the same reason.
       graft.sources.GraftIO.forPath(outDir).delete(s"$outDir/_encode_meta")
-      EncodeJob.encode(df, partitions, pKeys, sKeys, blockCodec = blockCodec)
-        .write.mode("overwrite").parquet(s"$outDir/chunks")
-      EncodeJob.lineage(spark.read.parquet(s"$outDir/chunks").as[ChunkRow])
-        .write.mode("overwrite").parquet(s"$outDir/lineage")
-      // marker LAST, only once chunks+lineage are both fully committed
-      EncodeJob.writeRoutingMarker(outDir, EncodeJob.routingMeta(
-        partitions, pKeys, sKeys, blockCodec, df.schema.fieldNames.toSeq))
+      graft.sources.TaskCommit.clear(s"$outDir/chunks")
+      graft.sources.TaskCommit.clear(s"$outDir/lineage")
     }
+    EncodeJob.encodeResumable(df, outDir, partitions, pKeys, sKeys,
+      blockCodec = blockCodec)
     val secs = (System.nanoTime() - t0) / 1e9
 
     val lin = spark.read.parquet(s"$outDir/lineage")

@@ -335,49 +335,38 @@ object EncodeJob {
   }
 
   /** Checkpoint-resumable encode: chunks + lineage land under `outDir`; a
-    * re-run after partial failure reads the lineage table and skips
-    * partitions whose every column already has a manifest.
+    * re-run after partial failure skips partitions that have a lineage
+    * sidecar.
     *
-    * Every completed TASK is a durable checkpoint: each task streams its
-    * partition's ChunkRows into `chunks/part-<partId>.parquet` through the
-    * engine's own parquet writer (staged under a dot-prefixed
-    * attempt-unique name, atomically renamed on completion), then commits
+    * Runs on [[graft.sources.TaskCommit.runResumable]]: each task streams
+    * its partition's ChunkRows into `chunks/part-<partId>.parquet` through
+    * the engine's own parquet writer, then commits
     * `lineage/part-<partId>.parquet` — a per-partition sidecar with the
     * same rows [[lineage]] computes. Spark's output committer only
     * publishes a job's files at job END, so routing this through
     * `DataFrame.write` would lose the WHOLE run to a mid-run driver kill;
     * with per-task commits a kill loses only the tasks in flight, and the
     * next invocation — via the pre-shuffle target-partition filter in
-    * [[encode]] — re-shuffles only the missing partitions' rows.
-    * Deterministic file names + atomic REPLACE rename make retries and
-    * crash-between-renames idempotent (a partition with a chunk file but
-    * no lineage sidecar re-encodes in place, never duplicates). */
+    * [[encode]] — re-shuffles only the missing partitions' rows. Around
+    * the driver, this method pins the routing config in `_encode_meta` and
+    * marks zero-row partitions done. */
   def encodeResumable(df: DataFrame, outDir: String, numPartitions: Int,
       partitionKeys: Seq[String], sortKeys: Seq[String],
       blockCodec: Int = BlockCodec.None): Unit = {
+    import graft.sources.{GraftIO, TaskCommit}
     val spark = df.sparkSession
-    import spark.implicits._
-    val nCols = df.schema.fields.length
-    val io = graft.sources.GraftIO.forPath(outDir)
-    io.mkdirs(s"$outDir/chunks")
-    io.mkdirs(s"$outDir/lineage")
-    // sweep staging orphans from killed attempts (dot-prefixed, invisible
-    // to scans but real disk): this run's tasks stage under fresh attempt
-    // ids, so anything .inprogress now is dead. outDir itself is included
-    // because the routing marker stages `._encode_meta.inprogress` there —
-    // a crash between its create and rename would otherwise orphan it
-    Seq(outDir, s"$outDir/chunks", s"$outDir/lineage").foreach { d =>
-      io.list(d).foreach { e =>
-        if (e.name.startsWith(".") && e.name.endsWith(".inprogress"))
-          io.delete(s"$d/${e.name}")
-      }
-    }
+    val io = GraftIO.forPath(outDir)
+    val chunksDir = s"$outDir/chunks"
+    val lineageDir = s"$outDir/lineage"
+    io.mkdirs(outDir)
+    // the routing marker stages in outDir itself
+    TaskCommit.sweep(outDir)
     // fail fast on a checkpoint dir from the pre-task-durable layout
     // (Hive `partId=N/` subdirectories): mixing flat task-committed files
     // into it would break partition discovery and double-count lineage
-    require(!io.list(s"$outDir/chunks").exists(e =>
+    require(!io.list(chunksDir).exists(e =>
         e.isDir && e.name.startsWith("partId=")),
-      s"$outDir/chunks uses the legacy partId=N layout — re-encode into " +
+      s"$chunksDir uses the legacy partId=N layout — re-encode into " +
         "a fresh directory (task-durable resume writes flat part files)")
     // the resume contract is "same job, same routing": a different
     // numPartitions (or partition/sort keys) re-routes every row, so
@@ -401,7 +390,7 @@ object EncodeJob {
       // run's config as the checkpoint's truth with no way to know it
       // matches — the silent-mask bug with extra steps — so refuse and
       // tell the user how to assert the original settings themselves.
-      require(!io.list(s"$outDir/lineage").exists(e =>
+      require(!io.list(lineageDir).exists(e =>
           !e.isDir && e.name.startsWith("part-") && e.name.endsWith(".parquet")),
         s"$outDir has lineage rows but no _encode_meta routing marker " +
           "(checkpoint predates the marker, or it was deleted). If this " +
@@ -410,66 +399,27 @@ object EncodeJob {
           "into a fresh outDir")
       writeRoutingMarker(outDir, metaNow)
     }
-    val done: Set[Int] = lineageReadOrEmpty(io, outDir) {
-      spark.read.parquet(s"$outDir/lineage")
-        .groupBy($"partId").agg(countDistinct($"column").as("n"))
-        .where($"n" === nCols)
-        .select($"partId").as[Int].collect().toSet
-    }
-    val chunks = encode(df, numPartitions, partitionKeys, sortKeys,
-      skipPartitions = done, blockCodec = blockCodec)
-    val chunkSchema = Encoders.product[ChunkRow].schema
-    val lineageSchema = Encoders.product[LineageRow].schema
-    chunks.foreachPartition { (it: Iterator[ChunkRow]) =>
-      if (it.hasNext) writeTaskCheckpoint(outDir, chunkSchema, lineageSchema, it)
-    }
+    TaskCommit.runResumable[ChunkRow, LineageRow](spark, chunksDir, lineageDir)(
+      done => encode(df, numPartitions, partitionKeys, sortKeys,
+        skipPartitions = done, blockCodec = blockCodec).rdd)(
+      (_, it, stage) => writeChunkFile(it, stage))
     // the job completed, so any partition still without a sidecar received
     // zero rows (hash gaps — e.g. few distinct (keys, salt) combinations).
     // Mark them done with numChunks=0 rows, otherwise they stay pending
     // forever and every no-op rerun re-scans the input instead of hitting
-    // the where(lit(false)) fast path.
+    // the where(lit(false)) fast path. Covered partIds come from lineage
+    // CONTENT, not filenames: any valid sidecar regardless of name means
+    // the partition is accounted for.
     if (numPartitions > 0) {
-      // covered partIds come from lineage CONTENT, not filenames: a dir
-      // whose lineage was written by the non-resumable path carries
-      // Spark-committer names (part-00000-<uuid>....parquet) that a
-      // filename parse would crash on, and any valid sidecar regardless
-      // of name means the partition is accounted for
-      val have: Set[Int] = lineageReadOrEmpty(io, outDir) {
-        spark.read.parquet(s"$outDir/lineage")
-          .select($"partId").distinct().as[Int].collect().toSet
-      }
-      val columns = df.schema.fieldNames
+      val have = TaskCommit.lineageReadOrEmpty(spark, lineageDir)
+      val lineageSchema = Encoders.product[LineageRow].schema
       (0 until numPartitions).filterNot(have).foreach { pid =>
-        val lstage = f"$outDir/lineage/.part-$pid%05d.parquet.driver.inprogress"
-        val lpath = f"$outDir/lineage/part-$pid%05d.parquet"
-        val lw = new graft.sources.ParquetFileWriter.IncrementalFileWriter(
-          lstage, lineageSchema, codec = graft.sources.PqCodec.Zstd)
-        columns.foreach { c =>
-          lw.addRow(org.apache.spark.sql.Row(pid, c, "", 0L, 0L, 0L, 0L, 0L, ""))
-        }
-        lw.close()
-        io.rename(lstage, lpath)
+        TaskCommit.writeSidecar(TaskCommit.partPath(lineageDir, pid),
+          lineageSchema, df.schema.fieldNames.toSeq.map(c =>
+            LineageRow(pid, c, "", 0L, 0L, 0L, 0L, 0L, "")))
       }
     }
   }
-
-  /** Run a lineage-checkpoint read, treating a failure as "no coverage"
-    * ONLY when a directory listing confirms no lineage data file exists.
-    * Both callers act destructively on an empty answer — `done = empty`
-    * re-encodes everything, and the gap-marker pass REPLACE_EXISTING-renames
-    * zero-row sidecars over every partition it believes uncovered — so a
-    * TRANSIENT read failure with real sidecars on disk must propagate, not
-    * silently erase the checkpoint's manifest metadata. */
-  private def lineageReadOrEmpty(io: graft.sources.GraftIO, outDir: String)(
-      read: => Set[Int]): Set[Int] =
-    try read
-    catch {
-      case scala.util.control.NonFatal(e) =>
-        val hasData = io.list(s"$outDir/lineage").exists(en =>
-          !en.isDir && !en.name.startsWith(".") && !en.name.startsWith("_"))
-        if (hasData) throw e
-        Set.empty
-    }
 
   /** Canonical routing-config line pinned in a checkpoint's `_encode_meta`
     * marker. The column set is included because the salt hashes every
@@ -482,38 +432,30 @@ object EncodeJob {
       s" sortKeys=${sortKeys.mkString(",")} blockCodec=$blockCodec" +
       s" columns=${columns.mkString(",")}"
 
-  /** Write (or overwrite) a checkpoint's routing marker via the same
-    * stage-and-rename protocol as every other commit in this file: a crash
-    * mid-write must not leave a truncated marker that blocks all future
-    * resumes of an otherwise healthy checkpoint. */
-  private[graft] def writeRoutingMarker(outDir: String, meta: String): Unit = {
-    val io = graft.sources.GraftIO.forPath(outDir)
-    val stage = s"$outDir/._encode_meta.inprogress"
-    val out = io.create(stage)
-    try out.write(meta.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    io.rename(stage, s"$outDir/_encode_meta")
-  }
+  /** Write (or overwrite) a checkpoint's routing marker through the commit
+    * protocol: a crash mid-write must not leave a truncated marker that
+    * blocks all future resumes of an otherwise healthy checkpoint. */
+  private[graft] def writeRoutingMarker(outDir: String, meta: String): Unit =
+    graft.sources.TaskCommit.write(s"$outDir/_encode_meta") { stage =>
+      val out = graft.sources.GraftIO.forPath(stage).create(stage)
+      try out.write(meta.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+    }
 
-  /** One task's durable checkpoint: stream the partition's chunks into a
-    * deterministic-named parquet file, then commit its lineage sidecar.
-    * Both are staged under attempt-unique dot names (invisible to scans,
-    * safe under speculative duplicate attempts) and atomically renamed —
-    * the sidecar LAST, so a lineage row never exists without its data. */
-  private def writeTaskCheckpoint(outDir: String, chunkSchema: StructType,
-      lineageSchema: StructType, it: Iterator[ChunkRow]): Unit = {
-    import graft.sources.{GraftIO, ParquetFileWriter}
-    val first = it.next()
-    val pid = first.partId
-    val attempt = Option(TaskContext.get()).map(_.taskAttemptId()).getOrElse(0L)
-    val io = GraftIO.forPath(outDir)
-    val path = f"$outDir/chunks/part-$pid%05d.parquet"
-    val stage = f"$outDir/chunks/.part-$pid%05d.parquet.$attempt.inprogress"
+  private lazy val chunkSchema = Encoders.product[ChunkRow].schema
+
+  /** One partition's chunk file, the per-partition writer of every chunk
+    * table: stream its chunks into `stage` and return its lineage rows,
+    * byte-equal to [[lineage]]'s: codecs = sorted distinct joined '+',
+    * manifest = sha256 hex of the chunk sha256 hex strings joined ',' in
+    * chunkIdx order. */
+  private[graft] def writeChunkFile(it: Iterator[ChunkRow],
+      stage: String): Seq[LineageRow] = {
     // zstd-1 pages: 23% smaller than snappy on chunk blobs (the
     // lightweight encodings leave entropy slack) at equal write speed,
     // measured warm at local[32] on the 21 GB table
-    val w = new ParquetFileWriter.IncrementalFileWriter(stage, chunkSchema,
-      codec = graft.sources.PqCodec.Zstd)
+    val w = new graft.sources.ParquetFileWriter.IncrementalFileWriter(stage,
+      chunkSchema, codec = graft.sources.PqCodec.Zstd)
     // per-column lineage accumulation, mirroring lineage()'s aggregation
     final class Acc {
       val codecs = scala.collection.mutable.Set.empty[String]
@@ -522,9 +464,9 @@ object EncodeJob {
       var outputBytes = 0L; var refPolicyBytes = 0L
     }
     val accs = scala.collection.mutable.LinkedHashMap.empty[String, Acc]
-    var c = first
-    var more = true
-    while (more) {
+    var partId = -1
+    it.foreach { c =>
+      partId = c.partId
       w.addRow(org.apache.spark.sql.Row(c.partId, c.chunkIdx, c.colIdx,
         c.column, c.physicalType, c.codec, c.numValues, c.numNulls,
         c.rawBytes, c.encodedBytes, c.refPolicyBytes, c.dictEntries,
@@ -536,29 +478,16 @@ object EncodeJob {
       a.inputBytes += c.rawBytes
       a.outputBytes += c.encodedBytes
       a.refPolicyBytes += c.refPolicyBytes
-      if (it.hasNext) c = it.next() else more = false
     }
     w.close()
-    io.rename(stage, path)
-    // sidecar rows must be byte-equal to lineage()'s: codecs = sorted
-    // distinct joined '+', manifest = sha256 hex of the chunk sha256 hex
-    // strings joined ',' in chunkIdx order
-    val lstage = f"$outDir/lineage/.part-$pid%05d.parquet.$attempt.inprogress"
-    val lpath = f"$outDir/lineage/part-$pid%05d.parquet"
-    val lw = new ParquetFileWriter.IncrementalFileWriter(lstage, lineageSchema,
-      codec = graft.sources.PqCodec.Zstd)
-    accs.foreach { case (column, a) =>
-      val manifest = {
-        val joined = a.shas.sortBy(_._1).map(_._2).mkString(",")
-        BitUtil.hexLower(java.security.MessageDigest.getInstance("SHA-256")
-          .digest(joined.getBytes("UTF-8")))
-      }
-      lw.addRow(org.apache.spark.sql.Row(pid, column,
-        a.codecs.toSeq.sorted.mkString("+"), a.shas.length.toLong,
-        a.numValues, a.inputBytes, a.outputBytes, a.refPolicyBytes, manifest))
+    accs.toSeq.map { case (column, a) =>
+      val joined = a.shas.sortBy(_._1).map(_._2).mkString(",")
+      val manifest = BitUtil.hexLower(java.security.MessageDigest
+        .getInstance("SHA-256").digest(joined.getBytes("UTF-8")))
+      LineageRow(partId, column, a.codecs.toSeq.sorted.mkString("+"),
+        a.shas.length.toLong, a.numValues, a.inputBytes, a.outputBytes,
+        a.refPolicyBytes, manifest)
     }
-    lw.close()
-    io.rename(lstage, lpath)
   }
 }
 

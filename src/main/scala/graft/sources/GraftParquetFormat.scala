@@ -202,25 +202,19 @@ final class GraftBatchWrite(dir: String, schema: StructType,
     new GraftWriterFactory(dir, schema, codec, pageVersion, rowGroupRows,
       bloomCols, encPolicy, props)
   }
-  // Task output is staged under a dot-prefixed name (invisible to every
-  // scan listing, ours and Spark's) and renamed to its final name only at
-  // task commit — Spark's commit coordinator guarantees a single winning
-  // attempt, so a lost executor or mid-write crash can leave only ignored
-  // `.…inprogress` garbage, never a duplicate or truncated `.parquet`.
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    // job-level sweep of staging leftovers from failed/zombie attempts
-    val io = GraftIO.forPath(dir)
-    io.list(dir).filter(e => !e.isDir && e.name.endsWith(".inprogress"))
-      .foreach(e => io.delete(e.path))
-  }
+  // Task output is published through [[TaskCommit]] only at task commit —
+  // Spark's commit coordinator guarantees a single winning attempt, so a
+  // lost executor or mid-write crash leaves only staging garbage (swept
+  // here), never a duplicate or truncated `.parquet`.
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    TaskCommit.sweep(dir)
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     val io = GraftIO.forPath(dir)
     messages.foreach {
       case GraftCommit(p, _) => io.delete(p)
       case _ => ()
     }
-    io.list(dir).filter(e => !e.isDir && e.name.endsWith(".inprogress"))
-      .foreach(e => io.delete(e.path))
+    TaskCommit.sweep(dir)
   }
 }
 
@@ -245,8 +239,8 @@ final class GraftDataWriter(dir: String, fileName: String,
     bloomCols: Set[String] = Set.empty,
     encPolicy: Int = EncPolicy.Plain,
     props: WriterProps = WriterProps.empty) extends DataWriter[InternalRow] {
-  private val stagePath = s"$dir/.$fileName.inprogress"
   private val finalPath = s"$dir/$fileName"
+  private val stagePath = TaskCommit.stagePath(finalPath)
   private val w = new ParquetFileWriter.IncrementalFileWriter(stagePath,
     schema, rowGroupRows, codec, pageVersion, bloomCols,
     encPolicy = encPolicy, props = props)
@@ -256,7 +250,7 @@ final class GraftDataWriter(dir: String, fileName: String,
   override def write(r: InternalRow): Unit = w.add(r)
   override def commit(): WriterCommitMessage = {
     val rows = w.close()
-    GraftIO.forPath(dir).rename(stagePath, finalPath)
+    TaskCommit.publish(finalPath)
     GraftCommit(finalPath, rows)
   }
   override def abort(): Unit = {

@@ -89,12 +89,13 @@ object ParquetFileReader {
     * filesystem fileKey/inode, so a same-size in-place rewrite within the
     * mtime granularity still misses). An in-place data-region corruption
     * (tests do this) safely hits since the footer region is unchanged.
-    * Bounded; cleared wholesale on overflow (footers are KBs — the bound
-    * exists for pathological many-file churn, not memory pressure in
-    * normal use). */
+    * Bounded; a miss on a full cache evicts one entry (footers are KBs —
+    * the bound exists for pathological many-file churn, not memory
+    * pressure in normal use). */
   private val footerCache =
     new java.util.concurrent.ConcurrentHashMap[AnyRef, PqFileMeta]()
   private val FooterCacheMax = 8192
+  private[graft] def footerCacheSize: Int = footerCache.size
 
   /** Footer metadata alone, reading only the file tail (8-byte trailer →
     * footer region) — planning-time metadata access must stay O(footer)
@@ -105,7 +106,10 @@ object ParquetFileReader {
     val hit = footerCache.get(key)
     if (hit != null) return hit
     val meta = readFooterUncached(path)
-    if (footerCache.size >= FooterCacheMax) footerCache.clear()
+    if (footerCache.size >= FooterCacheMax) {
+      val keys = footerCache.keys()
+      if (keys.hasMoreElements) footerCache.remove(keys.nextElement())
+    }
     footerCache.put(key, meta)
     meta
   }

@@ -1043,24 +1043,6 @@ object ChunkCodecSupport {
   * identical). Returns one (path, rows) row per written file. */
 object ParquetSink {
 
-  /** Task attempt id for stage-file uniqueness (0 outside a task, e.g.
-    * driver-side test calls). */
-  private def taskAttempt(): Long =
-    Option(TaskContext.get()).map(_.taskAttemptId()).getOrElse(0L)
-
-  /** Delete `.…inprogress` staging orphans left by killed attempts of a
-    * PREVIOUS run (this run's attempts stage under fresh attempt ids, so
-    * anything present at start is dead). Dot-prefixed names are invisible
-    * to scans either way — this reclaims the disk. Single-writer-per-dir,
-    * like every resume path here. */
-  private def sweepStaging(dir: String): Unit = {
-    val io = GraftIO.forPath(dir)
-    io.list(dir).foreach { e =>
-      if (!e.isDir && e.name.startsWith(".") && e.name.endsWith(".inprogress"))
-        io.delete(s"$dir/${e.name}")
-    }
-  }
-
   def write(df: DataFrame, dir: String, codec: Int = PqCodec.Snappy,
       rowGroupRows: Int = 1 << 16, pageVersion: Int = 1,
       bloomCols: Seq[String] = Nil,
@@ -1074,27 +1056,20 @@ object ParquetSink {
     val schema = df.schema
     val blooms = bloomCols.toSet
     GraftIO.forPath(dir).mkdirs(dir)
-    sweepStaging(dir)
+    TaskCommit.sweep(dir)
     // catalyst rows straight into the writer — no per-row external
     // conversion (same hot-loop shape as the DSv2 DataWriter)
     val rdd = df.queryExecution.toRdd.mapPartitions { it =>
       if (!it.hasNext) Iterator.empty
       else {
-        val pid = TaskContext.getPartitionId()
-        val path = f"$dir/part-$pid%05d.parquet"
-        // staged dot-file renamed on completion (same protocol as the
-        // DSv2/partitioned/resumable sinks): a task killed mid-write
-        // leaves no truncated .parquet; a retry renames onto the same
-        // deterministic final name, so retries are idempotent. The
-        // attempt id keeps speculative/duplicate attempts from
-        // interleaving writes into one stage file.
-        val stage = f"$dir/.part-$pid%05d.parquet.${taskAttempt()}%d.inprogress"
-        val w = new ParquetFileWriter.IncrementalFileWriter(stage, schema,
-          rowGroupRows, codec, pageVersion, blooms, encPolicy = encPolicy,
-          int96Timestamps = int96Timestamps, props = props)
-        it.foreach(w.add)
-        val n = w.close()
-        GraftIO.forPath(dir).rename(stage, path)
+        val path = TaskCommit.partPath(dir, TaskContext.getPartitionId())
+        val n = TaskCommit.write(path) { stage =>
+          val w = new ParquetFileWriter.IncrementalFileWriter(stage, schema,
+            rowGroupRows, codec, pageVersion, blooms, encPolicy = encPolicy,
+            int96Timestamps = int96Timestamps, props = props)
+          it.foreach(w.add)
+          w.close()
+        }
         Iterator((path, n))
       }
     }
@@ -1108,64 +1083,42 @@ object ParquetSink {
       fileBytes: Long, fileSha256: String, column: String, codecs: String,
       uncompressedBytes: Long, compressedBytes: Long, values: Long)
 
-  /** Resumable distributed write — the file-sink sibling of
-    * `EncodeJob.encodeResumable`: a lineage table under `dir/_lineage`
-    * records every COMPLETED partition (per column: encodings, bytes,
-    * values; per file: sha256 manifest); re-running over the same
-    * deterministic input skips completed partitions entirely and writes
-    * only the missing ones. Files stage under attempt-unique dot names
-    * and rename atomically onto the deterministic final name, so task
-    * retries and speculative duplicates are idempotent; lineage rows only
-    * commit when the Spark job commits, so a killed job simply rewrites
-    * its unrecorded partitions on resume (staging orphans from killed
-    * attempts are swept at the next start). */
+  /** Resumable distributed write — a thin caller of
+    * [[TaskCommit.runResumable]], like `EncodeJob.encodeResumable`: a
+    * lineage table under `dir/_lineage` records every COMPLETED partition
+    * (per column: encodings, bytes, values; per file: sha256 manifest);
+    * re-running over the same deterministic input skips completed
+    * partitions entirely and writes only the missing ones. Lineage is
+    * committed per TASK — each task commits its data file, then its
+    * sidecar `_lineage/part-<pid>.parquet` — so a killed job loses only
+    * the partitions in flight. A lineage read that fails while sidecars
+    * exist refuses the run instead of rewriting over the checkpoint.
+    * Returns the full `_lineage` table. */
   def writeResumable(df: DataFrame, dir: String, codec: Int = PqCodec.Snappy,
       rowGroupRows: Int = 1 << 16, pageVersion: Int = 1,
       encPolicy: Int = EncPolicy.Plain,
       props: WriterProps = WriterProps.empty): DataFrame = {
     val spark = df.sparkSession
     if (!props.isEmpty) props.resolveFor(df.schema, codec) // driver-side check
-    GraftIO.forPath(dir).mkdirs(dir)
-    sweepStaging(dir)
     val lineageDir = s"$dir/_lineage"
-    val done: Set[Int] =
-      try spark.read.parquet(lineageDir).select("partId").distinct()
-        .collect().map(_.getInt(0)).toSet
-      catch { case _: Throwable => Set.empty }
     val schema = df.schema
-    val doneB = spark.sparkContext.broadcast(done)
-    implicit val enc: org.apache.spark.sql.Encoder[FileLineageRow] =
-      Encoders.product[FileLineageRow]
-    val lineageRdd = df.queryExecution.toRdd.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
-      if (doneB.value.contains(pid) || !it.hasNext) Iterator.empty
-      else {
-        val path = f"$dir/part-$pid%05d.parquet"
-        // staged dot-file renamed on completion: a mid-write crash leaves
-        // only ignored staging garbage (resume rewrites it — no lineage
-        // row committed), never a truncated .parquet that would fail
-        // concurrent scans of the directory. The attempt id keeps
-        // speculative/retried attempts from interleaving writes into one
-        // stage file; whichever attempt finishes renames to the same
-        // deterministic target (atomic REPLACE — identical content).
-        val stage = f"$dir/.part-$pid%05d.parquet.${taskAttempt()}%d.inprogress"
-        val w = new ParquetFileWriter.IncrementalFileWriter(stage, schema,
-          rowGroupRows, codec, pageVersion, encPolicy = encPolicy,
-          props = props)
-        it.foreach(w.add)
-        val n = w.close()
-        GraftIO.forPath(dir).rename(stage, path)
-        val fileBytes = GraftIO.forPath(path).length(path)
-        val sha = sha256File(path)
-        w.columnLineage.iterator.map { case (c, encs, unc, comp, vals) =>
-          FileLineageRow(pid, path, n, fileBytes, sha, c,
-            encs.map(PqEncoding.name).mkString("+"), unc, comp, vals)
-        }
+    TaskCommit.runResumable[InternalRow, FileLineageRow](spark, dir,
+        lineageDir)(_ => df.queryExecution.toRdd) { (pid, it, stage) =>
+      val w = new ParquetFileWriter.IncrementalFileWriter(stage, schema,
+        rowGroupRows, codec, pageVersion, encPolicy = encPolicy,
+        props = props)
+      it.foreach(w.add)
+      val n = w.close()
+      // the stage holds the final bytes: hash and size it before publish
+      val fileBytes = GraftIO.forPath(stage).length(stage)
+      val sha = sha256File(stage)
+      w.columnLineage.map { case (c, encs, unc, comp, vals) =>
+        FileLineageRow(pid, TaskCommit.partPath(dir, pid), n, fileBytes, sha,
+          c, encs.map(PqEncoding.name).mkString("+"), unc, comp, vals)
       }
     }
-    val lineage = spark.createDataset(lineageRdd)
-    lineage.write.mode("append").parquet(lineageDir)
-    spark.read.parquet(lineageDir)
+    spark.read.schema(Encoders.product[FileLineageRow].schema)
+      .parquet(lineageDir)
   }
 
   private def sha256File(path: String): String = {
@@ -1212,35 +1165,29 @@ object ParquetSink {
       val proj = UnsafeProjection.create(dIdx.map(i =>
         BoundReference(i, allFields(i).dataType, allFields(i).nullable)).toSeq)
       val writers = scala.collection.mutable.LinkedHashMap
-        .empty[Seq[String], (String, String, ParquetFileWriter.IncrementalFileWriter)]
+        .empty[Seq[String], (String, ParquetFileWriter.IncrementalFileWriter)]
       it.foreach { row =>
         val key: Seq[String] = pIdx.indices.map { k =>
           val i = pIdx(k)
           String.valueOf(keyConvs(k)(row.get(i, allFields(i).dataType)))
         }.toSeq
-        val (_, _, w) = writers.getOrElseUpdate(key, {
+        val (_, w) = writers.getOrElseUpdate(key, {
           val sub = partitionCols.zip(key).map { case (k, v) =>
             s"$k=${PartitionPath.escape(v)}"
           }.mkString("/")
           val d = s"$dir/$sub"
           GraftIO.forPath(d).mkdirs(d)
-          val path = f"$d/part-$pid%05d.parquet"
-          // staged dot-file (invisible to scans), renamed once complete —
-          // a task killed mid-write leaves no truncated .parquet behind,
-          // and speculative/duplicate attempts stage under their own
-          // attempt id, then rename onto the same final name
-          val stage = f"$d/.part-$pid%05d.parquet.${taskAttempt()}%d.inprogress"
-          (path, stage, new ParquetFileWriter.IncrementalFileWriter(
-            stage, dataSchema, rowGroupRows, codec, pageVersion,
-            encPolicy = encPolicy))
+          val path = TaskCommit.partPath(d, pid)
+          (path, new ParquetFileWriter.IncrementalFileWriter(
+            TaskCommit.stagePath(path), dataSchema, rowGroupRows, codec,
+            pageVersion, encPolicy = encPolicy))
         })
         // the projection output is reused; the writer copies values out
         w.add(proj(row))
       }
-      writers.valuesIterator.map { case (path, stage, w) =>
+      writers.valuesIterator.map { case (path, w) =>
         val n = w.close()
-        val d = path.take(path.lastIndexOf('/'))
-        GraftIO.forPath(d).rename(stage, path)
+        TaskCommit.publish(path)
         (path, n)
       }
     }

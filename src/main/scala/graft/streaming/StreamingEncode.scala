@@ -3,7 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.EncodeJob
+import graft.operators.{ChunkRow, EncodeJob, LineageRow}
+import graft.sources.TaskCommit
 
 /** Continuous encode: a Structured Streaming sink that runs the chunk
   * pipeline on every micro-batch and appends chunks + lineage under
@@ -66,30 +67,30 @@ object StreamingEncode {
       rowGroupRows: Int = 1 << 16,
       props: graft.sources.WriterProps = graft.sources.WriterProps.empty)
       : Unit = {
-    val dir = new java.io.File(s"$outDir/batch=$batchId")
+    val dir = s"$outDir/batch=$batchId"
     // clear partial output from any failed earlier attempt — a replayed
     // batch must not leave stale part files from a different partitioning
-    if (dir.isDirectory)
-      dir.listFiles().foreach(f => if (f.isFile) f.delete())
-    graft.sources.ParquetSink.write(batch, dir.getPath, codec, rowGroupRows,
+    TaskCommit.clear(dir)
+    graft.sources.ParquetSink.write(batch, dir, codec, rowGroupRows,
       props = props).count()
   }
 
   /** One micro-batch: encode, renumber partitions into the global id
-    * space, write chunks + lineage to batch-scoped (idempotent) paths. */
+    * space, and write chunks + lineage to batch-scoped paths through the
+    * same task-commit driver as the batch encode. A replayed batch clears
+    * and rewrites its own directories, so it never duplicates. */
   def encodeBatch(batch: DataFrame, batchId: Long, outDir: String,
       numPartitions: Int, partitionKeys: Seq[String],
       sortKeys: Seq[String]): Unit = {
-    val spark = batch.sparkSession
-    import spark.implicits._
+    import batch.sparkSession.implicits._
     val base = partIdBase(batchId, numPartitions)
-    val chunks = EncodeJob
-      .encode(batch, numPartitions, partitionKeys, sortKeys)
-      .map(c => c.copy(partId = base + c.partId))
-    chunks.write.mode("overwrite").parquet(s"$outDir/chunks/batch=$batchId")
-    val written = spark.read.parquet(s"$outDir/chunks/batch=$batchId")
-      .as[graft.operators.ChunkRow]
-    EncodeJob.lineage(written).write.mode("overwrite")
-      .parquet(s"$outDir/lineage/batch=$batchId")
+    val chunksDir = s"$outDir/chunks/batch=$batchId"
+    val lineageDir = s"$outDir/lineage/batch=$batchId"
+    Seq(chunksDir, lineageDir).foreach(TaskCommit.clear)
+    TaskCommit.runResumable[ChunkRow, LineageRow](batch.sparkSession,
+        chunksDir, lineageDir)(_ =>
+      EncodeJob.encode(batch, numPartitions, partitionKeys, sortKeys)
+        .map(c => c.copy(partId = base + c.partId)).rdd)(
+      (_, it, stage) => EncodeJob.writeChunkFile(it, stage))
   }
 }

@@ -2422,4 +2422,97 @@ class SparkE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.read.format(GraftParquetFormat.Name).load(dir)
       .agg(org.apache.spark.sql.functions.sum("x")).as[Long].head() == 5050L)
   }
+
+  /** Seeded 4-partition input for the resumable-sink tests; `id` passes
+    * through [[ResumeFault.gate]], the test-side failure switch. */
+  private def faultInput(dir: String) =
+    spark.range(0L, 4000L, 1L, 4).select(
+      ResumeFault.gate(dir)(col("id")).as("id"),
+      (col("id") * 7919L % 1009L).as("k"),
+      sha2(col("id").cast("string"), 256).as("h"))
+
+  private def fileIds(dir: String): Map[String, (Long, String)] =
+    new java.io.File(dir).listFiles().filter(_.isFile).map { f =>
+      val a = java.nio.file.Files.readAttributes(f.toPath,
+        classOf[java.nio.file.attribute.BasicFileAttributes])
+      f.getName -> (a.lastModifiedTime().toMillis, String.valueOf(a.fileKey()))
+    }.toMap
+
+  test("writeResumable refuses an unreadable lineage instead of erasing the checkpoint") {
+    import graft.sources.ParquetSink
+    val dir = java.nio.file.Files.createTempDirectory("graft-wrclin").toString
+    val df = faultInput(dir)
+    ParquetSink.writeResumable(df, dir)
+    val sidecars = new java.io.File(s"$dir/_lineage")
+      .listFiles((_, n) => n.startsWith("part-")).sortBy(_.getName)
+    assert(sidecars.nonEmpty)
+    // corrupt ONE sidecar in place (garbage = unreadable parquet)
+    java.nio.file.Files.write(sidecars.head.toPath, "not a parquet file".getBytes)
+    def snapshot(): Map[String, String] = Seq(dir, s"$dir/_lineage").flatMap { d =>
+      new java.io.File(d).listFiles().filter(_.isFile).map(f =>
+        s"$d/${f.getName}" -> graft.core.BitUtil.hexLower(
+          java.security.MessageDigest.getInstance("SHA-256")
+            .digest(java.nio.file.Files.readAllBytes(f.toPath))))
+    }.toMap
+    val before = snapshot()
+    intercept[Exception] { ParquetSink.writeResumable(df, dir) }
+    // no data file rewritten, no sidecar written over or appended
+    assert(snapshot() == before)
+  }
+
+  test("writeResumable is task-durable: a failed run keeps its finished partitions") {
+    import graft.sources.ParquetSink
+    val dir = java.nio.file.Files.createTempDirectory("graft-wrdur").toString
+    val df = faultInput(dir)
+    ResumeFault.victim = 2
+    try intercept[Exception] { ParquetSink.writeResumable(df, dir) }
+    finally ResumeFault.victim = -1
+    // the three partitions that finished committed their sidecars even
+    // though the job failed
+    val sidecars = new java.io.File(s"$dir/_lineage")
+      .listFiles((_, n) => n.startsWith("part-")).map(_.getName).sorted.toSeq
+    assert(sidecars == Seq("part-00000.parquet", "part-00001.parquet",
+      "part-00003.parquet"))
+    val before = fileIds(dir)
+    assert(before.keySet == Set("part-00000.parquet", "part-00001.parquet",
+      "part-00003.parquet"))
+    // the rerun writes only the missing partition's file
+    val lin = ParquetSink.writeResumable(df, dir)
+    val after = fileIds(dir)
+    assert(after.keySet == before.keySet + "part-00002.parquet")
+    before.foreach { case (n, id) => assert(after(n) == id, s"$n was rewritten") }
+    assert(lin.select("partId").distinct().count() == 4)
+    assert(lin.count() == 4 * 3)
+    assert(spark.read.parquet(dir).count() == 4000L)
+  }
+
+  test("streaming parquet replay clears stale files under a file: URI outDir") {
+    val out = java.nio.file.Files.createTempDirectory("graft-streamuri").toString
+    val stale = new java.io.File(s"$out/batch=0/part-00007.parquet")
+    stale.getParentFile.mkdirs()
+    java.nio.file.Files.write(stale.toPath, "stale".getBytes)
+    val batch = spark.range(0L, 100L, 1L, 2).toDF("x")
+    graft.streaming.StreamingEncode.parquetBatch(batch, 0L, s"file:$out")
+    assert(!stale.exists(), "replay left a stale part file behind")
+    assert(spark.read.parquet(s"$out/batch=0").count() == 100L)
+  }
+}
+
+/** Test-side failure switch for the resumable-sink tests: while `victim`
+  * is a partition id, that partition's task waits (up to 20 s) for every
+  * other partition's lineage sidecar under `dir`, then throws. */
+object ResumeFault {
+  @volatile var victim: Int = -1
+
+  def gate(dir: String) = udf { (id: Long) =>
+    val pid = org.apache.spark.TaskContext.getPartitionId()
+    if (pid == victim) {
+      def othersCommitted = (0 until 4).filter(_ != pid).forall(p =>
+        new java.io.File(f"$dir/_lineage/part-$p%05d.parquet").exists())
+      val deadline = System.nanoTime() + 20000000000L
+      while (!othersCommitted && System.nanoTime() < deadline) Thread.sleep(20)
+      throw new IllegalStateException(s"injected failure in partition $pid")
+    }
+    id
+  }
 }
