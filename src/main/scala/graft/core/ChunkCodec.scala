@@ -650,8 +650,8 @@ object ChunkCodec {
   }
 
   /** Count that will drive an upfront allocation: bound it by the bytes
-    * actually present (same density rule as the parquet-side readers —
-    * ParquetFileIO readTriplets/readColumnVec). RLE/delta streams are
+    * actually present (same density rule as the one Parquet page
+    * decoder, ParquetFileReader.decodeChunk). RLE/delta streams are
     * legitimately denser than 8 values/byte (one run header can cover
     * millions of values), so small claims pass on a 16M absolute ceiling
     * instead (~128 MB transient worst case); a forged multi-GB claim in a

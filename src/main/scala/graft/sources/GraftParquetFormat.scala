@@ -494,15 +494,17 @@ final class GraftAggPartitionReader(path: String, fullSchema: StructType,
             val lc = ParquetFileReader.leafColumns(meta, rg)
               .find(_.path == Seq(col)).get
             val fetch = new ParquetFileReader.ChunkFetcher(path)
-            val t =
+            // the typed decode readColumnVec makes, on the leaf itself so a
+            // legacy repeated top-level field keeps its rep levels
+            val vec =
               try {
                 val (b, l2) = fetch.fetchLeaf(lc)
-                ParquetFileReader.readTriplets(b, l2)
+                ParquetFileReader.decodeChunk(b, l2).values
               } finally fetch.close()
-            val vs: Seq[Long] = t.values.map {
-              case i: Int => i.toLong
-              case l: Long => l
-            }.toSeq
+            val vs: Array[Long] = vec match {
+              case IntVec(is) => is.map(_.toLong)
+              case v => v.asInstanceOf[LongVec].values
+            }
             if (vs.isEmpty) None
             else Some(if (wantMax) vs.max else vs.min)
         }
@@ -781,8 +783,11 @@ final case class GraftFilePartition(path: String, rgs: Seq[Int] = null,
     partValues: Seq[(String, String)] = Nil) extends InputPartition
 
 /** Shared flat-scan core: row-group + page-level pruning resolved into
-  * column-major value batches (nulls inline, strings as raw UTF-8 bytes).
-  * Feeds both the columnar batch reader and the page-pruned row path. */
+  * column-major typed batches — per column the non-null values as a
+  * [[ColVec]] plus def levels, straight from the one page decoder
+  * ([[ParquetFileReader.decodeChunk]]), restricted to the kept row ranges.
+  * Feeds both the columnar batch reader (zero-copy, behind
+  * [[GraftColumnVector]]) and the page-pruned row path (boxed per row). */
 private[sources] object GraftFlatScan {
 
   /** Root group of primitives only — no nesting, no repeated fields. */
@@ -841,16 +846,18 @@ private[sources] object GraftFlatScan {
     } finally in.close()
   }
 
-  /** Projected columns' values for one row group: page statistics of the
-    * filter columns narrow the decoded row ranges; only overlapping pages
-    * of projected chunks are decoded, and only fetched chunks are read
-    * from disk at all. Residual Spark-side filters re-apply afterwards, so
-    * a stat-less page surviving is only a missed skip, never a wrong row. */
+  /** Projected columns' typed values for one row group: page statistics
+    * of the filter columns narrow the decoded row ranges; only overlapping
+    * pages of projected chunks are decoded, and only fetched chunks are
+    * read from disk at all. Per field: (non-null values, def levels or null
+    * — present only for OPTIONAL columns, whose max level is 1), plus the
+    * kept row count. Residual Spark-side filters re-apply afterwards, so a
+    * stat-less page surviving is only a missed skip, never a wrong row. */
   def columnBatch(fetch: ParquetFileReader.ChunkFetcher, meta: PqFileMeta,
       rg: Int, fields: Array[StructField],
       ranges: Map[String, (Long, Long)],
       strRanges: Map[String, (Array[Byte], Array[Byte])]):
-      (Array[IndexedSeq[Any]], Int) = {
+      (Array[(ColVec, Array[Int])], Int) = {
     // fetched (buffer, rebased meta) per column name: a filter column that
     // is also projected reads its byte range once, not twice
     val cache = scala.collection.mutable.Map.empty[String,
@@ -889,21 +896,21 @@ private[sources] object GraftFlatScan {
           colRanges(c, cm, st => ParquetFileReader.byteStatsOverlap(st, lo, hi)))
       }
     }
-    if (keep.isEmpty) return (fields.map(_ => IndexedSeq.empty[Any]), 0)
+    if (keep.isEmpty) return (Array.empty, 0)
     val kept = keep.map(r => r._2 - r._1).sum.toInt
     val byName = ParquetFileReader.flatColumns(meta, rg)
       .map(c => c.name -> c).toMap
-    val whole = keep == Seq((0L, nRows))
+    val rowRanges = if (keep == Seq((0L, nRows))) null else keep
     (fields.map { f =>
       val col = byName(f.name)
       val (b, rcm) = fetched(f.name, col.meta)
-      val rebased = col.copy(meta = rcm)
-      if (whole) ParquetFileReader.readColumn(b, rebased)
-      else ParquetFileReader.readColumnRowRanges(b, rebased, keep)
+      val d = ParquetFileReader.decodeChunk(b,
+        ParquetFileReader.leafOf(col.copy(meta = rcm)), rowRanges)
+      (d.values, d.defs)
     }, kept)
   }
 
-  /** Spark types the columnar fill supports (covers every flat type our
+  /** Spark types [[GraftColumnVector]] serves (covers every flat type our
     * writer emits except decimals). */
   def columnarType(dt: org.apache.spark.sql.types.DataType): Boolean = {
     import org.apache.spark.sql.types._
@@ -941,10 +948,12 @@ final class GraftReaderFactory(schema: StructType,
   }
 }
 
-/** Vectorized scan output: one ColumnarBatch per (pruned) row group,
-  * values filled straight from the decode layer — no external Row, no
-  * per-row converter, and string bytes go into the vector without ever
-  * materializing a java.lang.String. */
+/** Vectorized scan output: one ColumnarBatch per (pruned) row group, with
+  * or without pushed filters. Each projected chunk decodes straight to a
+  * ColVec (only the kept row ranges) and is handed to Spark ZERO-COPY
+  * behind a [[GraftColumnVector]] — no external Row, no per-value boxing,
+  * and string bytes never materialize a java.lang.String. Partition
+  * columns become constant vectors. */
 final class GraftColumnarPartitionReader(path: String, schema: StructType,
     ranges: Map[String, (Long, Long)], limit: Int,
     strRanges: Map[String, (Array[Byte], Array[Byte])],
@@ -953,7 +962,7 @@ final class GraftColumnarPartitionReader(path: String, schema: StructType,
     eqProbes: Seq[(String, Seq[Any])] = Nil)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
   import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.vectorized.ColumnarBatch
+  import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
 
   private val partMap = partValues.toMap
   private val fileFields = schema.fields.filter(f => !partMap.contains(f.name))
@@ -971,23 +980,24 @@ final class GraftColumnarPartitionReader(path: String, schema: StructType,
   override def next(): Boolean = {
     if (batch != null) { batch.close(); batch = null }
     while (rgIt.hasNext && remaining > 0) {
-      val rg = rgIt.next()
       val fetch = new ParquetFileReader.ChunkFetcher(path)
-      val vecsAndRows =
-        try {
-          if (fileRanges.isEmpty && fileStrRanges.isEmpty) typedBatch(fetch, rg)
-          else boxedBatch(fetch, rg)
-        } finally fetch.close()
-      vecsAndRows match {
-        case Some((vecs, n0)) =>
-          val n = math.min(n0, remaining)
-          if (n > 0) {
-            batch = new ColumnarBatch(
-              vecs.toArray[org.apache.spark.sql.vectorized.ColumnVector], n)
-            remaining -= n
-            return true
+      val (cols, n0) =
+        try GraftFlatScan.columnBatch(fetch, meta, rgIt.next(), fileFields,
+          fileRanges, fileStrRanges)
+        finally fetch.close()
+      val n = math.min(n0, remaining)
+      if (n > 0) {
+        var fi = -1
+        batch = new ColumnarBatch(schema.fields.map { f =>
+          if (partMap.contains(f.name)) constVec(f.dataType, partMap(f.name), n)
+          else {
+            fi += 1
+            val (vec, defs) = cols(fi)
+            new GraftColumnVector(f.dataType, vec, defs, 1): ColumnVector
           }
-        case None => ()
+        }, n)
+        remaining -= n
+        return true
       }
     }
     false
@@ -995,96 +1005,13 @@ final class GraftColumnarPartitionReader(path: String, schema: StructType,
 
   /** Constant vector for a partition column (value from the directory). */
   private def constVec(dt: org.apache.spark.sql.types.DataType,
-      raw: String, n: Int): OnHeapColumnVector = {
+      raw: String, n: Int): ColumnVector = {
     val v = new OnHeapColumnVector(n, dt)
     if (dt == LongType) v.putLongs(0, n, raw.toLong)
     else {
       val b = raw.getBytes(java.nio.charset.StandardCharsets.UTF_8)
       var i = 0
       while (i < n) { v.putByteArray(i, b, 0, b.length); i += 1 }
-    }
-    v
-  }
-
-  /** Whole-row-group typed path: each chunk decodes straight to a ColVec
-    * and is handed to Spark ZERO-COPY behind a [[GraftColumnVector]] view —
-    * primitives read from the decode arrays in place, strings are
-    * UTF8String views over the arena bytes. INT96/FLBA chunks fall back to
-    * the boxed fill per column; partition columns become constant vectors. */
-  private def typedBatch(fetch: ParquetFileReader.ChunkFetcher,
-      rg: Int): Option[(Seq[org.apache.spark.sql.vectorized.ColumnVector],
-        Int)] = {
-    val byName = ParquetFileReader.flatColumns(meta, rg)
-      .map(c => c.name -> c).toMap
-    val nRows = meta.rowGroups(rg).numRows.toInt
-    if (nRows <= 0) return None
-    val vecs = schema.fields.map { f =>
-      if (partMap.contains(f.name))
-        constVec(f.dataType, partMap(f.name), nRows):
-          org.apache.spark.sql.vectorized.ColumnVector
-      else {
-        val col = byName(f.name)
-        val (b, rcm) = fetch.fetch(col.meta)
-        val rebased = col.copy(meta = rcm)
-        if (col.typ == PqType.Int96 || col.typ == PqType.FixedLenByteArray) {
-          fill(f.dataType, ParquetFileReader.readColumn(b, rebased), nRows):
-            org.apache.spark.sql.vectorized.ColumnVector
-        } else {
-          val (vec, defs) = ParquetFileReader.readColumnVec(b, rebased)
-          new GraftColumnVector(f.dataType, vec, defs, rebased.maxDef)
-        }
-      }
-    }
-    Some((vecs.toSeq, nRows))
-  }
-
-  private def boxedBatch(fetch: ParquetFileReader.ChunkFetcher,
-      rg: Int): Option[(Seq[org.apache.spark.sql.vectorized.ColumnVector],
-        Int)] = {
-    val (cols, n) = GraftFlatScan.columnBatch(fetch, meta, rg, fileFields,
-      fileRanges, fileStrRanges)
-    if (n == 0) return None
-    var fi = -1
-    Some((schema.fields.map { f =>
-      if (partMap.contains(f.name))
-        constVec(f.dataType, partMap(f.name), n):
-          org.apache.spark.sql.vectorized.ColumnVector
-      else {
-        fi += 1
-        fill(f.dataType, cols(fi), n):
-          org.apache.spark.sql.vectorized.ColumnVector
-      }
-    }.toSeq, n))
-  }
-
-  private def fill(dt: org.apache.spark.sql.types.DataType,
-      vals: IndexedSeq[Any], n: Int): OnHeapColumnVector = {
-    import org.apache.spark.sql.types._
-    val v = new OnHeapColumnVector(n, dt)
-    // type dispatch hoisted out of the per-value loop
-    val put: (Int, Any) => Unit = dt match {
-      case LongType => (i, x) => v.putLong(i, x.asInstanceOf[Long])
-      case IntegerType => (i, x) => v.putInt(i, x.asInstanceOf[Int])
-      case DoubleType => (i, x) => v.putDouble(i, x.asInstanceOf[Double])
-      case FloatType => (i, x) => v.putFloat(i, x.asInstanceOf[Float])
-      case BooleanType => (i, x) => v.putBoolean(i, x.asInstanceOf[Boolean])
-      case StringType | BinaryType => (i, x) => {
-        val b = x.asInstanceOf[Array[Byte]]
-        v.putByteArray(i, b, 0, b.length)
-      }
-      case DateType => (i, x) => v.putInt(i, x.asInstanceOf[Int]) // epoch days
-      case TimestampType => (i, x) => x match { // micros, or raw INT96
-        case l: Long => v.putLong(i, l)
-        case b: Array[Byte] => v.putLong(i, ParquetFileReader.int96ToMicros(b))
-      }
-      case other =>
-        throw new IllegalArgumentException(s"columnar fill: $other")
-    }
-    var i = 0
-    while (i < n) {
-      val x = vals(i)
-      if (x == null) v.putNull(i) else put(i, x)
-      i += 1
     }
     v
   }
@@ -1099,8 +1026,16 @@ final class GraftColumnarPartitionReader(path: String, schema: StructType,
   * columns translate row → value slot through one precomputed int map
   * (values are null-suppressed in the ColVec). */
 final class GraftColumnVector(dt: org.apache.spark.sql.types.DataType,
-    vec: ColVec, defs: Array[Int], maxDef: Int)
+    decoded: ColVec, defs: Array[Int], maxDef: Int)
     extends org.apache.spark.sql.vectorized.ColumnVector(dt) {
+
+  // INT96 timestamps decode as raw 12-byte values: convert to micros once
+  private val vec: ColVec = decoded match {
+    case b: BytesVec if dt == org.apache.spark.sql.types.TimestampType =>
+      LongVec(Array.tabulate(b.length)(i =>
+        ParquetFileReader.int96ToMicros(b.valueBytes(i))))
+    case v => v
+  }
 
   // rowId -> value index (-1 = null); identity when the column has no nulls
   private val valIdx: Array[Int] =
@@ -1257,10 +1192,11 @@ final class GraftPartitionReader(path: String, schema: StructType,
 
   private def pagePrunedRowsFetched(fetch: ParquetFileReader.ChunkFetcher,
       meta: PqFileMeta, rg: Int): Iterator[InternalRow] = {
-    val (fileVals0, n) = GraftFlatScan.columnBatch(fetch, meta, rg,
+    val (cols, n) = GraftFlatScan.columnBatch(fetch, meta, rg,
       fileFields, fileRanges, fileStrRanges)
     if (n == 0) return Iterator.empty
-    val fileVals = fileVals0.zip(fileFields).map { case (vals, f) =>
+    val fileVals = cols.zip(fileFields).map { case ((vec, defs), f) =>
+      val vals = ParquetFileReader.rowValues(vec, defs, 1)
       if (f.dataType == org.apache.spark.sql.types.StringType)
         vals.map(v => if (v == null) null
           else new String(v.asInstanceOf[Array[Byte]],

@@ -1,5 +1,6 @@
 package graft.sources
 
+import scala.collection.immutable.ArraySeq
 import scala.collection.mutable.ArrayBuffer
 
 import graft.core._
@@ -146,11 +147,27 @@ object ParquetFileReader {
     }
   }
 
-  // ------------------------------------------------------- chunk → triplets
+  // ------------------------------------------------------- the page decoder
+  // The ONE Parquet page decoder. A chunk's pages decode into a typed ColVec
+  // (null-suppressed) plus def/rep levels, with no per-value boxing:
+  // primitives land in primitive arrays, byte-like values (BYTE_ARRAY,
+  // INT96, FIXED_LEN_BYTE_ARRAY) in one arena shared across pages. Record
+  // assembly, the row reader, the columnar scan and the aggregate fallback
+  // are views over it ([[readTriplets]], [[readColumn]],
+  // [[readColumnRowRanges]], [[readColumnVec]]), so every chunk and page
+  // guard lives here, once.
 
-  /** Decode one column chunk to raw triplets. Values: null | Boolean | Int |
-    * Long | Float | Double | Array[Byte] (BYTE_ARRAY / INT96 / FLBA raw). */
-  def readTriplets(bytes: Array[Byte], col: LeafColumn): Triplets = {
+  /** One decoded chunk (or its kept rows): non-null values, def levels
+    * (null when maxDef == 0) and rep levels (null when maxRep == 0). */
+  private[sources] final case class DecodedChunk(values: ColVec,
+      defs: Array[Int], reps: Array[Int])
+
+  /** Decode one column chunk. With `ranges` (ascending disjoint chunk-row
+    * intervals, flat columns only) only the data pages overlapping them are
+    * decompressed and decoded, and exactly the rows inside them come back,
+    * in row order. */
+  private[sources] def decodeChunk(bytes: Array[Byte], col: LeafColumn,
+      ranges: Seq[(Long, Long)] = null): DecodedChunk = {
     val cm = col.meta
     // corruption guards: sizes claimed by (possibly corrupted) metadata must
     // stay self-consistent, or we fail cleanly instead of allocating per a
@@ -160,68 +177,123 @@ object ParquetFileReader {
     // delta pages are legitimately denser than any byte-derived bound (one
     // run header can cover millions of values), so small claims pass on an
     // absolute ceiling instead: 16M values caps the transient decode
-    // allocation a hostile claim can force at ~128 MB, and real chunks that
-    // dense at bigger counts are outside what this materializing reader
-    // targets (row groups are 64Ki rows from our writer, <~1M elsewhere).
-    // totalUncompressedSize is itself a FOOTER claim, so it enters the
-    // bound only clamped to a plausible block-codec ratio (256x) of the
-    // bytes actually present — otherwise one forged field re-opens the
-    // huge-claim hole this guard exists to close.
-    require(cm.numValues >= 0 && (cm.numValues <=
-      8L * math.max(bytes.length.toLong,
-        math.min(cm.totalUncompressedSize, 256L * bytes.length)) ||
-      cm.numValues <= (1L << 24)),
-      s"chunk claims ${cm.numValues} values in ${bytes.length} bytes " +
-        s"(uncompressed ${cm.totalUncompressedSize})")
-    var off =
-      if (cm.dictionaryPageOffset >= 0) math.min(cm.dictionaryPageOffset, cm.dataPageOffset)
-      else cm.dataPageOffset
+    // allocation a hostile claim can force at ~128 MB. totalUncompressedSize
+    // is itself a FOOTER claim, so it enters the bound only clamped to a
+    // plausible block-codec ratio (256x) of the bytes actually present.
+    // numValues stays strictly under Int.MaxValue so the +1 sentinel in
+    // offset arrays can never overflow; a large-but-honest
+    // totalUncompressedSize (>2 GB chunk from a big-row-group writer) must
+    // still read — only a negative claim is rejected outright.
+    require(cm.totalUncompressedSize >= 0,
+      s"chunk claims ${cm.totalUncompressedSize} uncompressed bytes")
+    require(cm.numValues >= 0 && cm.numValues <= (Int.MaxValue - 16).toLong &&
+      (cm.numValues <=
+        8L * math.max(bytes.length.toLong,
+          math.min(cm.totalUncompressedSize, 256L * bytes.length)) ||
+        cm.numValues <= (1L << 24)),
+      s"chunk claims ${cm.numValues} values in ${bytes.length} bytes")
+    require(ranges == null || col.maxRep == 0,
+      "row ranges apply to flat columns only")
+    val (dictPage, spans) = pageWalk(bytes, cm)
+    val kept =
+      if (ranges == null) spans
+      else spans.filter(s => ranges.exists(r =>
+        r._1 < s.rowStart + s.header.numValues && r._2 > s.rowStart))
+    val width = byteWidth(col)
+    val dict = dictPage.map(decodeDictPage(bytes, _, col, width)).orNull
+    // byte-like chunks decode into ONE arena across pages (single copy per
+    // value) instead of per-page vectors + a whole-arena concat. The sizes
+    // are capacity HINTS only (both arrays double on demand), taken from
+    // the decoded pages' headers and clamped to the bytes actually read, so
+    // a crafted header cannot force a huge upfront allocation
+    val pageBytes = (dictPage ++ kept).map(_.header.uncompressedSize.toLong).sum
+    val acc: BytesAccum =
+      if (width >= 0)
+        new BytesAccum(
+          math.min(math.min(pageBytes, 64L * bytes.length + 64),
+            (Int.MaxValue - 16).toLong).toInt,
+          math.min(kept.map(_.header.numValues.toLong).sum, 1L << 20).toInt)
+      else null
+    val parts = ArrayBuffer.empty[ColVec]
+    val defParts = if (col.maxDef > 0) ArrayBuffer.empty[Array[Int]] else null
+    val repParts = if (col.maxRep > 0) ArrayBuffer.empty[Array[Int]] else null
+    kept.foreach { s =>
+      val (reps, defs, raw, pos) = dataPage(bytes, s, col)
+      if (reps != null) repParts += reps
+      if (defs != null) defParts += defs
+      val nNonNull =
+        if (defs != null) countMax(defs, col.maxDef) else s.header.numValues
+      if (acc != null)
+        decodeBytesInto(s.header.encoding, col.typ, width, raw, pos, nNonNull,
+          dict, acc)
+      else parts += decodeValuesVec(s.header.encoding, col.typ, width, raw,
+        pos, nNonNull, dict)
+    }
+    val vec =
+      if (acc != null) acc.toVec
+      else if (parts.isEmpty) emptyVec(col.typ, width)
+      else ChunkCodec.concat(parts.toSeq)
+    val out = DecodedChunk(vec, concatLevels(defParts), concatLevels(repParts))
+    if (ranges == null) out else keepRows(out, kept, ranges, col.maxDef)
+  }
+
+  /** Walk a chunk's page headers without decompressing anything: (the
+    * dictionary page, the data pages). This is the only page-header loop,
+    * so every per-page guard lives here. */
+  private def pageWalk(bytes: Array[Byte],
+      cm: PqColumnMeta): (Option[PageSpan], Seq[PageSpan]) = {
+    var off = chunkByteRange(cm)._1
     require(off >= 0 && off < bytes.length, s"page offset $off out of file")
-    var dict: IndexedSeq[Any] = null
-    // capacity HINT only (buffers grow as pages actually decode), capped so
-    // hostile metadata cannot force a huge upfront allocation
-    val sizeHint = math.min(cm.numValues, 1L << 20).toInt
-    val values = new ArrayBuffer[Any](sizeHint)
-    val defs = if (col.maxDef > 0) new ArrayBuffer[Int](sizeHint) else null
-    val reps = if (col.maxRep > 0) new ArrayBuffer[Int](sizeHint) else null
+    var dict: Option[PageSpan] = None
+    var row = 0L
     var remaining = cm.numValues
+    val out = Seq.newBuilder[PageSpan]
     while (remaining > 0) {
       val ph = ParquetMeta.parsePageHeader(bytes, off.toInt)
-      val dataStart = off.toInt + ph.headerLen
+      val dataStart = off + ph.headerLen
       require(ph.compressedSize >= 0 &&
-        dataStart.toLong + ph.compressedSize <= bytes.length,
+        dataStart + ph.compressedSize <= bytes.length,
         s"page claims ${ph.compressedSize} compressed bytes past EOF")
       require(ph.uncompressedSize >= 0 &&
         ph.uncompressedSize <= math.max(1 << 20, 1024L * ph.compressedSize),
         s"page claims implausible uncompressed size ${ph.uncompressedSize}")
-      require(ph.numValues >= 0 && (ph.pageType == 2 ||
-        ph.numValues <= remaining),
-        s"page claims ${ph.numValues} values, chunk has $remaining left")
       ph.pageType match {
-        case 2 => // dictionary page: PLAIN values
-          dict = decodeDictPage(bytes, dataStart, ph, col)
+        case 2 => dict = Some(PageSpan(off.toInt, ph, row))
         case 0 | 3 =>
-          val (vals, dl, rl) = decodeDataPage(bytes, dataStart, ph, col, dict)
-          if (rl != null) reps ++= rl
-          if (dl != null) defs ++= dl
-          values ++= vals
+          require(ph.numValues >= 0 && ph.numValues <= remaining,
+            s"page claims ${ph.numValues} values, chunk has $remaining left")
+          if (ph.pageType == 3) checkV2Lengths(ph, cm.codec)
+          out += PageSpan(off.toInt, ph, row)
+          row += ph.numValues
           remaining -= ph.numValues
         case other => throw new IllegalArgumentException(
           s"page type $other not supported")
       }
       off = dataStart + ph.compressedSize
     }
-    Triplets(values.toIndexedSeq,
-      if (defs != null) defs.toArray else null,
-      if (reps != null) reps.toArray else null,
-      col.maxDef)
+    (dict, out.result())
   }
 
-  /** Verify a page's CRC32 (PageHeader field 4) over the body bytes as
-    * written, when the writer stamped one — corrupted pages fail here with
-    * a clear message instead of obscurely inside a decoder. Pages pruned by
-    * statistics are never read, so they are never checked (same contract as
-    * parquet-mr's verify-checksum mode). */
+  /** A v2 page's level streams sit uncompressed in front of its values:
+    * they must fit the page body, and an uncompressed value region must
+    * really hold the bytes its header claims. */
+  private def checkV2Lengths(ph: PqPageHeader, codec: Int): Unit = {
+    val repLen = ph.repLevelsByteLen
+    val defLen = ph.defLevelsByteLen
+    require(repLen >= 0 && defLen >= 0 &&
+      repLen.toLong + defLen <= ph.compressedSize,
+      s"v2 page level streams (rep $repLen + def $defLen bytes) exceed " +
+        s"its ${ph.compressedSize}-byte body")
+    val vUnc = ph.uncompressedSize.toLong - repLen - defLen
+    require(vUnc >= 0,
+      s"v2 page claims $vUnc uncompressed value bytes after rep $repLen + " +
+        s"def $defLen level bytes")
+    require((ph.isCompressed && codec != PqCodec.Uncompressed) ||
+      vUnc <= ph.compressedSize - repLen - defLen,
+      s"uncompressed v2 page claims $vUnc value bytes, body holds " +
+        s"${ph.compressedSize - repLen - defLen}")
+  }
+
   /** Page-CRC verification mode, settable via the system property
     * `graft.parquet.page.verify-crc`: `all` (default — v1, v2, and dict
     * pages), `v1` (skip DATA_PAGE_V2 — the v2 CRC definition was only
@@ -232,6 +304,11 @@ object ParquetFileReader {
   private def crcMode: String =
     System.getProperty("graft.parquet.page.verify-crc", "all")
 
+  /** Verify a page's CRC32 (PageHeader field 4) over the body bytes as
+    * written, when the writer stamped one — corrupted pages fail here with
+    * a clear message instead of obscurely inside a decoder. Pages pruned by
+    * statistics are never read, so they are never checked (same contract as
+    * parquet-mr's verify-checksum mode). */
   private def checkPageCrc(ph: PqPageHeader, bytes: Array[Byte],
       dataStart: Int): Unit =
     if (ph.crcDefined) {
@@ -247,80 +324,79 @@ object ParquetFileReader {
       }
     }
 
-  private def decodeDictPage(bytes: Array[Byte], dataStart: Int,
-      ph: PqPageHeader, col: LeafColumn): IndexedSeq[Any] = {
+  /** Value width of a byte-like column: 0 for BYTE_ARRAY (variable), 12 for
+    * INT96, type_length for FIXED_LEN_BYTE_ARRAY; -1 for primitives. */
+  private def byteWidth(col: LeafColumn): Int = col.typ match {
+    case PqType.ByteArray => 0
+    case PqType.Int96 => 12
+    case PqType.FixedLenByteArray =>
+      require(col.typeLength > 0, "FIXED_LEN_BYTE_ARRAY needs a type_length")
+      col.typeLength
+    case _ => -1
+  }
+
+  private def decodeDictPage(bytes: Array[Byte], s: PageSpan, col: LeafColumn,
+      width: Int): ColVec = {
+    val ph = s.header
+    val dataStart = s.off + ph.headerLen
     checkPageCrc(ph, bytes, dataStart)
     val raw = decompress(bytes, dataStart, ph.compressedSize,
       ph.uncompressedSize, col.meta.codec)
-    require(ph.numValues <= raw.length, // every dict entry is >= 1 byte
+    require(ph.numValues >= 0 && ph.numValues <= raw.length, // entries >= 1 byte
       s"dict page claims ${ph.numValues} entries in ${raw.length} bytes")
-    decodePlain(col.typ, col.typeLength, raw, 0, raw.length, ph.numValues)
+    decodePlainVec(col.typ, width, raw, 0, raw.length, ph.numValues)
   }
 
-  /** Decode one DATA page (v1 or v2) of `col`: (null-suppressed values,
-    * def levels or null, rep levels or null). Shared by the whole-chunk
-    * [[readTriplets]] loop and the page-pruned flat read. */
-  private def decodeDataPage(bytes: Array[Byte], dataStart: Int,
-      ph: PqPageHeader, col: LeafColumn, dict: IndexedSeq[Any]):
-      (IndexedSeq[Any], Array[Int], Array[Int]) = {
-    val cm = col.meta
+  /** One DATA page (v1 or v2) of `col`: (rep levels or null, def levels or
+    * null, the buffer holding its values, their start in it). */
+  private def dataPage(bytes: Array[Byte], s: PageSpan, col: LeafColumn):
+      (Array[Int], Array[Int], Array[Byte], Int) = {
+    val ph = s.header
+    val codec = col.meta.codec
+    val dataStart = s.off + ph.headerLen
+    val n = ph.numValues
     checkPageCrc(ph, bytes, dataStart)
-    ph.pageType match {
-      case 0 => // data page v1: [rep levels][def levels][values], one region
-        val raw = decompress(bytes, dataStart, ph.compressedSize,
-          ph.uncompressedSize, cm.codec)
-        val n = ph.numValues
-        var pos = 0
-        var reps: Array[Int] = null
-        if (col.maxRep > 0) {
-          val (lv, p2) = readLevelStream(raw, pos, n, col.maxRep, ph.repLevelEncoding)
-          pos = p2
-          reps = lv
-        }
-        if (col.maxDef > 0) {
-          val (lv, p2) = readLevelStream(raw, pos, n, col.maxDef, ph.defLevelEncoding)
-          pos = p2
-          (decodeValues(ph.encoding, col, raw, pos,
-            countMax(lv, col.maxDef), dict), lv, reps)
-        } else {
-          (decodeValues(ph.encoding, col, raw, pos, n, dict), null, reps)
-        }
-      case 3 =>
-        // data page v2 (reference reader.rs:449-533): rep + def level
-        // streams sit UNCOMPRESSED right after the header, RLE with NO
-        // 4-byte length prefix (lengths come from the header); only the
-        // value region is block-compressed (unless is_compressed=false).
-        val n = ph.numValues
-        val repLen = ph.repLevelsByteLen
-        val defLen = ph.defLevelsByteLen
-        var reps: Array[Int] = null
-        if (col.maxRep > 0) {
-          val dec = new RleHybridDecoder(levelBitWidth(col.maxRep), bytes,
-            dataStart, dataStart + repLen)
-          val tmp = new Array[Long](n)
-          dec.get(tmp, 0, n)
-          reps = tmp.map(_.toInt)
-        }
-        var nNonNull = n - ph.numNulls
-        var defs: Array[Int] = null
-        if (col.maxDef > 0) {
-          val dec = new RleHybridDecoder(levelBitWidth(col.maxDef), bytes,
-            dataStart + repLen, dataStart + repLen + defLen)
-          val tmp = new Array[Long](n)
-          dec.get(tmp, 0, n)
-          defs = tmp.map(_.toInt)
-          nNonNull = countMax(defs, col.maxDef)
-        }
-        val vOff = dataStart + repLen + defLen
-        val vUnc = ph.uncompressedSize - repLen - defLen
-        val vraw =
-          if (ph.isCompressed && cm.codec != PqCodec.Uncompressed)
-            decompress(bytes, vOff, ph.compressedSize - repLen - defLen,
-              vUnc, cm.codec)
-          else java.util.Arrays.copyOfRange(bytes, vOff, vOff + vUnc)
-        (decodeValues(ph.encoding, col, vraw, 0, nNonNull, dict), defs, reps)
-      case other => throw new IllegalArgumentException(
-        s"page type $other not supported")
+    if (ph.pageType == 0) {
+      // data page v1: [rep levels][def levels][values], one region
+      val raw = decompress(bytes, dataStart, ph.compressedSize,
+        ph.uncompressedSize, codec)
+      var pos = 0
+      var reps: Array[Int] = null
+      var defs: Array[Int] = null
+      if (col.maxRep > 0) {
+        val (lv, p2) = readLevelStream(raw, pos, n, col.maxRep, ph.repLevelEncoding)
+        reps = lv
+        pos = p2
+      }
+      if (col.maxDef > 0) {
+        val (lv, p2) = readLevelStream(raw, pos, n, col.maxDef, ph.defLevelEncoding)
+        defs = lv
+        pos = p2
+      }
+      (reps, defs, raw, pos)
+    } else {
+      // data page v2 (reference reader.rs:449-533): rep + def level
+      // streams sit UNCOMPRESSED right after the header, RLE with NO
+      // 4-byte length prefix (lengths come from the header, checked by
+      // the page walk); only the value region is block-compressed (unless
+      // is_compressed=false).
+      val repLen = ph.repLevelsByteLen
+      val defLen = ph.defLevelsByteLen
+      val reps =
+        if (col.maxRep > 0) rleLevels(bytes, dataStart, repLen, n, col.maxRep)
+        else null
+      val defs =
+        if (col.maxDef > 0)
+          rleLevels(bytes, dataStart + repLen, defLen, n, col.maxDef)
+        else null
+      val vOff = dataStart + repLen + defLen
+      val vUnc = ph.uncompressedSize - repLen - defLen
+      val raw =
+        if (ph.isCompressed && codec != PqCodec.Uncompressed)
+          decompress(bytes, vOff, ph.compressedSize - repLen - defLen, vUnc,
+            codec)
+        else java.util.Arrays.copyOfRange(bytes, vOff, vOff + vUnc)
+      (reps, defs, raw, 0)
     }
   }
 
@@ -331,50 +407,155 @@ object ParquetFileReader {
     c
   }
 
-  private def decodeValues(encoding: Int, col: LeafColumn, raw: Array[Byte],
-      pos: Int, nNonNull: Int, dict: IndexedSeq[Any]): IndexedSeq[Any] =
+  private def concatLevels(parts: ArrayBuffer[Array[Int]]): Array[Int] =
+    if (parts == null) null
+    else if (parts.size == 1) parts.head
+    else {
+      val out = new Array[Int](parts.map(_.length).sum)
+      var p = 0
+      parts.foreach { a => System.arraycopy(a, 0, out, p, a.length); p += a.length }
+      out
+    }
+
+  /** Restrict a decoded flat chunk to the rows of `ranges`: `kept` are the
+    * decoded pages in order, and their rows outside the ranges drop out. */
+  private def keepRows(d: DecodedChunk, kept: Seq[PageSpan],
+      ranges: Seq[(Long, Long)], maxDef: Int): DecodedChunk = {
+    val slots = Array.newBuilder[Int]
+    var base = 0
+    kept.foreach { s =>
+      val end = s.rowStart + s.header.numValues
+      ranges.foreach { r =>
+        var row = math.max(r._1, s.rowStart)
+        val until = math.min(r._2, end)
+        while (row < until) { slots += base + (row - s.rowStart).toInt; row += 1 }
+      }
+      base += s.header.numValues
+    }
+    val rows = slots.result()
+    if (rows.length == base) d // the kept pages lie wholly inside the ranges
+    else if (d.defs == null)
+      DecodedChunk(ChunkCodecSupport.gather(d.values, rows), null, null)
+    else {
+      // value ordinal of every non-null slot
+      val ord = new Array[Int](d.defs.length)
+      var vi = 0
+      var i = 0
+      while (i < ord.length) {
+        if (d.defs(i) == maxDef) { ord(i) = vi; vi += 1 }
+        i += 1
+      }
+      DecodedChunk(
+        ChunkCodecSupport.gather(d.values,
+          rows.filter(d.defs(_) == maxDef).map(ord)),
+        rows.map(d.defs), null)
+    }
+  }
+
+  private def emptyVec(typ: Int, width: Int): ColVec =
+    decodePlainVec(typ, width, Array.emptyByteArray, 0, 0, 0)
+
+  private def decodePlainVec(typ: Int, width: Int, buf: Array[Byte], off: Int,
+      len: Int, n: Int): ColVec = typ match {
+    case PqType.Int96 | PqType.FixedLenByteArray =>
+      // fixed-width values: zero-copy offsets over the page buffer
+      require(width.toLong * n <= len,
+        s"$n values of $width bytes need more than $len bytes")
+      BytesVec(buf, Array.tabulate(n + 1)(i => off + i * width))
+    case _ =>
+      val phys = typ match {
+        case PqType.Boolean => PhysicalType.Bool
+        case PqType.Int32 => PhysicalType.Int32
+        case PqType.Int64 => PhysicalType.Int64
+        case PqType.Float => PhysicalType.Float
+        case PqType.Double => PhysicalType.Double
+        case PqType.ByteArray => PhysicalType.Bytes
+        case other => throw new IllegalArgumentException(
+          s"physical type $other unsupported")
+      }
+      PlainCodec.decodeSlice(phys, buf, off, len, n)
+  }
+
+  /** Dictionary ids of one page (bit width byte + RLE/bit-packed hybrid),
+    * each checked against the dictionary size. */
+  private def dictIds(raw: Array[Byte], pos: Int, n: Int,
+      dictLen: Int): Array[Int] = {
+    val dec = new RleHybridDecoder(raw(pos) & 0xFF, raw, pos + 1, raw.length)
+    val ids = new Array[Long](n)
+    dec.get(ids, 0, n)
+    val idx = new Array[Int](n)
+    var i = 0
+    while (i < n) {
+      val id = ids(i).toInt
+      require(id >= 0 && id < dictLen, s"dict id $id out of [0,$dictLen)")
+      idx(i) = id
+      i += 1
+    }
+    idx
+  }
+
+  /** Byte-like page decode into the shared chunk arena: PLAIN BYTE_ARRAY and
+    * dictionary pages write values straight in (single copy); the other
+    * encodings decode a page vector and append it. */
+  private def decodeBytesInto(encoding: Int, typ: Int, width: Int,
+      raw: Array[Byte], pos: Int, nNonNull: Int, dict: ColVec,
+      acc: BytesAccum): Unit = encoding match {
+    case PqEncoding.Plain if typ == PqType.ByteArray =>
+      PlainCodec.decodeBytesInto(raw, pos, raw.length - pos, nNonNull, acc)
+    case PqEncoding.PlainDictionary | PqEncoding.RleDictionary =>
+      require(dict != null, "data page references a missing dictionary")
+      if (nNonNull > 0)
+        ChunkCodecSupport.gatherBytesInto(dict.asInstanceOf[BytesVec],
+          dictIds(raw, pos, nNonNull, dict.length), acc)
+    case other =>
+      acc.append(decodeValuesVec(other, typ, width, raw, pos, nNonNull, dict)
+        .asInstanceOf[BytesVec])
+  }
+
+  private def decodeValuesVec(encoding: Int, typ: Int, width: Int,
+      raw: Array[Byte], pos: Int, nNonNull: Int, dict: ColVec): ColVec =
     encoding match {
       case PqEncoding.Plain =>
-        decodePlain(col.typ, col.typeLength, raw, pos, raw.length - pos, nNonNull)
+        decodePlainVec(typ, width, raw, pos, raw.length - pos, nNonNull)
       case PqEncoding.PlainDictionary | PqEncoding.RleDictionary =>
         require(dict != null, "data page references a missing dictionary")
-        if (nNonNull == 0) IndexedSeq.empty
-        else {
-          val width = raw(pos) & 0xFF
-          val dec = new RleHybridDecoder(width, raw, pos + 1, raw.length)
-          val ids = new Array[Long](nNonNull)
-          dec.get(ids, 0, nNonNull)
-          ids.map(id => dict(id.toInt)).toIndexedSeq
-        }
+        if (nNonNull == 0) emptyVec(typ, width)
+        else ChunkCodecSupport.gather(dict, dictIds(raw, pos, nNonNull, dict.length))
       case PqEncoding.DeltaBinaryPacked =>
         val vs = DeltaBinaryPackedDecoder.decode(slice(raw, pos),
-          int32 = col.typ == PqType.Int32)
+          int32 = typ == PqType.Int32)
         require(vs.length >= nNonNull,
           s"delta stream has ${vs.length} values, page needs $nNonNull")
-        if (col.typ == PqType.Int32) (0 until nNonNull).map(i => vs(i).toInt)
-        else (0 until nNonNull).map(vs)
+        if (typ == PqType.Int32) {
+          val out = new Array[Int](nNonNull)
+          var i = 0
+          while (i < nNonNull) { out(i) = vs(i).toInt; i += 1 }
+          IntVec(out)
+        } else LongVec(java.util.Arrays.copyOf(vs, nNonNull))
       case PqEncoding.DeltaLengthByteArray =>
-        bytesVecValues(DeltaLengthByteArrayCodec.decode(slice(raw, pos)), nNonNull)
+        trimBytes(DeltaLengthByteArrayCodec.decode(slice(raw, pos)), nNonNull)
       case PqEncoding.DeltaByteArray =>
-        bytesVecValues(DeltaByteArrayCodec.decode(slice(raw, pos)), nNonNull)
-      case PqEncoding.ByteStreamSplit =>
-        col.typ match {
-          case PqType.Float =>
-            ByteStreamSplitCodec.decodeFloats(raw, pos, nNonNull).toIndexedSeq
-          case PqType.Double =>
-            ByteStreamSplitCodec.decodeDoubles(raw, pos, nNonNull).toIndexedSeq
-          case other => throw new IllegalArgumentException(
-            s"BYTE_STREAM_SPLIT over physical type $other not supported")
-        }
+        trimBytes(DeltaByteArrayCodec.decode(slice(raw, pos)), nNonNull)
+      case PqEncoding.ByteStreamSplit => typ match {
+        case PqType.Float =>
+          FloatVec(ByteStreamSplitCodec.decodeFloats(raw, pos, nNonNull))
+        case PqType.Double =>
+          DoubleVec(ByteStreamSplitCodec.decodeDoubles(raw, pos, nNonNull))
+        case other => throw new IllegalArgumentException(
+          s"BYTE_STREAM_SPLIT over physical type $other not supported")
+      }
       case PqEncoding.Rle =>
         // RLE-encoded BOOLEAN values: 4-byte LE length prefix + hybrid runs
-        require(col.typ == PqType.Boolean, "RLE data pages are boolean-only")
+        require(typ == PqType.Boolean, "RLE data pages are boolean-only")
         val len = (raw(pos) & 0xFF) | ((raw(pos + 1) & 0xFF) << 8) |
           ((raw(pos + 2) & 0xFF) << 16) | ((raw(pos + 3) & 0xFF) << 24)
         val dec = new RleHybridDecoder(1, raw, pos + 4, pos + 4 + len)
         val tmp = new Array[Long](nNonNull)
         dec.get(tmp, 0, nNonNull)
-        (0 until nNonNull).map(i => tmp(i) != 0L)
+        val out = new Array[Boolean](nNonNull)
+        var i = 0
+        while (i < nNonNull) { out(i) = tmp(i) != 0L; i += 1 }
+        BoolVec(out)
       case other => throw new IllegalArgumentException(
         s"data page encoding $other not supported")
     }
@@ -382,292 +563,102 @@ object ParquetFileReader {
   private def slice(raw: Array[Byte], pos: Int): Array[Byte] =
     if (pos == 0) raw else java.util.Arrays.copyOfRange(raw, pos, raw.length)
 
-  private def bytesVecValues(v: BytesVec, n: Int): IndexedSeq[Any] =
-    (0 until n).map(i =>
-      java.util.Arrays.copyOfRange(v.data, v.start(i), v.start(i) + v.len(i)))
+  private def trimBytes(v: BytesVec, n: Int): BytesVec = {
+    require(v.length >= n, s"byte-array stream has ${v.length} values, page needs $n")
+    if (v.length == n) v
+    else BytesVec(v.data, java.util.Arrays.copyOf(v.offsets, n + 1))
+  }
 
   /** One v1 level stream: RLE (4-byte LE length prefix) or legacy BIT_PACKED
     * (fixed width, MSB-first — reference levels.rs:142-264). Returns the
     * levels and the position after the stream. */
-  private def readLevelStream(raw: Array[Byte], pos0: Int, n: Int,
-      maxLevel: Int, encoding: Int): (Array[Int], Int) = {
-    var pos = pos0
-    val width = levelBitWidth(maxLevel)
-    encoding match {
-      case PqEncoding.Rle =>
-        val len = (raw(pos) & 0xFF) | ((raw(pos + 1) & 0xFF) << 8) |
-          ((raw(pos + 2) & 0xFF) << 16) | ((raw(pos + 3) & 0xFF) << 24)
-        pos += 4
-        val dec = new RleHybridDecoder(width, raw, pos, pos + len)
-        pos += len
-        val tmp = new Array[Long](n)
-        dec.get(tmp, 0, n)
-        (tmp.map(_.toInt), pos)
-      case PqEncoding.BitPacked =>
-        val bytesUsed = (n * width + 7) / 8
-        val out = new Array[Int](n)
-        var bit = 0
-        var i = 0
-        while (i < n) {
-          var v = 0
-          var k = 0
-          while (k < width) {
-            val b = raw(pos + (bit >> 3)) & 0xFF
-            v = (v << 1) | ((b >> (7 - (bit & 7))) & 1)
-            bit += 1
-            k += 1
-          }
-          out(i) = v
-          i += 1
-        }
-        (out, pos + bytesUsed)
-      case other =>
-        throw new IllegalArgumentException(s"level encoding $other")
-    }
-  }
-
-  // ------------------------------------------- typed flat column decode
-  // The vectorized scan's hot path: one FLAT column chunk decoded into a
-  // typed ColVec (null-suppressed) + def levels, with NO per-value boxing
-  // and NO per-value byte-array copies — primitives bulk-copy into Spark
-  // column vectors, string bytes copy arena→vector once. INT96/FLBA chunks
-  // are not supported here (callers fall back to the boxed path).
-
-  /** (non-null values as a typed ColVec, def levels or null). */
-  def readColumnVec(bytes: Array[Byte], col: Column): (ColVec, Array[Int]) = {
-    val leaf = LeafColumn(Seq(col.name), col.typ, -1, -1, col.maxDef, 0, col.meta)
-    val cm = col.meta
-    // same density guard as readTriplets: byte-derived bound for PLAIN-ish
-    // pages, absolute 16M-value ceiling for legitimately-denser RLE/delta,
-    // and the claimed uncompressed size clamped to a plausible codec ratio
-    // of the bytes actually present before it widens the bound (see
-    // readTriplets). numValues stays strictly under Int.MaxValue so the
-    // +1 sentinel in offset arrays can never overflow; a large-but-honest
-    // totalUncompressedSize (>2 GB chunk from a big-row-group writer) must
-    // still read — only a negative claim is rejected outright.
-    require(cm.totalUncompressedSize >= 0,
-      s"chunk claims ${cm.totalUncompressedSize} uncompressed bytes")
-    require(cm.numValues >= 0 && cm.numValues <= (Int.MaxValue - 16).toLong &&
-      (cm.numValues <=
-        8L * math.max(bytes.length.toLong,
-          math.min(cm.totalUncompressedSize, 256L * bytes.length)) ||
-        cm.numValues <= (1L << 24)),
-      s"chunk claims ${cm.numValues} values in ${bytes.length} bytes")
-    var off =
-      if (cm.dictionaryPageOffset >= 0)
-        math.min(cm.dictionaryPageOffset, cm.dataPageOffset)
-      else cm.dataPageOffset
-    require(off >= 0 && off < bytes.length, s"page offset $off out of file")
-    var dict: ColVec = null
-    val parts = ArrayBuffer.empty[ColVec]
-    // byte-array chunks decode into ONE shared arena across pages (single
-    // copy per value) instead of per-page vectors + a whole-arena concat —
-    // on a multi-page string chunk the concat alone re-copies every byte.
-    // The footer sizes are only capacity HINTS (both accumulator arrays
-    // double on demand), so clamp them to sane multiples of the bytes
-    // actually read: a crafted footer must not force a ~2 GB upfront
-    // allocation of either the data arena or the offsets array
-    val acc: BytesAccum =
-      if (col.typ == PqType.ByteArray)
-        new BytesAccum(
-          math.min(math.min(cm.totalUncompressedSize,
-            64L * bytes.length + 64), (Int.MaxValue - 16).toLong).toInt,
-          math.min(cm.numValues, 1L << 20).toInt)
-      else null
-    val defParts = if (col.maxDef > 0) ArrayBuffer.empty[Array[Int]] else null
-    var remaining = cm.numValues
-    while (remaining > 0) {
-      val ph = ParquetMeta.parsePageHeader(bytes, off.toInt)
-      val dataStart = off.toInt + ph.headerLen
-      require(ph.compressedSize >= 0 &&
-        dataStart.toLong + ph.compressedSize <= bytes.length,
-        s"page claims ${ph.compressedSize} compressed bytes past EOF")
-      checkPageCrc(ph, bytes, dataStart)
-      ph.pageType match {
-        case 2 =>
-          val raw = decompress(bytes, dataStart, ph.compressedSize,
-            ph.uncompressedSize, cm.codec)
-          require(ph.numValues <= raw.length,
-            s"dict page claims ${ph.numValues} entries in ${raw.length} bytes")
-          dict = decodePlainVec(col.typ, raw, 0, raw.length, ph.numValues)
-        case 0 =>
-          val raw = decompress(bytes, dataStart, ph.compressedSize,
-            ph.uncompressedSize, cm.codec)
-          val n = ph.numValues
-          require(n >= 0 && n <= remaining, s"page claims $n values")
-          var pos = 0
-          var nNonNull = n
-          if (col.maxDef > 0) {
-            val (lv, p2) = readLevelStream(raw, pos, n, col.maxDef,
-              ph.defLevelEncoding)
-            pos = p2
-            defParts += lv
-            nNonNull = countMax(lv, col.maxDef)
-          }
-          if (acc != null)
-            decodeValuesInto(ph.encoding, raw, pos, nNonNull, dict, acc)
-          else parts += decodeValuesVec(ph.encoding, col.typ, raw, pos,
-            nNonNull, dict)
-          remaining -= n
-        case 3 =>
-          val n = ph.numValues
-          require(n >= 0 && n <= remaining, s"page claims $n values")
-          val defLen = ph.defLevelsByteLen
-          var nNonNull = n - ph.numNulls
-          if (col.maxDef > 0) {
-            val dec = new RleHybridDecoder(levelBitWidth(col.maxDef), bytes,
-              dataStart, dataStart + defLen)
-            val tmp = new Array[Long](n)
-            dec.get(tmp, 0, n)
-            val lv = tmp.map(_.toInt)
-            defParts += lv
-            nNonNull = countMax(lv, col.maxDef)
-          }
-          val vOff = dataStart + defLen
-          val vUnc = ph.uncompressedSize - defLen
-          val vraw =
-            if (ph.isCompressed && cm.codec != PqCodec.Uncompressed)
-              decompress(bytes, vOff, ph.compressedSize - defLen, vUnc, cm.codec)
-            else java.util.Arrays.copyOfRange(bytes, vOff, vOff + vUnc)
-          if (acc != null)
-            decodeValuesInto(ph.encoding, vraw, 0, nNonNull, dict, acc)
-          else parts += decodeValuesVec(ph.encoding, col.typ, vraw, 0,
-            nNonNull, dict)
-          remaining -= n
-        case other => throw new IllegalArgumentException(
-          s"page type $other not supported")
-      }
-      off = dataStart.toLong + ph.compressedSize
-    }
-    val vec =
-      if (acc != null) acc.toVec
-      else if (parts.isEmpty) decodePlainVec(col.typ, Array.emptyByteArray, 0, 0, 0)
-      else if (parts.size == 1) parts.head
-      else ChunkCodec.concat(parts.toSeq)
-    val defs =
-      if (defParts == null) null
-      else if (defParts.size == 1) defParts.head
-      else {
-        val out = new Array[Int](defParts.map(_.length).sum)
-        var p = 0
-        defParts.foreach { a =>
-          System.arraycopy(a, 0, out, p, a.length); p += a.length
-        }
-        out
-      }
-    (vec, defs)
-  }
-
-  private def decodePlainVec(typ: Int, buf: Array[Byte], off: Int, len: Int,
-      n: Int): ColVec = {
-    val phys = typ match {
-      case PqType.Boolean => PhysicalType.Bool
-      case PqType.Int32 => PhysicalType.Int32
-      case PqType.Int64 => PhysicalType.Int64
-      case PqType.Float => PhysicalType.Float
-      case PqType.Double => PhysicalType.Double
-      case PqType.ByteArray => PhysicalType.Bytes
-      case other => throw new IllegalArgumentException(
-        s"typed decode: physical type $other unsupported")
-    }
-    PlainCodec.decodeSlice(phys, buf, off, len, n)
-  }
-
-  /** Byte-array page decode into the shared chunk accumulator: PLAIN and
-    * dictionary pages write values straight in (single copy); the delta
-    * family reuses its page decoder and appends (same copies as the old
-    * per-page-vector path). */
-  private def decodeValuesInto(encoding: Int, raw: Array[Byte], pos: Int,
-      nNonNull: Int, dict: ColVec, acc: BytesAccum): Unit = encoding match {
-    case PqEncoding.Plain =>
-      PlainCodec.decodeBytesInto(raw, pos, raw.length - pos, nNonNull, acc)
-    case PqEncoding.PlainDictionary | PqEncoding.RleDictionary =>
-      require(dict != null, "data page references a missing dictionary")
-      if (nNonNull > 0) {
-        val width = raw(pos) & 0xFF
-        val dec = new RleHybridDecoder(width, raw, pos + 1, raw.length)
-        val ids = new Array[Long](nNonNull)
-        dec.get(ids, 0, nNonNull)
-        val idx = new Array[Int](nNonNull)
-        var i = 0
-        val dn = dict.length
-        while (i < nNonNull) {
-          val id = ids(i).toInt
-          require(id >= 0 && id < dn, s"dict id $id out of [0,$dn)")
-          idx(i) = id
-          i += 1
-        }
-        ChunkCodecSupport.gatherBytesInto(dict.asInstanceOf[BytesVec], idx, acc)
-      }
-    case other =>
-      acc.append(decodeValuesVec(other, PqType.ByteArray, raw, pos,
-        nNonNull, dict).asInstanceOf[BytesVec])
-  }
-
-  private def decodeValuesVec(encoding: Int, typ: Int, raw: Array[Byte],
-      pos: Int, nNonNull: Int, dict: ColVec): ColVec = encoding match {
-    case PqEncoding.Plain =>
-      decodePlainVec(typ, raw, pos, raw.length - pos, nNonNull)
-    case PqEncoding.PlainDictionary | PqEncoding.RleDictionary =>
-      require(dict != null, "data page references a missing dictionary")
-      if (nNonNull == 0) decodePlainVec(typ, Array.emptyByteArray, 0, 0, 0)
-      else {
-        val width = raw(pos) & 0xFF
-        val dec = new RleHybridDecoder(width, raw, pos + 1, raw.length)
-        val ids = new Array[Long](nNonNull)
-        dec.get(ids, 0, nNonNull)
-        val idx = new Array[Int](nNonNull)
-        var i = 0
-        val dn = dict.length
-        while (i < nNonNull) {
-          val id = ids(i).toInt
-          require(id >= 0 && id < dn, s"dict id $id out of [0,$dn)")
-          idx(i) = id
-          i += 1
-        }
-        ChunkCodecSupport.gather(dict, idx)
-      }
-    case PqEncoding.DeltaBinaryPacked =>
-      val vs = DeltaBinaryPackedDecoder.decode(slice(raw, pos),
-        int32 = typ == PqType.Int32)
-      require(vs.length >= nNonNull,
-        s"delta stream has ${vs.length} values, page needs $nNonNull")
-      if (typ == PqType.Int32) {
-        val out = new Array[Int](nNonNull)
-        var i = 0
-        while (i < nNonNull) { out(i) = vs(i).toInt; i += 1 }
-        IntVec(out)
-      } else LongVec(java.util.Arrays.copyOf(vs, nNonNull))
-    case PqEncoding.DeltaLengthByteArray =>
-      trimBytes(DeltaLengthByteArrayCodec.decode(slice(raw, pos)), nNonNull)
-    case PqEncoding.DeltaByteArray =>
-      trimBytes(DeltaByteArrayCodec.decode(slice(raw, pos)), nNonNull)
-    case PqEncoding.ByteStreamSplit => typ match {
-      case PqType.Float =>
-        FloatVec(ByteStreamSplitCodec.decodeFloats(raw, pos, nNonNull))
-      case PqType.Double =>
-        DoubleVec(ByteStreamSplitCodec.decodeDoubles(raw, pos, nNonNull))
-      case other => throw new IllegalArgumentException(
-        s"BYTE_STREAM_SPLIT over physical type $other not supported")
-    }
+  private def readLevelStream(raw: Array[Byte], pos: Int, n: Int,
+      maxLevel: Int, encoding: Int): (Array[Int], Int) = encoding match {
     case PqEncoding.Rle =>
-      require(typ == PqType.Boolean, "RLE data pages are boolean-only")
       val len = (raw(pos) & 0xFF) | ((raw(pos + 1) & 0xFF) << 8) |
         ((raw(pos + 2) & 0xFF) << 16) | ((raw(pos + 3) & 0xFF) << 24)
-      val dec = new RleHybridDecoder(1, raw, pos + 4, pos + 4 + len)
-      val tmp = new Array[Long](nNonNull)
-      dec.get(tmp, 0, nNonNull)
-      val out = new Array[Boolean](nNonNull)
+      (rleLevels(raw, pos + 4, len, n, maxLevel), pos + 4 + len)
+    case PqEncoding.BitPacked =>
+      val width = levelBitWidth(maxLevel)
+      val out = new Array[Int](n)
+      var bit = 0
       var i = 0
-      while (i < nNonNull) { out(i) = tmp(i) != 0L; i += 1 }
-      BoolVec(out)
-    case other => throw new IllegalArgumentException(
-      s"data page encoding $other not supported")
+      while (i < n) {
+        var v = 0
+        var k = 0
+        while (k < width) {
+          val b = raw(pos + (bit >> 3)) & 0xFF
+          v = (v << 1) | ((b >> (7 - (bit & 7))) & 1)
+          bit += 1
+          k += 1
+        }
+        out(i) = v
+        i += 1
+      }
+      (out, pos + (n * width + 7) / 8)
+    case other =>
+      throw new IllegalArgumentException(s"level encoding $other")
   }
 
-  private def trimBytes(v: BytesVec, n: Int): BytesVec =
-    if (v.length == n) v
-    else BytesVec(v.data, java.util.Arrays.copyOf(v.offsets, n + 1))
+  /** `n` levels from a prefix-free RLE/bit-packed hybrid stream. */
+  private def rleLevels(buf: Array[Byte], off: Int, len: Int, n: Int,
+      maxLevel: Int): Array[Int] = {
+    val dec = new RleHybridDecoder(levelBitWidth(maxLevel), buf, off, off + len)
+    val tmp = new Array[Long](n)
+    dec.get(tmp, 0, n)
+    tmp.map(_.toInt)
+  }
+
+  // ------------------------------------------------ boxing views
+
+  /** Boxed values of a decoded vector: Boolean | Int | Long | Float |
+    * Double | Array[Byte] (one copy per value). */
+  private def boxed(v: ColVec): IndexedSeq[Any] = v match {
+    case BoolVec(a) => ArraySeq.unsafeWrapArray(a)
+    case IntVec(a) => ArraySeq.unsafeWrapArray(a)
+    case LongVec(a) => ArraySeq.unsafeWrapArray(a)
+    case FloatVec(a) => ArraySeq.unsafeWrapArray(a)
+    case DoubleVec(a) => ArraySeq.unsafeWrapArray(a)
+    case b: BytesVec => IndexedSeq.tabulate(b.length)(b.valueBytes)
+  }
+
+  /** Per-row boxed values of a flat column, nulls inline. */
+  private[sources] def rowValues(v: ColVec, defs: Array[Int],
+      maxDef: Int): IndexedSeq[Any] = {
+    val vals = boxed(v)
+    if (defs == null) vals
+    else {
+      val out = new Array[Any](defs.length)
+      var vi = 0
+      var i = 0
+      while (i < defs.length) {
+        if (defs(i) == maxDef) { out(i) = vals(vi); vi += 1 }
+        i += 1
+      }
+      ArraySeq.unsafeWrapArray(out)
+    }
+  }
+
+  /** Raw value/def/rep triplets of one column chunk — the record layer's
+    * boxing view over [[decodeChunk]]. Values: Boolean | Int | Long |
+    * Float | Double | Array[Byte] (BYTE_ARRAY / INT96 / FLBA raw). */
+  def readTriplets(bytes: Array[Byte], col: LeafColumn): Triplets = {
+    val d = decodeChunk(bytes, col)
+    Triplets(boxed(d.values), d.defs, d.reps, col.maxDef)
+  }
+
+  /** The typed decode of one FLAT column chunk: (non-null values as a typed
+    * ColVec, def levels or null) — what the vectorized scan hands to Spark
+    * zero-copy. INT96 and FIXED_LEN_BYTE_ARRAY values come back as
+    * fixed-width BytesVec. */
+  def readColumnVec(bytes: Array[Byte], col: Column): (ColVec, Array[Int]) = {
+    val d = decodeChunk(bytes, leafOf(col))
+    (d.values, d.defs)
+  }
+
+  private[sources] def leafOf(col: Column): LeafColumn =
+    LeafColumn(Seq(col.name), col.typ, col.typeLength, -1, col.maxDef, 0,
+      col.meta)
 
   // ------------------------------------------------------------ ranged I/O
   // A projected scan must not READ unprojected bytes, not merely skip
@@ -735,7 +726,10 @@ object ParquetFileReader {
 
   // ------------------------------------------------------------- flat reads
 
-  final case class Column(name: String, typ: Int, maxDef: Int, meta: PqColumnMeta)
+  /** One leaf of a FLAT schema; `typeLength` is the schema's type_length
+    * (needed by FIXED_LEN_BYTE_ARRAY only; -1 when absent). */
+  final case class Column(name: String, typ: Int, maxDef: Int, meta: PqColumnMeta,
+      typeLength: Int = -1)
 
   /** Leaf columns of a FLAT schema (root group + primitive children). */
   def flatColumns(meta: PqFileMeta, rg: Int): Seq[Column] = {
@@ -743,26 +737,15 @@ object ParquetFileReader {
     require(leaves.forall(_.numChildren == 0),
       "nested schemas not supported by the flat reader (use readFileRows)")
     leaves.zip(meta.rowGroups(rg).columns).map { case (se, cm) =>
-      Column(se.name, cm.typ, if (se.repetition == 1) 1 else 0, cm)
+      Column(se.name, cm.typ, if (se.repetition == 1) 1 else 0, cm, se.typeLength)
     }
   }
 
-  /** Decode one FLAT column chunk to per-row values (nulls inline). */
+  /** Decode one FLAT column chunk to per-row values (nulls inline) — a
+    * boxing view over the one page decoder ([[readColumnVec]]). */
   def readColumn(bytes: Array[Byte], col: Column): IndexedSeq[Any] = {
-    val t = readTriplets(bytes, LeafColumn(Seq(col.name), col.typ, -1, -1,
-      col.maxDef, 0, col.meta))
-    if (t.defs == null) t.values
-    else {
-      val out = new ArrayBuffer[Any](t.defs.length)
-      var i = 0
-      var vi = 0
-      while (i < t.defs.length) {
-        if (t.defs(i) == col.maxDef) { out += t.values(vi); vi += 1 }
-        else out += null
-        i += 1
-      }
-      out.toIndexedSeq
-    }
+    val (vec, defs) = readColumnVec(bytes, col)
+    rowValues(vec, defs, col.maxDef)
   }
 
   /** Read a whole flat file: (column names, per-column values). */
@@ -844,35 +827,12 @@ object ParquetFileReader {
     * the first chunk row it covers (it spans `header.numValues` rows). */
   final case class PageSpan(off: Int, header: PqPageHeader, rowStart: Long)
 
-  /** Walk a FLAT (maxRep == 0) chunk's page headers without decompressing
-    * anything. Returns (dictionary page offset or -1, data page spans). */
+  /** A chunk's page headers, read without decompressing anything:
+    * (dictionary page offset or -1, data page spans). Page rows are chunk
+    * rows for FLAT (maxRep == 0) chunks. */
   def pageSpans(bytes: Array[Byte], cm: PqColumnMeta): (Long, Seq[PageSpan]) = {
-    var off =
-      if (cm.dictionaryPageOffset >= 0)
-        math.min(cm.dictionaryPageOffset, cm.dataPageOffset)
-      else cm.dataPageOffset
-    require(off >= 0 && off < bytes.length, s"page offset $off out of file")
-    var dictOff = -1L
-    var row = 0L
-    var remaining = cm.numValues
-    val out = Seq.newBuilder[PageSpan]
-    while (remaining > 0) {
-      val ph = ParquetMeta.parsePageHeader(bytes, off.toInt)
-      val dataStart = off.toInt + ph.headerLen
-      require(ph.compressedSize >= 0 &&
-        dataStart.toLong + ph.compressedSize <= bytes.length,
-        s"page claims ${ph.compressedSize} compressed bytes past EOF")
-      if (ph.pageType == 2) dictOff = off
-      else {
-        require(ph.numValues > 0 && ph.numValues <= remaining,
-          s"page claims ${ph.numValues} values, chunk has $remaining left")
-        out += PageSpan(off.toInt, ph, row)
-        row += ph.numValues
-        remaining -= ph.numValues
-      }
-      off = dataStart.toLong + ph.compressedSize
-    }
-    (dictOff, out.result())
+    val (dict, spans) = pageWalk(bytes, cm)
+    (dict.fold(-1L)(_.off.toLong), spans)
   }
 
   /** Does an INT32/INT64 stats pair intersect [lo, hi]? Empty stats ⇒ yes. */
@@ -950,45 +910,12 @@ object ParquetFileReader {
   /** Decode only the pages of a FLAT column chunk intersecting `ranges`
     * (ascending disjoint chunk-row intervals): returns values (nulls
     * inline) of exactly those rows, in row order. Pages outside the
-    * ranges are never decompressed or decoded. */
+    * ranges are never decompressed or decoded. A boxing view over the one
+    * page decoder. */
   def readColumnRowRanges(bytes: Array[Byte], col: Column,
       ranges: Seq[(Long, Long)]): IndexedSeq[Any] = {
-    if (ranges.isEmpty) return IndexedSeq.empty
-    val leaf = LeafColumn(Seq(col.name), col.typ, -1, -1, col.maxDef, 0, col.meta)
-    val (dictOff, spans) = pageSpans(bytes, col.meta)
-    var dict: IndexedSeq[Any] = null
-    if (dictOff >= 0) {
-      val ph = ParquetMeta.parsePageHeader(bytes, dictOff.toInt)
-      dict = decodeDictPage(bytes, dictOff.toInt + ph.headerLen, ph, leaf)
-    }
-    val out = new ArrayBuffer[Any]()
-    spans.foreach { s =>
-      val pStart = s.rowStart
-      val pEnd = s.rowStart + s.header.numValues
-      if (ranges.exists(r => r._1 < pEnd && r._2 > pStart)) {
-        val (vals, defs, _) =
-          decodeDataPage(bytes, s.off + s.header.headerLen, s.header, leaf, dict)
-        // rows of this page with nulls expanded inline
-        val rowVals: IndexedSeq[Any] =
-          if (defs == null) vals
-          else {
-            val b = new ArrayBuffer[Any](defs.length)
-            var vi = 0
-            var i = 0
-            while (i < defs.length) {
-              if (defs(i) == col.maxDef) { b += vals(vi); vi += 1 } else b += null
-              i += 1
-            }
-            b.toIndexedSeq
-          }
-        ranges.foreach { r =>
-          var row = math.max(r._1, pStart)
-          val until = math.min(r._2, pEnd)
-          while (row < until) { out += rowVals((row - pStart).toInt); row += 1 }
-        }
-      }
-    }
-    out.toIndexedSeq
+    val d = decodeChunk(bytes, leafOf(col), ranges)
+    rowValues(d.values, d.defs, col.maxDef)
   }
 
   // --------------------------------------------------- record assembly
@@ -1259,40 +1186,6 @@ object ParquetFileReader {
     case PqCodec.Brotli =>
       graft.core.Brotli.decompress(bytes, off, compLen, uncLen)
     case other => throw new IllegalArgumentException(s"codec $other not supported")
-  }
-
-  private def decodePlain(typ: Int, typeLength: Int, buf: Array[Byte],
-      off: Int, len: Int, n: Int): IndexedSeq[Any] = typ match {
-    case PqType.Int96 =>
-      require(12L * n <= len, s"$n INT96 values need ${12L * n} > $len bytes")
-      (0 until n).map(i =>
-        java.util.Arrays.copyOfRange(buf, off + 12 * i, off + 12 * (i + 1)))
-    case PqType.FixedLenByteArray =>
-      require(typeLength > 0, "FIXED_LEN_BYTE_ARRAY needs a type_length")
-      require(typeLength.toLong * n <= len,
-        s"$n FLBA($typeLength) values need more than $len bytes")
-      (0 until n).map(i => java.util.Arrays.copyOfRange(buf,
-        off + typeLength * i, off + typeLength * (i + 1)))
-    case _ =>
-      val phys = typ match {
-        case PqType.Boolean => PhysicalType.Bool
-        case PqType.Int32 => PhysicalType.Int32
-        case PqType.Int64 => PhysicalType.Int64
-        case PqType.Float => PhysicalType.Float
-        case PqType.Double => PhysicalType.Double
-        case PqType.ByteArray => PhysicalType.Bytes
-        case other => throw new IllegalArgumentException(s"physical type $other")
-      }
-      PlainCodec.decodeSlice(phys, buf, off, len, n) match {
-        case BoolVec(vs) => vs.toIndexedSeq
-        case IntVec(vs) => vs.toIndexedSeq
-        case LongVec(vs) => vs.toIndexedSeq
-        case FloatVec(vs) => vs.toIndexedSeq
-        case DoubleVec(vs) => vs.toIndexedSeq
-        case v: BytesVec =>
-          (0 until v.length).map(i =>
-            java.util.Arrays.copyOfRange(v.data, v.start(i), v.start(i) + v.len(i)))
-      }
   }
 
   /** INT96 timestamp (nanos-of-day LE in bytes 0-7, Julian day LE in bytes

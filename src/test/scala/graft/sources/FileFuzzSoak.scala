@@ -12,7 +12,9 @@ import org.apache.spark.sql.types._
   * containers, null elements), written through [[ParquetFileWriter]] under
   * random (codec, pageVersion, encPolicy, rowGroupRows, bloomCols), read
   * back with [[ParquetFileReader.readFileRows]] and compared value by
-  * value. Then a corruption pass: random byte flips anywhere in the file
+  * value; flat schemas are also read with the typed
+  * [[ParquetFileReader.readColumnVec]] and compared with the generated
+  * rows. Then a corruption pass: random byte flips anywhere in the file
   * (footer included) must either fail with a clean exception or return —
   * never hang, never exit the JVM (the AFL-fuzz-target contract of the
   * reference, fuzz/src/main.rs, applied to whole files). */
@@ -150,17 +152,18 @@ object FileFuzzSoak {
         }
       }
       // flat schemas: the TYPED column decode (the DSv2 columnar scan's
-      // kernel) must agree with the boxed record path value-for-value
+      // kernel) must reproduce the generated rows value-for-value
       if (schema.fields.forall(f => leafTypes.contains(f.dataType))) {
         val bytes0 = java.nio.file.Files.readAllBytes(
           java.nio.file.Paths.get(path))
         val meta = ParquetFileReader.readFooter(bytes0)
+        var row0 = 0
         meta.rowGroups.indices.foreach { rg =>
-          ParquetFileReader.flatColumns(meta, rg).foreach { col =>
-            val boxed = ParquetFileReader.readColumn(bytes0, col)
+          ParquetFileReader.flatColumns(meta, rg).zipWithIndex.foreach { case (col, j) =>
             val (vec, defs) = ParquetFileReader.readColumnVec(bytes0, col)
+            val rowsHere = meta.rowGroups(rg).numRows.toInt
             var vi = -1
-            (0 until boxed.length).foreach { i =>
+            (0 until rowsHere).foreach { i =>
               val t: Any =
                 if (defs != null && defs(i) != col.maxDef) null
                 else {
@@ -171,20 +174,20 @@ object FileFuzzSoak {
                     case graft.core.LongVec(vs) => vs(vi)
                     case graft.core.FloatVec(vs) => vs(vi)
                     case graft.core.DoubleVec(vs) => vs(vi)
-                    case b: graft.core.BytesVec => java.util.Arrays.copyOfRange(
-                      b.data, b.start(vi), b.start(vi) + b.len(vi))
+                    case b: graft.core.BytesVec =>
+                      if (schema(j).dataType == StringType)
+                        new String(b.valueBytes(vi), "UTF-8")
+                      else b.valueBytes(vi)
                   }
                 }
-              (boxed(i), t) match {
-                case (x: Array[Byte], y: Array[Byte]) =>
-                  require(java.util.Arrays.equals(x, y),
-                    s"case $c rg$rg ${col.name} row $i: typed != boxed")
-                case (a, b) => require(a == b,
-                  s"case $c rg$rg ${col.name} row $i: $a != $b")
-              }
+              val exp = canon(rows(row0 + i).get(j))
+              require(canonGot(t) == exp,
+                s"case $c rg$rg ${col.name} row ${row0 + i}: typed ${canonGot(t)} != $exp")
             }
           }
+          row0 += meta.rowGroups(rg).numRows.toInt
         }
+        require(row0 == nRows, s"case $c: typed decode read $row0 of $nRows rows")
       }
       // corruption pass: random flips must fail cleanly or read something
       val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))

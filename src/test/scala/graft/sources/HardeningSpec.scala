@@ -6,7 +6,8 @@ import graft.core.{BitWriter, ChunkCodec, PhysicalType}
 
 /** Unit coverage for the round-3 review fixes: Hive-compatible partition
   * path escaping, legacy-statistics distrust in byte-wise pruning, and
-  * forged-count allocation guards in the graft chunk readers. */
+  * forged-count allocation guards in the graft chunk readers and the
+  * Parquet page decoder. */
 class HardeningSpec extends AnyFunSuite {
 
   // ------------------------------------------------------- PartitionPath
@@ -112,5 +113,75 @@ class HardeningSpec extends AnyFunSuite {
     val e3 = intercept[IllegalArgumentException](
       ChunkCodec.decodeMapChunk(hugeMap))
     assert(e3.getMessage.contains("row count"))
+  }
+
+  // ------------------------------------- forged Parquet page headers
+
+  test("a page claiming an implausible uncompressed size fails before allocating") {
+    val n = 100
+    val plain = java.nio.ByteBuffer.allocate(8 * n)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    (0 until n).foreach(i => plain.putLong(i.toLong))
+    val body = org.xerial.snappy.Snappy.compress(plain.array())
+    // a one-column, one-page snappy chunk; only the header's claim differs
+    def chunk(uncompressed: Int): (Array[Byte], ParquetFileReader.Column) = {
+      val bytes = ParquetMeta.writePageHeaderV1(n, PqEncoding.Plain,
+        uncompressed, body.length) ++ body
+      (bytes, ParquetFileReader.Column("x", PqType.Int64, 0, PqColumnMeta(
+        typ = PqType.Int64, encodings = Seq(PqEncoding.Plain),
+        pathInSchema = Seq("x"), codec = PqCodec.Snappy, numValues = n,
+        totalUncompressedSize = 8L * n, totalCompressedSize = bytes.length,
+        dataPageOffset = 0L)))
+    }
+    val (honest, col) = chunk(8 * n)
+    assert(ParquetFileReader.readColumn(honest, col) == (0L until n))
+    val (forged, _) = chunk(Int.MaxValue - 16)
+    val e1 = intercept[IllegalArgumentException](
+      ParquetFileReader.readColumnVec(forged, col))
+    assert(e1.getMessage.contains("implausible"), e1.getMessage)
+    val e2 = intercept[IllegalArgumentException](
+      ParquetFileReader.readColumn(forged, col))
+    assert(e2.getMessage.contains("implausible"), e2.getMessage)
+  }
+
+  test("v2 page level and value lengths are checked against the page body") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val path = java.nio.file.Files.createTempDirectory("pqv2len")
+      .resolve("v2.parquet").toString
+    ParquetFileWriter.writeFile(path,
+      StructType(Seq(StructField("x", LongType))),
+      (0 until 300).iterator.map(i =>
+        Row(if (i % 5 == 0) null else i.toLong * 7919)),
+      codec = PqCodec.Uncompressed, pageVersion = 2)
+    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
+    val col = ParquetFileReader.flatColumns(ParquetFileReader.readFooter(bytes), 0).head
+    val at = col.meta.dataPageOffset.toInt
+    val ph = ParquetMeta.parsePageHeader(bytes, at)
+    assert(ph.pageType == 3 && ph.defLevelsByteLen > 0)
+    // the first data page re-headed with forged lengths; its body is intact
+    def reheaded(defLen: Int, uncompressed: Int): Array[Byte] =
+      bytes.take(at) ++ ParquetMeta.writePageHeaderV2(ph.numValues,
+        ph.numNulls, ph.numRows, ph.encoding, uncompressed, ph.compressedSize,
+        defLen, ph.repLevelsByteLen, ph.stats,
+        if (ph.crcDefined) Some(ph.crc) else None) ++
+        bytes.drop(at + ph.headerLen)
+    val honest = reheaded(ph.defLevelsByteLen, ph.uncompressedSize)
+    assert(ParquetFileReader.readColumn(honest, col) ==
+      ParquetFileReader.readColumn(bytes, col))
+    // def levels claimed past the page body would decode the next page
+    val pastBody = ph.compressedSize + 1000
+    val overrun = reheaded(pastBody, ph.uncompressedSize)
+    val e1 = intercept[IllegalArgumentException](
+      ParquetFileReader.readColumnVec(overrun, col))
+    assert(e1.getMessage.contains(s"def $pastBody"), e1.getMessage)
+    val e2 = intercept[IllegalArgumentException](
+      ParquetFileReader.readColumn(overrun, col))
+    assert(e2.getMessage.contains(s"def $pastBody"), e2.getMessage)
+    // an uncompressed value region claiming more bytes than the body holds
+    val inflated = reheaded(ph.defLevelsByteLen, ph.uncompressedSize + 500000)
+    val e3 = intercept[IllegalArgumentException](
+      ParquetFileReader.readColumnVec(inflated, col))
+    assert(e3.getMessage.contains("uncompressed v2 page"), e3.getMessage)
   }
 }

@@ -495,8 +495,9 @@ class ParquetInteropSpec extends AnyFunSuite {
         ranges = Map("id" -> ((100000L, 100100L))),
         strRanges = Map.empty)
       assert(kept > 0 && kept < n, s"kept $kept")
-      val got = vals.head.map(v =>
-        new String(v.asInstanceOf[Array[Byte]], "UTF-8"))
+      val txt = vals.head._1.asInstanceOf[graft.core.BytesVec]
+      val got = (0 until txt.length).map(i =>
+        new String(txt.valueBytes(i), "UTF-8"))
       // surviving pages cover the target rows; residual filtering is the
       // engine's job — here we check the target payloads are present
       assert(got.contains("row_payload_000100000_of_the_table"))
@@ -842,61 +843,72 @@ class ParquetInteropSpec extends AnyFunSuite {
     }
   }
 
-  test("typed column decode equals boxed decode on every flat golden column") {
+  test("typed column decode equals parquet-mr on every flat golden column") {
     import graft.core._
-    // every FLAT golden file, every non-INT96/FLBA column: the typed
-    // (zero-copy scan) decode must agree value-for-value with the boxed
-    // reference path — this pins dict, delta-family, RLE-bool, and
+    import org.apache.spark.sql.types._
+    // every FLAT golden file, every column: the one page decoder's typed
+    // output must agree value-for-value with Spark's built-in parquet-mr
+    // reader — this pins dict, delta-family, RLE-bool, INT96, FLBA and
     // data-page-v2 encodings the writer-roundtrip E2Es never emit
     val goldens = Seq("alltypes_plain.parquet", "alltypes_plain.snappy.parquet",
       "alltypes_dictionary.parquet", "10k-v2.parquet", "datapage_v2.snappy.parquet",
       "nation.dict-malformed.parquet", "stock_simulated.parquet")
+    val files = goldens.map(g => g -> java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$dataDir/$g")))
+    val spark = org.apache.spark.sql.SparkSession.builder().master("local[1]")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
+    // integers compare by value whatever width parquet-mr surfaces them at
+    def canon(v: Any): Any = v match {
+      case b: Array[Byte] => b.toSeq
+      case b: Byte => b.toLong
+      case s: Short => s.toLong
+      case i: Int => i.toLong
+      case x => x
+    }
     var checked = 0
-    goldens.foreach { g =>
-      val bytes = java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$dataDir/$g"))
+    try files.foreach { case (g, bytes) =>
       val meta = readFooterOf(bytes)
-      // skip non-flat goldens (datapage_v2 has a repeated column) — the
-      // typed path only ever runs on flat files (flatOk planning stamp)
+      // skip non-flat goldens (datapage_v2 has a repeated column)
       val flat = meta.schema.size > 1 &&
         meta.schema.drop(1).forall(se => se.numChildren == 0 && se.repetition != 2)
-      if (flat)
-      meta.rowGroups.indices.foreach { rg =>
-        ParquetFileReader.flatColumns(meta, rg).foreach { col =>
-          if (col.typ != PqType.Int96 && col.typ != PqType.FixedLenByteArray) {
-            val boxed = ParquetFileReader.readColumn(bytes, col)
+      if (flat) {
+        // one small file reads as one split, in file order
+        val native = spark.read.parquet(s"$dataDir/$g")
+        val exp = native.collect()
+        var row0 = 0
+        meta.rowGroups.indices.foreach { rg =>
+          ParquetFileReader.flatColumns(meta, rg).zipWithIndex.foreach { case (col, j) =>
+            val dt = native.schema(j).dataType
             val (vec, defs) = ParquetFileReader.readColumnVec(bytes, col)
-            val typed: IndexedSeq[Any] = {
-              var vi = -1
-              (0 until boxed.length).map { i =>
+            val rows = if (defs != null) defs.length else vec.length
+            var vi = -1
+            (0 until rows).foreach { i =>
+              val got: Any =
                 if (defs != null && defs(i) != col.maxDef) null
                 else {
                   vi += 1
-                  vec match {
+                  val v: Any = vec match {
                     case BoolVec(vs) => vs(vi)
                     case IntVec(vs) => vs(vi)
                     case LongVec(vs) => vs(vi)
                     case FloatVec(vs) => vs(vi)
                     case DoubleVec(vs) => vs(vi)
-                    case b: BytesVec => java.util.Arrays.copyOfRange(
-                      b.data, b.start(vi), b.start(vi) + b.len(vi))
+                    case b: BytesVec => b.valueBytes(vi)
                   }
+                  if (dt == StringType) str(v) else ParquetSource.externalValue(v, dt)
                 }
-              }
-            }
-            boxed.zip(typed).zipWithIndex.foreach { case ((a, b), i) =>
-              (a, b) match {
-                case (x: Array[Byte], y: Array[Byte]) =>
-                  assert(java.util.Arrays.equals(x, y),
-                    s"$g rg$rg ${col.name} row $i")
-                case _ => assert(a == b, s"$g rg$rg ${col.name} row $i: $a != $b")
-              }
+              val want = exp(row0 + i).get(j)
+              assert(canon(got) == canon(want), s"$g rg$rg ${col.name} row $i: " +
+                s"${canon(got)} != ${canon(want)}")
             }
             checked += 1
           }
+          row0 += meta.rowGroups(rg).numRows.toInt
         }
+        assert(row0 == exp.length, s"$g: $row0 rows, parquet-mr ${exp.length}")
       }
-    }
+    } finally spark.stop()
     assert(checked > 30, s"only $checked columns checked")
   }
 
