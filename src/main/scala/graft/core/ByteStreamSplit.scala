@@ -41,8 +41,16 @@ object ByteStreamSplitCodec {
       s"BYTE_STREAM_SPLIT over ${other.getClass.getSimpleName}")
   }
 
-  /** Decode `n` floats from the streams at buf[off..). */
-  def decodeFloats(buf: Array[Byte], off: Int, n: Int): Array[Float] = {
+  /** Decode `n` FLOAT or DOUBLE values from the streams at buf[off..). */
+  def decode(physicalType: Int, buf: Array[Byte], off: Int, n: Int): ColVec =
+    physicalType match {
+      case PhysicalType.Float => FloatVec(decodeFloats(buf, off, n))
+      case PhysicalType.Double => DoubleVec(decodeDoubles(buf, off, n))
+      case other => throw new IllegalArgumentException(
+        s"BYTE_STREAM_SPLIT over physical type $other not supported")
+    }
+
+  private def decodeFloats(buf: Array[Byte], off: Int, n: Int): Array[Float] = {
     require(off + 4L * n <= buf.length,
       s"BYTE_STREAM_SPLIT needs ${4L * n} bytes, has ${buf.length - off}")
     val out = new Array[Float](n)
@@ -58,8 +66,7 @@ object ByteStreamSplitCodec {
     out
   }
 
-  /** Decode `n` doubles from the streams at buf[off..). */
-  def decodeDoubles(buf: Array[Byte], off: Int, n: Int): Array[Double] = {
+  private def decodeDoubles(buf: Array[Byte], off: Int, n: Int): Array[Double] = {
     require(off + 8L * n <= buf.length,
       s"BYTE_STREAM_SPLIT needs ${8L * n} bytes, has ${buf.length - off}")
     val out = new Array[Double](n)

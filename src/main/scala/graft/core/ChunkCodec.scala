@@ -59,11 +59,19 @@ object ChunkCodec {
     case v: BytesVec => v.slice(from, until) // zero-copy arena window
   }
 
-  private def rawSizeOf(vec: ColVec, i: Int): Long = vec match {
+  /** Page-cut size of value i: its PLAIN bytes, a boolean counted as one
+    * byte (page-cut accounting only). Both containers cut pages with it. */
+  private[graft] def rawSizeOf(vec: ColVec, i: Int): Long = vec match {
     case v: BytesVec => 4L + v.len(i)
-    case BoolVec(_) => 1L // page-cut accounting only
+    case BoolVec(_) => 1L
     case IntVec(_) | FloatVec(_) => 4L
     case _ => 8L
+  }
+
+  /** Page-cut size of the values [from, until): the sum of [[rawSizeOf]]. */
+  private[graft] def cutSizeOf(vec: ColVec, from: Int, until: Int): Long = vec match {
+    case BoolVec(_) => (until - from).toLong
+    case _ => plainSizeOf(vec, from, until)
   }
 
   /** Primitive-array concat via System.arraycopy — the multi-page decode
@@ -119,41 +127,15 @@ object ChunkCodec {
       BytesVec(data, offsets)
   }
 
-  // ------------------------------------------------------------ page encode
-
-  private def encodePage(vec: ColVec, codecId: Int): Array[Byte] = codecId match {
-    case CodecId.Plain => PlainCodec.encode(vec)
-    case CodecId.RleBool => RleBoolCodec.encode(vec.asInstanceOf[BoolVec].values)
-    case CodecId.DeltaBinaryPacked => vec match {
-      case IntVec(v) =>
-        val e = new DeltaBinaryPackedEncoder(int32 = true); e.putInts(v, 0, v.length); e.result()
-      case LongVec(v) =>
-        val e = new DeltaBinaryPackedEncoder(int32 = false); e.put(v); e.result()
-      case other => throw new IllegalArgumentException(s"delta needs ints, got $other")
-    }
-    case CodecId.DeltaLengthByteArray =>
-      DeltaLengthByteArrayCodec.encode(vec.asInstanceOf[BytesVec])
-    case CodecId.DeltaByteArray =>
-      DeltaByteArrayCodec.encode(vec.asInstanceOf[BytesVec])
-    case CodecId.Fsst => FsstCodec.encode(vec.asInstanceOf[BytesVec])
-    case other => throw new IllegalArgumentException(s"not a page codec: $other")
-  }
+  // ------------------------------------------------------------ page codec
+  // FSST pages are this container's own; every other page's values go
+  // through the shared value codec, [[ValueCodec]].
 
   private def decodePage(physicalType: Int, codecId: Int, buf: Array[Byte],
-      numValues: Int, dict: ColVec): ColVec = codecId match {
-    case CodecId.Plain => PlainCodec.decode(physicalType, buf, numValues)
-    case CodecId.RleBool => BoolVec(RleBoolCodec.decode(buf, numValues))
-    case CodecId.Dict =>
-      if (numValues == 0) emptyVec(physicalType)
-      else DictCodec.decodeIndices(dict, buf, numValues)
-    case CodecId.DeltaBinaryPacked =>
-      val longs = DeltaBinaryPackedDecoder.decode(buf, int32 = physicalType == PhysicalType.Int32)
-      if (physicalType == PhysicalType.Int32) IntVec(longs.map(_.toInt)) else LongVec(longs)
-    case CodecId.DeltaLengthByteArray => DeltaLengthByteArrayCodec.decode(buf)
-    case CodecId.DeltaByteArray => DeltaByteArrayCodec.decode(buf)
-    case CodecId.Fsst => FsstCodec.decode(buf)
-    case other => throw new IllegalArgumentException(s"unknown codec $other")
-  }
+      numValues: Int, dict: ColVec): ColVec =
+    if (codecId == CodecId.Fsst) FsstCodec.decode(buf)
+    else ValueCodec.decode(ValueCodec.ofCodecId(codecId), physicalType, 0, buf,
+      0, numValues, dict)
 
   private final case class Page(codecId: Int, numValues: Int, bytes: Array[Byte])
 
@@ -187,7 +169,7 @@ object ChunkCodec {
     def encodeOne(part: ColVec): Array[Byte] =
       if (fsstTable != null)
         FsstCodec.encodeWithTable(part.asInstanceOf[BytesVec], fsstTable)
-      else encodePage(part, codecId)
+      else ValueCodec.encode(part, ValueCodec.ofCodecId(codecId))
     val pages = ArrayBuffer.empty[Page]
     val n = vec.length
     var start = 0
@@ -217,7 +199,7 @@ object ChunkCodec {
     var fellBack = false
     while (i < n && !fellBack) {
       val until = math.min(i + MiniBatch, n)
-      dict.put(slice(vec, i, until))
+      dict.put(vec, i, until)
       i = until
       if (dict.dictEncodedSize >= DictPageSizeLimit) {
         // fallback: cut the buffered ids as the last dict page, rest is PLAIN
@@ -277,10 +259,7 @@ object ChunkCodec {
     if (defLevels == null) w.putVlq(vec.length.toLong)
     else {
       w.putVlq(defLevels.length.toLong)
-      val rle = new RleHybridEncoder(1, math.max(64, defLevels.length / 8))
-      var i = 0
-      while (i < defLevels.length) { rle.put(defLevels(i).toLong); i += 1 }
-      val body = rle.result()
+      val body = RleHybridEncoder.levels(defLevels, defLevels.length, 1)
       w.putVlq(body.length.toLong)
       w.putBytes(body)
     }
@@ -318,7 +297,8 @@ object ChunkCodec {
     n
   }
 
-  private def plainSizeOf(vec: ColVec, from: Int, until: Int): Long = {
+  /** Exact PLAIN byte size of the values [from, until). */
+  private[graft] def plainSizeOf(vec: ColVec, from: Int, until: Int): Long = {
     val nv = (until - from).toLong
     vec match {
       case v: BytesVec => (v.offsets(until) - v.offsets(from)).toLong + 4L * nv
@@ -447,14 +427,8 @@ object ChunkCodec {
         EncodedChunk(blob, forcedElemCodec, elems.length, elems.rawSize,
           blob.length.toLong, blob.length.toLong, 0)
       } else encodeAuto(elems)
-    val repEnc = new RleHybridEncoder(1, math.max(64, rep.length / 8))
-    var i = 0
-    while (i < rep.length) { repEnc.put(rep(i).toLong); i += 1 }
-    val repBytes = repEnc.result()
-    val defEnc = new RleHybridEncoder(2, math.max(64, defs.length / 8))
-    i = 0
-    while (i < defs.length) { defEnc.put(defs(i).toLong); i += 1 }
-    val defBytes = defEnc.result()
+    val repBytes = RleHybridEncoder.levels(rep, rep.length, 1)
+    val defBytes = RleHybridEncoder.levels(defs, defs.length, 2)
     val w = new BitWriter(inner.blob.length + repBytes.length + defBytes.length + 64)
     w.putAligned('G'.toLong, 1); w.putAligned('C'.toLong, 1)
     w.putAligned(3L, 1)
@@ -509,14 +483,8 @@ object ChunkCodec {
     require(rep.length == defs.length, "rep/def stream length mismatch")
     val kInner = encodeAuto(keys)
     val vInner = encodeAuto(vals)
-    val repEnc = new RleHybridEncoder(1, math.max(64, rep.length / 8))
-    var i = 0
-    while (i < rep.length) { repEnc.put(rep(i).toLong); i += 1 }
-    val repBytes = repEnc.result()
-    val defEnc = new RleHybridEncoder(2, math.max(64, defs.length / 8))
-    i = 0
-    while (i < defs.length) { defEnc.put(defs(i).toLong); i += 1 }
-    val defBytes = defEnc.result()
+    val repBytes = RleHybridEncoder.levels(rep, rep.length, 1)
+    val defBytes = RleHybridEncoder.levels(defs, defs.length, 2)
     val w = new BitWriter(kInner.blob.length + vInner.blob.length +
       repBytes.length + defBytes.length + 64)
     w.putAligned('G'.toLong, 1); w.putAligned('C'.toLong, 1)
@@ -618,14 +586,14 @@ object ChunkCodec {
         i += 1
       }
     }
-    val hasDict = r.getAligned(1) == 1L
-    var dict: ColVec = null
-    if (hasDict) {
-      val entries = checkedDense(r.getVlq(), blob.length, "dict entries")
-      val len = checkedLen(r.getVlq(), r, "dict bytes")
-      val bytes = r.getBytes(len)
-      dict = PlainCodec.decode(physicalType, bytes, entries)
-    }
+    // a chunk without a dictionary page decodes dictionary ids against an
+    // empty one: zero ids pass, any id fails the shared range check
+    val dict: ColVec =
+      if (r.getAligned(1) == 1L) {
+        val entries = checkedDense(r.getVlq(), blob.length, "dict entries")
+        val len = checkedLen(r.getVlq(), r, "dict bytes")
+        PlainCodec.decode(physicalType, r.getBytes(len), entries)
+      } else ValueCodec.empty(physicalType)
     val numPages = checkedDense(r.getVlq(), blob.length, "page count")
     val parts = new ArrayBuffer[ColVec](numPages)
     var p = 0
@@ -637,7 +605,7 @@ object ChunkCodec {
       parts += decodePage(physicalType, codec, bytes, nv, dict)
       p += 1
     }
-    val out = if (parts.isEmpty) emptyVec(physicalType) else concat(parts.toSeq)
+    val out = if (parts.isEmpty) ValueCodec.empty(physicalType) else concat(parts.toSeq)
     require(out.length == numValues, s"chunk decode: ${out.length} != $numValues")
     Decoded(out, defLevels)
   }
@@ -681,15 +649,6 @@ object ChunkCodec {
     var i = 0
     while (i < numSlots) { out(i) = tmp(i).toByte; i += 1 }
     out
-  }
-
-  private def emptyVec(physicalType: Int): ColVec = physicalType match {
-    case PhysicalType.Bool => BoolVec(Array.empty)
-    case PhysicalType.Int32 => IntVec(Array.empty)
-    case PhysicalType.Int64 => LongVec(Array.empty)
-    case PhysicalType.Float => FloatVec(Array.empty)
-    case PhysicalType.Double => DoubleVec(Array.empty)
-    case PhysicalType.Bytes => BytesVec.empty
   }
 }
 

@@ -14,6 +14,57 @@ sealed trait ColVec {
   def rawSize: Long
 }
 
+object ColVec {
+  /** The values at positions `idx`, in that order (row selection and
+    * dictionary expansion). */
+  def gather(vec: ColVec, idx: Array[Int]): ColVec = {
+    val n = idx.length
+    vec match {
+      case IntVec(vs) =>
+        val o = new Array[Int](n); var i = 0
+        while (i < n) { o(i) = vs(idx(i)); i += 1 }; IntVec(o)
+      case LongVec(vs) =>
+        val o = new Array[Long](n); var i = 0
+        while (i < n) { o(i) = vs(idx(i)); i += 1 }; LongVec(o)
+      case FloatVec(vs) =>
+        val o = new Array[Float](n); var i = 0
+        while (i < n) { o(i) = vs(idx(i)); i += 1 }; FloatVec(o)
+      case DoubleVec(vs) =>
+        val o = new Array[Double](n); var i = 0
+        while (i < n) { o(i) = vs(idx(i)); i += 1 }; DoubleVec(o)
+      case BoolVec(vs) =>
+        val o = new Array[Boolean](n); var i = 0
+        while (i < n) { o(i) = vs(idx(i)); i += 1 }; BoolVec(o)
+      case v: BytesVec =>
+        val offsets = new Array[Int](n + 1)
+        var total = 0
+        var i = 0
+        while (i < n) { offsets(i) = total; total += v.len(idx(i)); i += 1 }
+        offsets(n) = total
+        val data = new Array[Byte](total)
+        i = 0
+        while (i < n) {
+          System.arraycopy(v.data, v.start(idx(i)), data, offsets(i), v.len(idx(i)))
+          i += 1
+        }
+        BytesVec(data, offsets)
+    }
+  }
+
+  /** [[gather]] of byte values appended to a shared arena (the multi-page
+    * decode path: same copies, minus the per-page vector and its concat). */
+  def gatherBytesInto(v: BytesVec, idx: Array[Int], acc: BytesAccum): Unit = {
+    var i = 0
+    while (i < idx.length) {
+      val n = v.len(idx(i))
+      val data = acc.ensure(n)
+      System.arraycopy(v.data, v.start(idx(i)), data, acc.writePos, n)
+      acc.commit(n)
+      i += 1
+    }
+  }
+}
+
 object PhysicalType {
   val Bool = 0
   val Int32 = 1

@@ -203,13 +203,19 @@ object DeltaLengthByteArrayCodec {
     val offsets = new Array[Int](total + 1)
     var acc = 0
     var i = 0
-    while (i < total) { offsets(i) = acc; acc += lens(i).toInt; i += 1 }
+    while (i < total) {
+      // each value must lie inside the stream: a cut-short data section
+      // would otherwise decode as zero bytes
+      require(lens(i) >= 0 && lens(i) <= buf.length - dataStart - acc,
+        s"byte-array value $i claims ${lens(i)} bytes past the stream end")
+      offsets(i) = acc
+      acc += lens(i).toInt
+      i += 1
+    }
     offsets(total) = acc
     val data = java.util.Arrays.copyOfRange(buf, dataStart, dataStart + acc)
     (BytesVec(data, offsets), dataStart + acc - off)
   }
-
-  def decode(buf: Array[Byte]): BytesVec = decodeWithLength(buf, 0)._1
 }
 
 /** DELTA_BYTE_ARRAY (incremental / front coding): shared-prefix lengths vs
@@ -281,12 +287,13 @@ object DeltaByteArrayCodec {
     e.result()
   }
 
-  def decode(buf: Array[Byte]): BytesVec = {
+  /** Decode the stream starting at `off`. */
+  def decode(buf: Array[Byte], off: Int = 0): BytesVec = {
     // ONE pass over the prefix-length stream: the shared walker decodes
     // and reports where the suffix section starts (the old code decoded
     // the stream once and re-walked it a second time just for position)
     val (prefixStream, suffixStart) =
-      DeltaBinaryPackedDecoder.decodeWithEnd(buf, 0, int32 = true)
+      DeltaBinaryPackedDecoder.decodeWithEnd(buf, off, int32 = true)
     val total = prefixStream.length
     val (suffixes, _) = DeltaLengthByteArrayCodec.decodeWithLength(buf, suffixStart)
     // exact output arena: len(i) = prefix(i) + suffixLen(i); prev is a view

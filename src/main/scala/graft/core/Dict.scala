@@ -12,6 +12,9 @@ package graft.core
   *
   * Byte values are hashed as (arena, offset, length) slices — no per-value
   * allocation on the probe path; uniques are appended to a private arena.
+  * Floats and doubles are keyed by their raw bits, so every NaN payload
+  * is its own entry and decodes bit-exactly. Both containers build their
+  * dictionaries here; ids decode in [[ValueCodec]].
   */
 object DictCodec {
 
@@ -22,11 +25,11 @@ object DictCodec {
     private val bufferedIndices = new IntArrayList()
     private var dictBytes = 0L
 
-    // uniques, typed storage (only one in use per instance)
+    // uniques, typed storage (only one in use per instance): byte values
+    // in an arena, everything else as a long (floats/doubles as raw bits)
     private var uData = new Array[Byte](4096)
     private var uOffsets = new IntArrayList()
     private var uLongs = new Array[Long](64)
-    private var uDoubles = new Array[Double](64)
     private var nUnique = 0
     uOffsets.add(0)
 
@@ -65,9 +68,8 @@ object DictCodec {
     private def hashOfId(id: Int): Int = physicalType match {
       case PhysicalType.Bytes =>
         hashBytes(uData, uOffsets.get(id), uOffsets.get(id + 1) - uOffsets.get(id))
-      case PhysicalType.Int32 | PhysicalType.Int64 => mix(uLongs(id))
-      case PhysicalType.Float | PhysicalType.Double =>
-        mix(java.lang.Double.doubleToRawLongBits(uDoubles(id)))
+      case PhysicalType.Int32 | PhysicalType.Int64 | PhysicalType.Float |
+          PhysicalType.Double => mix(uLongs(id))
       case _ => throw new IllegalStateException
     }
 
@@ -128,40 +130,27 @@ object DictCodec {
       bufferedIndices.add(id)
     }
 
-    private def putDoubleOne(v: Double, width: Int): Unit = {
-      val bits = java.lang.Double.doubleToRawLongBits(v)
-      var h = mix(bits) & mask
-      var id = -1
-      while (id < 0) {
-        val e = table(h)
-        if (e == 0) {
-          id = nUnique
-          table(h) = id + 1
-          if (nUnique == uDoubles.length) uDoubles = java.util.Arrays.copyOf(uDoubles, nUnique << 1)
-          uDoubles(nUnique) = v
-          nUnique += 1
-          dictBytes += width
-          if (nUnique * 10 >= table.length * 7) grow()
-        } else if (java.lang.Double.doubleToRawLongBits(uDoubles(e - 1)) == bits) id = e - 1
-        else h = (h + 1) & mask
-      }
-      bufferedIndices.add(id)
-    }
+    def put(vec: ColVec): Unit = put(vec, 0, vec.length)
 
-    def put(vec: ColVec): Unit = vec match {
-      case IntVec(vs) =>
-        var i = 0; while (i < vs.length) { putLongOne(vs(i).toLong, 4); i += 1 }
-      case LongVec(vs) =>
-        var i = 0; while (i < vs.length) { putLongOne(vs(i), 8); i += 1 }
-      case FloatVec(vs) =>
-        var i = 0; while (i < vs.length) { putDoubleOne(vs(i).toDouble, 4); i += 1 }
-      case DoubleVec(vs) =>
-        var i = 0; while (i < vs.length) { putDoubleOne(vs(i), 8); i += 1 }
-      case v: BytesVec =>
-        var i = 0
-        while (i < v.length) { putBytesOne(v.data, v.start(i), v.len(i)); i += 1 }
-      case BoolVec(_) =>
-        throw new IllegalArgumentException("booleans are never dictionary-encoded")
+    /** Add the values at positions [from, until) of `vec`. */
+    def put(vec: ColVec, from: Int, until: Int): Unit = {
+      var i = from
+      vec match {
+        case IntVec(vs) => while (i < until) { putLongOne(vs(i).toLong, 4); i += 1 }
+        case LongVec(vs) => while (i < until) { putLongOne(vs(i), 8); i += 1 }
+        case FloatVec(vs) =>
+          while (i < until) {
+            putLongOne(java.lang.Float.floatToRawIntBits(vs(i)).toLong, 4); i += 1
+          }
+        case DoubleVec(vs) =>
+          while (i < until) {
+            putLongOne(java.lang.Double.doubleToRawLongBits(vs(i)), 8); i += 1
+          }
+        case v: BytesVec =>
+          while (i < until) { putBytesOne(v.data, v.start(i), v.len(i)); i += 1 }
+        case BoolVec(_) =>
+          throw new IllegalArgumentException("booleans are never dictionary-encoded")
+      }
     }
 
     def numEntries: Int = nUnique
@@ -185,9 +174,14 @@ object DictCodec {
       case PhysicalType.Int64 => LongVec(java.util.Arrays.copyOf(uLongs, nUnique))
       case PhysicalType.Float =>
         val o = new Array[Float](nUnique)
-        var i = 0; while (i < nUnique) { o(i) = uDoubles(i).toFloat; i += 1 }
+        var i = 0
+        while (i < nUnique) { o(i) = java.lang.Float.intBitsToFloat(uLongs(i).toInt); i += 1 }
         FloatVec(o)
-      case PhysicalType.Double => DoubleVec(java.util.Arrays.copyOf(uDoubles, nUnique))
+      case PhysicalType.Double =>
+        val o = new Array[Double](nUnique)
+        var i = 0
+        while (i < nUnique) { o(i) = java.lang.Double.longBitsToDouble(uLongs(i)); i += 1 }
+        DoubleVec(o)
       case PhysicalType.Bytes =>
         val offs = new Array[Int](nUnique + 1)
         var i = 0
@@ -208,80 +202,6 @@ object DictCodec {
       System.arraycopy(body, 0, out, 1, body.length)
       bufferedIndices.clear()
       out
-    }
-
-    /** Replay buffered ids through a non-dict encoder during dict fallback. */
-    def drainBufferedValues(): ColVec = {
-      val u = uniquesVec
-      val n = bufferedIndices.size
-      val vec: ColVec = u match {
-        case IntVec(us) =>
-          val o = new Array[Int](n); var i = 0
-          while (i < n) { o(i) = us(bufferedIndices.get(i)); i += 1 }; IntVec(o)
-        case LongVec(us) =>
-          val o = new Array[Long](n); var i = 0
-          while (i < n) { o(i) = us(bufferedIndices.get(i)); i += 1 }; LongVec(o)
-        case FloatVec(us) =>
-          val o = new Array[Float](n); var i = 0
-          while (i < n) { o(i) = us(bufferedIndices.get(i)); i += 1 }; FloatVec(o)
-        case DoubleVec(us) =>
-          val o = new Array[Double](n); var i = 0
-          while (i < n) { o(i) = us(bufferedIndices.get(i)); i += 1 }; DoubleVec(o)
-        case uv: BytesVec =>
-          val offs = new Array[Int](n + 1)
-          var total = 0
-          var i = 0
-          while (i < n) { offs(i) = total; total += uv.len(bufferedIndices.get(i)); i += 1 }
-          offs(n) = total
-          val data = new Array[Byte](total)
-          i = 0
-          while (i < n) {
-            val id = bufferedIndices.get(i)
-            System.arraycopy(uv.data, uv.start(id), data, offs(i), uv.len(id))
-            i += 1
-          }
-          BytesVec(data, offs)
-        case BoolVec(_) => throw new IllegalStateException("unreachable")
-      }
-      bufferedIndices.clear()
-      vec
-    }
-  }
-
-  /** Decode an index page against a decoded dictionary. */
-  def decodeIndices(dict: ColVec, indexPage: Array[Byte], numValues: Int): ColVec = {
-    val width = indexPage(0) & 0xFF
-    val dec = new RleHybridDecoder(width, indexPage, 1, indexPage.length)
-    val idx = new Array[Long](numValues)
-    dec.get(idx, 0, numValues)
-    dict match {
-      case IntVec(us) =>
-        val o = new Array[Int](numValues); var i = 0
-        while (i < numValues) { o(i) = us(idx(i).toInt); i += 1 }; IntVec(o)
-      case LongVec(us) =>
-        val o = new Array[Long](numValues); var i = 0
-        while (i < numValues) { o(i) = us(idx(i).toInt); i += 1 }; LongVec(o)
-      case FloatVec(us) =>
-        val o = new Array[Float](numValues); var i = 0
-        while (i < numValues) { o(i) = us(idx(i).toInt); i += 1 }; FloatVec(o)
-      case DoubleVec(us) =>
-        val o = new Array[Double](numValues); var i = 0
-        while (i < numValues) { o(i) = us(idx(i).toInt); i += 1 }; DoubleVec(o)
-      case uv: BytesVec =>
-        val offs = new Array[Int](numValues + 1)
-        var total = 0
-        var i = 0
-        while (i < numValues) { offs(i) = total; total += uv.len(idx(i).toInt); i += 1 }
-        offs(numValues) = total
-        val data = new Array[Byte](total)
-        i = 0
-        while (i < numValues) {
-          val id = idx(i).toInt
-          System.arraycopy(uv.data, uv.start(id), data, offs(i), uv.len(id))
-          i += 1
-        }
-        BytesVec(data, offs)
-      case BoolVec(_) => throw new IllegalArgumentException("no bool dict")
     }
   }
 }

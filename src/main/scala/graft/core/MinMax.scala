@@ -127,6 +127,22 @@ object MinMax {
     aLen - bLen
   }
 
+  /** Compare two stat values of `physicalType`, as [[compute]] encodes
+    * them, in the type's sort order: signed integers, `Float.compare` /
+    * `Double.compare`, unsigned-lexicographic bytes and booleans. */
+  def compareStat(physicalType: Int, a: Array[Byte], b: Array[Byte]): Int =
+    physicalType match {
+      case PhysicalType.Int32 | PhysicalType.Int64 =>
+        java.lang.Long.compare(leToLong(a), leToLong(b))
+      case PhysicalType.Float =>
+        java.lang.Float.compare(java.lang.Float.intBitsToFloat(leToLong(a).toInt),
+          java.lang.Float.intBitsToFloat(leToLong(b).toInt))
+      case PhysicalType.Double =>
+        java.lang.Double.compare(java.lang.Double.longBitsToDouble(leToLong(a)),
+          java.lang.Double.longBitsToDouble(leToLong(b)))
+      case _ => compareBytes(a, b)
+    }
+
   /** Unsigned lexicographic compare of raw byte arrays. */
   def compareBytes(a: Array[Byte], b: Array[Byte]): Int = {
     val n = math.min(a.length, b.length)

@@ -107,6 +107,19 @@ final class RleHybridEncoder(bitWidth: Int, initialCapacity: Int = 256) {
   }
 }
 
+object RleHybridEncoder {
+  /** A level stream (one level per slot; `levels == null` means `n` ones)
+    * as a prefix-free hybrid stream of `bitWidth` — the definition and
+    * repetition levels of both containers. */
+  def levels(levels: Array[Byte], n: Int, bitWidth: Int): Array[Byte] = {
+    val enc = new RleHybridEncoder(bitWidth, math.max(64, n / 8))
+    var i = 0
+    if (levels == null) while (i < n) { enc.put(1L); i += 1 }
+    else while (i < n) { enc.put(levels(i).toLong); i += 1 }
+    enc.result()
+  }
+}
+
 /** Decoder for the hybrid stream. */
 final class RleHybridDecoder(bitWidth: Int, buf: Array[Byte], start: Int, end: Int) {
   def this(bitWidth: Int, buf: Array[Byte]) = this(bitWidth, buf, 0, buf.length)
@@ -166,10 +179,11 @@ object RleBoolCodec {
     out
   }
 
-  def decode(buf: Array[Byte], numValues: Int): Array[Boolean] = {
-    val bodyLen = (buf(0) & 0xFF) | ((buf(1) & 0xFF) << 8) |
-      ((buf(2) & 0xFF) << 16) | ((buf(3) & 0xFF) << 24)
-    val dec = new RleHybridDecoder(1, buf, 4, 4 + bodyLen)
+  /** Decode `numValues` booleans from the stream starting at `off`. */
+  def decode(buf: Array[Byte], off: Int, numValues: Int): Array[Boolean] = {
+    val bodyLen = (buf(off) & 0xFF) | ((buf(off + 1) & 0xFF) << 8) |
+      ((buf(off + 2) & 0xFF) << 16) | ((buf(off + 3) & 0xFF) << 24)
+    val dec = new RleHybridDecoder(1, buf, off + 4, off + 4 + bodyLen)
     val tmp = new Array[Long](numValues)
     dec.get(tmp, 0, numValues)
     val out = new Array[Boolean](numValues)

@@ -8,17 +8,21 @@ import graft.core._
 /** Real `.parquet` FILE interop — the reference's most user-visible
   * capability (`/root/reference/src/file/reader.rs:145-283`,
   * `/root/reference/src/file/writer.rs:120-243`), re-done over our own
-  * codec kernels: the PLAIN / dictionary / RLE-hybrid byte grammars are the
-  * ones already implemented in [[graft.core]], and this layer adds only the
-  * PAR1 container (thrift footer, page headers, offsets) and the record
-  * re-assembly (the reference's `src/record/reader.rs` Dremel layer).
+  * codec core: page values decode in the engine's one value-codec layer
+  * ([[graft.core.ValueCodec]]) and pages decompress in
+  * [[graft.core.BlockCodec]], the code the `GC` chunk container runs. This
+  * layer adds only the PAR1 container (thrift footer, page headers, levels,
+  * offsets) and the record re-assembly (the reference's
+  * `src/record/reader.rs` Dremel layer).
   *
   * Reader: flat AND nested schemas (LIST / MAP / struct groups, legacy
-  * 2-level lists, unannotated repeated fields), PLAIN +
-  * PLAIN_DICTIONARY/RLE_DICTIONARY data pages V1 AND V2 (v2: prefix-free
-  * uncompressed level streams, value-only block compression), RLE or legacy
-  * BIT_PACKED level streams, UNCOMPRESSED / SNAPPY / GZIP / ZSTD pages, all
-  * physical types incl. INT96 (raw 12-byte values) and FIXED_LEN_BYTE_ARRAY.
+  * 2-level lists, unannotated repeated fields), data pages V1 AND V2 (v2:
+  * prefix-free uncompressed level streams, value-only block compression)
+  * in PLAIN, PLAIN_DICTIONARY/RLE_DICTIONARY, RLE booleans, the three
+  * DELTA encodings and BYTE_STREAM_SPLIT, RLE or legacy BIT_PACKED level
+  * streams, UNCOMPRESSED / SNAPPY / GZIP / ZSTD / LZ4 / LZ4_RAW / BROTLI
+  * pages, all physical types incl. INT96 (raw 12-byte values) and
+  * FIXED_LEN_BYTE_ARRAY.
   * Validated value-exactly against the reference's own golden files
   * (the golden files under `/root/reference/data/` — the anchors its tests use,
   * reader.rs:728-815 and record/triplet.rs:294-427).
@@ -200,7 +204,8 @@ object ParquetFileReader {
       else spans.filter(s => ranges.exists(r =>
         r._1 < s.rowStart + s.header.numValues && r._2 > s.rowStart))
     val width = byteWidth(col)
-    val dict = dictPage.map(decodeDictPage(bytes, _, col, width)).orNull
+    val phys = PqType.physical(col.typ)
+    val dict = dictPage.map(decodeDictPage(bytes, _, col, phys, width)).orNull
     // byte-like chunks decode into ONE arena across pages (single copy per
     // value) instead of per-page vectors + a whole-arena concat. The sizes
     // are capacity HINTS only (both arrays double on demand), taken from
@@ -224,14 +229,14 @@ object ParquetFileReader {
       val nNonNull =
         if (defs != null) countMax(defs, col.maxDef) else s.header.numValues
       if (acc != null)
-        decodeBytesInto(s.header.encoding, col.typ, width, raw, pos, nNonNull,
-          dict, acc)
-      else parts += decodeValuesVec(s.header.encoding, col.typ, width, raw,
+        ValueCodec.decodeBytesInto(s.header.encoding, width, raw, pos,
+          nNonNull, dict, acc)
+      else parts += ValueCodec.decode(s.header.encoding, phys, width, raw,
         pos, nNonNull, dict)
     }
     val vec =
       if (acc != null) acc.toVec
-      else if (parts.isEmpty) emptyVec(col.typ, width)
+      else if (parts.isEmpty) ValueCodec.empty(phys)
       else ChunkCodec.concat(parts.toSeq)
     val out = DecodedChunk(vec, concatLevels(defParts), concatLevels(repParts))
     if (ranges == null) out else keepRows(out, kept, ranges, col.maxDef)
@@ -336,15 +341,15 @@ object ParquetFileReader {
   }
 
   private def decodeDictPage(bytes: Array[Byte], s: PageSpan, col: LeafColumn,
-      width: Int): ColVec = {
+      phys: Int, width: Int): ColVec = {
     val ph = s.header
     val dataStart = s.off + ph.headerLen
     checkPageCrc(ph, bytes, dataStart)
-    val raw = decompress(bytes, dataStart, ph.compressedSize,
+    val raw = BlockCodec.decompress(bytes, dataStart, ph.compressedSize,
       ph.uncompressedSize, col.meta.codec)
     require(ph.numValues >= 0 && ph.numValues <= raw.length, // entries >= 1 byte
       s"dict page claims ${ph.numValues} entries in ${raw.length} bytes")
-    decodePlainVec(col.typ, width, raw, 0, raw.length, ph.numValues)
+    ValueCodec.decode(PqEncoding.Plain, phys, width, raw, 0, ph.numValues, null)
   }
 
   /** One DATA page (v1 or v2) of `col`: (rep levels or null, def levels or
@@ -358,7 +363,7 @@ object ParquetFileReader {
     checkPageCrc(ph, bytes, dataStart)
     if (ph.pageType == 0) {
       // data page v1: [rep levels][def levels][values], one region
-      val raw = decompress(bytes, dataStart, ph.compressedSize,
+      val raw = BlockCodec.decompress(bytes, dataStart, ph.compressedSize,
         ph.uncompressedSize, codec)
       var pos = 0
       var reps: Array[Int] = null
@@ -393,8 +398,8 @@ object ParquetFileReader {
       val vUnc = ph.uncompressedSize - repLen - defLen
       val raw =
         if (ph.isCompressed && codec != PqCodec.Uncompressed)
-          decompress(bytes, vOff, ph.compressedSize - repLen - defLen, vUnc,
-            codec)
+          BlockCodec.decompress(bytes, vOff, ph.compressedSize - repLen - defLen,
+            vUnc, codec)
         else java.util.Arrays.copyOfRange(bytes, vOff, vOff + vUnc)
       (reps, defs, raw, 0)
     }
@@ -435,7 +440,7 @@ object ParquetFileReader {
     val rows = slots.result()
     if (rows.length == base) d // the kept pages lie wholly inside the ranges
     else if (d.defs == null)
-      DecodedChunk(ChunkCodecSupport.gather(d.values, rows), null, null)
+      DecodedChunk(ColVec.gather(d.values, rows), null, null)
     else {
       // value ordinal of every non-null slot
       val ord = new Array[Int](d.defs.length)
@@ -446,127 +451,10 @@ object ParquetFileReader {
         i += 1
       }
       DecodedChunk(
-        ChunkCodecSupport.gather(d.values,
+        ColVec.gather(d.values,
           rows.filter(d.defs(_) == maxDef).map(ord)),
         rows.map(d.defs), null)
     }
-  }
-
-  private def emptyVec(typ: Int, width: Int): ColVec =
-    decodePlainVec(typ, width, Array.emptyByteArray, 0, 0, 0)
-
-  private def decodePlainVec(typ: Int, width: Int, buf: Array[Byte], off: Int,
-      len: Int, n: Int): ColVec = typ match {
-    case PqType.Int96 | PqType.FixedLenByteArray =>
-      // fixed-width values: zero-copy offsets over the page buffer
-      require(width.toLong * n <= len,
-        s"$n values of $width bytes need more than $len bytes")
-      BytesVec(buf, Array.tabulate(n + 1)(i => off + i * width))
-    case _ =>
-      val phys = typ match {
-        case PqType.Boolean => PhysicalType.Bool
-        case PqType.Int32 => PhysicalType.Int32
-        case PqType.Int64 => PhysicalType.Int64
-        case PqType.Float => PhysicalType.Float
-        case PqType.Double => PhysicalType.Double
-        case PqType.ByteArray => PhysicalType.Bytes
-        case other => throw new IllegalArgumentException(
-          s"physical type $other unsupported")
-      }
-      PlainCodec.decodeSlice(phys, buf, off, len, n)
-  }
-
-  /** Dictionary ids of one page (bit width byte + RLE/bit-packed hybrid),
-    * each checked against the dictionary size. */
-  private def dictIds(raw: Array[Byte], pos: Int, n: Int,
-      dictLen: Int): Array[Int] = {
-    val dec = new RleHybridDecoder(raw(pos) & 0xFF, raw, pos + 1, raw.length)
-    val ids = new Array[Long](n)
-    dec.get(ids, 0, n)
-    val idx = new Array[Int](n)
-    var i = 0
-    while (i < n) {
-      val id = ids(i).toInt
-      require(id >= 0 && id < dictLen, s"dict id $id out of [0,$dictLen)")
-      idx(i) = id
-      i += 1
-    }
-    idx
-  }
-
-  /** Byte-like page decode into the shared chunk arena: PLAIN BYTE_ARRAY and
-    * dictionary pages write values straight in (single copy); the other
-    * encodings decode a page vector and append it. */
-  private def decodeBytesInto(encoding: Int, typ: Int, width: Int,
-      raw: Array[Byte], pos: Int, nNonNull: Int, dict: ColVec,
-      acc: BytesAccum): Unit = encoding match {
-    case PqEncoding.Plain if typ == PqType.ByteArray =>
-      PlainCodec.decodeBytesInto(raw, pos, raw.length - pos, nNonNull, acc)
-    case PqEncoding.PlainDictionary | PqEncoding.RleDictionary =>
-      require(dict != null, "data page references a missing dictionary")
-      if (nNonNull > 0)
-        ChunkCodecSupport.gatherBytesInto(dict.asInstanceOf[BytesVec],
-          dictIds(raw, pos, nNonNull, dict.length), acc)
-    case other =>
-      acc.append(decodeValuesVec(other, typ, width, raw, pos, nNonNull, dict)
-        .asInstanceOf[BytesVec])
-  }
-
-  private def decodeValuesVec(encoding: Int, typ: Int, width: Int,
-      raw: Array[Byte], pos: Int, nNonNull: Int, dict: ColVec): ColVec =
-    encoding match {
-      case PqEncoding.Plain =>
-        decodePlainVec(typ, width, raw, pos, raw.length - pos, nNonNull)
-      case PqEncoding.PlainDictionary | PqEncoding.RleDictionary =>
-        require(dict != null, "data page references a missing dictionary")
-        if (nNonNull == 0) emptyVec(typ, width)
-        else ChunkCodecSupport.gather(dict, dictIds(raw, pos, nNonNull, dict.length))
-      case PqEncoding.DeltaBinaryPacked =>
-        val vs = DeltaBinaryPackedDecoder.decode(slice(raw, pos),
-          int32 = typ == PqType.Int32)
-        require(vs.length >= nNonNull,
-          s"delta stream has ${vs.length} values, page needs $nNonNull")
-        if (typ == PqType.Int32) {
-          val out = new Array[Int](nNonNull)
-          var i = 0
-          while (i < nNonNull) { out(i) = vs(i).toInt; i += 1 }
-          IntVec(out)
-        } else LongVec(java.util.Arrays.copyOf(vs, nNonNull))
-      case PqEncoding.DeltaLengthByteArray =>
-        trimBytes(DeltaLengthByteArrayCodec.decode(slice(raw, pos)), nNonNull)
-      case PqEncoding.DeltaByteArray =>
-        trimBytes(DeltaByteArrayCodec.decode(slice(raw, pos)), nNonNull)
-      case PqEncoding.ByteStreamSplit => typ match {
-        case PqType.Float =>
-          FloatVec(ByteStreamSplitCodec.decodeFloats(raw, pos, nNonNull))
-        case PqType.Double =>
-          DoubleVec(ByteStreamSplitCodec.decodeDoubles(raw, pos, nNonNull))
-        case other => throw new IllegalArgumentException(
-          s"BYTE_STREAM_SPLIT over physical type $other not supported")
-      }
-      case PqEncoding.Rle =>
-        // RLE-encoded BOOLEAN values: 4-byte LE length prefix + hybrid runs
-        require(typ == PqType.Boolean, "RLE data pages are boolean-only")
-        val len = (raw(pos) & 0xFF) | ((raw(pos + 1) & 0xFF) << 8) |
-          ((raw(pos + 2) & 0xFF) << 16) | ((raw(pos + 3) & 0xFF) << 24)
-        val dec = new RleHybridDecoder(1, raw, pos + 4, pos + 4 + len)
-        val tmp = new Array[Long](nNonNull)
-        dec.get(tmp, 0, nNonNull)
-        val out = new Array[Boolean](nNonNull)
-        var i = 0
-        while (i < nNonNull) { out(i) = tmp(i) != 0L; i += 1 }
-        BoolVec(out)
-      case other => throw new IllegalArgumentException(
-        s"data page encoding $other not supported")
-    }
-
-  private def slice(raw: Array[Byte], pos: Int): Array[Byte] =
-    if (pos == 0) raw else java.util.Arrays.copyOfRange(raw, pos, raw.length)
-
-  private def trimBytes(v: BytesVec, n: Int): BytesVec = {
-    require(v.length >= n, s"byte-array stream has ${v.length} values, page needs $n")
-    if (v.length == n) v
-    else BytesVec(v.data, java.util.Arrays.copyOf(v.offsets, n + 1))
   }
 
   /** One v1 level stream: RLE (4-byte LE length prefix) or legacy BIT_PACKED
@@ -1142,51 +1030,6 @@ object ParquetFileReader {
 
   private def levelBitWidth(maxLevel: Int): Int =
     32 - Integer.numberOfLeadingZeros(maxLevel)
-
-  private def decompress(bytes: Array[Byte], off: Int, compLen: Int,
-      uncLen: Int, codec: Int): Array[Byte] = codec match {
-    case PqCodec.Uncompressed =>
-      java.util.Arrays.copyOfRange(bytes, off, off + compLen)
-    case PqCodec.Snappy =>
-      val out = new Array[Byte](uncLen)
-      org.xerial.snappy.Snappy.uncompress(bytes, off, compLen, out, 0)
-      out
-    case PqCodec.Gzip =>
-      val gz = new java.util.zip.GZIPInputStream(
-        new java.io.ByteArrayInputStream(bytes, off, compLen))
-      val out = new Array[Byte](uncLen)
-      var o = 0
-      while (o < uncLen) {
-        val k = gz.read(out, o, uncLen - o)
-        if (k < 0) throw new java.io.EOFException("gzip page truncated")
-        o += k
-      }
-      out
-    case PqCodec.Zstd =>
-      val out = new Array[Byte](uncLen)
-      com.github.luben.zstd.Zstd.decompressByteArray(out, 0, uncLen, bytes, off, compLen)
-      out
-    case PqCodec.Lz4 =>
-      // legacy LZ4 = frame format (reference compression.rs lz4::Decoder)
-      val in = new net.jpountz.lz4.LZ4FrameInputStream(
-        new java.io.ByteArrayInputStream(bytes, off, compLen))
-      val out = new Array[Byte](uncLen)
-      var o = 0
-      while (o < uncLen) {
-        val k = in.read(out, o, uncLen - o)
-        if (k < 0) throw new java.io.EOFException("lz4 page truncated")
-        o += k
-      }
-      out
-    case PqCodec.Lz4Raw =>
-      val out = new Array[Byte](uncLen)
-      net.jpountz.lz4.LZ4Factory.fastestInstance().safeDecompressor()
-        .decompress(bytes, off, compLen, out, 0)
-      out
-    case PqCodec.Brotli =>
-      graft.core.Brotli.decompress(bytes, off, compLen, uncLen)
-    case other => throw new IllegalArgumentException(s"codec $other not supported")
-  }
 
   /** INT96 timestamp (nanos-of-day LE in bytes 0-7, Julian day LE in bytes
     * 8-11) -> epoch micros. */

@@ -11,12 +11,17 @@ import org.apache.spark.sql.types._
 import graft.core._
 import graft.operators.ColBuilder
 
-/** Standard `.parquet` FILE writer over our own codec kernels — PAR1
-  * container, v1 data pages (PLAIN or dict), RLE definition levels, thrift
+/** Standard `.parquet` FILE writer over the engine's codec core — PAR1
+  * container, v1 or v2 data pages, RLE definition levels, thrift
   * compact footer; the counterpart of the reference's SerializedFileWriter
   * (`/root/reference/src/file/writer.rs:120-243`). Files are readable by
   * any Parquet implementation — the test suite round-trips them through
   * Spark's own built-in reader as the external correctness anchor.
+  * This file owns only the container and the encoding choice: value bytes
+  * come from the one value-codec layer ([[graft.core.ValueCodec]]),
+  * dictionaries from [[graft.core.DictCodec.Encoder]] and page compression
+  * from [[graft.core.BlockCodec]], the same code the `GC` chunk container
+  * runs.
   *
   * Leaf types: Boolean / Int / Date / Long / Timestamp / Float / Double /
   * Decimal(p<=18) / String / Binary. Nested: ARRAY columns become standard
@@ -439,11 +444,7 @@ object ParquetFileWriter {
   /** RLE level stream with the v1 4-byte LE length prefix. `levels == null`
     * means all-ones (no nulls). */
   private def levelStream(levels: Array[Byte], n: Int, width: Int): Array[Byte] = {
-    val enc = new RleHybridEncoder(width)
-    var i = 0
-    if (levels == null) while (i < n) { enc.put(1L); i += 1 }
-    else while (i < n) { enc.put(levels(i).toLong); i += 1 }
-    val body = enc.result()
+    val body = RleHybridEncoder.levels(levels, n, width)
     val outB = new Array[Byte](4 + body.length)
     outB(0) = body.length.toByte
     outB(1) = (body.length >>> 8).toByte
@@ -451,16 +452,6 @@ object ParquetFileWriter {
     outB(3) = (body.length >>> 24).toByte
     System.arraycopy(body, 0, outB, 4, body.length)
     outB
-  }
-
-  /** RLE level stream WITHOUT a length prefix (DATA_PAGE_V2 layout — the
-    * byte length travels in the page header instead). */
-  private def levelStreamV2(levels: Array[Byte], n: Int, width: Int): Array[Byte] = {
-    val enc = new RleHybridEncoder(width)
-    var i = 0
-    if (levels == null) while (i < n) { enc.put(1L); i += 1 }
-    else while (i < n) { enc.put(levels(i).toLong); i += 1 }
-    enc.result()
   }
 
   /** One leaf column chunk: optional PLAIN dict page + one data page (v1 or
@@ -522,16 +513,15 @@ object ParquetFileWriter {
     // dictionary attempt (first-seen order, like the reference's writer);
     // dictionary_enabled=false (properties.rs:185) skips the attempt so
     // the fallback (possibly pinned) encoding carries the whole chunk
-    val dictPair: Option[(Int, Array[Byte], Array[Byte])] =
-      if (rawFixed || !dictOn) None else buildDict(vec)
+    val dict: Option[DictCodec.Encoder] =
+      if (rawFixed || !dictOn) None else dictionaryOf(vec)
 
     // the dict path knows the EXACT distinct count — carry it in the
     // footer stats (thrift Statistics field 4, the reference's
     // statistics.rs distinct_count); non-dict chunks leave it unknown,
     // like parquet-mr
-    val chunkStats = dictPair match {
-      case Some((nDict, _, _)) =>
-        stats.map(_.copy(distinctCount = nDict.toLong))
+    val chunkStats = dict match {
+      case Some(d) => stats.map(_.copy(distinctCount = d.numEntries.toLong))
       case None => stats
     }
 
@@ -539,14 +529,15 @@ object ParquetFileWriter {
     var uncTotal = 0L
     var dictOff = -1L
 
-    val dictIds = dictPair.map { case (nDict, dictPage, idPage) =>
+    val idPage = dict.map { d =>
       dictOff = tell()
-      val dictComp = compress(dictPage, codec)
-      val dictHeader = ParquetMeta.writeDictPageHeader(nDict, dictPage.length,
-        dictComp.length, crc = Some(crc32(dictComp)))
+      val dictPage = d.writeDict()
+      val dictComp = BlockCodec.compress(dictPage, codec)
+      val dictHeader = ParquetMeta.writeDictPageHeader(d.numEntries,
+        dictPage.length, dictComp.length, crc = Some(crc32(dictComp)))
       write(dictHeader); write(dictComp)
       uncTotal += dictHeader.length + dictPage.length
-      idPage
+      d.writeIndices()
     }
     // fallback (non-dict) encoding chosen per chunk by the active policy;
     // delta/RLE streams restart at every page, so the choice applies to
@@ -560,14 +551,14 @@ object ParquetFileWriter {
     // (properties.rs:348-358). Empty value vectors stay PLAIN (nothing to
     // encode; delta headers over zero values are wasted bytes).
     val (fallbackEnc, cachedVals) =
-      if (dictIds.isEmpty && !rawFixed) encPin match {
+      if (idPage.isEmpty && !rawFixed) encPin match {
         case Some(pin) if vec.length > 0 => (pin, null: Array[Byte])
         case Some(_) => (PqEncoding.Plain, null: Array[Byte])
         case None => selectEnc(vec, dt, encPolicy, codec)
       }
       else (PqEncoding.Plain, null: Array[Byte])
     val valueEnc =
-      if (dictIds.isEmpty) fallbackEnc
+      if (idPage.isEmpty) fallbackEnc
       else if (pageVersion >= 2) PqEncoding.RleDictionary
       else PqEncoding.PlainDictionary
     val dataOff = tell()
@@ -583,8 +574,8 @@ object ParquetFileWriter {
         // DATA_PAGE_V2: prefix-free uncompressed level streams + compressed
         // values (reference writer.rs DataPageV2 serialization path)
         val repStream =
-          if (reps == null) Array.emptyByteArray else levelStreamV2(reps, n, 1)
-        val defStream = levelStreamV2(defs, n, defWidth)
+          if (reps == null) Array.emptyByteArray else RleHybridEncoder.levels(reps, n, 1)
+        val defStream = RleHybridEncoder.levels(defs, n, defWidth)
         var nulls = 0
         if (defs != null) {
           var i = 0
@@ -596,7 +587,7 @@ object ParquetFileWriter {
           var i = 0
           while (i < n) { if (reps(i) == 0) nRows += 1; i += 1 }
         }
-        val comp = compress(vals, codec)
+        val comp = BlockCodec.compress(vals, codec)
         val lvlLen = repStream.length + defStream.length
         val header = ParquetMeta.writePageHeaderV2(n, nulls, nRows,
           valueEnc, lvlLen + vals.length, lvlLen + comp.length,
@@ -611,7 +602,7 @@ object ParquetFileWriter {
         val content = repBytes ++ levelStream(defs, n, defWidth) ++ vals
         val repEnc =
           if (reps == null) PqEncoding.BitPacked else PqEncoding.Rle
-        val comp = compress(content, codec)
+        val comp = BlockCodec.compress(content, codec)
         val header = ParquetMeta.writePageHeaderV1(n, valueEnc,
           content.length, comp.length, repEnc, stats = pageStats,
           crc = Some(crc32(comp)))
@@ -627,8 +618,8 @@ object ParquetFileWriter {
     // stream (bounded by the 1 MiB dict limit + id widths), FLBA and
     // repeated leaves stay single-page (rep streams would need
     // record-aligned splits).
-    if (dictIds.isEmpty && repLevels == null && !rawFixed &&
-        plainSizeOf(vec) > PageBytes) {
+    if (idPage.isEmpty && repLevels == null && !rawFixed &&
+        ChunkCodec.cutSizeOf(vec, 0, vec.length) > PageBytes) {
       var r0 = 0
       var v0 = 0
       var r = 0
@@ -638,7 +629,7 @@ object ParquetFileWriter {
         val defsSlice =
           if (defLevels == null) null
           else java.util.Arrays.copyOfRange(defLevels, r0, rEnd)
-        val slice = ChunkCodecSupport.gather(vec, Array.range(v0, vEnd))
+        val slice = ColVec.gather(vec, Array.range(v0, vEnd))
         // page-level statistics over this page's values (the page-skipping
         // granularity the reference never reached — its writer left even
         // chunk stats TODO, writer.rs:352)
@@ -648,20 +639,20 @@ object ParquetFileWriter {
             val (pMn, pMx) = MinMax.compute(slice)
             Some(PqStats(pMn, pMx, (rEnd - r0 - (vEnd - v0)).toLong))
           }
-        emitPage(rEnd - r0, defsSlice, null, encodeValues(slice, fallbackEnc),
+        emitPage(rEnd - r0, defsSlice, null, ValueCodec.encode(slice, fallbackEnc),
           pStats, firstRow = r0)
         r0 = rEnd; v0 = vEnd; acc = 0L
       }
       while (r < numValues) {
         if (defLevels == null || defLevels(r).toInt == maxDef) {
-          acc += valueSizeOf(vec, v); v += 1
+          acc += ChunkCodec.rawSizeOf(vec, v); v += 1
         }
         r += 1
         if (acc >= PageBytes && r < numValues) cut(r, v)
       }
       cut(numValues, v)
     } else {
-      val valueBytes = dictIds.getOrElse {
+      val valueBytes = idPage.getOrElse {
         if (rawFixed) {
           // FLBA/INT96 PLAIN: raw fixed-size concat, no length prefixes
           val v = vec.asInstanceOf[BytesVec]
@@ -670,7 +661,7 @@ object ParquetFileWriter {
           else java.util.Arrays.copyOfRange(v.data, v.start(0),
             v.start(nVals - 1) + v.len(nVals - 1))
         } else if (cachedVals != null) cachedVals
-        else encodeValues(vec, fallbackEnc)
+        else ValueCodec.encode(vec, fallbackEnc)
       }
       // single data page == whole chunk: page stats are the chunk stats
       emitPage(numValues, defLevels, repLevels, valueBytes, chunkStats)
@@ -678,64 +669,11 @@ object ParquetFileWriter {
     val endOff = tell()
     if (recordPages != null) recordPages(pageRec.toSeq)
     val encodings =
-      if (dictIds.isEmpty) Seq(PqEncoding.Rle, fallbackEnc).distinct
+      if (idPage.isEmpty) Seq(PqEncoding.Rle, fallbackEnc).distinct
       else Seq(PqEncoding.Rle, valueEnc, PqEncoding.Plain)
     PqColumnMeta(typ, encodings, path, codec, numValues.toLong, uncTotal,
       endOff - startOff, dataPageOffset = dataOff,
       dictionaryPageOffset = dictOff, stats = chunkStats)
-  }
-
-  /** PLAIN-encoded size of a whole vector (bools counted one byte — a safe
-    * overestimate keeps page cuts conservative). */
-  private def plainSizeOf(vec: ColVec): Long = vec match {
-    case BoolVec(vs) => vs.length.toLong
-    case IntVec(vs) => 4L * vs.length
-    case FloatVec(vs) => 4L * vs.length
-    case LongVec(vs) => 8L * vs.length
-    case DoubleVec(vs) => 8L * vs.length
-    case v: BytesVec =>
-      (if (v.length == 0) 0L
-       else (v.start(v.length - 1) + v.len(v.length - 1) - v.start(0)).toLong) +
-        4L * v.length
-  }
-
-  private def valueSizeOf(vec: ColVec, i: Int): Long = vec match {
-    case _: BoolVec => 1L
-    case _: IntVec | _: FloatVec => 4L
-    case _: LongVec | _: DoubleVec => 8L
-    case v: BytesVec => 4L + v.len(i)
-  }
-
-  /** Exact PLAIN byte count (plainSizeOf overestimates bools for page-cut
-    * conservatism; the Auto policy needs the real number to compare). */
-  private def plainExactBytes(vec: ColVec): Long = vec match {
-    case BoolVec(vs) => (vs.length + 7L) / 8L
-    case v => plainSizeOf(v)
-  }
-
-  /** Encode a (null-suppressed) value vector with a standard parquet page
-    * encoding. Delta/RLE streams are self-contained per call, so page
-    * slices encode independently — the property parquet readers rely on. */
-  private def encodeValues(vec: ColVec, enc: Int): Array[Byte] = enc match {
-    case PqEncoding.Plain => PlainCodec.encode(vec)
-    case PqEncoding.Rle =>
-      RleBoolCodec.encode(vec.asInstanceOf[BoolVec].values)
-    case PqEncoding.DeltaBinaryPacked => vec match {
-      case IntVec(vs) =>
-        val e = new DeltaBinaryPackedEncoder(int32 = true)
-        e.putInts(vs, 0, vs.length); e.result()
-      case LongVec(vs) =>
-        val e = new DeltaBinaryPackedEncoder(int32 = false)
-        e.put(vs); e.result()
-      case other => throw new IllegalArgumentException(
-        s"DELTA_BINARY_PACKED over ${other.getClass.getSimpleName}")
-    }
-    case PqEncoding.DeltaLengthByteArray =>
-      DeltaLengthByteArrayCodec.encode(vec.asInstanceOf[BytesVec])
-    case PqEncoding.DeltaByteArray =>
-      DeltaByteArrayCodec.encode(vec.asInstanceOf[BytesVec])
-    case PqEncoding.ByteStreamSplit => ByteStreamSplitCodec.encode(vec)
-    case other => throw new IllegalArgumentException(s"writer encoding $other")
   }
 
   /** Auto-policy measurement bound: candidates are measured on a bounded
@@ -763,14 +701,14 @@ object ParquetFileWriter {
     // bounded prefix slice (identity when the chunk is small)
     def slice: ColVec =
       if (whole) vec
-      else ChunkCodecSupport.gather(vec, Array.range(0, SelectSample))
+      else ColVec.gather(vec, Array.range(0, SelectSample))
     vec match {
       case BoolVec(vs) =>
         if (encPolicy == EncPolicy.V2Default) (PqEncoding.Rle, null)
         else {
-          val s = slice.asInstanceOf[BoolVec]
-          val rle = RleBoolCodec.encode(s.values)
-          if (rle.length < plainExactBytes(s))
+          val s = slice
+          val rle = ValueCodec.encode(s, PqEncoding.Rle)
+          if (rle.length < s.rawSize)
             (PqEncoding.Rle, if (whole) rle else null)
           else (PqEncoding.Plain, null)
         }
@@ -779,8 +717,8 @@ object ParquetFileWriter {
           (PqEncoding.DeltaBinaryPacked, null)
         else {
           val s = slice
-          val delta = encodeValues(s, PqEncoding.DeltaBinaryPacked)
-          if (delta.length < plainExactBytes(s))
+          val delta = ValueCodec.encode(s, PqEncoding.DeltaBinaryPacked)
+          if (delta.length < s.rawSize)
             (PqEncoding.DeltaBinaryPacked, if (whole) delta else null)
           else (PqEncoding.Plain, null)
         }
@@ -816,9 +754,9 @@ object ParquetFileWriter {
             }
           // guard: tiny pages where the delta headers outweigh the savings
           // (measured on the bounded slice, cached when it's the chunk)
-          val s = slice.asInstanceOf[BytesVec]
-          val enc = encodeValues(s, pick)
-          if (enc.length < plainExactBytes(s))
+          val s = slice
+          val enc = ValueCodec.encode(s, pick)
+          if (enc.length < s.rawSize)
             (pick, if (whole) enc else null)
           else (PqEncoding.Plain, null)
         }
@@ -832,9 +770,10 @@ object ParquetFileWriter {
           (PqEncoding.Plain, null)
         else {
           val s = slice
-          val plain = PlainCodec.encode(s)
-          val bss = ByteStreamSplitCodec.encode(s)
-          if (compress(bss, codec).length < compress(plain, codec).length)
+          val plain = ValueCodec.encode(s, PqEncoding.Plain)
+          val bss = ValueCodec.encode(s, PqEncoding.ByteStreamSplit)
+          if (BlockCodec.compress(bss, codec).length <
+              BlockCodec.compress(plain, codec).length)
             (PqEncoding.ByteStreamSplit, if (whole) bss else null)
           else (PqEncoding.Plain, if (whole) plain else null)
         }
@@ -842,60 +781,25 @@ object ParquetFileWriter {
     }
   }
 
-  /** (entries, PLAIN dict page bytes, id page bytes incl. leading bit-width
-    * byte), or None when the column should go PLAIN. */
-  private def buildDict(vec: ColVec): Option[(Int, Array[Byte], Array[Byte])] = {
+  /** The chunk's dictionary, or None when it should go without one: past
+    * [[DictMaxEntries]] entries or [[DictMaxBytes]] of PLAIN dictionary, or
+    * (non-byte columns) more than one entry per two values. Values go in
+    * by mini-batch, so a chunk past either limit stops early. */
+  private def dictionaryOf(vec: ColVec): Option[DictCodec.Encoder] = {
     val n = vec.length
-    if (n == 0) return None
-    vec match {
-      case BoolVec(_) => None // parquet: bools are PLAIN bit-packed
-      case _ =>
-        val index = new java.util.HashMap[Any, Integer](1024)
-        val ids = new Array[Int](n)
-        val order = new ArrayBuffer[Int](1024) // first-seen positions
-        var dictBytes = 0L
-        var i = 0
-        while (i < n) {
-          val key: Any = vec match {
-            case IntVec(vs) => Integer.valueOf(vs(i))
-            case LongVec(vs) => java.lang.Long.valueOf(vs(i))
-            case FloatVec(vs) => java.lang.Float.valueOf(vs(i))
-            case DoubleVec(vs) => java.lang.Double.valueOf(vs(i))
-            case v: BytesVec =>
-              java.nio.ByteBuffer.wrap(v.data, v.start(i), v.len(i))
-            case BoolVec(_) => throw new IllegalStateException
-          }
-          var id = index.get(key)
-          if (id == null) {
-            if (index.size >= DictMaxEntries) return None
-            dictBytes += (vec match {
-              case v: BytesVec => 4L + v.len(i)
-              case IntVec(_) | FloatVec(_) => 4L
-              case _ => 8L
-            })
-            if (dictBytes > DictMaxBytes) return None
-            id = Integer.valueOf(index.size)
-            index.put(key, id)
-            order += i
-          }
-          ids(i) = id.intValue()
-          i += 1
-        }
-        // heuristic: dictionary only pays when it actually shrinks
-        if (index.size > n / 2 && !vec.isInstanceOf[BytesVec]) return None
-        val nDict = index.size
-        val dictVec = ChunkCodecSupport.gather(vec, order.toArray)
-        val dictPage = PlainCodec.encode(dictVec)
-        val width = math.max(1, 32 - Integer.numberOfLeadingZeros(math.max(1, nDict - 1)))
-        val enc = new RleHybridEncoder(width)
-        var k = 0
-        while (k < n) { enc.put(ids(k).toLong); k += 1 }
-        val body = enc.result()
-        val idPage = new Array[Byte](1 + body.length)
-        idPage(0) = width.toByte
-        System.arraycopy(body, 0, idPage, 1, body.length)
-        Some((nDict, dictPage, idPage))
+    if (n == 0 || vec.isInstanceOf[BoolVec]) return None // parquet: bools are PLAIN
+    val dict = new DictCodec.Encoder(vec.physicalType)
+    var i = 0
+    while (i < n) {
+      val until = math.min(i + ChunkCodec.MiniBatch, n)
+      dict.put(vec, i, until)
+      if (dict.numEntries > DictMaxEntries || dict.dictEncodedSize > DictMaxBytes)
+        return None
+      i = until
     }
+    // heuristic: dictionary only pays when it actually shrinks
+    if (dict.numEntries > n / 2 && !vec.isInstanceOf[BytesVec]) None
+    else Some(dict)
   }
 
   /** Assemble a ColumnIndex from per-page stats, or None when any page
@@ -919,10 +823,11 @@ object ParquetFileWriter {
       if (np) Array.emptyByteArray else st.get.max }
     val nullCounts = pages.map(_._2.get.nullCount)
     val live = pages.indices.filterNot(nullPages)
+    val phys = PqType.physical(typ)
     def ordered(sign: Int): Boolean = live.size < 2 || live.sliding(2).forall {
       case Seq(a, b) =>
-        sign * cmpStat(typ, mins(a), mins(b)) <= 0 &&
-          sign * cmpStat(typ, maxs(a), maxs(b)) <= 0
+        sign * MinMax.compareStat(phys, mins(a), mins(b)) <= 0 &&
+          sign * MinMax.compareStat(phys, maxs(a), maxs(b)) <= 0
       case _ => true
     }
     val order =
@@ -939,39 +844,6 @@ object ParquetFileWriter {
     case _ => false
   }
 
-  /** Compare two PLAIN-encoded stat values of physical type `typ` with the
-    * type's sort order (signed ints/floats, unsigned-lex byte arrays). */
-  private def cmpStat(typ: Int, a: Array[Byte], b: Array[Byte]): Int = {
-    def leInt(x: Array[Byte]): Int =
-      (x(0) & 0xFF) | ((x(1) & 0xFF) << 8) | ((x(2) & 0xFF) << 16) |
-        ((x(3) & 0xFF) << 24)
-    def leLong(x: Array[Byte]): Long = {
-      var v = 0L
-      var i = 0
-      while (i < 8) { v |= (x(i) & 0xFFL) << (8 * i); i += 1 }
-      v
-    }
-    typ match {
-      case PqType.Int32 => Integer.compare(leInt(a), leInt(b))
-      case PqType.Int64 => java.lang.Long.compare(leLong(a), leLong(b))
-      case PqType.Float =>
-        java.lang.Float.compare(java.lang.Float.intBitsToFloat(leInt(a)),
-          java.lang.Float.intBitsToFloat(leInt(b)))
-      case PqType.Double =>
-        java.lang.Double.compare(java.lang.Double.longBitsToDouble(leLong(a)),
-          java.lang.Double.longBitsToDouble(leLong(b)))
-      case _ => // BOOLEAN (single 0/1 byte) and BYTE_ARRAY: unsigned lex
-        val lim = math.min(a.length, b.length)
-        var i = 0
-        while (i < lim) {
-          val d = (a(i) & 0xFF) - (b(i) & 0xFF)
-          if (d != 0) return d
-          i += 1
-        }
-        a.length - b.length
-    }
-  }
-
   /** CRC32 over the page bytes exactly as written after the header — the
     * parquet-format page-checksum definition (PageHeader field 4, same
     * coverage as parquet-mr: compressed body; for v2 pages the level
@@ -980,60 +852,6 @@ object ParquetFileWriter {
     val c = new java.util.zip.CRC32
     parts.foreach(c.update)
     c.getValue.toInt
-  }
-
-  private def compress(content: Array[Byte], codec: Int): Array[Byte] = codec match {
-    case PqCodec.Uncompressed => content
-    case PqCodec.Snappy => org.xerial.snappy.Snappy.compress(content)
-    case PqCodec.Zstd => com.github.luben.zstd.Zstd.compress(content, 1)
-    case PqCodec.Gzip =>
-      val bos = new java.io.ByteArrayOutputStream(math.max(64, content.length / 2))
-      val gz = new java.util.zip.GZIPOutputStream(bos)
-      gz.write(content); gz.close()
-      bos.toByteArray
-    case PqCodec.Lz4Raw =>
-      // modern unambiguous LZ4 id (the legacy id-5 framing is reader-only:
-      // different ecosystems disagree on its frame layout)
-      val c = net.jpountz.lz4.LZ4Factory.fastestInstance().fastCompressor()
-      val out = new Array[Byte](c.maxCompressedLength(content.length))
-      val n = c.compress(content, 0, content.length, out, 0)
-      java.util.Arrays.copyOf(out, n)
-    case PqCodec.Brotli => graft.core.Brotli.compress(content)
-    case other => throw new IllegalArgumentException(s"writer codec $other")
-  }
-}
-
-/** Gather helper shared by the file writer (select rows by index). */
-object ChunkCodecSupport {
-  def gather(vec: ColVec, idx: Array[Int]): ColVec = vec match {
-    case IntVec(vs) => IntVec(idx.map(vs))
-    case LongVec(vs) => LongVec(idx.map(vs))
-    case FloatVec(vs) => FloatVec(idx.map(vs))
-    case DoubleVec(vs) => DoubleVec(idx.map(vs))
-    case BoolVec(vs) => BoolVec(idx.map(vs))
-    case v: BytesVec =>
-      val offsets = new Array[Int](idx.length + 1)
-      var total = 0
-      idx.indices.foreach { i => offsets(i) = total; total += v.len(idx(i)) }
-      offsets(idx.length) = total
-      val data = new Array[Byte](total)
-      idx.indices.foreach { i =>
-        System.arraycopy(v.data, v.start(idx(i)), data, offsets(i), v.len(idx(i)))
-      }
-      BytesVec(data, offsets)
-  }
-
-  /** Dictionary-expand byte-array ids into a shared accumulator (the
-    * multi-page decode path — same copies as gather, minus the concat). */
-  def gatherBytesInto(v: BytesVec, idx: Array[Int], acc: graft.core.BytesAccum): Unit = {
-    var i = 0
-    while (i < idx.length) {
-      val n = v.len(idx(i))
-      val data = acc.ensure(n)
-      System.arraycopy(v.data, v.start(idx(i)), data, acc.writePos, n)
-      acc.commit(n)
-      i += 1
-    }
   }
 }
 

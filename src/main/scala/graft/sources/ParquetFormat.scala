@@ -192,19 +192,24 @@ object PqType {
   val Double = 5
   val ByteArray = 6
   val FixedLenByteArray = 7
+
+  /** The core physical type values of `typ` decode to (INT96 and
+    * FIXED_LEN_BYTE_ARRAY as fixed-width byte values). */
+  def physical(typ: Int): Int = typ match {
+    case Boolean => graft.core.PhysicalType.Bool
+    case Int32 => graft.core.PhysicalType.Int32
+    case Int64 => graft.core.PhysicalType.Int64
+    case Float => graft.core.PhysicalType.Float
+    case Double => graft.core.PhysicalType.Double
+    case ByteArray | Int96 | FixedLenByteArray => graft.core.PhysicalType.Bytes
+    case other => throw new IllegalArgumentException(
+      s"physical type $other unsupported")
+  }
 }
 
-/** Parquet encodings (public format spec). */
-object PqEncoding {
-  val Plain = 0
-  val PlainDictionary = 2
-  val Rle = 3
-  val BitPacked = 4
-  val DeltaBinaryPacked = 5
-  val DeltaLengthByteArray = 6
-  val DeltaByteArray = 7
-  val RleDictionary = 8
-  val ByteStreamSplit = 9
+/** Parquet encodings (public format spec); the ids are the value codec's
+  * key space ([[graft.core.ValueCodec]]). */
+object PqEncoding extends graft.core.ParquetEncodingIds {
   def name(e: Int): String = e match {
     case Plain => "PLAIN"
     case PlainDictionary => "PLAIN_DICTIONARY"
@@ -219,14 +224,9 @@ object PqEncoding {
   }
 }
 
-object PqCodec {
-  val Uncompressed = 0
-  val Snappy = 1
-  val Gzip = 2
-  val Brotli = 4
-  val Lz4 = 5 // legacy: LZ4 frame format (what the reference's lz4 crate speaks)
-  val Zstd = 6
-  val Lz4Raw = 7 // raw LZ4 block format
+/** Parquet compression codecs; the ids are the block codec's key space
+  * ([[graft.core.BlockCodec]]). */
+object PqCodec extends graft.core.ParquetCodecIds {
 
   /** Writer-option codec names (the single parser for DSv2 options and
     * per-column overrides). */

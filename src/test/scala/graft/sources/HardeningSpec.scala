@@ -2,12 +2,15 @@ package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{BitWriter, ChunkCodec, PhysicalType}
+import graft.core.{BitReader, BitWriter, BlockCodec, BytesVec, ChunkCodec,
+  CodecId, DeltaLengthByteArrayCodec, IntVec, LongVec, PhysicalType, PlainCodec,
+  RleHybridEncoder}
 
 /** Unit coverage for the round-3 review fixes: Hive-compatible partition
   * path escaping, legacy-statistics distrust in byte-wise pruning, and
   * forged-count allocation guards in the graft chunk readers and the
-  * Parquet page decoder. */
+  * Parquet page decoder; plus the shared codec layer's loud failures on
+  * short blocks and out-of-range dictionary ids. */
 class HardeningSpec extends AnyFunSuite {
 
   // ------------------------------------------------------- PartitionPath
@@ -183,5 +186,97 @@ class HardeningSpec extends AnyFunSuite {
     val e3 = intercept[IllegalArgumentException](
       ParquetFileReader.readColumnVec(inflated, col))
     assert(e3.getMessage.contains("uncompressed v2 page"), e3.getMessage)
+  }
+
+  // ------------------------------------- the shared codec layer
+
+  /** A `GZ` wrapper over a PLAIN chunk, re-framed with `extra` more raw
+    * bytes declared than the block holds and `cut` bytes dropped from the
+    * end of its body. */
+  private def reframed(codec: Int, extra: Long, cut: Int): Array[Byte] = {
+    val blob = ChunkCodec.encodeWith(
+      LongVec(Array.tabulate(500)(i => i * 7919L)), CodecId.Plain)
+    val wrapped = BlockCodec.wrap(blob, codec)
+    val r = new BitReader(wrapped)
+    r.getAligned(3)
+    r.getVlq()
+    val body = wrapped.slice(r.position, wrapped.length - cut)
+    val w = new BitWriter(body.length + 16)
+    w.putAligned('G'.toLong, 1); w.putAligned('Z'.toLong, 1)
+    w.putAligned(codec.toLong, 1)
+    w.putVlq(blob.length + extra)
+    w.putBytes(body)
+    w.result()
+  }
+
+  test("a GZ block that holds fewer bytes than it declares fails loudly") {
+    assert(BlockCodec.maybeUnwrap(reframed(BlockCodec.Snappy, 0, 0)).length > 0)
+    val e1 = intercept[IllegalArgumentException](
+      BlockCodec.maybeUnwrap(reframed(BlockCodec.Snappy, 8, 0)))
+    assert(e1.getMessage.contains("SNAPPY"), e1.getMessage)
+    val e2 = intercept[IllegalArgumentException](
+      BlockCodec.maybeUnwrap(reframed(BlockCodec.Lz4, 0, 16)))
+    assert(e2.getMessage.contains("LZ4"), e2.getMessage)
+    val e3 = intercept[IllegalArgumentException](
+      BlockCodec.maybeUnwrap(reframed(BlockCodec.Zstd, Int.MaxValue.toLong, 0)))
+    assert(e3.getMessage.contains("raw bytes"), e3.getMessage)
+  }
+
+  test("a snappy page whose uncompressed_page_size is too large fails loudly") {
+    val n = 100
+    val plain = PlainCodec.encode(LongVec(Array.tabulate(n)(_.toLong)))
+    val body = org.xerial.snappy.Snappy.compress(plain)
+    val bytes = ParquetMeta.writePageHeaderV1(n, PqEncoding.Plain,
+      plain.length + 8, body.length) ++ body
+    val col = ParquetFileReader.Column("x", PqType.Int64, 0, PqColumnMeta(
+      typ = PqType.Int64, encodings = Seq(PqEncoding.Plain),
+      pathInSchema = Seq("x"), codec = PqCodec.Snappy, numValues = n,
+      totalUncompressedSize = plain.length + 8L,
+      totalCompressedSize = bytes.length, dataPageOffset = 0L))
+    val e = intercept[IllegalArgumentException](
+      ParquetFileReader.readColumnVec(bytes, col))
+    assert(e.getMessage.contains("SNAPPY"), e.getMessage)
+  }
+
+  test("a GC dictionary id past the dictionary fails naming the id") {
+    val dict = PlainCodec.encode(IntVec(Array(10, 20, 30)))
+    val ids = new RleHybridEncoder(3)
+    Seq(0, 2, 5, 1).foreach(id => ids.put(id.toLong))
+    val idPage = 3.toByte +: ids.result()
+    val w = new BitWriter(64)
+    w.putAligned('G'.toLong, 1); w.putAligned('C'.toLong, 1)
+    w.putAligned(1L, 1) // version 1: no nulls
+    w.putAligned(PhysicalType.Int32.toLong, 1)
+    w.putAligned(CodecId.Dict.toLong, 1)
+    w.putVlq(4L) // rows
+    w.putAligned(1L, 1) // has a dictionary
+    w.putVlq(3L); w.putVlq(dict.length.toLong); w.putBytes(dict)
+    w.putVlq(1L) // one page
+    w.putAligned(CodecId.Dict.toLong, 1)
+    w.putVlq(4L); w.putVlq(idPage.length.toLong); w.putBytes(idPage)
+    val e = intercept[IllegalArgumentException](ChunkCodec.decode(w.result()))
+    assert(e.getMessage.contains("dict id 5"), e.getMessage)
+  }
+
+  test("a DELTA_LENGTH_BYTE_ARRAY page cut short fails instead of zero-filling") {
+    val n = 100
+    val full = DeltaLengthByteArrayCodec.encode(
+      BytesVec.of(Array.tabulate(n)(i => s"value-$i".getBytes("UTF-8"))))
+    def chunk(page: Array[Byte]): (Array[Byte], ParquetFileReader.Column) = {
+      val bytes = ParquetMeta.writePageHeaderV1(n, PqEncoding.DeltaLengthByteArray,
+        page.length, page.length) ++ page
+      (bytes, ParquetFileReader.Column("s", PqType.ByteArray, 0, PqColumnMeta(
+        typ = PqType.ByteArray, encodings = Seq(PqEncoding.DeltaLengthByteArray),
+        pathInSchema = Seq("s"), codec = PqCodec.Uncompressed, numValues = n,
+        totalUncompressedSize = bytes.length, totalCompressedSize = bytes.length,
+        dataPageOffset = 0L)))
+    }
+    val (honest, col) = chunk(full)
+    assert(ParquetFileReader.readColumn(honest, col).map(
+      v => new String(v.asInstanceOf[Array[Byte]], "UTF-8")) ==
+      (0 until n).map(i => s"value-$i"))
+    val (cut, _) = chunk(full.dropRight(20))
+    val e = intercept[IllegalArgumentException](ParquetFileReader.readColumnVec(cut, col))
+    assert(e.getMessage.contains("past the stream end"), e.getMessage)
   }
 }

@@ -13,13 +13,14 @@ import graft.core.{BoolVec, BytesVec, ColVec, DoubleVec, FloatVec, IntVec, LongV
 /** Differential check of our one Parquet page decoder against parquet-mr,
   * an independent implementation that ships with Spark. Every fixture is
   * written by Spark's own writer (parquet-mr) under one writer version,
-  * dictionary setting and codec, with INT96 timestamps; its footer must
-  * list the encodings the case claims, so a case cannot quietly degrade to
-  * v1 PLAIN. Then three of our reads must equal Spark's native read value
-  * for value: record assembly ([[ParquetFileReader.readFileRows]]), the
-  * typed column decode ([[ParquetFileReader.readColumnVec]]) on the flat
-  * columns, and the `graft` DSv2 scan with and without a pushed range
-  * filter. */
+  * dictionary setting and codec, with INT96 timestamps, or — for
+  * BYTE_STREAM_SPLIT, which Spark's writer options cannot select — by
+  * parquet-mr's `ExampleParquetWriter`; its footer must list the codec and
+  * the encodings the case claims, so a case cannot quietly degrade to v1
+  * PLAIN. Then three of our reads must equal Spark's native read value for
+  * value: record assembly ([[ParquetFileReader.readFileRows]]), the typed
+  * column decode ([[ParquetFileReader.readColumnVec]]) on the flat columns,
+  * and the `graft` DSv2 scan with and without a pushed range filter. */
 class ParquetMrDifferentialSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   @transient private var spark: SparkSession = _
@@ -106,7 +107,10 @@ class ParquetMrDifferentialSpec extends AnyFunSuite with BeforeAndAfterAll {
       Map("i" -> Seq(PqEncoding.DeltaBinaryPacked),
         "l" -> Seq(PqEncoding.DeltaBinaryPacked),
         "s" -> Seq(PqEncoding.DeltaByteArray), "bin" -> Seq(PqEncoding.DeltaByteArray),
-        "b" -> Seq(PqEncoding.Rle)), v2))
+        "b" -> Seq(PqEncoding.Rle)), v2),
+    Case("PARQUET_1_0", dictionary = true, "lz4_raw",
+      Map("i" -> Seq(PqEncoding.PlainDictionary),
+        "l" -> Seq(PqEncoding.PlainDictionary, PqEncoding.Plain)), v1))
 
   /** Write `df` as one parquet-mr file under `dir`; small pages and row
     * groups so every chunk spans several pages and the file several row
@@ -169,6 +173,8 @@ class ParquetMrDifferentialSpec extends AnyFunSuite with BeforeAndAfterAll {
     val meta = ParquetFileReader.readFooterOnly(path)
     assert(meta.rowGroups.size > 1, s"${c.name}: one row group only")
     val chunks = meta.rowGroups.flatMap(_.columns)
+    assert(chunks.forall(_.codec == PqCodec.parse(c.codec)),
+      s"${c.name}: codecs ${chunks.map(_.codec).distinct}")
     c.claims.foreach { case (colName, encs) =>
       val listed = chunks.filter(_.pathInSchema.head == colName)
         .flatMap(_.encodings).distinct
@@ -186,6 +192,52 @@ class ParquetMrDifferentialSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally fetch.close()
   }
 
+  /** Record assembly and the DSv2 scan, whole and with a pushed `id`
+    * range, over the one file in `dir`, against Spark's native read. */
+  private def checkRowReads(name: String, dir: String, path: String): Unit = {
+    val lo = n / 3L
+    val hi = lo + 137
+    val native = spark.read.parquet(dir)
+    val schema = native.schema
+    val exp = rowsById(native.collect().toSeq)
+
+    // record assembly
+    val (names, recs) = ParquetFileReader.readFileRows(path)
+    assert(names == schema.fieldNames.toSeq)
+    assertSameRows(s"$name readFileRows $dir",
+      rowsById(recs.map(g => Row.fromSeq(schema.fields.toSeq.map(f =>
+        ParquetSource.externalValue(g(f.name), f.dataType))))), exp)
+
+    // the DSv2 scan, whole and with a pushed range filter
+    val ours = spark.read.format(GraftParquetFormat.Name).load(dir)
+    assertSameRows(s"$name DSv2 $dir", rowsById(ours.collect().toSeq), exp)
+    val filtered = ours.where(col("id").between(lo, hi))
+    assert(filtered.queryExecution.executedPlan.toString.contains("ranges="),
+      s"$name: range filter not pushed")
+    assertSameRows(s"$name DSv2 filtered $dir",
+      rowsById(filtered.collect().toSeq),
+      rowsById(native.where(col("id").between(lo, hi)).collect().toSeq))
+  }
+
+  /** The typed column decode on every flat column of every row group of
+    * the one file in `dir`, against Spark's native read. */
+  private def checkTypedReads(name: String, dir: String, path: String): Unit = {
+    val meta = ParquetFileReader.readFooterOnly(path)
+    val schema = spark.read.parquet(dir).schema
+    val fetch = new ParquetFileReader.ChunkFetcher(path)
+    val typed =
+      try meta.rowGroups.indices.flatMap { rg =>
+        val cols = ParquetFileReader.flatColumns(meta, rg).map { col =>
+          val (b, rc) = fetch.fetchColumn(col)
+          val (vec, defs) = ParquetFileReader.readColumnVec(b, rc)
+          typedRows(vec, defs, rc.maxDef, schema(col.name).dataType)
+        }
+        cols.head.indices.map(r => Row.fromSeq(cols.map(_(r))))
+      } finally fetch.close()
+    assertSameRows(s"$name readColumnVec", rowsById(typed),
+      rowsById(spark.read.parquet(dir).collect().toSeq))
+  }
+
   cases.zipWithIndex.foreach { case (c, k) =>
     test(s"parquet-mr ${c.name}: readFileRows, readColumnVec and the DSv2 " +
         "scan equal Spark's native read") {
@@ -194,47 +246,56 @@ class ParquetMrDifferentialSpec extends AnyFunSuite with BeforeAndAfterAll {
       val flatPath = write(flatInput, flatDir, c)
       val nestedPath = write(nestedInput, nestedDir, c)
       checkFooter(c, flatPath)
-      val lo = n / 3L
-      val hi = lo + 137
-      Seq(flatDir -> flatPath, nestedDir -> nestedPath).foreach { case (dir, path) =>
-        val native = spark.read.parquet(dir)
-        val schema = native.schema
-        val exp = rowsById(native.collect().toSeq)
-
-        // record assembly
-        val (names, recs) = ParquetFileReader.readFileRows(path)
-        assert(names == schema.fieldNames.toSeq)
-        assertSameRows(s"${c.name} readFileRows $dir",
-          rowsById(recs.map(g => Row.fromSeq(schema.fields.toSeq.map(f =>
-            ParquetSource.externalValue(g(f.name), f.dataType))))), exp)
-
-        // the DSv2 scan, whole and with a pushed range filter
-        val ours = spark.read.format(GraftParquetFormat.Name).load(dir)
-        assertSameRows(s"${c.name} DSv2 $dir",
-          rowsById(ours.collect().toSeq), exp)
-        val filtered = ours.where(col("id").between(lo, hi))
-        assert(filtered.queryExecution.executedPlan.toString.contains("ranges="),
-          s"${c.name}: range filter not pushed")
-        assertSameRows(s"${c.name} DSv2 filtered $dir",
-          rowsById(filtered.collect().toSeq),
-          rowsById(native.where(col("id").between(lo, hi)).collect().toSeq))
-      }
-
-      // the typed column decode on every flat column of every row group
-      val meta = ParquetFileReader.readFooterOnly(flatPath)
-      val schema = spark.read.parquet(flatDir).schema
-      val fetch = new ParquetFileReader.ChunkFetcher(flatPath)
-      val typed =
-        try meta.rowGroups.indices.flatMap { rg =>
-          val cols = ParquetFileReader.flatColumns(meta, rg).map { col =>
-            val (b, rc) = fetch.fetchColumn(col)
-            val (vec, defs) = ParquetFileReader.readColumnVec(b, rc)
-            typedRows(vec, defs, rc.maxDef, schema(col.name).dataType)
-          }
-          cols.head.indices.map(r => Row.fromSeq(cols.map(_(r))))
-        } finally fetch.close()
-      assertSameRows(s"${c.name} readColumnVec", rowsById(typed),
-        rowsById(spark.read.parquet(flatDir).collect().toSeq))
+      checkRowReads(c.name, flatDir, flatPath)
+      checkRowReads(c.name, nestedDir, nestedPath)
+      checkTypedReads(c.name, flatDir, flatPath)
     }
+  }
+
+  test("parquet-mr BYTE_STREAM_SPLIT floats and doubles: readFileRows, " +
+      "readColumnVec and the DSv2 scan equal Spark's native read") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.metadata.CompressionCodecName
+    import org.apache.parquet.io.LocalOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = s"$tmp/bss"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    val path = s"$dir/part-0.parquet"
+    val schema = MessageTypeParser.parseMessageType(
+      "message m { required int64 id; optional float f; optional double d; }")
+    val w = ExampleParquetWriter.builder(
+        new LocalOutputFile(java.nio.file.Paths.get(path)))
+      .withType(schema)
+      .withByteStreamSplitEncoding(true)
+      .withDictionaryEncoding(false)
+      .withCompressionCodec(CompressionCodecName.SNAPPY)
+      .withPageSize(2048)
+      .withRowGroupSize(16384L)
+      .build()
+    val groups = new SimpleGroupFactory(schema)
+    try (0 until n).foreach { i =>
+      val g = groups.newGroup().append("id", i.toLong)
+      if (i % 7 != 0) g.append("f", (i % 1000) * 0.37f - 100f)
+      if (i % 5 != 0) g.append("d", i * 1.0000001 - 2500.0)
+      w.write(g)
+    } finally w.close()
+    val meta = ParquetFileReader.readFooterOnly(path)
+    assert(meta.rowGroups.size > 1, "one row group only")
+    val chunks = meta.rowGroups.flatMap(_.columns)
+    assert(chunks.forall(_.codec == PqCodec.Snappy))
+    Seq("f", "d").foreach { c =>
+      assert(chunks.filter(_.pathInSchema.head == c)
+        .forall(_.encodings.contains(PqEncoding.ByteStreamSplit)),
+        s"$c is not BYTE_STREAM_SPLIT")
+    }
+    // Spark's vectorized reader rejects BYTE_STREAM_SPLIT; its parquet-mr
+    // record reader is the native read here
+    val vectorized = "spark.sql.parquet.enableVectorizedReader"
+    spark.conf.set(vectorized, "false")
+    try {
+      checkRowReads("BYTE_STREAM_SPLIT", dir, path)
+      checkTypedReads("BYTE_STREAM_SPLIT", dir, path)
+    } finally spark.conf.unset(vectorized)
   }
 }
