@@ -295,8 +295,8 @@ object SparkEntry {
     "q_prune_decode" -> ((s, dir) => {
       // chunk min/max statistics prune row ranges BEFORE any decode work:
       // range-cluster on the predicate column, encode, then decodeWhere
-      // filters on chunk metadata only (the broadcast semi-join shape that
-      // works at any scale)
+      // tests each row range's l_orderkey chunk stats inside its partition
+      // and decodes only the survivors (no shuffle, no join)
       val in = lineitem(s, dir)
         .select("l_orderkey", "l_linenumber", "l_quantity")
         .repartitionByRange(16, col("l_orderkey"))
@@ -365,7 +365,7 @@ object SparkEntry {
       val out = java.nio.file.Files.createTempDirectory("graft-pqbr").toString
       graft.sources.ParquetSink.write(in.repartition(4), out,
         codec = graft.sources.PqCodec.Brotli).count()
-      graft.sources.ParquetSource.read(s, out)
+      s.read.format(graft.sources.GraftParquetFormat.Name).load(out)
         .groupBy("lang").agg(count(lit(1)).as("cnt"),
           sum(length(col("text"))).as("chars"),
           sum(col("doc_id")).as("sum_id"))
@@ -373,9 +373,9 @@ object SparkEntry {
     }),
     "q_parquet_dist_read" -> ((s, dir) => {
       // full our-writer -> our-reader loop, DISTRIBUTED both ways: sink
-      // writes per-partition files (sorted, small row groups), source
-      // parallelizes the file list and prunes row groups via footer stats
-      // inside each task before decoding; exact filter on top. The
+      // writes per-partition files (sorted, small row groups), the DSv2
+      // scan takes the pushed doc_id range and plans only the row groups
+      // whose footer stats overlap it; exact filter on top. The
       // directory is addressed as a file:// URI so the whole loop runs
       // through the pluggable Hadoop FileSystem I/O seam (the in-sandbox
       // stand-in for hdfs:// / s3a:// paths).
@@ -385,8 +385,7 @@ object SparkEntry {
       graft.sources.ParquetSink.write(
         in.repartition(4).sortWithinPartitions("doc_id"), out,
         rowGroupRows = 1 << 10).count()
-      graft.sources.ParquetSource.read(s, out,
-          range = Some(("doc_id", 100L, 2000L)))
+      s.read.format(graft.sources.GraftParquetFormat.Name).load(out)
         .filter(col("doc_id").between(100, 2000))
         .groupBy("lang").agg(count(lit(1)).as("cnt"),
           sum(length(col("text"))).as("chars"),

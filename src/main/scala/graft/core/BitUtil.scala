@@ -146,6 +146,7 @@ final class BitReader(buf: Array[Byte], start: Int, end: Int) {
 
   def position: Int = byteOffset
   def bytesLeft: Int = end - byteOffset
+  def bitsLeft: Long = (end - byteOffset).toLong * 8 - bitOffset
 
   /** Read `numBits` as an unsigned value (LSB-first). */
   def getValue(numBits: Int): Long = {
@@ -214,6 +215,8 @@ final class BitReader(buf: Array[Byte], start: Int, end: Int) {
   /** Aligned little-endian read of `numBytes` (≤ 8). */
   def getAligned(numBytes: Int): Long = {
     alignToByte()
+    require(byteOffset + numBytes <= end,
+      s"bit stream: $numBytes-byte value at $byteOffset passes the stream end $end")
     var v = 0L
     var i = 0
     while (i < numBytes) { v |= (buf(byteOffset + i) & 0xFFL) << (8 * i); i += 1 }
@@ -234,6 +237,7 @@ final class BitReader(buf: Array[Byte], start: Int, end: Int) {
     var shift = 0
     var b = 0
     do {
+      require(byteOffset < end, s"bit stream: varint passes the stream end $end")
       b = buf(byteOffset) & 0xFF
       byteOffset += 1
       v |= (b & 0x7FL) << shift

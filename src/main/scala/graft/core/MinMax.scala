@@ -143,6 +143,41 @@ object MinMax {
       case _ => compareBytes(a, b)
     }
 
+  /** May a chunk, row group or page whose stats are `[min, max]` hold a
+    * value in `[lower, upper]`? The one stats-range predicate of both
+    * containers; `false` only when a stat proves every value lies outside.
+    *
+    * `min`/`max` are stat values of `physicalType` as [[compute]] encodes
+    * them; an empty (or null) side says nothing, so that side keeps.
+    * Bounds are inclusive and null is open: a `java.lang.Number` for
+    * Bool/Int32/Int64 (compared as longs) and Float/Double (compared as
+    * doubles; a NaN on either side keeps, and -0.0 equals +0.0), a
+    * `String` (UTF-8) or `Array[Byte]` for Bytes (unsigned lexicographic,
+    * so a truncated min prefix and an incremented max prefix stay sound).
+    * Facts beyond the stat bytes stay with the caller: an all-null chunk
+    * (no stat) or a footer stat whose byte order is untrusted. */
+  def overlaps(physicalType: Int, min: Array[Byte], max: Array[Byte],
+      lower: Any, upper: Any): Boolean = {
+    def cmp(stat: Array[Byte], bound: Any): Int = physicalType match {
+      case PhysicalType.Bytes => compareBytes(stat, bound match {
+        case s: String => s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        case a: Array[Byte] => a
+        case other => throw new IllegalArgumentException(s"bad byte bound $other")
+      })
+      case PhysicalType.Float | PhysicalType.Double =>
+        val s =
+          if (physicalType == PhysicalType.Float)
+            java.lang.Float.intBitsToFloat(leToLong(stat).toInt).toDouble
+          else java.lang.Double.longBitsToDouble(leToLong(stat))
+        val b = bound.asInstanceOf[Number].doubleValue()
+        if (s > b) 1 else if (s < b) -1 else 0
+      case _ =>
+        java.lang.Long.compare(leToLong(stat), bound.asInstanceOf[Number].longValue())
+    }
+    (upper == null || min == null || min.isEmpty || cmp(min, upper) <= 0) &&
+      (lower == null || max == null || max.isEmpty || cmp(max, lower) >= 0)
+  }
+
   /** Unsigned lexicographic compare of raw byte arrays. */
   def compareBytes(a: Array[Byte], b: Array[Byte]): Int = {
     val n = math.min(a.length, b.length)

@@ -139,7 +139,12 @@ final class RleHybridDecoder(bitWidth: Int, buf: Array[Byte], start: Int, end: I
         rleLeft -= k
         read += k
       } else {
+        // only the values asked for must be in the stream: a short final
+        // group is legal when the caller wants no more than it holds
         val k = math.min(bitPackedLeft, (n - read).toLong).toInt
+        require(k.toLong * bitWidth <= r.bitsLeft,
+          s"RLE/bit-packed hybrid: $k values of $bitWidth bits pass the " +
+            s"stream end (${r.bitsLeft} bits left)")
         r.getBatch(out, outOff + read, k, bitWidth)
         bitPackedLeft -= k
         read += k
@@ -181,8 +186,12 @@ object RleBoolCodec {
 
   /** Decode `numValues` booleans from the stream starting at `off`. */
   def decode(buf: Array[Byte], off: Int, numValues: Int): Array[Boolean] = {
+    require(off >= 0 && buf.length - off >= 4,
+      s"RLE booleans: no 4-byte length at $off of ${buf.length} bytes")
     val bodyLen = (buf(off) & 0xFF) | ((buf(off + 1) & 0xFF) << 8) |
       ((buf(off + 2) & 0xFF) << 16) | ((buf(off + 3) & 0xFF) << 24)
+    require(bodyLen >= 0 && bodyLen <= buf.length - off - 4,
+      s"RLE booleans: body of $bodyLen bytes passes the ${buf.length - off - 4} left")
     val dec = new RleHybridDecoder(1, buf, off + 4, off + 4 + bodyLen)
     val tmp = new Array[Long](numValues)
     dec.get(tmp, 0, numValues)

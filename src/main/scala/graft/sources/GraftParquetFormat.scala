@@ -689,17 +689,7 @@ final class GraftScan(dir: String, schema: StructType,
     else files.flatMap { case (p, kvs) =>
       val meta = ParquetFileReader.readFooterOnly(p)
       val flatOk = GraftFlatScan.isFlat(meta)
-      var rgs: Seq[Int] = meta.rowGroups.indices
-      rtRanges.foreach { case (c, (lo, hi)) =>
-        val keep = ParquetFileReader.rowGroupsInRange(meta, c, lo, hi).toSet
-        rgs = rgs.filter(keep)
-      }
-      rtStrRanges.foreach { case (c, (lo, hi)) =>
-        val keep =
-          ParquetFileReader.rowGroupsInRangeBytes(meta, c, lo, hi).toSet
-        rgs = rgs.filter(keep)
-      }
-      rgs.map(rg =>
+      GraftFlatScan.pruneRowGroups(meta, null, rtRanges, rtStrRanges).map(rg =>
         GraftFilePartition(p, Seq(rg), flatOk, kvs): InputPartition)
     }.toArray
   }

@@ -662,31 +662,15 @@ object ParquetFileReader {
     * stat encoding (LE). Groups without usable stats are kept (sound). */
   def rowGroupsInRange(meta: PqFileMeta, colName: String, lo: Long,
       hi: Long): Seq[Int] =
-    meta.rowGroups.indices.filter { rg =>
-      chunkFor(meta, rg, colName).flatMap(_.stats) match {
-        case Some(st) if st.min.nonEmpty && st.max.nonEmpty =>
-          MinMax.leToLong(st.max) >= lo && MinMax.leToLong(st.min) <= hi
-        case _ => true
-      }
-    }
+    meta.rowGroups.indices.filter(rg => chunkFor(meta, rg, colName)
+      .flatMap(_.stats).forall(intStatsOverlap(_, lo, hi)))
 
-  /** Row groups whose [min,max] byte stats intersect [lo,hi] (unsigned
-    * lexicographic). A null `lo`/`hi` side is unbounded. Conservative with
-    * truncated stats: stored min ≤ real min and stored max ≥ real max, so
-    * a surviving group can be a false positive but never a false miss.
-    * Legacy-only stats (deprecated thrift fields 1/2, signed-compared by
-    * old writers) are ignored unless min == max — see PqStats. */
+  /** Row groups whose [min,max] byte stats may intersect [lo,hi], by
+    * [[byteStatsOverlap]]; a group without stats is kept. */
   def rowGroupsInRangeBytes(meta: PqFileMeta, colName: String,
       lo: Array[Byte], hi: Array[Byte]): Seq[Int] =
-    meta.rowGroups.indices.filter { rg =>
-      chunkFor(meta, rg, colName).flatMap(_.stats) match {
-        case Some(st) if st.min.nonEmpty && st.byteOrderTrusted =>
-          (hi == null || MinMax.compareBytes(st.min, hi) <= 0) &&
-            (lo == null || st.max.isEmpty ||
-              MinMax.compareBytes(st.max, lo) >= 0)
-        case _ => true
-      }
-    }
+    meta.rowGroups.indices.filter(rg => chunkFor(meta, rg, colName)
+      .flatMap(_.stats).forall(byteStatsOverlap(_, lo, hi)))
 
   /** Assembled records from only the row groups surviving a [lo,hi] range
     * predicate on an INT32/INT64 column. */
@@ -723,19 +707,19 @@ object ParquetFileReader {
     (dict.fold(-1L)(_.off.toLong), spans)
   }
 
-  /** Does an INT32/INT64 stats pair intersect [lo, hi]? Empty stats ⇒ yes. */
+  /** May an INT32/INT64 stats pair hold a value in [lo, hi]? The shared
+    * kernel [[MinMax.overlaps]]; an empty side keeps. */
   def intStatsOverlap(st: PqStats, lo: Long, hi: Long): Boolean =
-    st.min.isEmpty || st.max.isEmpty ||
-      (MinMax.leToLong(st.max) >= lo && MinMax.leToLong(st.min) <= hi)
+    MinMax.overlaps(PhysicalType.Int64, st.min, st.max, lo, hi)
 
-  /** Byte-stats intersection with [lo, hi] (unsigned lexicographic; null
-    * side unbounded). Conservative under stat truncation, like
-    * [[rowGroupsInRangeBytes]]; legacy-only stats never prune unless
-    * min == max (old writers signed-compared binary stats). */
+  /** May byte stats hold a value in [lo, hi] (unsigned lexicographic; null
+    * side unbounded)? The shared kernel [[MinMax.overlaps]], which is
+    * conservative under stat truncation (stored min ≤ real min, stored
+    * max ≥ real max). Stats whose byte order is untrusted always keep:
+    * legacy-only stats unless min == max, since old writers
+    * signed-compared binary stats (see [[PqStats.byteOrderTrusted]]). */
   def byteStatsOverlap(st: PqStats, lo: Array[Byte], hi: Array[Byte]): Boolean =
-    st.min.isEmpty || !st.byteOrderTrusted ||
-      ((hi == null || MinMax.compareBytes(st.min, hi) <= 0) &&
-        (lo == null || st.max.isEmpty || MinMax.compareBytes(st.max, lo) >= 0))
+    !st.byteOrderTrusted || MinMax.overlaps(PhysicalType.Bytes, st.min, st.max, lo, hi)
 
   /** Chunk row ranges (ascending, disjoint, end-exclusive) covered by the
     * pages whose statistics pass `keep`; stat-less pages always pass. */

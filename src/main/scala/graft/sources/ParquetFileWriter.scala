@@ -554,7 +554,7 @@ object ParquetFileWriter {
       if (idPage.isEmpty && !rawFixed) encPin match {
         case Some(pin) if vec.length > 0 => (pin, null: Array[Byte])
         case Some(_) => (PqEncoding.Plain, null: Array[Byte])
-        case None => selectEnc(vec, dt, encPolicy, codec)
+        case None => selectEnc(vec, dt, encPolicy)
       }
       else (PqEncoding.Plain, null: Array[Byte])
     val valueEnc =
@@ -688,13 +688,16 @@ object ParquetFileWriter {
     * V2Default is the reference's fixed per-type WriterVersion::PARQUET_2_0
     * table (`/root/reference/src/column/writer.rs:718-795`); Auto measures
     * candidates on a [[SelectSample]]-bounded prefix slice and falls back
-    * to PLAIN whenever the candidate doesn't actually win.
+    * to PLAIN whenever the candidate doesn't actually win. Float and
+    * double columns stay PLAIN under every policy: their only other
+    * encoding, BYTE_STREAM_SPLIT, is rejected by Spark's default vectorized
+    * reader, so it is written only when pinned (`enc.<col>=bss`).
     *
     * Returns (encoding, cachedBytes): when the measured slice WAS the whole
     * chunk and the winner's encoding was materialized, its bytes come back
     * so a single-page chunk never encodes twice; null otherwise. */
-  private def selectEnc(vec: ColVec, dt: DataType, encPolicy: Int,
-      codec: Int): (Int, Array[Byte]) = {
+  private def selectEnc(vec: ColVec, dt: DataType,
+      encPolicy: Int): (Int, Array[Byte]) = {
     if (encPolicy == EncPolicy.Plain || isFlba(dt) || vec.length == 0)
       return (PqEncoding.Plain, null)
     val whole = vec.length <= SelectSample
@@ -759,23 +762,6 @@ object ParquetFileWriter {
           if (enc.length < s.rawSize)
             (pick, if (whole) enc else null)
           else (PqEncoding.Plain, null)
-        }
-      case _: FloatVec | _: DoubleVec =>
-        // BYTE_STREAM_SPLIT is a pure permutation (same size uncompressed);
-        // it only pays through the block codec, so Auto measures the actual
-        // compressed sizes of both layouts (on the bounded slice) and keeps
-        // PLAIN on ties. The reference's own v2 table predates the
-        // encoding — V2Default stays PLAIN for strict parity.
-        if (encPolicy != EncPolicy.Auto || codec == PqCodec.Uncompressed)
-          (PqEncoding.Plain, null)
-        else {
-          val s = slice
-          val plain = ValueCodec.encode(s, PqEncoding.Plain)
-          val bss = ValueCodec.encode(s, PqEncoding.ByteStreamSplit)
-          if (BlockCodec.compress(bss, codec).length <
-              BlockCodec.compress(plain, codec).length)
-            (PqEncoding.ByteStreamSplit, if (whole) bss else null)
-          else (PqEncoding.Plain, if (whole) plain else null)
         }
       case _ => (PqEncoding.Plain, null)
     }

@@ -1,22 +1,14 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
-import graft.sources.ParquetFileReader.{PqGroupVal, readFooter}
+import graft.sources.ParquetFileReader.PqGroupVal
 
-/** Distributed `.parquet` SOURCE over our own decode kernels — the mirror
-  * of [[ParquetSink]] and the counterpart of the reference's
-  * SerializedFileReader + RowIter
-  * (`/root/reference/src/file/reader.rs:145-283`,
-  * `/root/reference/src/record/reader.rs:731-903`) lifted to Spark's
-  * files model.
-  *
-  * Scale shape: the driver reads ONE footer (bytes, not data) to derive
-  * the Spark schema; the file list is parallelized and every task decodes
-  * its own files with the [[ParquetFileReader]] kernels, applying
-  * footer-statistics row-group pruning locally (`range`) before any page
-  * is decompressed. No data ever passes through the driver.
+/** The Spark face of a Parquet footer and its assembled values, shared by
+  * the DataSource V2 reader ([[GraftParquetFormat]], the one read path for
+  * `.parquet` files): the Spark schema of a footer, and the external-row
+  * value of an assembled Parquet value.
   */
 object ParquetSource {
 
@@ -77,57 +69,6 @@ object ParquetSource {
     case other => throw new IllegalArgumentException(s"leaf type $other")
   }
 
-  /** Read a directory of `.parquet` files (or one file) as a DataFrame.
-    * `range = Some((col, lo, hi))` prunes row groups via footer stats
-    * inside each task before any page decode; `columns` (empty = all)
-    * prunes column decode — chunks of unselected fields are never touched. */
-  def read(spark: SparkSession, dir: String,
-      range: Option[(String, Long, Long)] = None,
-      columns: Seq[String] = Nil): DataFrame = {
-    val io = GraftIO.forPath(dir)
-    val root = io.status(dir).getOrElse(
-      throw new IllegalArgumentException(s"no such path: $dir"))
-    val files: Seq[String] =
-      if (!root.isDir) Seq(root.path)
-      else io.list(dir).filter(e => !e.isDir && e.name.endsWith(".parquet"))
-        .map(_.path).sorted
-    require(files.nonEmpty, s"no parquet files in $dir")
-    // planning-time schema: footer tail only, never the whole file
-    val full = sparkSchema(ParquetFileReader.readFooterOnly(files.head))
-    val schema =
-      if (columns.isEmpty) full
-      else StructType(columns.map(c => full(full.fieldIndex(c))))
-    val proj = if (columns.isEmpty) null else columns.toSet
-    val rdd = spark.sparkContext
-      .parallelize(files.toSeq, math.max(1, files.length))
-      .flatMap(path => fileRows(path, schema, range, proj))
-    spark.createDataFrame(rdd, schema)
-  }
-
-  /** Decode one file to Spark Rows (runs inside a task). */
-  def fileRows(path: String, schema: StructType,
-      range: Option[(String, Long, Long)],
-      projection: Set[String] = null): Iterator[Row] = {
-    // footer tail + projected chunk ranges only — pruned row groups and
-    // unprojected columns are never read from disk
-    val meta = ParquetFileReader.readFooterOnly(path)
-    val rgs = range match {
-      case Some((col, lo, hi)) =>
-        ParquetFileReader.rowGroupsInRange(meta, col, lo, hi)
-      case None => meta.rowGroups.indices
-    }
-    rgs.iterator.flatMap { rg =>
-      val fetch = new ParquetFileReader.ChunkFetcher(path)
-      val groupRows =
-        try ParquetFileReader.readRowsFetched(fetch, meta, rg, projection)
-        finally fetch.close()
-      groupRows.iterator.map(g => toRow(g, schema))
-    }
-  }
-
-  private def toRow(g: PqGroupVal, st: StructType): Row =
-    Row.fromSeq(st.fields.toSeq.map(f => externalValue(g(f.name), f.dataType)))
-
   /** Assembled parquet value -> Spark external-row value for `dt`. */
   def externalValue(v: Any, dt: DataType): Any =
     if (v == null) null
@@ -154,7 +95,9 @@ object ParquetSource {
       case MapType(kt, vt, _) =>
         v.asInstanceOf[Vector[(Any, Any)]]
           .map { case (k, vv) => externalValue(k, kt) -> externalValue(vv, vt) }.toMap
-      case st: StructType => toRow(v.asInstanceOf[PqGroupVal], st)
+      case st: StructType =>
+        val g = v.asInstanceOf[PqGroupVal]
+        Row.fromSeq(st.fields.toSeq.map(f => externalValue(g(f.name), f.dataType)))
       case _ => v
     }
 }

@@ -415,6 +415,67 @@ class SparkE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     chunks.unpersist()
   }
 
+  test("decodeWhere needs each row range in one partition, and reads stored chunk tables") {
+    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+      .select("l_orderkey", "l_linenumber", "l_quantity")
+      .repartitionByRange(4, col("l_orderkey"))
+    val chunks = EncodeJob.encode(li, numPartitions = 0,
+      partitionKeys = Seq.empty, sortKeys = Seq("l_orderkey", "l_linenumber"),
+      chunkRows = 256).cache()
+    val (lo, hi) = (100L, 900L)
+    def exact(df: org.apache.spark.sql.DataFrame) =
+      df.where(col("l_orderkey").between(lo, hi))
+        .orderBy("l_orderkey", "l_linenumber").collect().toSeq
+    val expect = exact(li)
+    assert(expect.nonEmpty)
+    assert(exact(DecodeJob.decodeWhere(chunks, li.schema, "l_orderkey", lo, hi)) == expect)
+    // every column chunk of a row range split across partitions: the
+    // same-partition error, never a partial count
+    val e = intercept[Exception](DecodeJob.decodeWhere(chunks.repartition(3),
+      li.schema, "l_orderkey", lo, hi).count())
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+      c.getMessage.contains("must share a partition")), e)
+    // a chunk table written with .write.parquet and read back
+    val out = java.nio.file.Files.createTempDirectory("graft-where").toString
+    chunks.write.parquet(s"$out/chunks")
+    val stored = spark.read.parquet(s"$out/chunks")
+      .as[ChunkRow](org.apache.spark.sql.Encoders.product[ChunkRow])
+    assert(exact(DecodeJob.decodeWhere(stored, li.schema, "l_orderkey", lo, hi)) == expect)
+    chunks.unpersist()
+  }
+
+  test("Auto-written float and double columns read with Spark's vectorized reader") {
+    import graft.sources.{EncPolicy, GraftParquetFormat, ParquetFileReader,
+      ParquetSink, PqCodec, PqEncoding, WriterProps}
+    // 1/16 and 1/256 steps keep both sums exact in any order
+    val src = spark.range(20000).select(col("id"),
+      (pmod(hash(col("id")), lit(16000)) / 16.0).cast("float").as("f"),
+      (pmod(hash(col("id"), lit(7)), lit(1 << 20)) / 256.0).as("d"))
+    val expect = src.agg(sum("f"), sum("d")).collect().toSeq
+    def write(props: WriterProps): (String, Map[String, Seq[Int]]) = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-auto-float").toString
+      ParquetSink.write(src.coalesce(1), dir, codec = PqCodec.Snappy,
+        encPolicy = EncPolicy.Auto, props = props).count()
+      val file = new java.io.File(dir).listFiles(
+        (_, nm) => nm.endsWith(".parquet")).head.getPath
+      (dir, ParquetFileReader.readFooterOnly(file).rowGroups.head.columns
+        .map(c => c.pathInSchema.mkString(".") -> c.encodings).toMap)
+    }
+    val (dir, enc) = write(WriterProps.empty)
+    assert(!enc("f").contains(PqEncoding.ByteStreamSplit), enc)
+    assert(!enc("d").contains(PqEncoding.ByteStreamSplit), enc)
+    assert(spark.conf.get("spark.sql.parquet.enableVectorizedReader", "true") == "true")
+    assert(spark.read.parquet(dir).agg(sum("f"), sum("d")).collect().toSeq == expect)
+    // an explicit pin still writes BYTE_STREAM_SPLIT, which our reader reads
+    val (pinned, pinnedEnc) = write(WriterProps.empty
+      .withColumnEncoding("f", PqEncoding.ByteStreamSplit)
+      .withColumnDictionaryEnabled("f", false))
+    assert(pinnedEnc("f").contains(PqEncoding.ByteStreamSplit), pinnedEnc)
+    assert(spark.read.format(GraftParquetFormat.Name).load(pinned)
+      .agg(sum("f"), sum("d")).collect().toSeq == expect)
+  }
+
   test("streaming encode: micro-batches land as decodable chunks with lineage") {
     val s = spark
     import s.implicits._
@@ -859,9 +920,7 @@ class SparkE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
         if (r.isNullAt(3)) null else Double.box(r.getDouble(3))))
       .toSeq.sortBy(_._1)
     assert(canon(df) == canon(rd))
-    // and back through OUR readers: distributed source + DSv2 format()
-    val rd2 = graft.sources.ParquetSource.read(spark, dir)
-    assert(canon(rd2) == canon(df))
+    // and back through OUR reader: the DSv2 format()
     val rd3 = spark.read.format("graft.sources.GraftParquetFormat").load(dir)
     assert(canon(rd3) == canon(df))
   }
@@ -918,7 +977,8 @@ class SparkE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir4 = java.nio.file.Files.createTempDirectory("graft-pq4").toString
     ParquetSink.write(docs.limit(80), dir4, codec = PqCodec.Lz4Raw).count()
     assert(spark.read.parquet(dir4).count() == 80)
-    assert(graft.sources.ParquetSource.read(spark, dir4).count() == 80)
+    assert(spark.read.format(graft.sources.GraftParquetFormat.Name).load(dir4)
+      .count() == 80)
   }
 
   test("page index interop: parquet-mr filters rows through our ColumnIndex") {
@@ -1028,12 +1088,13 @@ class SparkE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(encOf("path").contains(PqEncoding.DeltaByteArray))
     assert(encOf("blob").contains(PqEncoding.DeltaLengthByteArray))
     assert(encOf("flag").contains(PqEncoding.Rle))
-    assert(encOf("temp").contains(PqEncoding.ByteStreamSplit))
+    // floats stay PLAIN: Spark's vectorized reader rejects BYTE_STREAM_SPLIT
+    assert(encOf("temp").contains(PqEncoding.Plain) &&
+      !encOf("temp").contains(PqEncoding.ByteStreamSplit))
 
     // external anchor: parquet-mr consumes every auto-chosen encoding
-    // value-exactly. Spark's VECTORIZED reader has no BYTE_STREAM_SPLIT
-    // support (even in 4.x), so this read goes through parquet-mr's row
-    // path — the same library, non-vectorized surface.
+    // value-exactly, here through its row path — the same library,
+    // non-vectorized surface.
     val expect = rows.map(r => (r.getLong(0), r.getLong(1), r.getString(2),
       r.getString(3), r.getBoolean(4), r.getFloat(5)))
     spark.conf.set("spark.sql.parquet.enableVectorizedReader", "false")
@@ -1050,13 +1111,8 @@ class SparkE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
           .setBoolean("parquet.split.files", true)
       }
     assert(viaSpark == expect)
-    // and our own distributed source decodes its own delta pages
-    val viaOurs = graft.sources.ParquetSource.read(spark, autoDir)
-      .orderBy("sorted_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getString(3),
-        r.getBoolean(4), r.getFloat(5))).toSeq
-    assert(viaOurs == expect)
-    // DSv2 columnar path (typed vectors) over the same delta/RLE pages
+    // and our own DSv2 columnar path (typed vectors) decodes its own
+    // delta/RLE pages
     val viaDsv2 = spark.read.format(graft.sources.GraftParquetFormat.Name)
       .load(autoDir).orderBy("sorted_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getString(3),
@@ -1190,7 +1246,7 @@ class SparkE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("distributed ParquetSource: our writer -> our reader as a DataFrame") {
-    import graft.sources.{ParquetSink, ParquetSource, PqCodec}
+    import graft.sources.{GraftParquetFormat, GraftScan, ParquetSink, PqCodec}
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
@@ -1212,18 +1268,19 @@ class SparkE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.sparkContext.parallelize(rows.toSeq, 3), schema)
     val dir = java.nio.file.Files.createTempDirectory("graft-src").toString
     ParquetSink.write(df, dir, codec = PqCodec.Snappy, rowGroupRows = 64).count()
-    val back = ParquetSource.read(spark, dir)
+    val back = spark.read.format(GraftParquetFormat.Name).load(dir)
     assert(back.schema == StructType(schema.map(_.copy(nullable = true))))
     val a = df.orderBy("id").collect().toSeq
     val b = back.orderBy("id").collect().toSeq
     assert(a.zip(b).forall { case (x, y) => x == y })
-    // range read prunes to surviving row groups, exact filter on top
-    val pruned = ParquetSource.read(spark, dir, range = Some(("id", 100L, 150L)))
-    val got = pruned.filter(col("id").between(100, 150)).count()
+    // a pushed range prunes to surviving row groups, exact filter on top
+    val got = back.where(col("id").between(100, 150)).count()
     assert(got == 51)
-    assert(pruned.count() < 400) // some groups actually pruned
+    def tasks(ranges: Map[String, (Long, Long)]) =
+      new GraftScan(dir, back.schema, ranges).planInputPartitions().length
+    assert(tasks(Map("id" -> ((100L, 150L)))) < tasks(Map.empty)) // some groups actually pruned
     // column-pruned read (reordered projection)
-    val proj = ParquetSource.read(spark, dir, columns = Seq("amt", "id"))
+    val proj = back.select("amt", "id")
     assert(proj.schema.fieldNames.toSeq == Seq("amt", "id"))
     assert(proj.agg(sum("id")).collect()(0).getLong(0) == (0L until 400L).sum)
   }
@@ -1578,7 +1635,7 @@ class SparkE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("big decimals (p>18) roundtrip as FLBA through both readers") {
-    import graft.sources.{ParquetSink, ParquetSource}
+    import graft.sources.ParquetSink
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
@@ -1600,8 +1657,9 @@ class SparkE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     viaSpark.zip(exp).foreach { case (a, e) =>
       assert(a.getDecimal(1).compareTo(e.getDecimal(1)) == 0)
     }
-    // our own distributed reader agrees
-    val viaOurs = ParquetSource.read(spark, dir).orderBy("id").collect()
+    // our own DSv2 reader agrees
+    val viaOurs = spark.read.format(graft.sources.GraftParquetFormat.Name)
+      .load(dir).orderBy("id").collect()
     viaOurs.zip(exp).foreach { case (a, e) =>
       assert(a.getDecimal(1).compareTo(e.getDecimal(1)) == 0)
     }
@@ -1854,8 +1912,6 @@ class SparkE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(micros(spark.read.parquet(dir)) == exp)
     // our DSv2 reader (boxed INT96 fill on the columnar path)
     assert(micros(spark.read.format(GraftParquetFormat.Name).load(dir)) == exp)
-    // and our RDD row source
-    assert(micros(graft.sources.ParquetSource.read(spark, dir)) == exp)
   }
 
   test("pluggable I/O: full write/scan loop over a Hadoop FileSystem path") {
@@ -1878,9 +1934,8 @@ class SparkE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     val exp = docs.where(col("doc_id").between(5, 40)).select("doc_id", "lang")
     assert(back.orderBy("doc_id").collect().toSeq ==
       exp.orderBy("doc_id").collect().toSeq)
-    // the RDD source over the same URI
-    val src = graft.sources.ParquetSource.read(spark, dir,
-      range = Some(("doc_id", 5L, 40L)))
+    // every column over the same URI, through the same pushed range
+    val src = spark.read.format(GraftParquetFormat.Name).load(dir)
       .where(col("doc_id").between(5, 40))
     assert(src.count() == exp.count())
     // DSv2 write (truncate) through the seam as well

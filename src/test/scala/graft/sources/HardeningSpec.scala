@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{BitReader, BitWriter, BlockCodec, BytesVec, ChunkCodec,
   CodecId, DeltaLengthByteArrayCodec, IntVec, LongVec, PhysicalType, PlainCodec,
-  RleHybridEncoder}
+  RleBoolCodec, RleHybridDecoder, RleHybridEncoder}
 
 /** Unit coverage for the round-3 review fixes: Hive-compatible partition
   * path escaping, legacy-statistics distrust in byte-wise pruning, and
@@ -278,5 +278,72 @@ class HardeningSpec extends AnyFunSuite {
     val (cut, _) = chunk(full.dropRight(20))
     val e = intercept[IllegalArgumentException](ParquetFileReader.readColumnVec(cut, col))
     assert(e.getMessage.contains("past the stream end"), e.getMessage)
+  }
+
+  test("a GC dictionary id page cut inside a bit-packed run fails naming the layer") {
+    val rnd = new scala.util.Random(6L)
+    val n = 1000
+    val dict = PlainCodec.encode(IntVec(Array.tabulate(64)(_ * 3)))
+    val ids = new RleHybridEncoder(6)
+    (0 until n).foreach(_ => ids.put(rnd.nextInt(64).toLong))
+    val body = ids.result()
+    def blob(idPage: Array[Byte]): Array[Byte] = {
+      val w = new BitWriter(1024)
+      w.putAligned('G'.toLong, 1); w.putAligned('C'.toLong, 1)
+      w.putAligned(1L, 1) // version 1: no nulls
+      w.putAligned(PhysicalType.Int32.toLong, 1)
+      w.putAligned(CodecId.Dict.toLong, 1)
+      w.putVlq(n.toLong) // rows
+      w.putAligned(1L, 1) // has a dictionary
+      w.putVlq(64L); w.putVlq(dict.length.toLong); w.putBytes(dict)
+      w.putVlq(1L) // one page
+      w.putAligned(CodecId.Dict.toLong, 1)
+      w.putVlq(n.toLong); w.putVlq(idPage.length.toLong); w.putBytes(idPage)
+      w.result()
+    }
+    assert(ChunkCodec.decode(blob(6.toByte +: body)).length == n)
+    // the page holds half its hybrid body: the bit-packed run passes its end
+    val e = intercept[IllegalArgumentException](
+      ChunkCodec.decode(blob(6.toByte +: body.take(body.length / 2))))
+    assert(e.getMessage.contains("RLE/bit-packed"), e.getMessage)
+  }
+
+  test("the hybrid decoder reads only inside its stream") {
+    val enc = new RleHybridEncoder(3)
+    (0 until 10).foreach(i => enc.put((i % 8).toLong))
+    val stream = enc.result() // indicator + two 8-value groups of 3 bytes
+    assert(stream.length == 7)
+    // the next stream's bytes follow; the decoder is bounded before them
+    val buf = stream ++ Array.fill[Byte](16)(0x55)
+    def read(end: Int, k: Int): Seq[Long] = {
+      val out = new Array[Long](k)
+      val got = new RleHybridDecoder(3, buf, 0, end).get(out, 0, k)
+      out.take(got).toSeq
+    }
+    assert(read(stream.length, 10) == (0 until 10).map(i => (i % 8).toLong))
+    // a final group cut to the bits of the values asked for still decodes
+    val short = 1 + (10 * 3 + 7) / 8
+    assert(read(short, 10) == (0 until 10).map(i => (i % 8).toLong))
+    val e = intercept[IllegalArgumentException](read(short, 16))
+    assert(e.getMessage.contains("RLE/bit-packed"), e.getMessage)
+    // an RLE run whose value bytes pass the end
+    val rle = new RleHybridEncoder(16)
+    (0 until 20).foreach(_ => rle.put(7L))
+    val run = rle.result()
+    val e2 = intercept[IllegalArgumentException](
+      new RleHybridDecoder(16, run ++ Array[Byte](1, 2), 0, run.length - 1)
+        .get(new Array[Long](20), 0, 20))
+    assert(e2.getMessage.contains("stream end"), e2.getMessage)
+  }
+
+  test("an RLE boolean stream's length prefix is checked against the buffer") {
+    val enc = RleBoolCodec.encode(Array.tabulate(100)(_ % 3 == 0))
+    assert(RleBoolCodec.decode(enc, 0, 100).toSeq == (0 until 100).map(_ % 3 == 0))
+    val forged = enc.clone()
+    forged(0) = (forged(0) + 1).toByte // one byte more than the buffer holds
+    val e = intercept[IllegalArgumentException](RleBoolCodec.decode(forged, 0, 100))
+    assert(e.getMessage.contains("RLE booleans"), e.getMessage)
+    val e2 = intercept[IllegalArgumentException](RleBoolCodec.decode(enc.take(3), 0, 1))
+    assert(e2.getMessage.contains("RLE booleans"), e2.getMessage)
   }
 }
