@@ -576,7 +576,7 @@ object ChunkCodec {
       val levelBytes = r.getBytes(levelLen)
       val dec = new RleHybridDecoder(1, levelBytes, 0, levelBytes.length)
       val tmp = new Array[Long](numRows)
-      dec.get(tmp, 0, numRows)
+      dec.getExactly(tmp, 0, numRows)
       defLevels = new Array[Byte](numRows)
       numValues = 0
       var i = 0
@@ -644,7 +644,7 @@ object ChunkCodec {
     val bytes = r.getBytes(len)
     val dec = new RleHybridDecoder(width, bytes, 0, bytes.length)
     val tmp = new Array[Long](numSlots)
-    dec.get(tmp, 0, numSlots)
+    dec.getExactly(tmp, 0, numSlots)
     val out = new Array[Byte](numSlots)
     var i = 0
     while (i < numSlots) { out(i) = tmp(i).toByte; i += 1 }

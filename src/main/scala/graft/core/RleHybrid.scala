@@ -153,6 +153,14 @@ final class RleHybridDecoder(bitWidth: Int, buf: Array[Byte], start: Int, end: I
     read
   }
 
+  /** Read exactly `n` values into `out`; a stream that ends before them
+    * fails instead of leaving the missing slots as zeros. */
+  def getExactly(out: Array[Long], outOff: Int, n: Int): Unit = {
+    val got = get(out, outOff, n)
+    require(got == n,
+      s"RLE/bit-packed hybrid: stream ends after $got of $n values")
+  }
+
   private def reload(): Boolean = {
     if (r.bytesLeft <= 0) return false
     val indicator = r.getVlq()
@@ -194,7 +202,7 @@ object RleBoolCodec {
       s"RLE booleans: body of $bodyLen bytes passes the ${buf.length - off - 4} left")
     val dec = new RleHybridDecoder(1, buf, off + 4, off + 4 + bodyLen)
     val tmp = new Array[Long](numValues)
-    dec.get(tmp, 0, numValues)
+    dec.getExactly(tmp, 0, numValues)
     val out = new Array[Boolean](numValues)
     var i = 0
     while (i < numValues) { out(i) = tmp(i) != 0L; i += 1 }

@@ -133,7 +133,7 @@ object ValueCodec extends ParquetEncodingIds {
     require(off < buf.length, "dictionary id page is empty")
     val dec = new RleHybridDecoder(buf(off) & 0xFF, buf, off + 1, buf.length)
     val ids = new Array[Long](n)
-    dec.get(ids, 0, n)
+    dec.getExactly(ids, 0, n)
     val idx = new Array[Int](n)
     var i = 0
     while (i < n) {

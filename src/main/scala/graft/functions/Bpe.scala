@@ -268,14 +268,17 @@ object Bpe {
             }
             words(wi) = buf.toArray
             addPairs(wi, 1L) // add the new ones
-            // re-seed the heap for every pair whose count changed in this
-            // word (cheap over-approximation: all current pairs of the word)
-            val nw = words(wi)
-            var k2 = 0
-            while (k2 + 1 < nw.length) {
-              val np = P(nw(k2), nw(k2 + 1))
-              counts.get(np).foreach(nc => heap.enqueue((nc, np.l, np.r)))
-              k2 += 1
+            // re-seed the heap at the live count of every pair whose count
+            // changed in this word: the retracted ones (a pair that left
+            // the word dropped, and its old entry is now stale) and the
+            // added ones
+            Iterator(w, words(wi)).foreach { sw =>
+              var k2 = 0
+              while (k2 + 1 < sw.length) {
+                val np = P(sw(k2), sw(k2 + 1))
+                counts.get(np).foreach(nc => heap.enqueue((nc, np.l, np.r)))
+                k2 += 1
+              }
             }
           }
         }

@@ -1,27 +1,23 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 import graft.core._
 
 /** Chunks -> rows (the reference's record-assembly layer re-expressed as a
-  * typed Dataset transformation; cf. `/root/reference/src/record/reader.rs`
-  * — columns of one (partId, chunkIdx) range zip back into rows). */
+  * Catalyst plan node; cf. parquet-rs `src/record/reader.rs` —
+  * columns of one (partId, chunkIdx) range zip back into rows). Every read
+  * is a [[ChunkScan]]: the planner hands its exec only the columns the
+  * query references, and those decode into columnar batches. */
 object DecodeJob {
 
   /** Decode chunk rows back into a DataFrame with the given flat schema.
-    * One shuffle: groupByKey on (partId, chunkIdx). Works for ANY chunk
-    * Dataset layout; see [[decodeLocal]] for the shuffle-free path. */
-  def decode(chunks: Dataset[ChunkRow], schema: StructType): DataFrame = {
-    val spark = chunks.sparkSession
-    import spark.implicits._
-    val fields = schema.fields
-    val rowEnc = Encoders.row(schema)
-    chunks
-      .groupByKey(c => (c.partId, c.chunkIdx))
-      .flatMapGroups((_, it) => decodeGroup(fields, it.toArray))(rowEnc)
-  }
+    * One shuffle: a repartition on (partId, chunkIdx) gathers each row
+    * range, then [[decodeLocal]]. Works for ANY chunk Dataset layout. */
+  def decode(chunks: Dataset[ChunkRow], schema: StructType): DataFrame =
+    decodeLocal(chunks.repartition(col("partId"), col("chunkIdx")), schema)
 
   /** Typed decode — the counterpart of the reference's compile-time-typed
     * `RowIter<T>` (`/root/reference/src/record/reader.rs:751-774`): Spark's
@@ -38,76 +34,9 @@ object DecodeJob {
     * output, caches of it, and per-partition-written chunk files. Groups
     * rows locally inside each partition (ordering within the partition
     * doesn't matter); fails fast if a row range's chunks are split across
-    * partitions. */
+    * partitions. Only the columns a query references are decoded. */
   def decodeLocal(chunks: Dataset[ChunkRow], schema: StructType): DataFrame =
-    decodeLocalKept(chunks, schema)(_ => true)
-
-  /** [[decodeLocal]] of the row ranges whose complete chunk group passes
-    * `keep`; a rejected group's blobs are never unwrapped or decoded. */
-  private def decodeLocalKept(chunks: Dataset[ChunkRow], schema: StructType)(
-      keep: Array[ChunkRow] => Boolean): DataFrame = {
-    val fields = schema.fields
-    val rowEnc = Encoders.row(schema)
-    chunks.mapPartitions { it =>
-      val groups = scala.collection.mutable.LinkedHashMap
-        .empty[(Int, Int), scala.collection.mutable.ArrayBuffer[ChunkRow]]
-      it.foreach { c =>
-        groups.getOrElseUpdate((c.partId, c.chunkIdx),
-          scala.collection.mutable.ArrayBuffer.empty[ChunkRow]) += c
-      }
-      groups.valuesIterator.flatMap { g =>
-        val group = g.toArray
-        requireComplete(fields, group)
-        if (keep(group)) decodeGroup(fields, group) else Iterator.empty
-      }
-    }(rowEnc)
-  }
-
-  /** One chunk per column, or the same-partition contract is broken. */
-  private def requireComplete(fields: Array[StructField],
-      group: Array[ChunkRow]): Unit =
-    require(group.length == fields.length,
-      s"expected ${fields.length} column chunks, got ${group.length} " +
-        s"(partId=${group.head.partId}, chunkIdx=${group.head.chunkIdx} — " +
-        "for decodeLocal all columns of a row range must share a partition)")
-
-  /** Re-assemble one (partId, chunkIdx) row range from its column chunks. */
-  private def decodeGroup(fields: Array[StructField],
-      group: Array[ChunkRow]): Iterator[Row] = {
-    requireComplete(fields, group)
-    val byCol = group.sortBy(_.colIdx)
-    val n = byCol.head.numValues.toInt // top-level rows in this range
-    val cols: Array[Int => Any] = byCol.zipWithIndex.map { case (c, ci) =>
-      val blob = BlockCodec.maybeUnwrap(c.blob)
-      if (ChunkCodec.isArrayChunk(blob))
-        materializeArray(fields(ci).dataType,
-          ChunkCodec.decodeArrayChunk(blob))
-      else if (ChunkCodec.isMapChunk(blob))
-        materializeMap(fields(ci).dataType,
-          ChunkCodec.decodeMapChunk(blob))
-      else {
-        val d = ChunkCodec.decodeWithLevels(blob)
-        require(d.numRows == n, s"row-count mismatch in chunk group: " +
-          s"${fields(ci).name} has ${d.numRows}, expected $n")
-        val values = materialize(fields(ci).dataType, d.vec)
-        if (d.defLevels == null) values
-        else {
-          // row -> value index (nulls hold -1); values are null-suppressed
-          val idx = new Array[Int](n)
-          var vi = 0
-          var i = 0
-          while (i < n) {
-            if (d.defLevels(i) != 0) { idx(i) = vi; vi += 1 } else idx(i) = -1
-            i += 1
-          }
-          (i: Int) => if (idx(i) < 0) null else values(idx(i))
-        }
-      }
-    }
-    (0 until n).iterator.map { i =>
-      Row.fromSeq(cols.indices.map(c => cols(c)(i)))
-    }
-  }
+    ChunkScan.dataFrame(chunks, schema, None)
 
   /** Decode only the row ranges whose `column` chunk statistics may hold a
     * value in [lower, upper] — chunk-level pruning, the read-side
@@ -115,8 +44,8 @@ object DecodeJob {
     * (parquet-rs `src/file/reader.rs:198`). One pass over each partition,
     * no shuffle and no join: the partition's chunk rows are grouped
     * locally as in [[decodeLocal]], each complete group's `column` chunk
-    * is tested with [[statsOverlap]], and only surviving groups are
-    * decoded; pruned blobs are never unwrapped or decoded.
+    * is tested with [[statsOverlap]], and only the referenced columns of
+    * surviving groups are decoded; pruned blobs are never unwrapped.
     *
     * Same-partition contract (that of [[decodeLocal]]): every column chunk
     * of a (partId, chunkIdx) row range must sit in one partition, as in
@@ -155,130 +84,20 @@ object DecodeJob {
       case _: DecimalType => (null, null)
       case _ => (lower, upper)
     }
-    decodeLocalKept(chunks, schema) { group =>
-      val c = group.find(_.column == column).getOrElse(
-        throw new IllegalArgumentException(
-          s"chunk group (partId=${group.head.partId}, chunkIdx=" +
-            s"${group.head.chunkIdx}) has no $column chunk"))
-      statsOverlap(c, loB, hiB)
-    }
+    ChunkScan.dataFrame(chunks, schema,
+      Some(ChunkRange(schema.fieldIndex(column), loB, hiB)))
   }
 
   /** May chunk `c` hold a value in [lower, upper]? An all-null chunk holds
     * none; otherwise its stats decide through [[MinMax.overlaps]]. */
   private[graft] def statsOverlap(c: ChunkRow, lower: Any, upper: Any): Boolean =
-    c.numValues != c.numNulls &&
-      MinMax.overlaps(c.physicalType, c.minStat, c.maxStat, lower, upper)
+    statsOverlap(c.numValues, c.numNulls, c.physicalType, c.minStat,
+      c.maxStat, lower, upper)
 
-  private def materialize(dt: DataType, vec: ColVec): Int => Any = (dt, vec) match {
-    case (StringType, v: BytesVec) =>
-      i => new String(v.data, v.start(i), v.len(i),
-        java.nio.charset.StandardCharsets.UTF_8)
-    case (BinaryType, v: BytesVec) => i => v.valueBytes(i)
-    case (IntegerType, IntVec(vs)) => i => vs(i)
-    case (DateType, IntVec(vs)) => i => java.sql.Date.valueOf(
-      java.time.LocalDate.ofEpochDay(vs(i).toLong))
-    case (LongType, LongVec(vs)) => i => vs(i)
-    case (TimestampNTZType, LongVec(vs)) => i => {
-      val micros = vs(i)
-      java.time.LocalDateTime.ofEpochSecond(
-        Math.floorDiv(micros, 1000000L),
-        (Math.floorMod(micros, 1000000L) * 1000L).toInt,
-        java.time.ZoneOffset.UTC)
-    }
-    case (TimestampType, LongVec(vs)) => i => {
-      val micros = vs(i)
-      val ts = new java.sql.Timestamp(Math.floorDiv(micros, 1000000L) * 1000L)
-      ts.setNanos((Math.floorMod(micros, 1000000L) * 1000L).toInt)
-      ts
-    }
-    case (FloatType, FloatVec(vs)) => i => vs(i)
-    case (DoubleType, DoubleVec(vs)) => i => vs(i)
-    case (BooleanType, BoolVec(vs)) => i => vs(i)
-    case (dt: DecimalType, LongVec(vs)) =>
-      i => java.math.BigDecimal.valueOf(vs(i), dt.scale)
-    // precision > 18: two's-complement big-endian unscaled bytes (the FLBA
-    // layout EncodeJob.ColBuilder writes for wide decimals)
-    case (dt: DecimalType, v: BytesVec) =>
-      i => new java.math.BigDecimal(
-        new java.math.BigInteger(v.valueBytes(i)), dt.scale)
-    case other => throw new IllegalArgumentException(s"cannot materialize $other")
-  }
-
-  /** Rebuild per-row arrays from a decoded LIST chunk (reverse shredding:
-    * rep 0 starts a row; def 0 = null array, 1 = empty, 2 = null element,
-    * 3 = element). */
-  private def materializeArray(dt: DataType,
-      da: ChunkCodec.DecodedArray): Int => Any = {
-    val elemDt = dt match {
-      case ArrayType(et, _) => et
-      case other => throw new IllegalArgumentException(
-        s"array chunk for non-array column type $other")
-    }
-    val elemGet = materialize(elemDt, da.elems)
-    val rows = new Array[Any](da.numRows)
-    val slots = da.rep.length
-    var i = 0
-    var ri = 0
-    var vi = 0
-    while (i < slots) {
-      da.defs(i) match {
-        case 0 => rows(ri) = null; i += 1
-        case 1 => rows(ri) = Seq.empty[Any]; i += 1
-        case _ =>
-          val buf = scala.collection.mutable.ArrayBuffer.empty[Any]
-          var cont = true
-          while (cont) {
-            if (da.defs(i) == 3) { buf += elemGet(vi); vi += 1 } else buf += null
-            i += 1
-            cont = i < slots && da.rep(i) == 1
-          }
-          rows(ri) = buf.toSeq
-      }
-      ri += 1
-    }
-    require(ri == da.numRows, s"array reassembly: $ri rows != ${da.numRows}")
-    (r: Int) => rows(r)
-  }
-
-  /** Rebuild per-row maps from a decoded MAP chunk (reverse shredding:
-    * rep 0 starts a row; def 0 = null map, 1 = empty, 2 = entry with null
-    * value, 3 = entry with value; keys exist for def >= 2, values for
-    * def == 3). */
-  private def materializeMap(dt: DataType,
-      dm: ChunkCodec.DecodedMap): Int => Any = {
-    val (keyDt, valDt) = dt match {
-      case MapType(kt, vt, _) => (kt, vt)
-      case other => throw new IllegalArgumentException(
-        s"map chunk for non-map column type $other")
-    }
-    val keyGet = materialize(keyDt, dm.keys)
-    val valGet = materialize(valDt, dm.vals)
-    val rows = new Array[Any](dm.numRows)
-    val slots = dm.rep.length
-    var i = 0
-    var ri = 0
-    var ki = 0
-    var vi = 0
-    while (i < slots) {
-      dm.defs(i) match {
-        case 0 => rows(ri) = null; i += 1
-        case 1 => rows(ri) = Map.empty[Any, Any]; i += 1
-        case _ =>
-          val b = Map.newBuilder[Any, Any]
-          var cont = true
-          while (cont) {
-            val k = keyGet(ki); ki += 1
-            if (dm.defs(i) == 3) { b += ((k, valGet(vi))); vi += 1 }
-            else b += ((k, null))
-            i += 1
-            cont = i < slots && dm.rep(i) == 1
-          }
-          rows(ri) = b.result()
-      }
-      ri += 1
-    }
-    require(ri == dm.numRows, s"map reassembly: $ri rows != ${dm.numRows}")
-    (r: Int) => rows(r)
-  }
+  private[graft] def statsOverlap(numValues: Long, numNulls: Long,
+      physicalType: Int, minStat: Array[Byte], maxStat: Array[Byte],
+      lower: Any, upper: Any): Boolean =
+    numValues != numNulls &&
+      MinMax.overlaps(physicalType, minStat, maxStat, lower, upper)
 }
+

@@ -13,8 +13,10 @@ import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.sources._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, Decimal, IntegerType,
+  LongType, MapType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.{ColumnarArray, ColumnarMap, ColumnVector}
 
 import graft.core.{BoolVec, BytesVec, ColVec, DoubleVec, FloatVec, IntVec, LongVec}
 
@@ -776,8 +778,8 @@ final case class GraftFilePartition(path: String, rgs: Seq[Int] = null,
   * column-major typed batches — per column the non-null values as a
   * [[ColVec]] plus def levels, straight from the one page decoder
   * ([[ParquetFileReader.decodeChunk]]), restricted to the kept row ranges.
-  * Feeds both the columnar batch reader (zero-copy, behind
-  * [[GraftColumnVector]]) and the page-pruned row path (boxed per row). */
+  * Feeds the columnar batch reader (zero-copy, behind
+  * [[GraftColumnVector]]). */
 private[sources] object GraftFlatScan {
 
   /** Root group of primitives only — no nesting, no repeated fields. */
@@ -899,17 +901,6 @@ private[sources] object GraftFlatScan {
       (d.values, d.defs)
     }, kept)
   }
-
-  /** Spark types [[GraftColumnVector]] serves (covers every flat type our
-    * writer emits except decimals). */
-  def columnarType(dt: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case BooleanType | IntegerType | LongType | FloatType | DoubleType |
-           StringType | BinaryType | DateType | TimestampType => true
-      case _ => false
-    }
-  }
 }
 
 final class GraftReaderFactory(schema: StructType,
@@ -923,12 +914,11 @@ final class GraftReaderFactory(schema: StructType,
       fp.rgs, fp.partValues, eqProbes)
   }
 
-  /** Columnar fast path: flat file (stamped at planning) + supported
-    * types. Spark then plans a codegen'd ColumnarToRow instead of this
+  /** Columnar path: every flat file (stamped at planning) with a column to
+    * read. Spark then plans a codegen'd ColumnarToRow instead of this
     * source converting row-by-row through external Rows. */
   override def supportColumnarReads(p: InputPartition): Boolean =
-    p.asInstanceOf[GraftFilePartition].flatOk && schema.nonEmpty &&
-      schema.fields.forall(f => GraftFlatScan.columnarType(f.dataType))
+    p.asInstanceOf[GraftFilePartition].flatOk && schema.nonEmpty
 
   override def createColumnarReader(p: InputPartition):
       PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
@@ -952,7 +942,7 @@ final class GraftColumnarPartitionReader(path: String, schema: StructType,
     eqProbes: Seq[(String, Seq[Any])] = Nil)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
   import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
+  import org.apache.spark.sql.vectorized.ColumnarBatch
 
   private val partMap = partValues.toMap
   private val fileFields = schema.fields.filter(f => !partMap.contains(f.name))
@@ -1014,10 +1004,17 @@ final class GraftColumnarPartitionReader(path: String, schema: StructType,
   * primitive getters index the decode arrays directly, `getUTF8String`
   * returns a view over the arena bytes (no copy, no String), and nullable
   * columns translate row → value slot through one precomputed int map
-  * (values are null-suppressed in the ColVec). */
-final class GraftColumnVector(dt: org.apache.spark.sql.types.DataType,
-    decoded: ColVec, defs: Array[Int], maxDef: Int)
-    extends org.apache.spark.sql.vectorized.ColumnVector(dt) {
+  * (values are null-suppressed in the ColVec). A LIST or MAP vector
+  * ([[GraftColumnVector.list]], [[GraftColumnVector.map]]) holds no values:
+  * its rows index `offsets` into child vectors over the entry slots. */
+final class GraftColumnVector private (dt: DataType, decoded: ColVec,
+    valIdx: Array[Int], offsets: Array[Int], kids: Array[ColumnVector])
+    extends ColumnVector(dt) {
+
+  /** A flat column: `defs == null` means no nulls, else a value is present
+    * where its def level equals `maxDef`. */
+  def this(dt: DataType, decoded: ColVec, defs: Array[Int], maxDef: Int) =
+    this(dt, decoded, GraftColumnVector.slots(defs, maxDef), null, null)
 
   // INT96 timestamps decode as raw 12-byte values: convert to micros once
   private val vec: ColVec = decoded match {
@@ -1027,19 +1024,6 @@ final class GraftColumnVector(dt: org.apache.spark.sql.types.DataType,
     case v => v
   }
 
-  // rowId -> value index (-1 = null); identity when the column has no nulls
-  private val valIdx: Array[Int] =
-    if (defs == null) null
-    else {
-      val m = new Array[Int](defs.length)
-      var i = 0
-      var vi = 0
-      while (i < defs.length) {
-        if (defs(i) == maxDef) { m(i) = vi; vi += 1 } else m(i) = -1
-        i += 1
-      }
-      m
-    }
   private var nNulls = -1
 
   @inline private def slot(rowId: Int): Int =
@@ -1082,24 +1066,96 @@ final class GraftColumnVector(dt: org.apache.spark.sql.types.DataType,
     val s = slot(rowId)
     java.util.Arrays.copyOfRange(b.data, b.start(s), b.start(s) + b.len(s))
   }
+  /** Unscaled int32/int64, or two's-complement big-endian unscaled bytes
+    * (the FLBA layout of wide decimals). */
+  override def getDecimal(rowId: Int, precision: Int, scale: Int): Decimal = {
+    val s = slot(rowId)
+    vec match {
+      case IntVec(vs) => Decimal.createUnsafe(vs(s), precision, scale)
+      case LongVec(vs) => Decimal.createUnsafe(vs(s), precision, scale)
+      case b: BytesVec => Decimal(new java.math.BigDecimal(
+        new java.math.BigInteger(b.data, b.start(s), b.len(s)), scale), precision, scale)
+      case other => throw new UnsupportedOperationException(s"decimal over $other")
+    }
+  }
+  override def getArray(rowId: Int): ColumnarArray =
+    new ColumnarArray(kids(0), offsets(rowId), offsets(rowId + 1) - offsets(rowId))
+  override def getMap(rowId: Int): ColumnarMap =
+    new ColumnarMap(kids(0), kids(1), offsets(rowId), offsets(rowId + 1) - offsets(rowId))
 
   override def getByte(rowId: Int): Byte =
     throw new UnsupportedOperationException("byte")
   override def getShort(rowId: Int): Short =
     throw new UnsupportedOperationException("short")
-  override def getArray(rowId: Int):
-      org.apache.spark.sql.vectorized.ColumnarArray =
-    throw new UnsupportedOperationException("array")
-  override def getMap(rowId: Int):
-      org.apache.spark.sql.vectorized.ColumnarMap =
-    throw new UnsupportedOperationException("map")
-  override def getDecimal(rowId: Int, precision: Int, scale: Int):
-      org.apache.spark.sql.types.Decimal =
-    throw new UnsupportedOperationException("decimal")
-  override def getChild(ordinal: Int):
-      org.apache.spark.sql.vectorized.ColumnVector =
-    throw new UnsupportedOperationException("child")
+  override def getChild(ordinal: Int): ColumnVector = kids(ordinal)
   override def close(): Unit = ()
+}
+
+object GraftColumnVector {
+
+  /** rowId -> value index (-1 = null); null (identity) when no nulls. */
+  private def slots(defs: Array[Int], maxDef: Int): Array[Int] =
+    if (defs == null) null
+    else {
+      val m = new Array[Int](defs.length)
+      var i = 0
+      var vi = 0
+      while (i < defs.length) {
+        if (defs(i) == maxDef) { m(i) = vi; vi += 1 } else m(i) = -1
+        i += 1
+      }
+      m
+    }
+
+  /** A LIST column from its one-level shredding: rep 0 starts a row; def 0
+    * = null array, 1 = empty, 2 = null element, 3 = element; `elems` holds
+    * the non-null elements. */
+  def list(dt: ArrayType, elems: ColVec, rep: Array[Byte], defs: Array[Byte],
+      numRows: Int): GraftColumnVector = {
+    val (offsets, rowSlots, entryDefs) = shredded(rep, defs, numRows)
+    require(entryDefs.count(_ == 3) == elems.length, "LIST chunk: element count " +
+      s"${elems.length} disagrees with the levels")
+    new GraftColumnVector(dt, null, rowSlots, offsets,
+      Array(new GraftColumnVector(dt.elementType, elems, entryDefs, 3)))
+  }
+
+  /** A MAP column from the same shredding with two leaves: every entry
+    * (def >= 2) has a key, and a value where def == 3. */
+  def map(dt: MapType, keys: ColVec, vals: ColVec, rep: Array[Byte],
+      defs: Array[Byte], numRows: Int): GraftColumnVector = {
+    val (offsets, rowSlots, entryDefs) = shredded(rep, defs, numRows)
+    require(entryDefs.length == keys.length && entryDefs.count(_ == 3) == vals.length,
+      s"MAP chunk: ${keys.length} keys, ${vals.length} values disagree with the levels")
+    new GraftColumnVector(dt, null, rowSlots, offsets,
+      Array(new GraftColumnVector(dt.keyType, keys, null, 1),
+        new GraftColumnVector(dt.valueType, vals, entryDefs, 3)))
+  }
+
+  /** Rep/def levels as (row offsets into the entry slots, the row null
+    * map, each entry's def level); entries are the slots with def >= 2. */
+  private def shredded(rep: Array[Byte], defs: Array[Byte],
+      numRows: Int): (Array[Int], Array[Int], Array[Int]) = {
+    require(rep.length == defs.length, "rep/def stream length mismatch")
+    val offsets = new Array[Int](numRows + 1)
+    val rowDefs = new Array[Int](numRows)
+    val entryDefs = new Array[Int](defs.length)
+    var row = -1
+    var entries = 0
+    var i = 0
+    while (i < defs.length) {
+      if (rep(i) == 0) {
+        row += 1
+        require(row < numRows, s"nested levels: more than $numRows rows")
+        offsets(row) = entries
+        rowDefs(row) = if (defs(i) == 0) 0 else 1
+      } else require(row >= 0 && defs(i) >= 2, s"nested levels: bad continuation slot $i")
+      if (defs(i) >= 2) { entryDefs(entries) = defs(i); entries += 1 }
+      i += 1
+    }
+    require(row + 1 == numRows, s"nested levels: ${row + 1} rows, expected $numRows")
+    offsets(numRows) = entries
+    (offsets, slots(rowDefs, 1), java.util.Arrays.copyOf(entryDefs, entries))
+  }
 }
 
 final class GraftPartitionReader(path: String, schema: StructType,
@@ -1133,10 +1189,6 @@ final class GraftPartitionReader(path: String, schema: StructType,
       GraftFlatScan.pruneRowGroups(meta, plannedRgs, fileRanges, fileStrRanges),
       fileEqProbes)
     val proj = fileFields.map(_.name).toSet
-    // FLAT schemas with pushed predicates go through page-level pruning:
-    // within each surviving row group, the filter columns' page statistics
-    // select row ranges, and only pages overlapping them are decoded.
-    val flat = GraftFlatScan.isFlat(meta)
     // rgs.iterator keeps row-group decode lazy: a pushed limit stops
     // before trailing row groups are ever decompressed
     val rows =
@@ -1149,8 +1201,6 @@ final class GraftPartitionReader(path: String, schema: StructType,
             schema.fields.toSeq.map(partConst))).asInstanceOf[InternalRow]
           Iterator.fill(meta.rowGroups(rg).numRows.toInt)(row)
         }
-      else if (flat && (fileRanges.nonEmpty || fileStrRanges.nonEmpty))
-        rgs.iterator.flatMap(rg => pagePrunedRows(meta, rg))
       else rgs.iterator.flatMap { rg =>
         val fetch = new ParquetFileReader.ChunkFetcher(path)
         // readRowsFetched materializes the row group before returning,
@@ -1167,48 +1217,6 @@ final class GraftPartitionReader(path: String, schema: StructType,
         }
       }
     if (limit >= 0) rows.take(limit) else rows
-  }
-
-  /** Rows of one row group surviving the pushed ranges at PAGE granularity:
-    * page statistics of each filter column narrow the kept chunk-row
-    * ranges, then only overlapping pages of the projected columns are
-    * decoded. Residual Spark-side filters still apply afterwards, so
-    * stat-less pages surviving is only a missed skip, never a wrong row. */
-  private def pagePrunedRows(meta: PqFileMeta,
-      rg: Int): Iterator[InternalRow] = {
-    val fetch = new ParquetFileReader.ChunkFetcher(path)
-    try pagePrunedRowsFetched(fetch, meta, rg) finally fetch.close()
-  }
-
-  private def pagePrunedRowsFetched(fetch: ParquetFileReader.ChunkFetcher,
-      meta: PqFileMeta, rg: Int): Iterator[InternalRow] = {
-    val (cols, n) = GraftFlatScan.columnBatch(fetch, meta, rg,
-      fileFields, fileRanges, fileStrRanges)
-    if (n == 0) return Iterator.empty
-    val fileVals = cols.zip(fileFields).map { case ((vec, defs), f) =>
-      val vals = ParquetFileReader.rowValues(vec, defs, 1)
-      if (f.dataType == org.apache.spark.sql.types.StringType)
-        vals.map(v => if (v == null) null
-          else new String(v.asInstanceOf[Array[Byte]],
-            java.nio.charset.StandardCharsets.UTF_8))
-      else vals
-    }
-    // per output field: file-column index, or the partition constant
-    val sources: Array[Either[Int, Any]] = schema.fields.map { f =>
-      if (partMap.contains(f.name)) Right(partConst(f))
-      else Left(fileFields.indexWhere(_.name == f.name))
-    }
-    (0 until n).iterator.map { i =>
-      toCatalyst(org.apache.spark.sql.Row.fromSeq(
-        schema.fields.indices.map { j =>
-          sources(j) match {
-            case Right(const) => const
-            case Left(fi) =>
-              ParquetSource.externalValue(fileVals(fi)(i),
-                schema.fields(j).dataType)
-          }
-        })).asInstanceOf[InternalRow]
-    }
   }
 
   private var cur: InternalRow = _

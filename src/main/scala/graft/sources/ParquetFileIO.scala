@@ -493,7 +493,7 @@ object ParquetFileReader {
       maxLevel: Int): Array[Int] = {
     val dec = new RleHybridDecoder(levelBitWidth(maxLevel), buf, off, off + len)
     val tmp = new Array[Long](n)
-    dec.get(tmp, 0, n)
+    dec.getExactly(tmp, 0, n)
     tmp.map(_.toInt)
   }
 

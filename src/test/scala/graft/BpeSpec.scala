@@ -99,6 +99,61 @@ class BpeSpec extends AnyFunSuite {
     assert(Bpe.learn(Seq(("ab", 1L)), 100).merges.size == 1)
   }
 
+  /** Reference trainer: recount every adjacent pair over the weighted
+    * vocabulary each round and merge the argmax (max count, then the
+    * smallest (left, right)) left to right in every word. */
+  private def naiveLearn(wordFreq: Seq[(String, Long)], numMerges: Int): Seq[Bpe.Merge] = {
+    var words: Seq[(Seq[String], Long)] =
+      wordFreq.map { case (w, f) => (w.map(String.valueOf).toSeq, f) }
+    val out = scala.collection.mutable.ArrayBuffer.empty[Bpe.Merge]
+    var done = false
+    while (!done && out.length < numMerges) {
+      val counts = scala.collection.mutable.Map.empty[(String, String), Long]
+      words.foreach { case (w, f) =>
+        w.indices.dropRight(1).foreach { i =>
+          counts((w(i), w(i + 1))) = counts.getOrElse((w(i), w(i + 1)), 0L) + f
+        }
+      }
+      if (counts.isEmpty) done = true
+      else {
+        val ((l, r), _) = counts.toSeq.minBy { case ((l, r), c) => (-c, l, r) }
+        out += Bpe.Merge(l, r, l + r)
+        words = words.map { case (w, f) =>
+          val b = scala.collection.mutable.ArrayBuffer.empty[String]
+          var j = 0
+          while (j < w.length) {
+            if (j + 1 < w.length && w(j) == l && w(j + 1) == r) { b += l + r; j += 2 }
+            else { b += w(j); j += 1 }
+          }
+          (b.toSeq, f)
+        }
+      }
+    }
+    out.toSeq
+  }
+
+  test("learn re-seeds a pair whose count drops in a word it leaves") {
+    // (x,a)=9 merges first; "xab" loses (a,b), whose count falls 8 -> 3,
+    // and (a,b) must still be learned at its live count after (xa,b)=5
+    val wf = Seq(("xab", 5L), ("xa", 4L), ("ab", 3L))
+    val expect = Seq(Bpe.Merge("x", "a", "xa"), Bpe.Merge("xa", "b", "xab"),
+      Bpe.Merge("a", "b", "ab"))
+    assert(naiveLearn(wf, 3) == expect)
+    assert(Bpe.learn(wf, 3).merges == expect)
+  }
+
+  test("learn == naive argmax trainer on seeded random vocabularies") {
+    val rng = new scala.util.Random(20261019L)
+    (0 until 60).foreach { trial =>
+      val wf = Seq.fill(2 + rng.nextInt(12)) {
+        (Seq.fill(2 + rng.nextInt(7))("abcd"(rng.nextInt(4))).mkString,
+          1L + rng.nextInt(9))
+      }.groupBy(_._1).map { case (w, fs) => (w, fs.map(_._2).sum) }.toSeq.sorted
+      val k = 1 + rng.nextInt(12)
+      assert(Bpe.learn(wf, k).merges == naiveLearn(wf, k), s"trial $trial: $wf, $k merges")
+    }
+  }
+
   test("learn at 10k merges over synthetic vocab; indexed == rescan") {
     val vocab = Bpe.syntheticVocab(4000)
     assert(vocab == Bpe.syntheticVocab(4000)) // deterministic

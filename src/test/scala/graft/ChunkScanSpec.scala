@@ -1,0 +1,93 @@
+package graft
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.functions.TextOps
+import graft.operators._
+import graft.sources.CodeTableGen
+
+/** The chunk read path: [[ChunkScanExec]] decodes only the referenced
+  * columns of the groups its stats range keeps, and counts what it did in
+  * its SQL metrics. */
+class ChunkScanSpec extends AnyFunSuite with BeforeAndAfterAll
+    with AdaptiveSparkPlanHelper {
+
+  @transient private var spark: SparkSession = _
+
+  override def beforeAll(): Unit = {
+    spark = SparkSession.builder()
+      .master("local[2]")
+      .config("spark.sql.shuffle.partitions", "2")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+  }
+
+  override def afterAll(): Unit = if (spark != null) spark.stop()
+
+  /** Run `df` and return its one ChunkScanExec's metric values. */
+  private def scanMetrics(df: DataFrame): (Seq[String], Map[String, Long]) = {
+    df.collect()
+    val scans = collect(df.queryExecution.executedPlan) { case s: ChunkScanExec => s }
+    assert(scans.size == 1, df.queryExecution.executedPlan)
+    (scans.head.output.map(_.name),
+      scans.head.metrics.map { case (k, m) => k -> m.value })
+  }
+
+  test("scan metrics count groups, stats pruning and decoded column chunks") {
+    // two partitions [0,200) and [200,400), 100-row chunks: four groups
+    val df = spark.range(0, 400, 1, 2)
+      .select(col("id"), (col("id") * 3).cast("int").as("x"))
+    val chunks = EncodeJob.encode(df, 0, Seq.empty, Seq("id"), chunkRows = 100).cache()
+    assert(chunks.count() == 8)
+    // ids 50..120 live in groups [0,100) and [100,200); only `id` is read
+    val (cols, m) = scanMetrics(DecodeJob.decodeWhere(chunks, df.schema, "id", 50L, 120L)
+      .where(col("id").between(50, 120)).agg(count(lit(1))))
+    assert(cols == Seq("id"))
+    assert(m("groups") == 4 && m("pruned") == 2 && m("decoded") == 2, m)
+    assert(m("decodeTime") > 0, m)
+    // one projected column of every group
+    val (cols2, m2) = scanMetrics(DecodeJob.decodeLocal(chunks, df.schema).select("x"))
+    assert(cols2 == Seq("x"))
+    assert(m2("groups") == 4 && m2("pruned") == 0 && m2("decoded") == 4, m2)
+    // count() answers from the chunk metadata: nothing decodes
+    val (cols3, m3) = scanMetrics(DecodeJob.decodeLocal(chunks, df.schema).agg(count(lit(1))))
+    assert(cols3.isEmpty && m3("decoded") == 0, m3)
+    assert(DecodeJob.decodeLocal(chunks, df.schema).count() == 400)
+    chunks.unpersist()
+  }
+
+  test("a query that never references content decodes none of it") {
+    val src = CodeTableGen.generate(spark, 600L, 2).toDF()
+      .withColumn("content_len", octet_length(col("content")))
+      .withColumn("line_count", TextOps.lineCount(col("content")).cast("int"))
+    val schema = src.schema
+    val dir = java.nio.file.Files.createTempDirectory("graft-proj").toString
+    EncodeJob.encode(src, 3, Seq("repo"), Seq("repo", "path", "commit"))
+      .write.parquet(s"$dir/chunks")
+    // every content blob of the persisted table becomes garbage
+    val garbage = Array.tabulate[Byte](97)(i => (i * 31 + 7).toByte)
+    val stored = spark.read.parquet(s"$dir/chunks").as[ChunkRow](Encoders.product[ChunkRow])
+    stored.map(c => if (c.column == "content") c.copy(blob = garbage) else c)(
+      Encoders.product[ChunkRow]).write.parquet(s"$dir/obliterated")
+    val obl: Dataset[ChunkRow] = spark.read.parquet(s"$dir/obliterated")
+      .as[ChunkRow](Encoders.product[ChunkRow])
+    assert(obl.where(col("column") === "content").collect().forall(_.blob.sameElements(garbage)))
+
+    val repo = src.select("repo").orderBy("repo").first().getString(0)
+    val expect = src.where(col("repo") === repo).count()
+    assert(expect > 0)
+    assert(DecodeJob.decodeWhere(obl, schema, "repo", repo, repo)
+      .where(col("repo") === repo).count() == expect)
+    def rows(df: DataFrame) = df.collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
+    assert(rows(DecodeJob.decodeLocal(obl, schema).select("repo", "path")) ==
+      rows(src.select("repo", "path")))
+    val e = intercept[Exception](DecodeJob.decodeLocal(obl, schema).select("content").collect())
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(_.isInstanceOf[IllegalArgumentException]), e)
+  }
+}

@@ -54,12 +54,16 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val stored = spark.read.parquet(s"$out/chunks").as[ChunkRow](
       org.apache.spark.sql.Encoders.product[ChunkRow])
     val pruned = DecodeJob.decodeWhere(stored, li.schema, "l_orderkey", 10L, 50L)
-    val plan = planOf(pruned)
+    val plan = planOf(pruned.where(col("l_orderkey") > 20L).select("l_orderkey"))
     // one pass over the stored chunk table: each chunk row is read once,
-    // grouped and pruned inside its partition
+    // grouped and pruned inside its partition, and only the referenced
+    // column reaches the scan
     assert(!plan.contains("Exchange"), plan)
     assert(!plan.contains("Join"), plan)
     assert(plan.split("Scan parquet").length == 2, plan)
+    val scan = plan.linesIterator.filter(_.contains("ChunkScanExec")).toSeq
+    assert(scan.size == 1, plan)
+    assert(scan.head.contains("[l_orderkey#") && !scan.head.contains("l_linenumber"), plan)
     // and it still returns the right rows
     assert(pruned.where(col("l_orderkey").between(10, 50)).count() ==
       li.where(col("l_orderkey").between(10, 50)).count())

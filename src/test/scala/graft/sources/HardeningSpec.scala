@@ -336,6 +336,22 @@ class HardeningSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("stream end"), e2.getMessage)
   }
 
+  test("a hybrid stream that ends before the values asked for fails") {
+    // 50 booleans asked for as 100: the stream ends on a run boundary
+    val e = intercept[IllegalArgumentException](
+      RleBoolCodec.decode(RleBoolCodec.encode(Array.fill(50)(true)), 0, 100))
+    assert(e.getMessage.contains("RLE/bit-packed hybrid"), e.getMessage)
+    // a v2 chunk whose def-level stream holds 10 levels but claims 20 rows
+    val blob = ChunkCodec.encodeWith(IntVec((1 to 10).toArray), CodecId.Plain,
+      Array.fill[Byte](10)(1))
+    assert(blob(2) == 2.toByte && blob(5) == 10.toByte)
+    assert(ChunkCodec.decodeWithLevels(blob).numRows == 10)
+    val forged = blob.clone()
+    forged(5) = 20.toByte
+    val e2 = intercept[IllegalArgumentException](ChunkCodec.decodeWithLevels(forged))
+    assert(e2.getMessage.contains("RLE/bit-packed hybrid"), e2.getMessage)
+  }
+
   test("an RLE boolean stream's length prefix is checked against the buffer") {
     val enc = RleBoolCodec.encode(Array.tabulate(100)(_ % 3 == 0))
     assert(RleBoolCodec.decode(enc, 0, 100).toSeq == (0 until 100).map(_ % 3 == 0))
