@@ -153,6 +153,7 @@ final class BitReader(buf: Array[Byte], start: Int, end: Int) {
     var result = 0L
     var got = 0
     while (got < numBits) {
+      require(byteOffset < end, s"bit stream: value passes the stream end $end")
       val take = math.min(8 - bitOffset, numBits - got)
       val b = ((buf(byteOffset) & 0xFF) >>> bitOffset) & ((1 << take) - 1)
       result |= b.toLong << got
@@ -229,6 +230,14 @@ final class BitReader(buf: Array[Byte], start: Int, end: Int) {
     val out = java.util.Arrays.copyOfRange(buf, byteOffset, byteOffset + n)
     byteOffset += n
     out
+  }
+
+  /** Step over `n` bytes, which must lie inside the stream. */
+  def skip(n: Int): Unit = {
+    alignToByte()
+    require(n >= 0 && n <= end - byteOffset,
+      s"bit stream: $n bytes at $byteOffset pass the stream end $end")
+    byteOffset += n
   }
 
   def getVlq(): Long = {

@@ -42,17 +42,19 @@ object ByteStreamSplitCodec {
   }
 
   /** Decode `n` FLOAT or DOUBLE values from the streams at buf[off..). */
-  def decode(physicalType: Int, buf: Array[Byte], off: Int, n: Int): ColVec =
+  def decode(physicalType: Int, buf: Array[Byte], off: Int, end: Int,
+      n: Int): ColVec =
     physicalType match {
-      case PhysicalType.Float => FloatVec(decodeFloats(buf, off, n))
-      case PhysicalType.Double => DoubleVec(decodeDoubles(buf, off, n))
+      case PhysicalType.Float => FloatVec(decodeFloats(buf, off, end, n))
+      case PhysicalType.Double => DoubleVec(decodeDoubles(buf, off, end, n))
       case other => throw new IllegalArgumentException(
         s"BYTE_STREAM_SPLIT over physical type $other not supported")
     }
 
-  private def decodeFloats(buf: Array[Byte], off: Int, n: Int): Array[Float] = {
-    require(off + 4L * n <= buf.length,
-      s"BYTE_STREAM_SPLIT needs ${4L * n} bytes, has ${buf.length - off}")
+  private def decodeFloats(buf: Array[Byte], off: Int, end: Int,
+      n: Int): Array[Float] = {
+    require(off + 4L * n <= end,
+      s"BYTE_STREAM_SPLIT needs ${4L * n} bytes, has ${end - off}")
     val out = new Array[Float](n)
     var i = 0
     while (i < n) {
@@ -66,9 +68,10 @@ object ByteStreamSplitCodec {
     out
   }
 
-  private def decodeDoubles(buf: Array[Byte], off: Int, n: Int): Array[Double] = {
-    require(off + 8L * n <= buf.length,
-      s"BYTE_STREAM_SPLIT needs ${8L * n} bytes, has ${buf.length - off}")
+  private def decodeDoubles(buf: Array[Byte], off: Int, end: Int,
+      n: Int): Array[Double] = {
+    require(off + 8L * n <= end,
+      s"BYTE_STREAM_SPLIT needs ${8L * n} bytes, has ${end - off}")
     val out = new Array[Double](n)
     var i = 0
     while (i < n) {

@@ -74,68 +74,9 @@ object ChunkCodec {
     case _ => plainSizeOf(vec, from, until)
   }
 
-  /** Primitive-array concat via System.arraycopy — the multi-page decode
-    * path runs this per >1 MiB chunk, and the previous flatMap-over-boxed
-    * version paid a box/unbox per value (round-1 review #6). */
-  private def concatPrim[A](arrs: Seq[Array[A]], out: Array[A]): Array[A] = {
-    var pos = 0
-    arrs.foreach { a =>
-      System.arraycopy(a, 0, out, pos, a.length)
-      pos += a.length
-    }
-    out
-  }
-
-  def concat(parts: Seq[ColVec]): ColVec = if (parts.lengthCompare(1) == 0)
-    parts.head // single page (every non-content-sized column): no recopy
-  else parts.head match {
-    case _: BoolVec =>
-      val as = parts.map(_.asInstanceOf[BoolVec].values)
-      BoolVec(concatPrim(as, new Array[Boolean](as.map(_.length).sum)))
-    case _: IntVec =>
-      val as = parts.map(_.asInstanceOf[IntVec].values)
-      IntVec(concatPrim(as, new Array[Int](as.map(_.length).sum)))
-    case _: LongVec =>
-      val as = parts.map(_.asInstanceOf[LongVec].values)
-      LongVec(concatPrim(as, new Array[Long](as.map(_.length).sum)))
-    case _: FloatVec =>
-      val as = parts.map(_.asInstanceOf[FloatVec].values)
-      FloatVec(concatPrim(as, new Array[Float](as.map(_.length).sum)))
-    case _: DoubleVec =>
-      val as = parts.map(_.asInstanceOf[DoubleVec].values)
-      DoubleVec(concatPrim(as, new Array[Double](as.map(_.length).sum)))
-    case _: BytesVec =>
-      val vs = parts.map(_.asInstanceOf[BytesVec])
-      val n = vs.map(_.length).sum
-      val totalBytes = vs.map(_.totalBytes.toLong).sum
-      val offsets = new Array[Int](n + 1)
-      val data = new Array[Byte](math.toIntExact(totalBytes))
-      var vi = 0
-      var dPos = 0
-      vs.foreach { v =>
-        val base = v.offsets(0)
-        var i = 0
-        while (i < v.length) {
-          offsets(vi) = dPos + (v.offsets(i) - base)
-          i += 1
-          vi += 1
-        }
-        System.arraycopy(v.data, base, data, dPos, v.totalBytes)
-        dPos += v.totalBytes
-      }
-      offsets(n) = dPos
-      BytesVec(data, offsets)
-  }
-
   // ------------------------------------------------------------ page codec
-  // FSST pages are this container's own; every other page's values go
-  // through the shared value codec, [[ValueCodec]].
-
-  private def decodePage(physicalType: Int, codecId: Int, buf: Array[Byte],
-      numValues: Int, dict: ColVec): ColVec =
-    if (codecId == CodecId.Fsst) FsstCodec.decode(buf)
-    else ValueCodec.decode(ValueCodec.ofCodecId(codecId), physicalType, 0, buf,
-      0, numValues, dict)
+  // FSST pages encode here (one symbol table per chunk); every page's
+  // values decode through the shared value codec, [[ValueCodec]].
 
   private final case class Page(codecId: Int, numValues: Int, bytes: Array[Byte])
 
@@ -517,13 +458,11 @@ object ChunkCodec {
     r.getAligned(1) // value physical type
     val numRows = checkedDense(r.getVlq(), blob.length, "row count")
     val numSlots = checkedDense(r.getVlq(), blob.length, "slot count")
-    val rep = readLevels(r, numSlots, 1, "rep bytes")
-    val defs = readLevels(r, numSlots, 2, "def bytes")
-    val kLen = checkedLen(r.getVlq(), r, "key blob")
-    val kInner = decodeWithLevels(r.getBytes(kLen))
+    val rep = readLevels(blob, r, numSlots, 1, "rep bytes")
+    val defs = readLevels(blob, r, numSlots, 2, "def bytes")
+    val kInner = decodeInner(blob, r, "key blob")
     require(kInner.defLevels == null, "map key chunk must be version 1")
-    val vLen = checkedLen(r.getVlq(), r, "value blob")
-    val vInner = decodeWithLevels(r.getBytes(vLen))
+    val vInner = decodeInner(blob, r, "value blob")
     require(vInner.defLevels == null, "map value chunk must be version 1")
     DecodedMap(kInner.vec, vInner.vec, rep, defs, numRows)
   }
@@ -537,10 +476,9 @@ object ChunkCodec {
     r.getAligned(1) // element primary codec (informational)
     val numRows = checkedDense(r.getVlq(), blob.length, "row count")
     val numSlots = checkedDense(r.getVlq(), blob.length, "slot count")
-    val rep = readLevels(r, numSlots, 1, "rep bytes")
-    val defs = readLevels(r, numSlots, 2, "def bytes")
-    val innerLen = checkedLen(r.getVlq(), r, "element blob")
-    val inner = decodeWithLevels(r.getBytes(innerLen))
+    val rep = readLevels(blob, r, numSlots, 1, "rep bytes")
+    val defs = readLevels(blob, r, numSlots, 2, "def bytes")
+    val inner = decodeInner(blob, r, "element blob")
     require(inner.defLevels == null, "array element chunk must be version 1")
     DecodedArray(inner.vec, rep, defs, numRows)
   }
@@ -560,52 +498,78 @@ object ChunkCodec {
     def numRows: Int = if (defLevels == null) vec.length else defLevels.length
   }
 
-  def decodeWithLevels(blob: Array[Byte]): Decoded = {
-    val r = new BitReader(blob)
+  def decodeWithLevels(blob: Array[Byte]): Decoded =
+    decodeAt(blob, 0, blob.length, unknownValueBytes(blob.length))
+
+  /** [[decodeWithLevels]] of a chunk whose value bytes are known (a chunk
+    * row's `rawBytes` less the 4-byte length of each value): a byte-array
+    * chunk's arena starts at that size. A hint only: the first allocation
+    * is clamped to what the blob can plausibly expand to, and the arena
+    * grows if the values need more. */
+  def decodeWithLevels(blob: Array[Byte], valueBytes: Long): Decoded =
+    decodeAt(blob, 0, blob.length, valueBytes)
+
+  /** The arena hint of a chunk of `size` bytes whose value bytes are not
+    * known: eight bytes per blob byte, FSST's largest expansion. */
+  private def unknownValueBytes(size: Int): Long = 8L * size + 64
+
+  /** The nested chunk that follows in `r` as a length-prefixed blob. */
+  private def decodeInner(blob: Array[Byte], r: BitReader, what: String): Decoded = {
+    val len = checkedLen(r.getVlq(), r, what)
+    val inner = decodeAt(blob, r.position, r.position + len, unknownValueBytes(len))
+    r.skip(len)
+    inner
+  }
+
+  /** Decode the chunk in `buf[start, end)` in place: every level stream,
+    * the dictionary and every page is read where it lies. A byte-array
+    * chunk's pages all decode into one arena, one copy per value. */
+  private def decodeAt(buf: Array[Byte], start: Int, end: Int,
+      valueBytes: Long): Decoded = {
+    val size = end - start
+    val r = new BitReader(buf, start, end)
     require(r.getAligned(1) == 'G'.toLong && r.getAligned(1) == 'C'.toLong,
       "bad chunk magic")
     val version = r.getAligned(1)
     require(version == 1L || version == 2L, s"bad chunk version $version")
     val physicalType = r.getAligned(1).toInt
     r.getAligned(1) // primary codec (informational)
-    val numRows = checkedDense(r.getVlq(), blob.length, "row count")
+    val numRows = checkedDense(r.getVlq(), size, "row count")
     var defLevels: Array[Byte] = null
     var numValues = numRows
     if (version == 2L) {
-      val levelLen = checkedLen(r.getVlq(), r, "level bytes")
-      val levelBytes = r.getBytes(levelLen)
-      val dec = new RleHybridDecoder(1, levelBytes, 0, levelBytes.length)
-      val tmp = new Array[Long](numRows)
-      dec.getExactly(tmp, 0, numRows)
-      defLevels = new Array[Byte](numRows)
+      defLevels = readLevels(buf, r, numRows, 1, "level bytes")
       numValues = 0
       var i = 0
-      while (i < numRows) {
-        defLevels(i) = tmp(i).toByte
-        if (tmp(i) != 0L) numValues += 1
-        i += 1
-      }
+      while (i < numRows) { if (defLevels(i) != 0) numValues += 1; i += 1 }
     }
     // a chunk without a dictionary page decodes dictionary ids against an
     // empty one: zero ids pass, any id fails the shared range check
     val dict: ColVec =
       if (r.getAligned(1) == 1L) {
-        val entries = checkedDense(r.getVlq(), blob.length, "dict entries")
+        val entries = checkedDense(r.getVlq(), size, "dict entries")
         val len = checkedLen(r.getVlq(), r, "dict bytes")
-        PlainCodec.decode(physicalType, r.getBytes(len), entries)
+        val d = PlainCodec.decodeSlice(physicalType, buf, r.position, len, entries)
+        r.skip(len)
+        d
       } else ValueCodec.empty(physicalType)
-    val numPages = checkedDense(r.getVlq(), blob.length, "page count")
-    val parts = new ArrayBuffer[ColVec](numPages)
+    val numPages = checkedDense(r.getVlq(), size, "page count")
+    // the arena's first size: the hint, but no more than one page cut per
+    // page (pages are cut at 1 MiB of raw bytes) and no more than the blob
+    // could plausibly expand to
+    val arena = Seq(valueBytes, numPages * DataPageSizeLimit, 64L * size + 64,
+      Int.MaxValue - 16L).min
+    val values = new ValuesAccum(physicalType, arena.toInt, numValues)
     var p = 0
     while (p < numPages) {
-      val codec = r.getAligned(1).toInt
-      val nv = checkedDense(r.getVlq(), blob.length, "page values")
+      val encoding = ValueCodec.ofCodecId(r.getAligned(1).toInt)
+      val nv = checkedDense(r.getVlq(), size, "page values")
       val len = checkedLen(r.getVlq(), r, "page bytes")
-      val bytes = r.getBytes(len)
-      parts += decodePage(physicalType, codec, bytes, nv, dict)
+      values.decodePage(encoding, 0, buf, r.position, r.position + len, nv, dict)
+      r.skip(len)
       p += 1
     }
-    val out = if (parts.isEmpty) ValueCodec.empty(physicalType) else concat(parts.toSeq)
+    val out = values.result
     require(out.length == numValues, s"chunk decode: ${out.length} != $numValues")
     Decoded(out, defLevels)
   }
@@ -636,13 +600,13 @@ object ChunkCodec {
     v.toInt
   }
 
-  /** One length-prefixed RLE-hybrid level stream → `numSlots` byte levels
-    * (shared by the array- and map-chunk readers). */
-  private def readLevels(r: BitReader, numSlots: Int, width: Int,
-      what: String): Array[Byte] = {
+  /** One length-prefixed RLE-hybrid level stream of `buf`, the next in
+    * `r`, → `numSlots` byte levels. */
+  private def readLevels(buf: Array[Byte], r: BitReader, numSlots: Int,
+      width: Int, what: String): Array[Byte] = {
     val len = checkedLen(r.getVlq(), r, what)
-    val bytes = r.getBytes(len)
-    val dec = new RleHybridDecoder(width, bytes, 0, bytes.length)
+    val dec = new RleHybridDecoder(width, buf, r.position, r.position + len)
+    r.skip(len)
     val tmp = new Array[Long](numSlots)
     dec.getExactly(tmp, 0, numSlots)
     val out = new Array[Byte](numSlots)

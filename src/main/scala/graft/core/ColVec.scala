@@ -161,6 +161,10 @@ final class BytesAccum(dataCap: Int, valuesHint: Int) {
     pos += len
   }
   @inline def writePos: Int = pos
+  /** Bytes writable at [[writePos]] without growing [[buffer]]. */
+  @inline def spare: Int = data.length - pos
+  /** The arena as it stands; valid until the next [[ensure]] or append. */
+  @inline def buffer: Array[Byte] = data
   def append(v: BytesVec): Unit = {
     val total = v.totalBytes
     ensure(total)
@@ -175,6 +179,46 @@ final class BytesAccum(dataCap: Int, valuesHint: Int) {
   def toVec: BytesVec = {
     offsets(count) = pos
     BytesVec(data, java.util.Arrays.copyOf(offsets, count + 1))
+  }
+}
+
+/** One column chunk's values gathered page by page, for the page decoders
+  * of both containers: byte-array pages decode straight into one
+  * [[BytesAccum]] arena; other pages decode whole and are joined once by
+  * [[result]] (a one-page chunk is returned as decoded). */
+final class ValuesAccum(physicalType: Int, bytesHint: Int, valuesHint: Int) {
+  private val bytes: BytesAccum =
+    if (physicalType == PhysicalType.Bytes) new BytesAccum(bytesHint, valuesHint)
+    else null
+  private val pages = scala.collection.mutable.ArrayBuffer.empty[ColVec]
+
+  /** Decode one page's `n` values from `buf[off, end)`, as
+    * [[ValueCodec.decode]] takes them. */
+  def decodePage(encoding: Int, width: Int, buf: Array[Byte], off: Int,
+      end: Int, n: Int, dict: ColVec): Unit =
+    if (bytes != null)
+      ValueCodec.decodeBytesInto(encoding, width, buf, off, end, n, dict, bytes)
+    else pages += ValueCodec.decode(encoding, physicalType, width, buf, off, end, n, dict)
+
+  def result: ColVec =
+    if (bytes != null) bytes.toVec
+    else if (pages.isEmpty) ValueCodec.empty(physicalType)
+    else if (pages.size == 1) pages.head
+    else pages.head match {
+      case _: BoolVec => BoolVec(join(pages.map(_.asInstanceOf[BoolVec].values)))
+      case _: IntVec => IntVec(join(pages.map(_.asInstanceOf[IntVec].values)))
+      case _: LongVec => LongVec(join(pages.map(_.asInstanceOf[LongVec].values)))
+      case _: FloatVec => FloatVec(join(pages.map(_.asInstanceOf[FloatVec].values)))
+      case _: DoubleVec => DoubleVec(join(pages.map(_.asInstanceOf[DoubleVec].values)))
+      case other => throw new IllegalArgumentException(
+        s"${other.getClass.getSimpleName} pages outside the byte arena")
+    }
+
+  private def join[A: scala.reflect.ClassTag](arrs: Iterable[Array[A]]): Array[A] = {
+    val out = new Array[A](arrs.map(_.length).sum)
+    var pos = 0
+    arrs.foreach { a => System.arraycopy(a, 0, out, pos, a.length); pos += a.length }
+    out
   }
 }
 

@@ -121,22 +121,17 @@ final class DeltaBinaryPackedEncoder(int32: Boolean) {
 object DeltaBinaryPackedDecoder {
   /** Decode a full stream produced by [[DeltaBinaryPackedEncoder]]. */
   def decode(buf: Array[Byte], int32: Boolean): Array[Long] =
-    decode(buf, 0, int32)
+    decodeWithEnd(buf, 0, buf.length, int32)._1
 
-  /** In-place variant reading from `off` — callers with an embedded stream
-    * (e.g. the FSST length stream) must not copy the whole tail just to
-    * hand this decoder a zero-based array. */
-  def decode(buf: Array[Byte], off: Int, int32: Boolean): Array[Long] =
-    decodeWithEnd(buf, off, int32)._1
-
-  /** THE delta-stream walker: decode plus the byte position just past the
-    * stream (byte-aligned). Every consumer of an embedded delta stream
-    * (DELTA_LENGTH_BYTE_ARRAY lengths, DELTA_BYTE_ARRAY prefix lengths)
-    * shares this single implementation of the block/miniblock grammar
-    * instead of re-walking with its own copy of the loop. */
-  def decodeWithEnd(buf: Array[Byte], off: Int,
+  /** THE delta-stream walker: decode the stream in `buf[off, end)`, in
+    * place, plus the byte position just past it (byte-aligned). Every
+    * consumer of an embedded delta stream (DELTA_LENGTH_BYTE_ARRAY lengths,
+    * DELTA_BYTE_ARRAY prefix lengths, FSST value lengths) shares this
+    * single implementation of the block/miniblock grammar instead of
+    * re-walking with its own copy of the loop. */
+  def decodeWithEnd(buf: Array[Byte], off: Int, end: Int,
       int32: Boolean): (Array[Long], Int) = {
-    val r = new BitReader(buf, off, buf.length)
+    val r = new BitReader(buf, off, end)
     val blockSize = r.getVlq().toInt
     val numMiniBlocks = r.getVlq().toInt
     val total = r.getVlq().toInt
@@ -193,28 +188,37 @@ object DeltaLengthByteArrayCodec {
     out
   }
 
-  /** Returns (values, bytesConsumed). The length stream is self-delimiting
-    * only via its value count, so the shared walker reports where the data
-    * section starts. */
-  def decodeWithLength(buf: Array[Byte], off: Int): (BytesVec, Int) = {
+  /** The first `n` value lengths of the stream in `buf[off, end)`, each
+    * checked to lie inside it, and where the value bytes start. */
+  private[core] def lengths(buf: Array[Byte], off: Int, end: Int,
+      n: Int): (Array[Long], Int) = {
     val (lens, dataStart) =
-      DeltaBinaryPackedDecoder.decodeWithEnd(buf, off, int32 = true)
-    val total = lens.length
-    val offsets = new Array[Int](total + 1)
-    var acc = 0
+      DeltaBinaryPackedDecoder.decodeWithEnd(buf, off, end, int32 = true)
+    require(lens.length >= n, s"byte-array stream has ${lens.length} values, page needs $n")
+    var acc = 0L
     var i = 0
-    while (i < total) {
+    while (i < n) {
       // each value must lie inside the stream: a cut-short data section
       // would otherwise decode as zero bytes
-      require(lens(i) >= 0 && lens(i) <= buf.length - dataStart - acc,
+      require(lens(i) >= 0 && lens(i) <= end - dataStart - acc,
         s"byte-array value $i claims ${lens(i)} bytes past the stream end")
-      offsets(i) = acc
-      acc += lens(i).toInt
+      acc += lens(i)
       i += 1
     }
-    offsets(total) = acc
-    val data = java.util.Arrays.copyOfRange(buf, dataStart, dataStart + acc)
-    (BytesVec(data, offsets), dataStart + acc - off)
+    (lens, dataStart)
+  }
+
+  /** Append the first `n` values of the stream in `buf[off, end)` to
+    * `acc`: the value bytes are contiguous, so one copy moves them all. */
+  def decodeInto(buf: Array[Byte], off: Int, end: Int, n: Int,
+      acc: BytesAccum): Unit = {
+    val (lens, dataStart) = lengths(buf, off, end, n)
+    var total = 0
+    var i = 0
+    while (i < n) { total += lens(i).toInt; i += 1 }
+    System.arraycopy(buf, dataStart, acc.ensure(total), acc.writePos, total)
+    i = 0
+    while (i < n) { acc.commit(lens(i).toInt); i += 1 }
   }
 }
 
@@ -287,38 +291,55 @@ object DeltaByteArrayCodec {
     e.result()
   }
 
-  /** Decode the stream starting at `off`. */
-  def decode(buf: Array[Byte], off: Int = 0): BytesVec = {
+  /** Every value of one stream (tests and tools). */
+  def decode(buf: Array[Byte]): BytesVec = {
+    val acc = new BytesAccum(2 * buf.length, 16)
+    decodeInto(buf, 0, buf.length, -1, acc)
+    acc.toVec
+  }
+
+  /** Append the first `n` values of the stream in `buf[off, end)` to `acc`
+    * (`n` < 0: all of them). Each value is rebuilt in the arena from the
+    * previous one there and its suffix in `buf`: one copy per byte, into
+    * room made once for the whole page. */
+  def decodeInto(buf: Array[Byte], off: Int, end: Int, n: Int,
+      acc: BytesAccum): Unit = {
     // ONE pass over the prefix-length stream: the shared walker decodes
-    // and reports where the suffix section starts (the old code decoded
-    // the stream once and re-walked it a second time just for position)
-    val (prefixStream, suffixStart) =
-      DeltaBinaryPackedDecoder.decodeWithEnd(buf, off, int32 = true)
-    val total = prefixStream.length
-    val (suffixes, _) = DeltaLengthByteArrayCodec.decodeWithLength(buf, suffixStart)
-    // exact output arena: len(i) = prefix(i) + suffixLen(i); prev is a view
-    // into the output arena itself, so reconstruction never copies twice
-    val offsets = new Array[Int](total + 1)
-    var acc = 0
+    // and reports where the suffix section starts
+    val (prefixes, suffixStart) =
+      DeltaBinaryPackedDecoder.decodeWithEnd(buf, off, end, int32 = true)
+    val count = if (n < 0) prefixes.length else n
+    require(prefixes.length >= count,
+      s"byte-array stream has ${prefixes.length} values, page needs $count")
+    val (suffixLens, dataStart) =
+      DeltaLengthByteArrayCodec.lengths(buf, suffixStart, end, count)
+    // each value shares at most its predecessor's bytes
+    var total = 0L
+    var prevLen = 0L
     var i = 0
-    while (i < total) {
-      offsets(i) = acc
-      acc += prefixStream(i).toInt + suffixes.len(i)
+    while (i < count) {
+      val p = prefixes(i)
+      require(p >= 0 && p <= prevLen,
+        s"DELTA_BYTE_ARRAY value $i shares $p bytes with a $prevLen-byte predecessor")
+      prevLen = p + suffixLens(i)
+      total += prevLen
       i += 1
     }
-    offsets(total) = acc
-    val data = new Array[Byte](acc)
+    require(total <= Int.MaxValue - 16, s"DELTA_BYTE_ARRAY page expands to $total bytes")
+    val data = acc.ensure(total.toInt)
+    var s = dataStart
     var prevOff = 0
     i = 0
-    while (i < total) {
-      val p = prefixStream(i).toInt
-      val sLen = suffixes.len(i)
-      val off = offsets(i)
-      System.arraycopy(data, prevOff, data, off, p)
-      System.arraycopy(suffixes.data, suffixes.start(i), data, off + p, sLen)
-      prevOff = off
+    while (i < count) {
+      val p = prefixes(i).toInt
+      val sLen = suffixLens(i).toInt
+      val w = acc.writePos
+      System.arraycopy(data, prevOff, data, w, p)
+      System.arraycopy(buf, s, data, w + p, sLen)
+      acc.commit(p + sLen)
+      prevOff = w
+      s += sLen
       i += 1
     }
-    BytesVec(data, offsets)
   }
 }

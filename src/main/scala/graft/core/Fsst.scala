@@ -564,113 +564,103 @@ object FsstCodec {
     w.result()
   }
 
+  /** Every value of one FSST page (tests and tools). */
   def decode(buf: Array[Byte]): BytesVec = {
-    val r = new BitReader(buf)
-    val nSyms = r.getVlq().toInt
-    val symbols = new Array[Array[Byte]](nSyms)
-    var i = 0
-    while (i < nSyms) {
+    val acc = new BytesAccum(buf.length, 16)
+    decodeInto(buf, 0, buf.length, -1, acc)
+    acc.toVec
+  }
+
+  /** Length-table entry of a code past the symbol table: it expands to
+    * nothing and sets a bit the per-value check reports. */
+  private final val PastTable = 1 << 8
+
+  /** Append the `n` values of the FSST page `buf[off, end)` to `acc` (`n`
+    * < 0: as many as the page holds). One pass: the length stream is
+    * decoded once, and each value's codes expand straight into the arena,
+    * whose room is checked once per value — each code stores one 8-byte
+    * word, so a value of `len` code bytes writes at most `8 * len`. A
+    * corrupt page fails with an `IllegalArgumentException` naming FSST. */
+  def decodeInto(buf: Array[Byte], off: Int, end: Int, n: Int,
+      acc: BytesAccum): Unit = {
+    val r = new BitReader(buf, off, end)
+    val nSyms = r.getVlq()
+    require(nSyms <= MaxSymbols, s"FSST page claims $nSyms symbols, at most $MaxSymbols")
+    // per code: its symbol as one little-endian word and its length
+    // (escape, code 255, is never a symbol)
+    val words = new Array[Long](256)
+    val lens = Array.fill(256)(PastTable)
+    var c = 0
+    while (c < nSyms) {
       val len = (r.getAligned(1) & 0xFF).toInt
-      symbols(i) = r.getBytes(len)
-      i += 1
+      require(len >= 1 && len <= MaxSymbolLen && len <= r.bytesLeft,
+        s"FSST symbol $c has length $len, not 1..$MaxSymbolLen inside the page")
+      words(c) = loadWord(buf, r.position, r.position + len)
+      lens(c) = len
+      r.skip(len)
+      c += 1
     }
-    val nValues = r.getVlq().toInt
-    // decode the length stream, then slice the compressed bytes
-    val lens = DeltaBinaryPackedDecoder.decode(buf, r.position, int32 = true)
-    // advance the reader past the length stream
-    skipDeltaStream(r)
-    val symLens = new Array[Int](nSyms)
-    val symWords = new Array[Long](nSyms)
-    i = 0
-    while (i < nSyms) {
-      symLens(i) = symbols(i).length
-      symWords(i) = wordOf(symbols(i))
-      i += 1
-    }
-    // pass 1: exact decompressed sizes -> arena offsets
-    val offsets = new Array[Int](nValues + 1)
-    var acc = 0
-    var pos = r.position
-    i = 0
-    while (i < nValues) {
-      offsets(i) = acc
-      acc += decompressedSize(symLens, buf, pos, lens(i).toInt)
-      pos += lens(i).toInt
-      i += 1
-    }
-    offsets(nValues) = acc
-    // pass 2: fill the arena
-    val data = new Array[Byte](acc)
-    pos = r.position
-    i = 0
-    while (i < nValues) {
-      decompressInto(symWords, symLens, symbols, buf, pos, lens(i).toInt, data, offsets(i))
-      pos += lens(i).toInt
-      i += 1
-    }
-    BytesVec(data, offsets)
-  }
-
-  private def skipDeltaStream(r: BitReader): Unit = {
-    val blockSize = r.getVlq().toInt
-    val numMiniBlocks = r.getVlq().toInt
-    val total = r.getVlq().toInt
-    r.getZigZagVlq()
-    val miniBlockSize = blockSize / numMiniBlocks
-    var produced = if (total == 0) 0 else 1
-    while (produced < total) {
-      r.getZigZagVlq()
-      val widths = new Array[Int](numMiniBlocks)
-      var i = 0
-      while (i < numMiniBlocks) { widths(i) = (r.getAligned(1) & 0xFF).toInt; i += 1 }
-      var mb = 0
-      while (mb < numMiniBlocks && produced < total) {
-        var j = 0
-        while (j < miniBlockSize) { r.getValue(widths(mb)); j += 1 }
-        produced += math.min(miniBlockSize, total - produced)
-        mb += 1
+    val nValues = r.getVlq()
+    require(n < 0 || nValues == n, s"FSST page holds $nValues values, its page header $n")
+    val (valueLens, bodyStart) =
+      DeltaBinaryPackedDecoder.decodeWithEnd(buf, r.position, end, int32 = true)
+    require(valueLens.length >= nValues,
+      s"FSST length stream has ${valueLens.length} values, page holds $nValues")
+    var pos = bodyStart
+    var v = 0
+    while (v < nValues) {
+      val len = valueLens(v)
+      require(len >= 0 && len <= end - pos,
+        s"FSST value $v claims $len code bytes, ${end - pos} left in the page")
+      val l = len.toInt
+      if (8L * l <= acc.spare) {
+        val o = acc.writePos
+        acc.commit(expand(buf, pos, l, acc.buffer, o, words, lens, v) - o)
+      } else { // the arena's tail: expand aside, then grow only by what it holds
+        require(l <= (Int.MaxValue - 16) / 8, s"FSST value $v of $l code bytes")
+        val tmp = new Array[Byte](8 * l)
+        val got = expand(buf, pos, l, tmp, 0, words, lens, v)
+        System.arraycopy(tmp, 0, acc.ensure(got), acc.writePos, got)
+        acc.commit(got)
       }
+      pos += l
+      v += 1
     }
-    r.alignToByte()
   }
 
-  private def decompressedSize(symLens: Array[Int], buf: Array[Byte],
-      off: Int, len: Int): Int = {
-    var outLen = 0
-    var pos = off
-    val end = off + len
-    while (pos < end) {
-      val code = buf(pos) & 0xFF
-      if (code == Escape) { outLen += 1; pos += 2 }
-      else { outLen += symLens(code); pos += 1 }
-    }
-    outLen
-  }
-
-  /** Symbols are <= 8 bytes, so each expansion is one 8-byte little-endian
-    * word store (trailing garbage is overwritten by the next code); only
-    * within 8 bytes of the arena end does it drop to a byte loop. */
-  private def decompressInto(symWords: Array[Long], symLens: Array[Int],
-      symbols: Array[Array[Byte]], buf: Array[Byte],
-      off: Int, len: Int, out: Array[Byte], outOff: Int): Unit = {
-    var o = outOff
-    var pos = off
-    val end = off + len
-    val outLen = out.length
-    while (pos < end) {
-      val code = buf(pos) & 0xFF
+  /** Expand the `len` code bytes of value `v` at `buf(from)` into `out`
+    * from `o`, which has `8 * len` bytes of room; returns the end of the
+    * expansion. The read position advances by one per code (two per
+    * escape), never by a table entry, so the next code's load does not
+    * wait on this one's. Checked once, after the loop: no code past the
+    * symbol table was seen, and no escape was the value's last byte. */
+  private def expand(buf: Array[Byte], from: Int, len: Int, out: Array[Byte],
+      o0: Int, words: Array[Long], lens: Array[Int], v: Int): Int = {
+    var o = o0
+    var seen = 0
+    var i = from
+    val last = from + len - 1
+    while (i < last) {
+      val code = buf(i) & 0xFF
       if (code == Escape) {
-        out(o) = buf(pos + 1); o += 1; pos += 2
-      } else if (o + 8 <= outLen) {
-        LongView.set(out, o, symWords(code))
-        o += symLens(code)
-        pos += 1
+        out(o) = buf(i + 1); o += 1; i += 2
       } else {
-        val s = symbols(code)
-        System.arraycopy(s, 0, out, o, s.length)
-        o += s.length
-        pos += 1
+        LongView.set(out, o, words(code))
+        val l = lens(code)
+        o += l & 0xF
+        seen |= l
+        i += 1
       }
     }
+    if (i == last) { // one code byte left: it cannot be an escape
+      val code = buf(i) & 0xFF
+      require(code != Escape, s"FSST value $v ends in an escape")
+      LongView.set(out, o, words(code))
+      val l = lens(code)
+      o += l & 0xF
+      seen |= l
+    }
+    require((seen & PastTable) == 0, s"FSST value $v holds a code past the symbol table")
+    o
   }
 }

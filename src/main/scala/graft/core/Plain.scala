@@ -59,6 +59,8 @@ object PlainCodec {
   def decodeSlice(physicalType: Int, buf: Array[Byte], off: Int, len: Int,
       numValues: Int): ColVec = physicalType match {
     case PhysicalType.Bool =>
+      require((numValues + 7L) / 8 <= len,
+        s"PLAIN booleans: $numValues values need more than $len bytes")
       // direct LSB-first bit extraction (no per-value reader state)
       val out = new Array[Boolean](numValues)
       var i = 0

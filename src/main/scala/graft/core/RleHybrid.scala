@@ -193,13 +193,18 @@ object RleBoolCodec {
   }
 
   /** Decode `numValues` booleans from the stream starting at `off`. */
-  def decode(buf: Array[Byte], off: Int, numValues: Int): Array[Boolean] = {
-    require(off >= 0 && buf.length - off >= 4,
-      s"RLE booleans: no 4-byte length at $off of ${buf.length} bytes")
+  def decode(buf: Array[Byte], off: Int, numValues: Int): Array[Boolean] =
+    decode(buf, off, buf.length, numValues)
+
+  /** Decode `numValues` booleans from the stream in `buf[off, end)`. */
+  def decode(buf: Array[Byte], off: Int, end: Int,
+      numValues: Int): Array[Boolean] = {
+    require(off >= 0 && end - off >= 4,
+      s"RLE booleans: no 4-byte length at $off of $end bytes")
     val bodyLen = (buf(off) & 0xFF) | ((buf(off + 1) & 0xFF) << 8) |
       ((buf(off + 2) & 0xFF) << 16) | ((buf(off + 3) & 0xFF) << 24)
-    require(bodyLen >= 0 && bodyLen <= buf.length - off - 4,
-      s"RLE booleans: body of $bodyLen bytes passes the ${buf.length - off - 4} left")
+    require(bodyLen >= 0 && bodyLen <= end - off - 4,
+      s"RLE booleans: body of $bodyLen bytes passes the ${end - off - 4} left")
     val dec = new RleHybridDecoder(1, buf, off + 4, off + 4 + bodyLen)
     val tmp = new Array[Long](numValues)
     dec.getExactly(tmp, 0, numValues)

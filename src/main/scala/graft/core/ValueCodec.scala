@@ -21,13 +21,18 @@ trait ParquetEncodingIds {
   * encoding selectors; the bytes of every value encoding are produced and
   * parsed here, the counterpart of parquet-rs's `encoding.rs` /
   * `decoding.rs`. Keyed by Parquet encoding ids; [[ofCodecId]] maps the
-  * `GC` [[CodecId]]s onto them (FSST has no Parquet id and stays in
-  * [[ChunkCodec]]).
+  * `GC` [[CodecId]]s onto them. FSST has no Parquet id: it decodes here
+  * under the `GC`-only id [[Fsst]], and encodes in [[ChunkCodec]], which
+  * trains one symbol table per chunk.
   *
-  * Decode guards, for every caller: dictionary ids must lie inside the
+  * Decode guards, for every caller: a page's values are read from
+  * `buf[off, end)` and never past `end`, dictionary ids must lie inside the
   * dictionary, and a delta or byte-array stream must hold at least the
   * page's value count (extra stream values are trimmed). */
 object ValueCodec extends ParquetEncodingIds {
+
+  /** FSST pages of `GC` chunks: outside the Parquet id space. */
+  final val Fsst = -1
 
   /** `GC` codec id → Parquet encoding id: the one table between the two id
     * spaces. A `GC` dictionary page is an RLE_DICTIONARY id stream. */
@@ -38,6 +43,7 @@ object ValueCodec extends ParquetEncodingIds {
     case CodecId.DeltaBinaryPacked => DeltaBinaryPacked
     case CodecId.DeltaLengthByteArray => DeltaLengthByteArray
     case CodecId.DeltaByteArray => DeltaByteArray
+    case CodecId.Fsst => Fsst
     case other => throw new IllegalArgumentException(s"unknown codec $other")
   }
 
@@ -73,29 +79,29 @@ object ValueCodec extends ParquetEncodingIds {
       s"byte-array encoding over ${other.getClass.getSimpleName}")
   }
 
-  /** Decode `n` values of `physicalType` from `buf[off, buf.length)`.
+  /** Decode `n` values of `physicalType` from the page `buf[off, end)`.
     * `width` > 0 marks fixed-width byte values (Parquet INT96 and
     * FIXED_LEN_BYTE_ARRAY), which PLAIN-decode as a zero-copy view of
     * `buf`; `dict` is the decoded dictionary of a dictionary-encoded
-    * page. */
+    * page. Byte-array encodings decode through [[decodeBytesInto]]. */
   def decode(encoding: Int, physicalType: Int, width: Int, buf: Array[Byte],
-      off: Int, n: Int, dict: ColVec): ColVec = encoding match {
+      off: Int, end: Int, n: Int, dict: ColVec): ColVec = encoding match {
     case Plain =>
       if (width > 0) {
-        require(width.toLong * n <= buf.length - off,
-          s"$n values of $width bytes need more than ${buf.length - off} bytes")
+        require(width.toLong * n <= end - off,
+          s"$n values of $width bytes need more than ${end - off} bytes")
         BytesVec(buf, Array.tabulate(n + 1)(i => off + i * width))
-      } else PlainCodec.decodeSlice(physicalType, buf, off, buf.length - off, n)
+      } else PlainCodec.decodeSlice(physicalType, buf, off, end - off, n)
     case PlainDictionary | RleDictionary =>
       require(dict != null, "data page references a missing dictionary")
       if (n == 0) empty(physicalType)
-      else ColVec.gather(dict, dictIds(buf, off, n, dict.length))
+      else ColVec.gather(dict, dictIds(buf, off, end, n, dict.length))
     case Rle =>
       require(physicalType == PhysicalType.Bool, "RLE data pages are boolean-only")
-      BoolVec(RleBoolCodec.decode(buf, off, n))
+      BoolVec(RleBoolCodec.decode(buf, off, end, n))
     case DeltaBinaryPacked =>
       val int32 = physicalType == PhysicalType.Int32
-      val vs = DeltaBinaryPackedDecoder.decode(buf, off, int32)
+      val vs = DeltaBinaryPackedDecoder.decodeWithEnd(buf, off, end, int32)._1
       require(vs.length >= n, s"delta stream has ${vs.length} values, page needs $n")
       if (int32) {
         val out = new Array[Int](n)
@@ -103,35 +109,37 @@ object ValueCodec extends ParquetEncodingIds {
         while (i < n) { out(i) = vs(i).toInt; i += 1 }
         IntVec(out)
       } else LongVec(if (vs.length == n) vs else java.util.Arrays.copyOf(vs, n))
-    case DeltaLengthByteArray =>
-      trim(DeltaLengthByteArrayCodec.decodeWithLength(buf, off)._1, n)
-    case DeltaByteArray => trim(DeltaByteArrayCodec.decode(buf, off), n)
-    case ByteStreamSplit => ByteStreamSplitCodec.decode(physicalType, buf, off, n)
+    case ByteStreamSplit =>
+      ByteStreamSplitCodec.decode(physicalType, buf, off, end, n)
     case other => throw new IllegalArgumentException(
       s"value encoding $other not supported")
   }
 
   /** [[decode]] of byte values appended to one arena shared across a
-    * chunk's pages: PLAIN byte arrays and dictionary ids copy each value
-    * straight in; the other encodings decode the page and append it. */
+    * chunk's pages: every byte-array encoding writes each value straight
+    * in, one copy per value; fixed-width values decode as a view of the
+    * page and are appended. */
   def decodeBytesInto(encoding: Int, width: Int, buf: Array[Byte], off: Int,
-      n: Int, dict: ColVec, acc: BytesAccum): Unit = encoding match {
+      end: Int, n: Int, dict: ColVec, acc: BytesAccum): Unit = encoding match {
     case Plain if width == 0 =>
-      PlainCodec.decodeBytesInto(buf, off, buf.length - off, n, acc)
+      PlainCodec.decodeBytesInto(buf, off, end - off, n, acc)
     case PlainDictionary | RleDictionary =>
       require(dict != null, "data page references a missing dictionary")
       if (n > 0)
-        ColVec.gatherBytesInto(bytesOf(dict), dictIds(buf, off, n, dict.length), acc)
-    case _ =>
-      acc.append(bytesOf(decode(encoding, PhysicalType.Bytes, width, buf, off, n, dict)))
+        ColVec.gatherBytesInto(bytesOf(dict), dictIds(buf, off, end, n, dict.length), acc)
+    case DeltaLengthByteArray => DeltaLengthByteArrayCodec.decodeInto(buf, off, end, n, acc)
+    case DeltaByteArray => DeltaByteArrayCodec.decodeInto(buf, off, end, n, acc)
+    case Fsst => FsstCodec.decodeInto(buf, off, end, n, acc)
+    case _ => acc.append(bytesOf(
+      decode(encoding, PhysicalType.Bytes, width, buf, off, end, n, dict)))
   }
 
   /** Dictionary ids of one page (bit-width byte + RLE/bit-packed hybrid),
     * each checked against the dictionary size. */
-  private def dictIds(buf: Array[Byte], off: Int, n: Int,
+  private def dictIds(buf: Array[Byte], off: Int, end: Int, n: Int,
       dictLen: Int): Array[Int] = {
-    require(off < buf.length, "dictionary id page is empty")
-    val dec = new RleHybridDecoder(buf(off) & 0xFF, buf, off + 1, buf.length)
+    require(off < end, "dictionary id page is empty")
+    val dec = new RleHybridDecoder(buf(off) & 0xFF, buf, off + 1, end)
     val ids = new Array[Long](n)
     dec.getExactly(ids, 0, n)
     val idx = new Array[Int](n)
@@ -143,12 +151,6 @@ object ValueCodec extends ParquetEncodingIds {
       i += 1
     }
     idx
-  }
-
-  private def trim(v: BytesVec, n: Int): BytesVec = {
-    require(v.length >= n, s"byte-array stream has ${v.length} values, page needs $n")
-    if (v.length == n) v
-    else BytesVec(v.data, java.util.Arrays.copyOf(v.offsets, n + 1))
   }
 
   /** A zero-length vector of `physicalType`. */

@@ -1,18 +1,18 @@
 package graft.operators
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute,
-  AttributeSet, If, In, Literal}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeSet}
 import org.apache.spark.sql.catalyst.planning.PhysicalOperation
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, UnaryNode}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.ClassicConversions._
-import org.apache.spark.sql.execution.{FilterExec, ProjectExec, SparkPlan,
-  SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.{FilterExec, ProjectExec, RowToColumnarExec,
+  SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
@@ -40,7 +40,7 @@ final case class ChunkScan(output: Seq[Attribute], range: Option[ChunkRange],
 object ChunkScan {
   /** The chunk fields the scan reads. */
   val Fields: Seq[String] = Seq("partId", "chunkIdx", "colIdx", "physicalType",
-    "numValues", "numNulls", "minStat", "maxStat", "blob")
+    "numValues", "numNulls", "rawBytes", "minStat", "maxStat", "blob")
 
   /** `chunks` read as rows of `schema`, under [[DecodeJob.decodeLocal]]'s
     * same-partition contract. */
@@ -65,17 +65,8 @@ object ChunkScanStrategy extends SparkStrategy {
       val used = AttributeSet((projects ++ filters).flatMap(_.references))
       val cols = scan.output.filter(used.contains)
       val fields = cols.map(scan.output.indexOf)
-      // the child passes on only the blobs of required columns: the rest
-      // would be copied out of the cache and into batches for nothing
-      val colIdx = scan.child.output.find(_.name == "colIdx").get
-      val none = Literal(null, BinaryType)
-      val masked = scan.child.output.map {
-        case b if b.name == "blob" => Alias(if (fields.isEmpty) none
-          else If(In(colIdx, fields.map(Literal(_))), b, none), "blob")()
-        case a => a
-      }
       val exec = ChunkScanExec(cols, fields, scan.output.length, scan.range,
-        ProjectExec(masked, planLater(scan.child)))
+        planLater(scan.child))
       val filtered = filters.reduceOption(And).fold[SparkPlan](exec)(FilterExec(_, exec))
       (if (projects.map(_.toAttribute) == cols) filtered
        else ProjectExec(projects, filtered)) :: Nil
@@ -96,6 +87,11 @@ object ChunkScanStrategy extends SparkStrategy {
   * into one [[ColumnarBatch]] of [[GraftColumnVector]]s per group. With no
   * column required (`count()`), a group answers from its `numValues`.
   *
+  * The child's chunk rows are read in whichever form it produces them:
+  * rows (a cached chunk table's `InMemoryTableScanExec`) or batches (a
+  * stored one's vectorized parquet scan), and a blob is copied out only
+  * for a required column of a group not already pruned.
+  *
   * @param fields schema ordinal of each `output` column
   * @param numColumns width of the chunk table's schema */
 final case class ChunkScanExec(output: Seq[Attribute], fields: Seq[Int],
@@ -108,6 +104,8 @@ final case class ChunkScanExec(output: Seq[Attribute], fields: Seq[Int],
     "groups" -> SQLMetrics.createMetric(sparkContext, "chunk groups seen"),
     "pruned" -> SQLMetrics.createMetric(sparkContext, "chunk groups pruned by stats"),
     "decoded" -> SQLMetrics.createMetric(sparkContext, "column chunks decoded"),
+    "blobBytes" -> SQLMetrics.createSizeMetric(sparkContext, "blob bytes read"),
+    "rawBytes" -> SQLMetrics.createSizeMetric(sparkContext, "decoded raw bytes"),
     "decodeTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "decode time"))
 
   override def simpleString(maxFields: Int): String =
@@ -122,49 +120,62 @@ final case class ChunkScanExec(output: Seq[Attribute], fields: Seq[Int],
     val cols = fields.toArray
     val types = output.map(_.dataType).toArray
     val (n, keep) = (numColumns, range)
-    child.executeColumnar().mapPartitions { batches =>
-      val groups = ChunkScanExec.readGroups(batches, ords, keep)
-      groups.foreach { case (at, g) => ChunkScanExec.requireComplete(at, g, n) }
-      groups.iterator.flatMap { case (_, g) =>
-        ChunkScanExec.scanGroup(g, cols, types, keep, m)
-      }
+    val rows =
+      if (child.supportsColumnar)
+        child.executeColumnar().mapPartitions(_.flatMap(_.rowIterator().asScala))
+      else child.execute()
+    rows.mapPartitions { chunkRows =>
+      val groups = ChunkScanExec.readGroups(chunkRows, ords, cols.toSet, keep, m)
+      groups.foreach { case (at, g) => ChunkScanExec.requireComplete(at, g.chunks, n) }
+      groups.iterator.flatMap { case (_, g) => ChunkScanExec.scanGroup(g, cols, types, m) }
     }
   }
 
+  /** Spark's columnar transitions put a `RowToColumnarExec` over a row
+    * child, copying every chunk row into column vectors; this node reads
+    * rows itself, so it keeps the row child instead. */
   override protected def withNewChildInternal(newChild: SparkPlan): ChunkScanExec =
-    copy(child = newChild)
+    copy(child = newChild match {
+      case r: RowToColumnarExec => r.child
+      case c => c
+    })
 }
 
 object ChunkScanExec {
 
-  /** One chunk row, as far as pruning and decoding need it. The blob is
-    * present only for required columns (the child masks the others), the
-    * stats only for the range column. */
-  private final class Chunk(val colIdx: Int, val physicalType: Int,
-      val numValues: Long, val numNulls: Long, val minStat: Array[Byte],
-      val maxStat: Array[Byte], val blob: Array[Byte])
+  /** One chunk row, as far as decoding needs it. The blob is present only
+    * for required columns of groups not known to be pruned when it was
+    * read. */
+  private final class Chunk(val colIdx: Int, val numValues: Long,
+      val numNulls: Long, val rawBytes: Long, val blob: Array[Byte])
+
+  /** The chunk rows of one (partId, chunkIdx) range, and whether the
+    * range column's stats keep it (known once that chunk row is read). */
+  private final class Group {
+    val chunks = mutable.ArrayBuffer.empty[Chunk]
+    var kept: Option[Boolean] = None
+  }
 
   /** The partition's chunk rows grouped by (partId, chunkIdx), in first-
-    * seen order. Each batch is copied out before the next is pulled (a
-    * row-to-columnar child reuses its vectors). */
-  private def readGroups(batches: Iterator[ColumnarBatch], ords: Array[Int],
-      range: Option[ChunkRange]): Seq[((Int, Int), mutable.ArrayBuffer[Chunk])] = {
-    val statCol = range.fold(-1)(_.colIdx)
-    val groups = mutable.LinkedHashMap.empty[(Int, Int), mutable.ArrayBuffer[Chunk]]
-    batches.foreach { b =>
-      val v = ords.map(b.column)
-      def bytes(c: ColumnVector, r: Int): Array[Byte] =
-        if (c.isNullAt(r)) null else c.getBinary(r)
-      var r = 0
-      while (r < b.numRows) {
-        val ci = v(2).getInt(r)
-        val stats = ci == statCol
-        groups.getOrElseUpdate((v(0).getInt(r), v(1).getInt(r)),
-          mutable.ArrayBuffer.empty[Chunk]) += new Chunk(ci, v(3).getInt(r),
-          v(4).getLong(r), v(5).getLong(r), if (stats) bytes(v(6), r) else null,
-          if (stats) bytes(v(7), r) else null, bytes(v(8), r))
-        r += 1
+    * seen order. Each row is copied out before the next is pulled (row
+    * and batch children alike reuse their buffers). */
+  private def readGroups(rows: Iterator[InternalRow], ords: Array[Int],
+      required: Set[Int], range: Option[ChunkRange],
+      m: Map[String, SQLMetric]): Seq[((Int, Int), Group)] = {
+    val groups = mutable.LinkedHashMap.empty[(Int, Int), Group]
+    rows.foreach { row =>
+      def bytes(o: Int): Array[Byte] = if (row.isNullAt(o)) null else row.getBinary(o)
+      val g = groups.getOrElseUpdate((row.getInt(ords(0)), row.getInt(ords(1))), new Group)
+      val ci = row.getInt(ords(2))
+      val (numValues, numNulls) = (row.getLong(ords(4)), row.getLong(ords(5)))
+      range.filter(_.colIdx == ci).foreach { r =>
+        g.kept = Some(DecodeJob.statsOverlap(numValues, numNulls, row.getInt(ords(3)),
+          bytes(ords(7)), bytes(ords(8)), r.lower, r.upper))
       }
+      val blob =
+        if (required(ci) && !g.kept.contains(false)) bytes(ords(9)) else null
+      if (blob != null) m("blobBytes") += blob.length
+      g.chunks += new Chunk(ci, numValues, numNulls, row.getLong(ords(6)), blob)
     }
     groups.toSeq
   }
@@ -182,20 +193,16 @@ object ChunkScanExec {
   }
 
   /** The group's batch, or nothing when its stats rule the range out. */
-  private def scanGroup(g: mutable.ArrayBuffer[Chunk], cols: Array[Int],
-      types: Array[DataType], range: Option[ChunkRange],
+  private def scanGroup(g: Group, cols: Array[Int], types: Array[DataType],
       m: Map[String, SQLMetric]): Iterator[ColumnarBatch] = {
     m("groups") += 1
-    val kept = range.forall { r =>
-      val c = g.find(_.colIdx == r.colIdx).get
-      DecodeJob.statsOverlap(c.numValues, c.numNulls, c.physicalType,
-        c.minStat, c.maxStat, r.lower, r.upper)
-    }
-    if (!kept) { m("pruned") += 1; return Iterator.empty }
-    val rows = g.head.numValues.toInt
+    if (g.kept.contains(false)) { m("pruned") += 1; return Iterator.empty }
+    val rows = g.chunks.head.numValues.toInt
     val t0 = System.nanoTime()
     val vectors = cols.indices.map { i =>
-      decodeColumn(types(i), g.find(_.colIdx == cols(i)).get.blob, rows): ColumnVector
+      val c = g.chunks.find(_.colIdx == cols(i)).get
+      m("rawBytes") += c.rawBytes
+      decodeColumn(types(i), c, rows): ColumnVector
     }.toArray
     m("decoded") += cols.length
     m("decodeTime") += System.nanoTime() - t0
@@ -203,10 +210,9 @@ object ChunkScanExec {
   }
 
   /** One column chunk as a vector of `rows` rows. */
-  private def decodeColumn(dt: DataType, stored: Array[Byte],
-      rows: Int): GraftColumnVector = {
-    require(stored != null, s"$dt chunk without a blob")
-    val blob = BlockCodec.maybeUnwrap(stored)
+  private def decodeColumn(dt: DataType, c: Chunk, rows: Int): GraftColumnVector = {
+    require(c.blob != null, s"$dt chunk without a blob")
+    val blob = BlockCodec.maybeUnwrap(c.blob)
     val (vec, n) = dt match {
       case at: ArrayType if ChunkCodec.isArrayChunk(blob) =>
         val d = ChunkCodec.decodeArrayChunk(blob)
@@ -217,7 +223,8 @@ object ChunkScanExec {
       case _: ArrayType | _: MapType =>
         throw new IllegalArgumentException(s"$dt column without a nested chunk")
       case _ =>
-        val d = ChunkCodec.decodeWithLevels(blob)
+        // a flat chunk's raw size counts 4 length bytes per non-null value
+        val d = ChunkCodec.decodeWithLevels(blob, c.rawBytes - 4 * (c.numValues - c.numNulls))
         val defs = if (d.defLevels == null) null else d.defLevels.map(_.toInt)
         (new GraftColumnVector(dt, d.vec, defs, 1), d.numRows)
     }

@@ -50,8 +50,8 @@ object DecodeJob {
     * Same-partition contract (that of [[decodeLocal]]): every column chunk
     * of a (partId, chunkIdx) row range must sit in one partition, as in
     * EncodeJob output, caches of it and per-partition-written chunk files.
-    * A split row range fails with the same-partition error before its
-    * stats are consulted, never with partial rows. Use [[decode]] plus a
+    * A split row range fails with the same-partition error before any row
+    * is returned, never with partial rows. Use [[decode]] plus a
     * filter for arbitrary layouts.
     *
     * Bounds are inclusive; pass `null` for an open end. The caller still

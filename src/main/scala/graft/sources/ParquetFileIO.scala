@@ -212,14 +212,10 @@ object ParquetFileReader {
     // the decoded pages' headers and clamped to the bytes actually read, so
     // a crafted header cannot force a huge upfront allocation
     val pageBytes = (dictPage ++ kept).map(_.header.uncompressedSize.toLong).sum
-    val acc: BytesAccum =
-      if (width >= 0)
-        new BytesAccum(
-          math.min(math.min(pageBytes, 64L * bytes.length + 64),
-            (Int.MaxValue - 16).toLong).toInt,
-          math.min(kept.map(_.header.numValues.toLong).sum, 1L << 20).toInt)
-      else null
-    val parts = ArrayBuffer.empty[ColVec]
+    val values = new ValuesAccum(phys,
+      math.min(math.min(pageBytes, 64L * bytes.length + 64),
+        (Int.MaxValue - 16).toLong).toInt,
+      math.min(kept.map(_.header.numValues.toLong).sum, 1L << 20).toInt)
     val defParts = if (col.maxDef > 0) ArrayBuffer.empty[Array[Int]] else null
     val repParts = if (col.maxRep > 0) ArrayBuffer.empty[Array[Int]] else null
     kept.foreach { s =>
@@ -228,17 +224,10 @@ object ParquetFileReader {
       if (defs != null) defParts += defs
       val nNonNull =
         if (defs != null) countMax(defs, col.maxDef) else s.header.numValues
-      if (acc != null)
-        ValueCodec.decodeBytesInto(s.header.encoding, width, raw, pos,
-          nNonNull, dict, acc)
-      else parts += ValueCodec.decode(s.header.encoding, phys, width, raw,
-        pos, nNonNull, dict)
+      values.decodePage(s.header.encoding, width, raw, pos, raw.length,
+        nNonNull, dict)
     }
-    val vec =
-      if (acc != null) acc.toVec
-      else if (parts.isEmpty) ValueCodec.empty(phys)
-      else ChunkCodec.concat(parts.toSeq)
-    val out = DecodedChunk(vec, concatLevels(defParts), concatLevels(repParts))
+    val out = DecodedChunk(values.result, concatLevels(defParts), concatLevels(repParts))
     if (ranges == null) out else keepRows(out, kept, ranges, col.maxDef)
   }
 
@@ -267,6 +256,8 @@ object ParquetFileReader {
         case 0 | 3 =>
           require(ph.numValues >= 0 && ph.numValues <= remaining,
             s"page claims ${ph.numValues} values, chunk has $remaining left")
+          // negative ids are the value codec's own (GC-only FSST)
+          require(ph.encoding >= 0, s"page encoding ${ph.encoding} not supported")
           if (ph.pageType == 3) checkV2Lengths(ph, cm.codec)
           out += PageSpan(off.toInt, ph, row)
           row += ph.numValues
@@ -349,7 +340,8 @@ object ParquetFileReader {
       ph.uncompressedSize, col.meta.codec)
     require(ph.numValues >= 0 && ph.numValues <= raw.length, // entries >= 1 byte
       s"dict page claims ${ph.numValues} entries in ${raw.length} bytes")
-    ValueCodec.decode(PqEncoding.Plain, phys, width, raw, 0, ph.numValues, null)
+    ValueCodec.decode(PqEncoding.Plain, phys, width, raw, 0, raw.length,
+      ph.numValues, null)
   }
 
   /** One DATA page (v1 or v2) of `col`: (rep levels or null, def levels or

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.{BlockCodec, ChunkCodec, IntVec, LongVec}
 import graft.functions.TextOps
 import graft.operators._
 import graft.sources.CodeTableGen
@@ -43,20 +44,39 @@ class ChunkScanSpec extends AnyFunSuite with BeforeAndAfterAll
     val df = spark.range(0, 400, 1, 2)
       .select(col("id"), (col("id") * 3).cast("int").as("x"))
     val chunks = EncodeJob.encode(df, 0, Seq.empty, Seq("id"), chunkRows = 100).cache()
-    assert(chunks.count() == 8)
-    // ids 50..120 live in groups [0,100) and [100,200); only `id` is read
+    val rows = chunks.collect().toSeq
+    assert(rows.size == 8)
+    /** (blob bytes, raw bytes) of the chunk rows of `column` that `keep` holds. */
+    def bytesOf(column: String)(keep: Array[Long] => Boolean): (Long, Long) = {
+      val kept = rows.filter(c => c.column == column && keep(ChunkCodec.decode(
+        BlockCodec.maybeUnwrap(c.blob)) match {
+          case LongVec(vs) => vs
+          case IntVec(vs) => vs.map(_.toLong)
+          case other => fail(s"$other")
+        }))
+      (kept.map(_.blob.length.toLong).sum, kept.map(_.rawBytes).sum)
+    }
+    // ids 50..120 live in groups [0,100) and [100,200); only `id` is read,
+    // and only those two groups' `id` blobs are copied out
     val (cols, m) = scanMetrics(DecodeJob.decodeWhere(chunks, df.schema, "id", 50L, 120L)
       .where(col("id").between(50, 120)).agg(count(lit(1))))
     assert(cols == Seq("id"))
     assert(m("groups") == 4 && m("pruned") == 2 && m("decoded") == 2, m)
     assert(m("decodeTime") > 0, m)
+    val idBytes = bytesOf("id")(_.exists(id => id >= 50 && id <= 120))
+    assert(idBytes._2 == 2 * 100 * 8)
+    assert((m("blobBytes"), m("rawBytes")) == idBytes, m)
     // one projected column of every group
     val (cols2, m2) = scanMetrics(DecodeJob.decodeLocal(chunks, df.schema).select("x"))
     assert(cols2 == Seq("x"))
     assert(m2("groups") == 4 && m2("pruned") == 0 && m2("decoded") == 4, m2)
-    // count() answers from the chunk metadata: nothing decodes
+    val xBytes = bytesOf("x")(_ => true)
+    assert(xBytes._2 == 4 * 100 * 4)
+    assert((m2("blobBytes"), m2("rawBytes")) == xBytes, m2)
+    // count() answers from the chunk metadata: nothing is read or decoded
     val (cols3, m3) = scanMetrics(DecodeJob.decodeLocal(chunks, df.schema).agg(count(lit(1))))
     assert(cols3.isEmpty && m3("decoded") == 0, m3)
+    assert(m3("blobBytes") == 0 && m3("rawBytes") == 0, m3)
     assert(DecodeJob.decodeLocal(chunks, df.schema).count() == 400)
     chunks.unpersist()
   }

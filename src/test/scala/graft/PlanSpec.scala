@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.execution.{FileSourceScanExec, InputAdapter,
+  RowToColumnarExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,7 +16,8 @@ import graft.operators._
   * viable at 100 TB — scan-level column pruning, predicate pushdown, and
   * broadcast (not shuffle) joins for metadata-sized sides — asserted on
   * the optimizer's output so they cannot silently regress. */
-class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PlanSpec extends AnyFunSuite with BeforeAndAfterAll
+    with AdaptiveSparkPlanHelper {
 
   @transient private var spark: SparkSession = _
   private val sfDir = "/root/testdata/sf0.001"
@@ -67,6 +72,42 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // and it still returns the right rows
     assert(pruned.where(col("l_orderkey").between(10, 50)).count() ==
       li.where(col("l_orderkey").between(10, 50)).count())
+  }
+
+  test("a chunk read takes its child's chunk rows as rows or as batches, never via RowToColumnar") {
+    val df = spark.range(0, 3000, 1, 2)
+      .select(col("id"), (col("id") % 7).cast("string").as("s"))
+    val chunks = EncodeJob.encode(df, 0, Seq.empty, Seq("id"), chunkRows = 500)
+    val expect = df.where(col("id").between(100, 1200)).orderBy("id").collect().toSeq
+    def unwrap(p: SparkPlan): SparkPlan = p match {
+      case q: QueryStageExec => unwrap(q.plan)
+      case w: WholeStageCodegenExec => unwrap(w.child)
+      case i: InputAdapter => unwrap(i.child)
+      case other => other
+    }
+    def childOf(table: Dataset[ChunkRow]): SparkPlan = {
+      val read = DecodeJob.decodeWhere(table, df.schema, "id", 100L, 1200L)
+        .where(col("id").between(100, 1200)).orderBy("id")
+      assert(read.collect().toSeq == expect)
+      val plan = read.queryExecution.executedPlan
+      assert(collect(plan) { case r: RowToColumnarExec => r }.isEmpty, plan)
+      val scans = collect(plan) { case c: ChunkScanExec => c }
+      assert(scans.size == 1, plan)
+      unwrap(scans.head.child)
+    }
+    // a persisted chunk table: the cache scan's rows, read as rows
+    val cached = chunks.cache()
+    val rowChild = childOf(cached)
+    assert(rowChild.isInstanceOf[InMemoryTableScanExec] && !rowChild.supportsColumnar,
+      rowChild)
+    // a parquet-stored one: the vectorized scan's batches, read as batches
+    val dir = java.nio.file.Files.createTempDirectory("graft-shape").toString
+    cached.write.parquet(s"$dir/chunks")
+    val stored = spark.read.parquet(s"$dir/chunks").as[ChunkRow](Encoders.product[ChunkRow])
+    val batchChild = childOf(stored)
+    assert(batchChild.isInstanceOf[FileSourceScanExec] && batchChild.supportsColumnar,
+      batchChild)
+    cached.unpersist()
   }
 
   test("encode pipeline has exactly one exchange (the salted repartition)") {

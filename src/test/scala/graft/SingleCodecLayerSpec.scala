@@ -55,6 +55,20 @@ class SingleCodecLayerSpec extends AnyFunSuite {
     }
   }
 
+  test("GC byte chunks decode in one pass, with no page join") {
+    def lines(file: String) = mainLines.filter(_._1 == file)
+    // FSST expands codes straight into the arena: no sizing pass, and the
+    // length stream is walked once by the shared delta decoder
+    Seq("decompressedSize", "skipDeltaStream").foreach { name =>
+      val sites = lines("Fsst.scala").filter(_._3.contains(name))
+      assert(sites.isEmpty, s"$name in Fsst.scala:\n${listing(sites)}")
+    }
+    // every page of a chunk lands in one accumulator: no per-page join
+    val joins = lines("ChunkCodec.scala").filter(_._3.contains("concat("))
+    assert(joins.isEmpty, s"a page join in ChunkCodec.scala:\n${listing(joins)}")
+    assert(lines("ChunkCodec.scala").exists(_._3.contains("values.decodePage(")))
+  }
+
   test("float and double dictionaries keep every NaN payload bit-exactly") {
     // two quiet NaNs that differ only in payload, repeated so both
     // containers pick the dictionary path

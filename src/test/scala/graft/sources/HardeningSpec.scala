@@ -2,9 +2,10 @@ package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{BitReader, BitWriter, BlockCodec, BytesVec, ChunkCodec,
-  CodecId, DeltaLengthByteArrayCodec, IntVec, LongVec, PhysicalType, PlainCodec,
-  RleBoolCodec, RleHybridDecoder, RleHybridEncoder}
+import graft.core.{BitReader, BitWriter, BlockCodec, BytesAccum, BytesVec,
+  ChunkCodec, CodecId, DeltaBinaryPackedDecoder, DeltaBinaryPackedEncoder,
+  DeltaLengthByteArrayCodec, FsstCodec, IntVec, LongVec, PhysicalType,
+  PlainCodec, RleBoolCodec, RleHybridDecoder, RleHybridEncoder, ValueCodec}
 
 /** Unit coverage for the round-3 review fixes: Hive-compatible partition
   * path escaping, legacy-statistics distrust in byte-wise pruning, and
@@ -361,5 +362,121 @@ class HardeningSpec extends AnyFunSuite {
     assert(e.getMessage.contains("RLE booleans"), e.getMessage)
     val e2 = intercept[IllegalArgumentException](RleBoolCodec.decode(enc.take(3), 0, 1))
     assert(e2.getMessage.contains("RLE booleans"), e2.getMessage)
+  }
+
+  // ------------------------------------------------ FSST and page bounds
+
+  /** A version-1 `GC` byte-array chunk of `pages`, each (codec, values, bytes). */
+  private def bytesChunk(pages: Seq[(Int, Int, Array[Byte])]): Array[Byte] = {
+    val w = new BitWriter(1024)
+    w.putAligned('G'.toLong, 1); w.putAligned('C'.toLong, 1)
+    w.putAligned(1L, 1) // version 1: no nulls
+    w.putAligned(PhysicalType.Bytes.toLong, 1)
+    w.putAligned(pages.head._1.toLong, 1)
+    w.putVlq(pages.map(_._2).sum.toLong) // rows
+    w.putAligned(0L, 1) // no dictionary
+    w.putVlq(pages.size.toLong)
+    pages.foreach { case (codec, n, bytes) =>
+      w.putAligned(codec.toLong, 1)
+      w.putVlq(n.toLong); w.putVlq(bytes.length.toLong); w.putBytes(bytes)
+    }
+    w.result()
+  }
+
+  /** An FSST page built by hand: symbol table, value count, the
+    * DELTA_BINARY_PACKED code lengths and the code bytes. */
+  private def fsstPage(symbols: Seq[Array[Byte]], lens: Seq[Long],
+      body: Array[Byte]): Array[Byte] = {
+    val w = new BitWriter(256)
+    w.putVlq(symbols.size.toLong)
+    symbols.foreach { sym => w.putAligned(sym.length.toLong, 1); w.putBytes(sym) }
+    w.putVlq(lens.size.toLong)
+    val e = new DeltaBinaryPackedEncoder(int32 = true)
+    e.put(lens.toArray)
+    w.putBytes(e.result())
+    w.putBytes(body)
+    w.result()
+  }
+
+  private def fsstFails(page: Array[Byte], n: Int): String = {
+    val e = intercept[IllegalArgumentException](
+      ChunkCodec.decode(bytesChunk(Seq((CodecId.Fsst, n, page)))))
+    assert(e.getMessage.contains("FSST"), e.getMessage)
+    e.getMessage
+  }
+
+  private def strings(v: graft.core.ColVec): Seq[String] = {
+    val b = v.asInstanceOf[BytesVec]
+    (0 until b.length).map(i => new String(b.valueBytes(i), "UTF-8"))
+  }
+
+  private val fsstValues = BytesVec.of(Array.tabulate(400)(i =>
+    s"value-$i-the-quick-brown-fox-jumps-over-the-lazy-dog".getBytes("UTF-8")))
+
+  test("an FSST page cut short fails naming FSST") {
+    val page = FsstCodec.encode(fsstValues)
+    val honest = ChunkCodec.decode(bytesChunk(Seq((CodecId.Fsst, 400, page))))
+    assert(strings(honest) == strings(fsstValues))
+    // the last values' code lengths run past the page end
+    assert(fsstFails(page.dropRight(10), 400).contains("left in the page"))
+  }
+
+  test("an FSST value length that is negative fails naming FSST") {
+    val ab = Seq("ab".getBytes("UTF-8"))
+    val page = fsstPage(ab, Seq(1L, -1L, 1L), Array[Byte](0, 0, 0))
+    assert(fsstFails(page, 3).contains("-1 code bytes"))
+  }
+
+  test("an FSST code past a short symbol table fails naming FSST") {
+    val page = FsstCodec.encode(fsstValues)
+    // the first code byte of value 0 becomes the first code past the table
+    val r = new BitReader(page)
+    val nSyms = r.getVlq().toInt
+    assert(nSyms < 255, s"$nSyms symbols leave no code past the table")
+    (0 until nSyms).foreach(_ => r.skip((r.getAligned(1) & 0xFF).toInt))
+    r.getVlq()
+    val bodyStart = DeltaBinaryPackedDecoder.decodeWithEnd(page, r.position,
+      page.length, int32 = true)._2
+    val forged = page.clone()
+    forged(bodyStart) = nSyms.toByte
+    assert(fsstFails(forged, 400).contains("code past the symbol table"))
+    // a code past the table as a value's only byte
+    val ab = Seq("ab".getBytes("UTF-8"))
+    assert(fsstFails(fsstPage(ab, Seq(1L, 1L), Array[Byte](0, 7)), 2)
+      .contains("value 1 holds a code past the symbol table"))
+  }
+
+  test("an FSST escape as a value's last byte fails naming FSST") {
+    val ab = Seq("ab".getBytes("UTF-8"))
+    // value 0 is [ab, escape]; the escape would take value 1's code as its literal
+    val page = fsstPage(ab, Seq(2L, 1L), Array[Byte](0, -1, 0))
+    assert(fsstFails(page, 2).contains("value 0 ends in an escape"))
+    // the same escape with its literal inside the value decodes
+    val ok = fsstPage(ab, Seq(3L, 1L), Array[Byte](0, -1, 'z'.toByte, 0))
+    assert(strings(ChunkCodec.decode(bytesChunk(Seq((CodecId.Fsst, 2, ok))))) ==
+      Seq("abz", "ab"))
+  }
+
+  test("an FSST symbol of length 0 or more than 8 fails naming FSST") {
+    Seq(0, 9).foreach { len =>
+      val page = fsstPage(Seq("ab".getBytes("UTF-8"), Array.fill[Byte](len)('x')),
+        Seq(1L), Array[Byte](0))
+      assert(fsstFails(page, 1).contains(s"length $len"))
+    }
+  }
+
+  test("a PLAIN byte page is read only up to its own end") {
+    // page 1's last value claims 6 bytes: 3 of its own and 3 of page 2
+    val page1 = PlainCodec.encode(BytesVec.of(Seq("abc", "def").map(_.getBytes("UTF-8"))))
+    page1(page1.length - 7) = 6
+    val page2 = PlainCodec.encode(BytesVec.of(Seq("ghi").map(_.getBytes("UTF-8"))))
+    val buf = page1 ++ page2
+    val e = intercept[IllegalArgumentException](ValueCodec.decodeBytesInto(
+      ValueCodec.Plain, 0, buf, 0, page1.length, 2, null, new BytesAccum(16, 2)))
+    assert(e.getMessage.contains("past page end"), e.getMessage)
+    // the same two pages inside one GC chunk blob
+    val e2 = intercept[IllegalArgumentException](ChunkCodec.decode(
+      bytesChunk(Seq((CodecId.Plain, 2, page1), (CodecId.Plain, 1, page2)))))
+    assert(e2.getMessage.contains("past page end"), e2.getMessage)
   }
 }
