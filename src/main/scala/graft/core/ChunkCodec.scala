@@ -590,10 +590,14 @@ object ChunkCodec {
     * tiny blob raises cleanly instead of OOM-ing the executor. */
   @inline private def checkedDense(v: Long, bytesPresent: Int,
       what: String): Int = {
-    require(v >= 0 && (v <= 8L * bytesPresent || v <= (1L << 24)),
-      s"corrupt chunk: $what = $v in $bytesPresent bytes")
+    require(dense(v, bytesPresent), s"corrupt chunk: $what = $v in $bytesPresent bytes")
     v.toInt
   }
+
+  /** Could `bytesPresent` bytes plausibly carry a count of `v`? The rule
+    * [[checkedDense]] describes, shared with the delta-stream header. */
+  @inline private[core] def dense(v: Long, bytesPresent: Int): Boolean =
+    v >= 0 && (v <= 8L * bytesPresent || v <= (1L << 24))
 
   @inline private def checkedLen(v: Long, r: BitReader, what: String): Int = {
     require(v >= 0 && v <= r.bytesLeft, s"corrupt chunk: $what = $v > ${r.bytesLeft} left")

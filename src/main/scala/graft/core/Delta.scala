@@ -132,10 +132,22 @@ object DeltaBinaryPackedDecoder {
   def decodeWithEnd(buf: Array[Byte], off: Int, end: Int,
       int32: Boolean): (Array[Long], Int) = {
     val r = new BitReader(buf, off, end)
-    val blockSize = r.getVlq().toInt
-    val numMiniBlocks = r.getVlq().toInt
-    val total = r.getVlq().toInt
-    val miniBlockSize = blockSize / numMiniBlocks
+    val blockClaim = r.getVlq()
+    val miniClaim = r.getVlq()
+    val totalClaim = r.getVlq()
+    // the header is checked once, before anything is allocated from it:
+    // the Parquet spec's block grammar, and no count denser than the bytes
+    // left can carry (ChunkCodec.dense)
+    val left = r.bytesLeft
+    require(blockClaim > 0 && blockClaim % 128 == 0 && ChunkCodec.dense(blockClaim, left),
+      s"DELTA_BINARY_PACKED stream: block size $blockClaim in $left bytes")
+    require(miniClaim >= 1 && blockClaim % miniClaim == 0 && blockClaim / miniClaim % 32 == 0,
+      s"DELTA_BINARY_PACKED stream: $miniClaim miniblocks per $blockClaim-value block")
+    require(ChunkCodec.dense(totalClaim, left),
+      s"DELTA_BINARY_PACKED stream: $totalClaim values in $left bytes")
+    val numMiniBlocks = miniClaim.toInt
+    val miniBlockSize = (blockClaim / miniClaim).toInt
+    val total = totalClaim.toInt
     val out = new Array[Long](total)
     if (total == 0) { r.getZigZagVlq(); return (out, r.position) }
     var current = r.getZigZagVlq()

@@ -56,6 +56,12 @@ object Bpe {
       require(!rank.containsKey(k), s"duplicate merge (${m.left},${m.right})")
       rank.put(k, i)
     }
+    // each output names one merge: a symbol two merges produce lets a later
+    // merge recreate an operand of an earlier rank, which the indexed
+    // encoder's equivalence with the rescan loop rests on never happening
+    merges.groupBy(_.out).foreach { case (o, ms) =>
+      require(ms.size == 1, s"two merges produce the symbol $o")
+    }
     private val byRank = merges.toArray
 
     /** Priority-BPE over a symbol sequence — the indexed merge loop that
@@ -199,9 +205,9 @@ object Bpe {
     * count ties break toward the lexicographically smallest (left, right),
     * and every structure iterated is index- or heap-ordered. Output symbol
     * names are left+right concatenations (the learned analogue of
-    * subword vocabularies), so learned symbols are multi-char and fresh by
-    * construction — no output ever equals an earlier operand pair's
-    * concatenation twice because duplicate pairs cannot be selected.
+    * subword vocabularies), named by [[outName]] so that two merges of
+    * different pairs with one concatenation ((a,bc) and (ab,c)) still
+    * produce distinct symbols.
     *
     * Stops early (returning fewer merges) when no adjacent pair remains.
     * Training is driver-side over the BOUNDED vocab list — the corpus
@@ -240,13 +246,15 @@ object Bpe {
         Ordering.String.reverse, Ordering.String.reverse)))
     counts.foreach { case (p, c) => heap.enqueue((c, p.l, p.r)) }
     val out = ArrayBuffer.empty[Merge]
+    val taken = mutable.HashSet.empty[String]
     while (out.length < numMerges && heap.nonEmpty) {
       val (c, l, r) = heap.dequeue()
       val p = P(l, r)
       if (counts.getOrElse(p, 0L) == c) {
         // live entry: this IS the current (max count, min pair) argmax —
         // any pair with a higher live count has a live heap entry above
-        val merged = l + r
+        val merged = outName(l, r, taken)
+        taken += merged
         out += Merge(l, r, merged)
         val touched = where.getOrElse(p, mutable.LinkedHashSet.empty[Int])
         touched.foreach { wi =>
@@ -287,6 +295,16 @@ object Bpe {
       }
     }
     new Table(out.toSeq)
+  }
+
+  /** The output symbol [[learn]] gives the merge of (l, r): `l + r`, or,
+    * when an earlier merge already took that name, the first free
+    * `l + r + "#" + k`. A base symbol is one character and every name has
+    * at least two, so names never meet base symbols either. */
+  private[graft] def outName(l: String, r: String, taken: String => Boolean): String = {
+    val s = l + r
+    if (!taken(s)) s
+    else Iterator.from(1).map(k => s"$s#$k").find(n => !taken(n)).get
   }
 
   /** Deterministic filler vocabulary for exercising large merge tables on

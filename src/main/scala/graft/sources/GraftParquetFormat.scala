@@ -25,11 +25,15 @@ import graft.core.{BoolVec, BytesVec, ColVec, DoubleVec, FloatVec, IntVec, LongV
   *
   * Catalyst drives the pushdown instead of manual parameters: column
   * pruning arrives via SupportsPushDownRequiredColumns (only requested
-  * leaf chunks are decoded), and range/equality filters on INT32/INT64
-  * columns arrive via SupportsPushDownFilters and turn into footer-stats
-  * row-group pruning inside each task. All filters are also RETURNED as
-  * residuals, so Spark re-applies them exactly — stats pruning stays a
-  * sound superset, never a semantic change.
+  * leaf chunks are decoded). Filters arrive via SupportsPushDownFilters
+  * at planning and, as join keys, via runtime filtering (DPP); both fold
+  * into one [[ScanBounds]]. `=`, `IN`, `<`, `<=`, `>` and `>=` push on
+  * INT32/INT64 and string columns, `startsWith` on string columns. The
+  * bounds drop Hive partition directories and row groups at planning,
+  * then row groups by footer stats and bloom filters and pages by page
+  * stats inside each task. All filters are also RETURNED as residuals, so
+  * Spark re-applies them exactly — pruning stays a sound superset, never
+  * a semantic change.
   *
   * The reference's read surface (`SerializedFileReader` + projection,
   * `/root/reference/src/file/reader.rs:258-283`) expressed the Spark-native
@@ -269,15 +273,7 @@ final class GraftScanBuilder(dir: String, fullSchema: StructType)
 
   private var required: StructType = fullSchema
   private var pushed: Array[Filter] = Array.empty
-  private var ranges: Map[String, (Long, Long)] = Map.empty
-  // string-column byte ranges (UTF-8, unsigned lexicographic like the
-  // footer's byte-array stats); a null side is unbounded
-  private var strRanges: Map[String, (Array[Byte], Array[Byte])] = Map.empty
-  // one entry per pushed equality/IN conjunct: (column, candidate values —
-  // Long for int columns, UTF-8 bytes for string columns). Feeds bloom-filter
-  // row-group pruning; a row group survives only if EVERY conjunct has at
-  // least one candidate its bloom filter might contain.
-  private var eqProbes: Seq[(String, Seq[Any])] = Nil
+  private var bounds: ScanBounds = ScanBounds.empty
   private var limit: Int = -1
   private var sawFilters = false
   private var aggSpecs: Option[Seq[GraftAggSpec]] = None
@@ -288,97 +284,11 @@ final class GraftScanBuilder(dir: String, fullSchema: StructType)
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     sawFilters ||= filters.nonEmpty
-    val longCols = fullSchema.fields.collect {
-      case f if f.dataType == org.apache.spark.sql.types.LongType ||
-        f.dataType == org.apache.spark.sql.types.IntegerType => f.name
-    }.toSet
-    def num(v: Any): Option[Long] = v match {
-      case l: Long => Some(l)
-      case i: Int => Some(i.toLong)
-      case s: Short => Some(s.toLong)
-      case b: Byte => Some(b.toLong)
-      case _ => None
+    pushed = filters.filter { f =>
+      val b = bounds.push(fullSchema, f)
+      b.foreach(bounds = _)
+      b.isDefined
     }
-    def tighten(col: String, lo: Long, hi: Long): Unit = {
-      val (l0, h0) = ranges.getOrElse(col, (Long.MinValue, Long.MaxValue))
-      ranges += col -> (math.max(l0, lo), math.min(h0, hi))
-    }
-    val strCols = fullSchema.fields.collect {
-      case f if f.dataType == org.apache.spark.sql.types.StringType => f.name
-    }.toSet
-    def utf8(v: Any): Option[Array[Byte]] = v match {
-      case s: String => Some(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      case _ => None
-    }
-    def tightenStr(col: String, lo: Array[Byte], hi: Array[Byte]): Unit = {
-      val (l0, h0) = strRanges.getOrElse(col, (null, null))
-      val l =
-        if (l0 == null) lo else if (lo == null) l0
-        else if (graft.core.MinMax.compareBytes(lo, l0) > 0) lo else l0
-      val h =
-        if (h0 == null) hi else if (hi == null) h0
-        else if (graft.core.MinMax.compareBytes(hi, h0) < 0) hi else h0
-      strRanges += col -> (l, h)
-    }
-    /** Smallest byte string that is > every string with prefix `p`, or null
-      * when p is all 0xFF (no finite bound). Over-inclusive is fine — all
-      * filters stay residual. */
-    def prefixUpper(p: Array[Byte]): Array[Byte] = {
-      var i = p.length - 1
-      while (i >= 0 && p(i) == 0xFF.toByte) i -= 1
-      if (i < 0) null
-      else {
-        val u = java.util.Arrays.copyOf(p, i + 1)
-        u(i) = (u(i) + 1).toByte
-        u
-      }
-    }
-    val usable = filters.filter {
-      case EqualTo(c, v) if longCols(c) && num(v).isDefined =>
-        tighten(c, num(v).get, num(v).get)
-        eqProbes :+= ((c, Seq[Any](num(v).get))); true
-      case GreaterThan(c, v) if longCols(c) && num(v).isDefined =>
-        tighten(c, num(v).get + 1, Long.MaxValue); true
-      case GreaterThanOrEqual(c, v) if longCols(c) && num(v).isDefined =>
-        tighten(c, num(v).get, Long.MaxValue); true
-      case LessThan(c, v) if longCols(c) && num(v).isDefined =>
-        tighten(c, Long.MinValue, num(v).get - 1); true
-      case LessThanOrEqual(c, v) if longCols(c) && num(v).isDefined =>
-        tighten(c, Long.MinValue, num(v).get); true
-      // string predicates prune on the footer's byte-array stats; bound
-      // exclusivity is ignored (conservative — filters stay residual)
-      case EqualTo(c, v) if strCols(c) && utf8(v).isDefined =>
-        tightenStr(c, utf8(v).get, utf8(v).get)
-        eqProbes :+= ((c, Seq[Any](utf8(v).get))); true
-      case GreaterThan(c, v) if strCols(c) && utf8(v).isDefined =>
-        tightenStr(c, utf8(v).get, null); true
-      case GreaterThanOrEqual(c, v) if strCols(c) && utf8(v).isDefined =>
-        tightenStr(c, utf8(v).get, null); true
-      case LessThan(c, v) if strCols(c) && utf8(v).isDefined =>
-        tightenStr(c, null, utf8(v).get); true
-      case LessThanOrEqual(c, v) if strCols(c) && utf8(v).isDefined =>
-        tightenStr(c, null, utf8(v).get); true
-      case StringStartsWith(c, p) if strCols(c) =>
-        val pb = p.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        tightenStr(c, pb, prefixUpper(pb)); true
-      // IN-set → its [min, max] envelope (the set stays residual, so gaps
-      // inside the envelope cost nothing but a missed skip)
-      case In(c, vs) if longCols(c) && vs.nonEmpty &&
-          vs.forall(num(_).isDefined) =>
-        val ns = vs.map(num(_).get)
-        tighten(c, ns.min, ns.max)
-        eqProbes :+= ((c, ns.toSeq)); true
-      case In(c, vs) if strCols(c) && vs.nonEmpty &&
-          vs.forall(utf8(_).isDefined) =>
-        val bs = vs.map(utf8(_).get)
-        eqProbes :+= ((c, bs.toSeq))
-        tightenStr(c, bs.reduce((a, b) =>
-          if (graft.core.MinMax.compareBytes(a, b) <= 0) a else b),
-          bs.reduce((a, b) =>
-            if (graft.core.MinMax.compareBytes(a, b) >= 0) a else b)); true
-      case _ => false
-    }
-    pushed = usable
     // every filter stays a residual: stats pruning is a superset filter
     filters
   }
@@ -421,7 +331,7 @@ final class GraftScanBuilder(dir: String, fullSchema: StructType)
 
   override def build(): Scan = aggSpecs match {
     case Some(specs) => new GraftAggScan(dir, fullSchema, specs)
-    case None => new GraftScan(dir, required, ranges, limit, strRanges, eqProbes)
+    case None => new GraftScan(dir, required, bounds, limit)
   }
 }
 
@@ -538,9 +448,7 @@ object GraftScan {
 }
 
 final class GraftScan(dir: String, schema: StructType,
-    ranges: Map[String, (Long, Long)], limit: Int = -1,
-    strRanges: Map[String, (Array[Byte], Array[Byte])] = Map.empty,
-    eqProbes: Seq[(String, Seq[Any])] = Nil)
+    bounds: ScanBounds = ScanBounds.empty, limit: Int = -1)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeV2Filtering {
 
@@ -551,104 +459,32 @@ final class GraftScan(dir: String, schema: StructType,
   // predicate prunes fact-table directories, row groups, and bloom-filtered
   // pages it never named directly. The 100 TB shape: a 1000-file fact scan
   // joined to a 5-row dim schedules only the matching keys' row groups.
-  private var rtRanges = ranges
-  private var rtStrRanges = strRanges
-  private var rtEqProbes = eqProbes
-  private var runtimeNarrowedCols: Seq[String] = Nil
+  private var rt = bounds
 
   /** Columns runtime join-key filters may prune on (every scalar column —
     * the envelope + bloom machinery works for int and string alike). */
   override def filterAttributes(): Array[NamedReference] =
     schema.fields.collect {
-      case f if f.dataType == LongType || f.dataType == IntegerType ||
-        f.dataType == org.apache.spark.sql.types.StringType =>
-        Expressions.column(f.name)
+      case f if ScanBounds.pushable(f.dataType) => Expressions.column(f.name)
     }
 
   /** Runtime narrowing: IN/= predicates over declared attributes tighten
     * the stat envelopes and join the bloom-probe set; anything unparseable
     * is ignored (over-inclusive = sound — Spark still applies the join). */
-  override def filter(predicates: Array[Predicate]): Unit = {
-    def colOf(e: org.apache.spark.sql.connector.expressions.Expression):
-        Option[String] = e match {
-      case nr: NamedReference if nr.fieldNames.length == 1 =>
-        Some(nr.fieldNames()(0))
-      case _ => None
-    }
-    def litOf(e: org.apache.spark.sql.connector.expressions.Expression):
-        Option[Any] = e match {
-      case l: org.apache.spark.sql.connector.expressions.Literal[_] =>
-        Option(l.value)
-      case _ => None
-    }
-    val longCols = schema.fields.collect {
-      case f if f.dataType == LongType || f.dataType == IntegerType => f.name
-    }.toSet
-    val strCols = schema.fields.collect {
-      case f if f.dataType == org.apache.spark.sql.types.StringType => f.name
-    }.toSet
-    def num(v: Any): Option[Long] = v match {
-      case l: Long => Some(l)
-      case i: Int => Some(i.toLong)
-      case s: Short => Some(s.toLong)
-      case b: Byte => Some(b.toLong)
-      case _ => None
-    }
-    def utf8(v: Any): Option[Array[Byte]] = v match {
-      case u: org.apache.spark.unsafe.types.UTF8String => Some(u.getBytes)
-      case s: String => Some(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      case _ => None
-    }
-    predicates.foreach { p =>
-      val vals: Option[(String, Seq[Any])] = p.name() match {
-        case "IN" | "=" if p.children().nonEmpty =>
-          for {
-            c <- colOf(p.children()(0))
-            vs <- Some(p.children().drop(1).toSeq.map(litOf))
-            if vs.nonEmpty && vs.forall(_.isDefined)
-          } yield (c, vs.map(_.get))
-        case _ => None
-      }
-      vals.foreach { case (c, vs) =>
-        if (longCols(c) && vs.forall(num(_).isDefined)) {
-          val ns = vs.map(num(_).get)
-          val (l0, h0) = rtRanges.getOrElse(c, (Long.MinValue, Long.MaxValue))
-          rtRanges += c -> (math.max(l0, ns.min), math.min(h0, ns.max))
-          rtEqProbes :+= ((c, ns))
-          runtimeNarrowedCols :+= c
-        } else if (strCols(c) && vs.forall(utf8(_).isDefined)) {
-          val bs = vs.map(utf8(_).get)
-          val lo = bs.reduce((a, b) =>
-            if (graft.core.MinMax.compareBytes(a, b) <= 0) a else b)
-          val hi = bs.reduce((a, b) =>
-            if (graft.core.MinMax.compareBytes(a, b) >= 0) a else b)
-          val (l0, h0) = rtStrRanges.getOrElse(c, (null, null))
-          val l = if (l0 == null || graft.core.MinMax.compareBytes(lo, l0) > 0) lo else l0
-          val h = if (h0 == null || graft.core.MinMax.compareBytes(hi, h0) < 0) hi else h0
-          rtStrRanges += c -> (l, h)
-          rtEqProbes :+= ((c, bs.toSeq))
-          runtimeNarrowedCols :+= c
-        }
-      }
-    }
-  }
+  override def filter(predicates: Array[Predicate]): Unit =
+    predicates.foreach(p => rt.pushRuntime(schema, p).foreach(rt = _))
+
+  /** The pushed bounds, runtime narrowing included. */
+  def scanBounds: ScanBounds = rt
 
   /** Columns runtime filter() actually narrowed on (test/observability). */
-  def runtimeFilteredColumns: Seq[String] = runtimeNarrowedCols.distinct
+  def runtimeFilteredColumns: Seq[String] =
+    rt.probes.drop(bounds.probes.size).map(_._1).distinct
 
   override def readSchema(): StructType = schema
   override def description(): String =
     s"GraftParquetScan[$dir] cols=${schema.fieldNames.mkString(",")}" +
-      (if (rtRanges.nonEmpty) s" ranges=$rtRanges" else "") +
-      (if (rtStrRanges.nonEmpty) " strRanges=" + rtStrRanges.map { case (c, (l, h)) =>
-        def r(b: Array[Byte]) = if (b == null) "*"
-          else new String(b, java.nio.charset.StandardCharsets.UTF_8)
-        s"$c:[${r(l)},${r(h)}]"
-      }.mkString(",") else "") +
-      (if (rtEqProbes.nonEmpty)
-        s" eqProbes=${rtEqProbes.map(p => s"${p._1}(${p._2.size})").mkString(",")}"
-       else "") +
-      (if (limit >= 0) s" limit=$limit" else "")
+      rt.describe + (if (limit >= 0) s" limit=$limit" else "")
   override def toBatch: Batch = this
 
   /** Row-group-granular scheduling with PLANNING-time stat pruning: one
@@ -672,17 +508,7 @@ final class GraftScan(dir: String, schema: StructType,
     // range on a partition column drops whole directories before any
     // footer is touched
     val files = listingSized.map { case (p, kvs, _) => (p, kvs) }.filter {
-      case (_, kvs) => kvs.forall { case (k, v) =>
-        val longOk = rtRanges.get(k).forall { case (lo, hi) =>
-          scala.util.Try(v.toLong).toOption.forall(x => x >= lo && x <= hi)
-        }
-        val strOk = rtStrRanges.get(k).forall { case (lo, hi) =>
-          val b = v.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          (lo == null || graft.core.MinMax.compareBytes(b, lo) >= 0) &&
-            (hi == null || graft.core.MinMax.compareBytes(b, hi) <= 0)
-        }
-        longOk && strOk
-      }
+      case (_, kvs) => kvs.forall { case (k, v) => rt.admitsPartition(k, v) }
     }
     if (files.length > GraftScan.FooterPlanLimit)
       files.map { case (p, kvs) =>
@@ -691,13 +517,13 @@ final class GraftScan(dir: String, schema: StructType,
     else files.flatMap { case (p, kvs) =>
       val meta = ParquetFileReader.readFooterOnly(p)
       val flatOk = GraftFlatScan.isFlat(meta)
-      GraftFlatScan.pruneRowGroups(meta, null, rtRanges, rtStrRanges).map(rg =>
+      GraftFlatScan.pruneRowGroups(meta, null, rt).map(rg =>
         GraftFilePartition(p, Seq(rg), flatOk, kvs): InputPartition)
     }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(schema, rtRanges, limit, rtStrRanges, rtEqProbes)
+    new GraftReaderFactory(schema, rt, limit)
 
   /** Exact row count + uncompressed byte size from footer tails only —
     * feeds Catalyst's join planning (a small graft-parquet table becomes
@@ -789,20 +615,22 @@ private[sources] object GraftFlatScan {
   /** Row groups surviving the pushed ranges (planning-time list reused
     * when present — re-filtering stat ranges is a no-op). */
   def pruneRowGroups(meta: PqFileMeta, plannedRgs: Seq[Int],
-      ranges: Map[String, (Long, Long)],
-      strRanges: Map[String, (Array[Byte], Array[Byte])]): Seq[Int] = {
-    var rgs: Seq[Int] =
-      if (plannedRgs != null) plannedRgs else meta.rowGroups.indices
-    ranges.foreach { case (col, (lo, hi)) =>
-      val keep = ParquetFileReader.rowGroupsInRange(meta, col, lo, hi).toSet
-      rgs = rgs.filter(keep)
+      bounds: ScanBounds): Seq[Int] =
+    bounds.ranges.foldLeft(if (plannedRgs != null) plannedRgs else meta.rowGroups.indices) {
+      case (rgs, (col, (lo, hi))) =>
+        rgs.intersect(ParquetFileReader.rowGroupsOverlapping(meta, col, lo, hi))
     }
-    strRanges.foreach { case (col, (lo, hi)) =>
-      val keep =
-        ParquetFileReader.rowGroupsInRangeBytes(meta, col, lo, hi).toSet
-      rgs = rgs.filter(keep)
-    }
-    rgs
+
+  /** One task's footer, the row groups it reads (the planned ones, or
+    * all, that pass the footer stats and then the bloom filters) and the
+    * bounds on its file's own columns: partition-column bounds were
+    * resolved against directory names at planning. */
+  def taskRowGroups(fp: GraftFilePartition,
+      bounds: ScanBounds): (PqFileMeta, Seq[Int], ScanBounds) = {
+    val meta = ParquetFileReader.readFooterOnly(fp.path)
+    val fileBounds = bounds.withoutColumns(fp.partValues.map(_._1).toSet)
+    (meta, bloomPrune(fp.path, meta, pruneRowGroups(meta, fp.rgs, fileBounds),
+      fileBounds.probes), fileBounds)
   }
 
   /** Bloom-filter row-group pruning for pushed equality/IN conjuncts:
@@ -813,16 +641,16 @@ private[sources] object GraftFlatScan {
     * Chunks without a filter (or with an unparseable one) always survive;
     * residual Spark filters keep semantics exact either way. */
   def bloomPrune(path: String, meta: PqFileMeta, rgs: Seq[Int],
-      eqProbes: Seq[(String, Seq[Any])]): Seq[Int] = {
-    if (eqProbes.isEmpty || rgs.isEmpty) return rgs
-    val anyBloom = rgs.exists(rg => eqProbes.exists { case (c, _) =>
+      probes: Seq[(String, Seq[Any])]): Seq[Int] = {
+    if (probes.isEmpty || rgs.isEmpty) return rgs
+    val anyBloom = rgs.exists(rg => probes.exists { case (c, _) =>
       ParquetFileReader.chunkFor(meta, rg, c).exists(_.bloomOffset >= 0)
     })
     if (!anyBloom) return rgs
     val in = GraftIO.forPath(path).open(path)
     try {
       rgs.filter { rg =>
-        eqProbes.forall { case (col, values) =>
+        probes.forall { case (col, values) =>
           ParquetFileReader.chunkFor(meta, rg, col) match {
             case Some(cm) if cm.bloomOffset >= 0 =>
               val hashes = values.flatMap(v => Sbbf.hashForType(cm.typ, v))
@@ -846,9 +674,7 @@ private[sources] object GraftFlatScan {
     * kept row count. Residual Spark-side filters re-apply afterwards, so a
     * stat-less page surviving is only a missed skip, never a wrong row. */
   def columnBatch(fetch: ParquetFileReader.ChunkFetcher, meta: PqFileMeta,
-      rg: Int, fields: Array[StructField],
-      ranges: Map[String, (Long, Long)],
-      strRanges: Map[String, (Array[Byte], Array[Byte])]):
+      rg: Int, fields: Array[StructField], bounds: ScanBounds):
       (Array[(ColVec, Array[Int])], Int) = {
     // fetched (buffer, rebased meta) per column name: a filter column that
     // is also projected reads its byte range once, not twice
@@ -876,16 +702,10 @@ private[sources] object GraftFlatScan {
         val (b, rcm) = fetched(c, cm)
         ParquetFileReader.pageRowRanges(b, rcm, keepFn)
       }
-    ranges.foreach { case (c, (lo, hi)) =>
+    bounds.ranges.foreach { case (c, (lo, hi)) =>
       ParquetFileReader.chunkFor(meta, rg, c).foreach { cm =>
         keep = ParquetFileReader.intersectRowRanges(keep,
-          colRanges(c, cm, st => ParquetFileReader.intStatsOverlap(st, lo, hi)))
-      }
-    }
-    strRanges.foreach { case (c, (lo, hi)) =>
-      ParquetFileReader.chunkFor(meta, rg, c).foreach { cm =>
-        keep = ParquetFileReader.intersectRowRanges(keep,
-          colRanges(c, cm, st => ParquetFileReader.byteStatsOverlap(st, lo, hi)))
+          colRanges(c, cm, ParquetFileReader.statsOverlap(cm.typ, _, lo, hi)))
       }
     }
     if (keep.isEmpty) return (Array.empty, 0)
@@ -903,16 +723,10 @@ private[sources] object GraftFlatScan {
   }
 }
 
-final class GraftReaderFactory(schema: StructType,
-    ranges: Map[String, (Long, Long)], limit: Int = -1,
-    strRanges: Map[String, (Array[Byte], Array[Byte])] = Map.empty,
-    eqProbes: Seq[(String, Seq[Any])] = Nil)
-    extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val fp = p.asInstanceOf[GraftFilePartition]
-    new GraftPartitionReader(fp.path, schema, ranges, limit, strRanges,
-      fp.rgs, fp.partValues, eqProbes)
-  }
+final class GraftReaderFactory(schema: StructType, bounds: ScanBounds,
+    limit: Int = -1) extends PartitionReaderFactory {
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    new GraftPartitionReader(p.asInstanceOf[GraftFilePartition], schema, bounds, limit)
 
   /** Columnar path: every flat file (stamped at planning) with a column to
     * read. Spark then plans a codegen'd ColumnarToRow instead of this
@@ -921,11 +735,9 @@ final class GraftReaderFactory(schema: StructType,
     p.asInstanceOf[GraftFilePartition].flatOk && schema.nonEmpty
 
   override def createColumnarReader(p: InputPartition):
-      PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val fp = p.asInstanceOf[GraftFilePartition]
-    new GraftColumnarPartitionReader(fp.path, schema, ranges, limit,
-      strRanges, fp.rgs, fp.partValues, eqProbes)
-  }
+      PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
+    new GraftColumnarPartitionReader(p.asInstanceOf[GraftFilePartition], schema,
+      bounds, limit)
 }
 
 /** Vectorized scan output: one ColumnarBatch per (pruned) row group, with
@@ -934,36 +746,26 @@ final class GraftReaderFactory(schema: StructType,
   * behind a [[GraftColumnVector]] — no external Row, no per-value boxing,
   * and string bytes never materialize a java.lang.String. Partition
   * columns become constant vectors. */
-final class GraftColumnarPartitionReader(path: String, schema: StructType,
-    ranges: Map[String, (Long, Long)], limit: Int,
-    strRanges: Map[String, (Array[Byte], Array[Byte])],
-    plannedRgs: Seq[Int],
-    partValues: Seq[(String, String)] = Nil,
-    eqProbes: Seq[(String, Seq[Any])] = Nil)
+final class GraftColumnarPartitionReader(fp: GraftFilePartition,
+    schema: StructType, bounds: ScanBounds, limit: Int)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
   import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
   import org.apache.spark.sql.vectorized.ColumnarBatch
 
-  private val partMap = partValues.toMap
+  private val partMap = fp.partValues.toMap
   private val fileFields = schema.fields.filter(f => !partMap.contains(f.name))
-  private val fileRanges = ranges.filter(kv => !partMap.contains(kv._1))
-  private val fileStrRanges = strRanges.filter(kv => !partMap.contains(kv._1))
-  private val fileEqProbes = eqProbes.filter(p => !partMap.contains(p._1))
-
-  private val meta = ParquetFileReader.readFooterOnly(path)
-  private val rgIt = GraftFlatScan.bloomPrune(path, meta,
-    GraftFlatScan.pruneRowGroups(meta, plannedRgs, fileRanges, fileStrRanges),
-    fileEqProbes).iterator
+  private val (meta, rgs, fileBounds) = GraftFlatScan.taskRowGroups(fp, bounds)
+  private val rgIt = rgs.iterator
   private var remaining = if (limit >= 0) limit else Int.MaxValue
   private var batch: ColumnarBatch = _
 
   override def next(): Boolean = {
     if (batch != null) { batch.close(); batch = null }
     while (rgIt.hasNext && remaining > 0) {
-      val fetch = new ParquetFileReader.ChunkFetcher(path)
+      val fetch = new ParquetFileReader.ChunkFetcher(fp.path)
       val (cols, n0) =
         try GraftFlatScan.columnBatch(fetch, meta, rgIt.next(), fileFields,
-          fileRanges, fileStrRanges)
+          fileBounds)
         finally fetch.close()
       val n = math.min(n0, remaining)
       if (n > 0) {
@@ -1158,36 +960,23 @@ object GraftColumnVector {
   }
 }
 
-final class GraftPartitionReader(path: String, schema: StructType,
-    ranges: Map[String, (Long, Long)], limit: Int = -1,
-    strRanges: Map[String, (Array[Byte], Array[Byte])] = Map.empty,
-    plannedRgs: Seq[Int] = null,
-    partValues: Seq[(String, String)] = Nil,
-    eqProbes: Seq[(String, Seq[Any])] = Nil)
-    extends PartitionReader[InternalRow] {
+final class GraftPartitionReader(fp: GraftFilePartition, schema: StructType,
+    bounds: ScanBounds, limit: Int = -1) extends PartitionReader[InternalRow] {
 
   private val toCatalyst =
     CatalystTypeConverters.createToCatalystConverter(schema)
-  private val partMap = partValues.toMap
+  private val partMap = fp.partValues.toMap
   // requested fields that live in the FILE vs in the directory path
   private val fileFields = schema.fields.filter(f => !partMap.contains(f.name))
   private def partConst(f: StructField): Any = {
     val v = partMap(f.name)
     if (f.dataType == LongType) v.toLong else v
   }
-  // pushed ranges on file columns only — partition-column ranges were
-  // already resolved at planning (whole directories dropped)
-  private val fileRanges = ranges.filter(kv => !partMap.contains(kv._1))
-  private val fileStrRanges = strRanges.filter(kv => !partMap.contains(kv._1))
-  private val fileEqProbes = eqProbes.filter(p => !partMap.contains(p._1))
 
   private val it: Iterator[InternalRow] = {
     // footer tail only — data bytes are fetched per projected chunk below,
     // so a k-of-n column projection reads k/n of the file's data I/O
-    val meta = ParquetFileReader.readFooterOnly(path)
-    val rgs = GraftFlatScan.bloomPrune(path, meta,
-      GraftFlatScan.pruneRowGroups(meta, plannedRgs, fileRanges, fileStrRanges),
-      fileEqProbes)
+    val (meta, rgs, _) = GraftFlatScan.taskRowGroups(fp, bounds)
     val proj = fileFields.map(_.name).toSet
     // rgs.iterator keeps row-group decode lazy: a pushed limit stops
     // before trailing row groups are ever decompressed
@@ -1202,7 +991,7 @@ final class GraftPartitionReader(path: String, schema: StructType,
           Iterator.fill(meta.rowGroups(rg).numRows.toInt)(row)
         }
       else rgs.iterator.flatMap { rg =>
-        val fetch = new ParquetFileReader.ChunkFetcher(path)
+        val fetch = new ParquetFileReader.ChunkFetcher(fp.path)
         // readRowsFetched materializes the row group before returning,
         // so the fetcher can close eagerly
         val groupRows =

@@ -650,19 +650,17 @@ object ParquetFileReader {
     meta.rowGroups(rg).columns.find(c =>
       c.pathInSchema.headOption.contains(colName))
 
-  /** Row groups whose `col` [min,max] may intersect [lo,hi] — INT32/INT64
-    * stat encoding (LE). Groups without usable stats are kept (sound). */
-  def rowGroupsInRange(meta: PqFileMeta, colName: String, lo: Long,
-      hi: Long): Seq[Int] =
-    meta.rowGroups.indices.filter(rg => chunkFor(meta, rg, colName)
-      .flatMap(_.stats).forall(intStatsOverlap(_, lo, hi)))
+  /** Row groups that may hold a `colName` value in [lo, hi], by
+    * [[statsOverlap]]; a group without the chunk or its stats is kept. */
+  def rowGroupsOverlapping(meta: PqFileMeta, colName: String, lo: Any,
+      hi: Any): Seq[Int] =
+    meta.rowGroups.indices.filter(rg => chunkFor(meta, rg, colName).forall(cm =>
+      cm.stats.forall(statsOverlap(cm.typ, _, lo, hi))))
 
-  /** Row groups whose [min,max] byte stats may intersect [lo,hi], by
-    * [[byteStatsOverlap]]; a group without stats is kept. */
+  /** [[rowGroupsOverlapping]] with byte-string bounds. */
   def rowGroupsInRangeBytes(meta: PqFileMeta, colName: String,
       lo: Array[Byte], hi: Array[Byte]): Seq[Int] =
-    meta.rowGroups.indices.filter(rg => chunkFor(meta, rg, colName)
-      .flatMap(_.stats).forall(byteStatsOverlap(_, lo, hi)))
+    rowGroupsOverlapping(meta, colName, lo, hi)
 
   /** Assembled records from only the row groups surviving a [lo,hi] range
     * predicate on an INT32/INT64 column. */
@@ -674,7 +672,7 @@ object ParquetFileReader {
     val fetch = new ChunkFetcher(path)
     try {
       // pruned row groups are never read from disk, not just never decoded
-      val rows = rowGroupsInRange(meta, colName, lo, hi)
+      val rows = rowGroupsOverlapping(meta, colName, lo, hi)
         .flatMap(rg => readRowsFetched(fetch, meta, rg))
       (names, rows.toIndexedSeq)
     } finally fetch.close()
@@ -699,19 +697,27 @@ object ParquetFileReader {
     (dict.fold(-1L)(_.off.toLong), spans)
   }
 
-  /** May an INT32/INT64 stats pair hold a value in [lo, hi]? The shared
-    * kernel [[MinMax.overlaps]]; an empty side keeps. */
-  def intStatsOverlap(st: PqStats, lo: Long, hi: Long): Boolean =
-    MinMax.overlaps(PhysicalType.Int64, st.min, st.max, lo, hi)
+  /** May the stats of a chunk or page of Parquet type `typ` hold a value
+    * in [lo, hi]? The one file adapter over [[MinMax.overlaps]], bounds as
+    * [[ScanBounds]] holds them: Longs for INT32/INT64, UTF-8 bytes for
+    * BYTE_ARRAY (unsigned lexicographic, sound under stat truncation).
+    * Other types, bounds of the other form and byte stats whose order is
+    * untrusted ([[PqStats.byteOrderTrusted]]: old writers signed-compared
+    * them) keep. */
+  def statsOverlap(typ: Int, st: PqStats, lo: Any, hi: Any): Boolean = {
+    def bytes(b: Any) = b.isInstanceOf[Array[Byte]]
+    val pt = typ match {
+      case PqType.Int32 | PqType.Int64 if !bytes(lo) && !bytes(hi) => PhysicalType.Int64
+      case PqType.ByteArray if (lo == null || bytes(lo)) && (hi == null || bytes(hi)) &&
+          st.byteOrderTrusted => PhysicalType.Bytes
+      case _ => -1
+    }
+    pt < 0 || MinMax.overlaps(pt, st.min, st.max, lo, hi)
+  }
 
-  /** May byte stats hold a value in [lo, hi] (unsigned lexicographic; null
-    * side unbounded)? The shared kernel [[MinMax.overlaps]], which is
-    * conservative under stat truncation (stored min ≤ real min, stored
-    * max ≥ real max). Stats whose byte order is untrusted always keep:
-    * legacy-only stats unless min == max, since old writers
-    * signed-compared binary stats (see [[PqStats.byteOrderTrusted]]). */
+  /** [[statsOverlap]] for BYTE_ARRAY stats. */
   def byteStatsOverlap(st: PqStats, lo: Array[Byte], hi: Array[Byte]): Boolean =
-    !st.byteOrderTrusted || MinMax.overlaps(PhysicalType.Bytes, st.min, st.max, lo, hi)
+    statsOverlap(PqType.ByteArray, st, lo, hi)
 
   /** Chunk row ranges (ascending, disjoint, end-exclusive) covered by the
     * pages whose statistics pass `keep`; stat-less pages always pass. */

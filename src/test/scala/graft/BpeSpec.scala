@@ -50,6 +50,30 @@ class BpeSpec extends AnyFunSuite {
     assert(multi.encodeChars("abab").toSeq == Seq("abab"))
   }
 
+  test("two merges never produce one symbol") {
+    // (a,bc) and (ab,c) both concatenate to "abc"; with (abc,ab) ranked
+    // between them the indexed encoder and the rescan loop part ways on
+    // ab|c|ab|c ([abcab, c] against [abc, abc]), so the table is refused
+    val e = intercept[IllegalArgumentException] {
+      new Bpe.Table(Seq(Bpe.Merge("a", "bc", "abc"),
+        Bpe.Merge("abc", "ab", "abcab"), Bpe.Merge("ab", "c", "abc")))
+    }
+    assert(e.getMessage.contains("abc"), e.getMessage)
+    // the same merges named the way learn() names them stay apart, and the
+    // two encoders agree
+    val taken = scala.collection.mutable.Set.empty[String]
+    val tbl = new Bpe.Table(Seq(("a", "b"), ("b", "c"), ("a", "bc"),
+      ("abc", "ab"), ("ab", "c")).map { case (l, r) =>
+      val out = Bpe.outName(l, r, taken)
+      taken += out
+      Bpe.Merge(l, r, out)
+    })
+    assert(tbl.merges.map(_.out) == Seq("ab", "bc", "abc", "abcab", "abc#1"))
+    val in = Array("ab", "c", "ab", "c")
+    assert(tbl.encode(in).toSeq == tbl.encodeReference(in).toSeq)
+    assert(tbl.encode(in).toSeq == Seq("abc#1", "abc#1"))
+  }
+
   test("indexed encoder == rescan reference on randomized learned-shape tables") {
     // the differential property q_token_bpe_learned relies on: the heap+
     // linked-list encoder and the round-4 full-rescan loop agree symbol
@@ -68,8 +92,9 @@ class BpeSpec extends AnyFunSuite {
         val r = syms(rng.nextInt(syms.length))
         if (!seen((l, r)) && (l + r).length <= 8) {
           seen += ((l, r))
-          merges += Bpe.Merge(l, r, l + r)
-          syms += (l + r)
+          val out = Bpe.outName(l, r, syms.contains)
+          merges += Bpe.Merge(l, r, out)
+          syms += out
         }
         guard += 1
       }

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.core.CodecId
 import graft.functions.TextOps
 import graft.operators._
-import graft.sources.CodeTableGen
+import graft.sources.{CodeTableGen, ScanBounds}
 
 class SparkE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -1276,9 +1276,9 @@ class SparkE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     // a pushed range prunes to surviving row groups, exact filter on top
     val got = back.where(col("id").between(100, 150)).count()
     assert(got == 51)
-    def tasks(ranges: Map[String, (Long, Long)]) =
-      new GraftScan(dir, back.schema, ranges).planInputPartitions().length
-    assert(tasks(Map("id" -> ((100L, 150L)))) < tasks(Map.empty)) // some groups actually pruned
+    def tasks(bounds: ScanBounds) =
+      new GraftScan(dir, back.schema, bounds).planInputPartitions().length
+    assert(tasks(ScanBounds.empty.narrow("id", 100L, 150L)) < tasks(ScanBounds.empty)) // some groups actually pruned
     // column-pruned read (reordered projection)
     val proj = back.select("amt", "id")
     assert(proj.schema.fieldNames.toSeq == Seq("amt", "id"))
@@ -1327,14 +1327,14 @@ class SparkE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     val dfS = spark.read.format(GraftParquetFormat.Name).load(dirS)
     val qs = dfS.where(col("lang") === "de").select("doc_id", "lang")
     val planS = qs.queryExecution.executedPlan.toString
-    assert(planS.contains("strRanges=lang:[de,de]"), planS)
+    assert(planS.contains("ranges=lang:[de,de]"), planS)
     assert(qs.count() == docs.where(col("lang") === "de").count())
     val qp = dfS.where(col("lang").startsWith("e")).select("doc_id")
     val planP = qp.queryExecution.executedPlan.toString
-    assert(planP.contains("strRanges=lang:[e,f]"), planP)
+    assert(planP.contains("ranges=lang:[e,f]"), planP)
     assert(qp.count() == docs.where(col("lang").startsWith("e")).count())
     val qr = dfS.where(col("lang") >= "fr").select("doc_id")
-    assert(qr.queryExecution.executedPlan.toString.contains("strRanges=lang:[fr,*]"))
+    assert(qr.queryExecution.executedPlan.toString.contains("ranges=lang:[fr,*]"))
     assert(qr.count() == docs.where(col("lang") >= "fr").count())
   }
 
@@ -1410,10 +1410,10 @@ class SparkE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
       rowGroupRows = 10000).count()
     val df = spark.read.format(GraftParquetFormat.Name).load(dir)
     // 5 row groups in one file ⇒ 5 tasks: one big file parallelizes
-    assert(new GraftScan(dir, df.schema, Map.empty)
+    assert(new GraftScan(dir, df.schema, ScanBounds.empty)
       .planInputPartitions().length == 5)
     // a pushed range covering one group ⇒ ONE task planned, not 5
-    assert(new GraftScan(dir, df.schema, Map("id" -> (42000L, 42999L)))
+    assert(new GraftScan(dir, df.schema, ScanBounds.empty.narrow("id", 42000L, 42999L))
       .planInputPartitions().length == 1)
     // end-to-end over the multi-task scan stays value-exact
     assert(df.rdd.getNumPartitions == 5)
@@ -1450,9 +1450,8 @@ class SparkE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     // partition's files get tasks
     val one = subdirs.head.stripPrefix("lang=")
     val lo = one.getBytes("UTF-8")
-    val pruned = new GraftScan(dir, df.schema, Map.empty,
-      strRanges = Map("lang" -> (lo, lo)))
-    val all = new GraftScan(dir, df.schema, Map.empty)
+    val pruned = new GraftScan(dir, df.schema, ScanBounds.empty.narrow("lang", lo, lo))
+    val all = new GraftScan(dir, df.schema, ScanBounds.empty)
     assert(pruned.planInputPartitions().length <
       all.planInputPartitions().length)
     val q = df.where(col("lang") === one)
@@ -1485,13 +1484,13 @@ class SparkE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     // envelope lands in the scan (ranges=) and planning keeps ONE of the
     // five row groups; the exact IN set stays residual
     assert(q.queryExecution.executedPlan.toString.contains("ranges="))
-    assert(new GraftScan(dir, df.schema, Map("id" -> (42000L, 42900L)))
+    assert(new GraftScan(dir, df.schema, ScanBounds.empty.narrow("id", 42000L, 42900L))
       .planInputPartitions().length == 1)
     assert(q.orderBy("id").collect().map(_.getLong(0)).toSeq ==
       Seq(42000L, 42017L, 42900L))
     // string IN envelope
     val qs = df.where(col("k").isin("k0001000", "k0001999"))
-    assert(qs.queryExecution.executedPlan.toString.contains("strRanges="))
+    assert(qs.queryExecution.executedPlan.toString.contains("ranges=k:[k0001000,k0001999]"))
     assert(qs.collect().map(_.getString(1)).sorted.toSeq ==
       Seq("k0001000", "k0001999"))
   }
@@ -1812,7 +1811,7 @@ class SparkE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     // narrowed planning keeps only row groups overlapping [42, 57]: with
     // 200-row groups over sorted doc_ids that is 1 of many
     val planned = scans.get.planInputPartitions().length
-    val total = new graft.sources.GraftScan(dir, fact.schema, Map.empty)
+    val total = new graft.sources.GraftScan(dir, fact.schema)
       .planInputPartitions().length
     assert(total > 5 && planned < total,
       s"expected runtime-narrowed plan < $total tasks, got $planned")
@@ -2292,7 +2291,7 @@ class SparkE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
       ParquetFileWriter.writeFile(f"$dir/f-$i%05d.parquet", schema,
         one.iterator)
     }
-    val scan = new GraftScan(dir, schema, Map.empty)
+    val scan = new GraftScan(dir, schema, ScanBounds.empty)
     val t0 = System.nanoTime()
     val stats = scan.estimateStatistics()
     val ms = (System.nanoTime() - t0) / 1e6

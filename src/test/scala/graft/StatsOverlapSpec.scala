@@ -10,8 +10,8 @@ import graft.sources.{ParquetFileReader, PqColumnMeta, PqFileMeta, PqRowGroup,
 /** Property test of the one stats-range predicate, [[MinMax.overlaps]],
   * through every adapter over it: the `GC` chunk test
   * (`DecodeJob.statsOverlap`), the page-level file tests
-  * (`intStatsOverlap`, `byteStatsOverlap`) and the row-group file tests
-  * (`rowGroupsInRange`, `rowGroupsInRangeBytes`).
+  * (`statsOverlap`, `byteStatsOverlap`) and the row-group file tests
+  * (`rowGroupsOverlapping`, `rowGroupsInRangeBytes`).
   *
   * Seeded random vectors with nulls, all-null chunks, ±0.0, NaN, empty
   * stats, open bounds and byte values long enough to have truncated stats
@@ -97,16 +97,18 @@ class StatsOverlapSpec extends AnyFunSuite {
       if (disjoint) assert(!keepChunk, s"disjoint chunk kept: $ctx")
       if (!keepChunk) pruned += 1
       // the file adapters: INT32/INT64 stats with long bounds, open ends
-      // as the scan passes them (Long.MinValue / Long.MaxValue)
+      // as the scan passes them (null)
       if (pt == PhysicalType.Int32 || pt == PhysicalType.Int64) {
-        val fl = if (loB == null) Long.MinValue else loB.asInstanceOf[Long]
-        val fh = if (hiB == null) Long.MaxValue else hiB.asInstanceOf[Long]
         val pst = PqStats(st._1, st._2, nulls.toLong)
-        val keepPage = ParquetFileReader.intStatsOverlap(pst, fl, fh)
         val typ = if (pt == PhysicalType.Int32) PqType.Int32 else PqType.Int64
+        val keepPage = ParquetFileReader.statsOverlap(typ, pst, loB, hiB)
+        // an end at the type's extreme reads like an open one
+        assert(keepPage == ParquetFileReader.statsOverlap(typ, pst,
+          if (loB == null) Long.MinValue else loB,
+          if (hiB == null) Long.MaxValue else hiB), s"extreme bound: $ctx")
         val meta = footer(typ, Seq(Some(pst), None, Some(PqStats(
           Array.emptyByteArray, Array.emptyByteArray, 1L))))
-        val rgs = ParquetFileReader.rowGroupsInRange(meta, "c", fl, fh)
+        val rgs = ParquetFileReader.rowGroupsOverlapping(meta, "c", loB, hiB)
         assert(rgs.contains(1) && rgs.contains(2), s"stat-less group pruned: $ctx")
         if (inRange) assert(keepPage && rgs.contains(0), s"file pruned an in-range value: $ctx")
         if (disjoint) assert(!keepPage && !rgs.contains(0), s"disjoint file stats kept: $ctx")

@@ -465,6 +465,34 @@ class HardeningSpec extends AnyFunSuite {
     }
   }
 
+  test("a forged DELTA_BINARY_PACKED header fails naming the stream, before allocating") {
+    def forged(blockSize: Long, miniBlocks: Long, total: Long): Array[Byte] = {
+      val w = new BitWriter(16)
+      w.putVlq(blockSize)
+      w.putVlq(miniBlocks)
+      w.putVlq(total)
+      w.putZigZagVlq(7L)
+      w.result() ++ Array.fill[Byte](64)(0)
+    }
+    // the honest header shape decodes
+    assert(DeltaBinaryPackedDecoder.decode(forged(128, 4, 1), int32 = true).toSeq == Seq(7L))
+    Seq(
+      (forged(128, 0, 5), "0 miniblocks"), // was a division by zero
+      (forged(1L << 28, 4, 5), "block size 268435456"), // was a 512 MB miniblock buffer
+      (forged(128, 4, 0xFFFFFFFFL), "4294967295 values"), // was total -1
+      (forged(128, 4, 1L << 28), "268435456 values") // was a 2 GB buffer
+    ).foreach { case (bytes, what) =>
+      val e = intercept[IllegalArgumentException](
+        DeltaBinaryPackedDecoder.decode(bytes, int32 = false))
+      assert(e.getMessage.contains("DELTA_BINARY_PACKED") &&
+        e.getMessage.contains(what), e.getMessage)
+    }
+    // the spec's block grammar: a multiple of 128, miniblocks of 32k values
+    Seq(forged(100, 4, 5), forged(128, 3, 5), forged(128, 8, 5)).foreach { b =>
+      intercept[IllegalArgumentException](DeltaBinaryPackedDecoder.decode(b, int32 = true))
+    }
+  }
+
   test("a PLAIN byte page is read only up to its own end") {
     // page 1's last value claims 6 bytes: 3 of its own and 3 of page 2
     val page1 = PlainCodec.encode(BytesVec.of(Seq("abc", "def").map(_.getBytes("UTF-8"))))

@@ -467,7 +467,7 @@ class ParquetInteropSpec extends AnyFunSuite {
     // index-derived row ranges == header-walk row ranges for a point range
     val idCm = meta.rowGroups.head.columns.head
     val keepFn = (st: PqStats) =>
-      ParquetFileReader.intStatsOverlap(st, 100000L, 100100L)
+      ParquetFileReader.statsOverlap(PqType.Int64, st, 100000L, 100100L)
     val viaIdx = ParquetFileReader.indexRowRanges(
       ParquetMeta.parseColumnIndex(bytes, idCm.columnIndexOffset.toInt),
       ParquetMeta.parseOffsetIndex(bytes, idCm.offsetIndexOffset.toInt),
@@ -492,8 +492,7 @@ class ParquetInteropSpec extends AnyFunSuite {
     try {
       val (vals, kept) = GraftFlatScan.columnBatch(fetch2, meta, 0,
         Array(StructField("txt", StringType)),
-        ranges = Map("id" -> ((100000L, 100100L))),
-        strRanges = Map.empty)
+        ScanBounds.empty.narrow("id", 100000L, 100100L))
       assert(kept > 0 && kept < n, s"kept $kept")
       val txt = vals.head._1.asInstanceOf[graft.core.BytesVec]
       val got = (0 until txt.length).map(i =>
@@ -654,9 +653,9 @@ class ParquetInteropSpec extends AnyFunSuite {
     assert(new String(stName.min, "UTF-8") == "name-0300")
     assert(stName.nullCount > 0)
 
-    assert(ParquetFileReader.rowGroupsInRange(meta, "id", 250, 420) ==
+    assert(ParquetFileReader.rowGroupsOverlapping(meta, "id", 250L, 420L) ==
       Seq(2, 3, 4))
-    assert(ParquetFileReader.rowGroupsInRange(meta, "id", 5000, 6000).isEmpty)
+    assert(ParquetFileReader.rowGroupsOverlapping(meta, "id", 5000L, 6000L).isEmpty)
     assert(ParquetFileReader.rowGroupsInRangeBytes(meta, "name",
       "name-0500".getBytes, "name-0501".getBytes) == Seq(5))
     // unbounded sides (null) — the DSv2 string-filter pruning shapes
@@ -815,7 +814,7 @@ class ParquetInteropSpec extends AnyFunSuite {
       // a narrow id window survives in far fewer rows than the chunk
       val (lo, hi) = (250000L, 250999L)
       val keep = ParquetFileReader.pageRowRanges(bytes, idMeta,
-        st => ParquetFileReader.intStatsOverlap(st, lo, hi))
+        st => ParquetFileReader.statsOverlap(PqType.Int64, st, lo, hi))
       val kept = keep.map(r => r._2 - r._1).sum
       assert(kept < n / 2, s"page pruning kept $kept of $n rows (v$pv)")
       val ids = ParquetFileReader.readColumnRowRanges(bytes,
