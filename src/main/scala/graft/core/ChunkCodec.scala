@@ -41,7 +41,9 @@ final case class EncodedChunk(
   * (1 = present, 0 = null — the flat-OPTIONAL case of the reference's
   * `/root/reference/src/encodings/levels.rs:48-137`, RLE v2 mode, bit
   * width = log2(max_level+1) = 1); value pages then hold only the
-  * non-null values, exactly like Parquet data pages.
+  * non-null values, exactly like Parquet data pages. Versions 3 (LIST) and
+  * 4 (MAP) nest one version-1 chunk per leaf under shared rep/def streams;
+  * [[encodeRepeatedChunk]] gives their layout.
   */
 object ChunkCodec {
   val DataPageSizeLimit: Long = 1L << 20
@@ -333,154 +335,107 @@ object ChunkCodec {
     case _ => CodecId.Dict
   }
 
-  // ----------------------------------------------------------- array chunks
+  /** [[encodeAuto]], or with `forcedCodec >= 0` that one codec (Dict means
+    * dict-with-PLAIN-fallback), whose own size then stands in as the
+    * reference-policy size. */
+  def encodeChunk(vec: ColVec, forcedCodec: Int,
+      defLevels: Array[Byte] = null): EncodedChunk =
+    if (forcedCodec < 0) encodeAuto(vec, defLevels = defLevels)
+    else {
+      val blob = encodeWith(vec, forcedCodec, defLevels)
+      EncodedChunk(blob, forcedCodec, vec.length, vec.rawSize,
+        blob.length.toLong, blob.length.toLong, 0)
+    }
 
-  /** Decoded LIST chunk: null-suppressed element values plus per-slot
-    * repetition (0 = first slot of a row, 1 = continuation) and definition
-    * levels (0 = null array, 1 = empty array, 2 = null element, 3 =
-    * element) — the reference's one-level repeated-field shredding
+  // ------------------------------------------------------- repeated chunks
+
+  /** Decoded LIST or MAP chunk: each leaf's null-suppressed values plus the
+    * shared per-entry repetition (0 = first entry of a row, 1 =
+    * continuation) and definition levels (0 = null row, 1 = empty row, 2 =
+    * entry whose last leaf is null, 3 = entry with every leaf) — the
+    * reference's one-level repeated-field shredding
     * (`/root/reference/src/schema/types.rs:800-854`,
-    * `src/record/reader.rs:346-444`) specialized to flat LIST columns. */
-  final case class DecodedArray(elems: ColVec, rep: Array[Byte],
+    * `src/record/reader.rs:346-444`). A LIST has one leaf (its elements, one
+    * per def 3 entry); a MAP has two, the reference's MAP_KEY_VALUE group: a
+    * required key per def >= 2 entry and an optional value per def 3 entry. */
+  final case class DecodedRepeated(leaves: Array[ColVec], rep: Array[Byte],
       defs: Array[Byte], numRows: Int)
 
-  /** True iff `blob` is a version-3 (LIST) chunk. */
-  def isArrayChunk(blob: Array[Byte]): Boolean =
+  /** True iff `blob` is a repeated (version 3 or 4) chunk. */
+  def isRepeatedChunk(blob: Array[Byte]): Boolean =
     blob.length > 2 && blob(0) == 'G'.toByte && blob(1) == 'C'.toByte &&
-      blob(2) == 3.toByte
+      (blob(2) == 3.toByte || blob(2) == 4.toByte)
 
-  /** Encode a LIST column chunk: rep/def level streams (RLE hybrid, widths
-    * 1 and 2) + a nested element chunk run through the normal auto-selector.
-    * Chunk layout (version 3):
+  /** Leaf names by chunk version, for corrupt-chunk messages. */
+  private val RepeatedLeaves = Map(3L -> ("array", Seq("element")),
+    4L -> ("map", Seq("key", "value")))
+
+  /** Encode a LIST (one leaf) or MAP (key and value leaves) column chunk:
+    * the shared rep/def level streams (RLE hybrid, widths 1 and 2), then
+    * one nested version-1 chunk per leaf, each through [[encodeChunk]]. The
+    * leaf count picks the version and header byte 4:
     * {{{
-    * 'G' 'C' 3 u8(elemPhysicalType) u8(elemPrimaryCodec)
+    * 'G' 'C' 3 u8(elemPhysicalType) u8(elemPrimaryCodec)     -- LIST
+    * 'G' 'C' 4 u8(keyPhysicalType) u8(valPhysicalType)       -- MAP
     * vlq(numRows) vlq(numSlots)
     * vlq(repByteLen) repBytes(RLE w1)
     * vlq(defByteLen) defBytes(RLE w2)
-    * vlq(elemBlobLen) elemBlob(version-1 chunk over non-null elements)
-    * }}} */
-  def encodeArrayChunk(elems: ColVec, rep: Array[Byte], defs: Array[Byte],
-      numRows: Int, forcedElemCodec: Int = -1): EncodedChunk = {
+    * { vlq(leafBlobLen) leafBlob }   -- per leaf: elements | keys, values
+    * }}}
+    * Codec and dictionary size report the first leaf. */
+  def encodeRepeatedChunk(leaves: Array[ColVec], rep: Array[Byte],
+      defs: Array[Byte], numRows: Int, forcedCodec: Int = -1): EncodedChunk = {
     require(rep.length == defs.length, "rep/def stream length mismatch")
-    val inner: EncodedChunk =
-      if (forcedElemCodec >= 0) {
-        val blob = encodeWith(elems, forcedElemCodec)
-        EncodedChunk(blob, forcedElemCodec, elems.length, elems.rawSize,
-          blob.length.toLong, blob.length.toLong, 0)
-      } else encodeAuto(elems)
+    require(leaves.length == 1 || leaves.length == 2,
+      s"a repeated chunk has 1 or 2 leaves, not ${leaves.length}")
+    val inner = leaves.map(encodeChunk(_, forcedCodec))
     val repBytes = RleHybridEncoder.levels(rep, rep.length, 1)
     val defBytes = RleHybridEncoder.levels(defs, defs.length, 2)
-    val w = new BitWriter(inner.blob.length + repBytes.length + defBytes.length + 64)
+    val innerBytes = inner.map(_.blob.length.toLong).sum
+    val w = new BitWriter(math.toIntExact(innerBytes + repBytes.length +
+      defBytes.length + 64))
     w.putAligned('G'.toLong, 1); w.putAligned('C'.toLong, 1)
-    w.putAligned(3L, 1)
-    w.putAligned(elems.physicalType.toLong, 1)
-    w.putAligned(inner.codecId.toLong, 1)
+    w.putAligned(2L + leaves.length, 1)
+    w.putAligned(leaves(0).physicalType.toLong, 1)
+    w.putAligned((if (leaves.length == 1) inner(0).codecId
+      else leaves(1).physicalType).toLong, 1)
     w.putVlq(numRows.toLong)
     w.putVlq(rep.length.toLong)
     w.putVlq(repBytes.length.toLong); w.putBytes(repBytes)
     w.putVlq(defBytes.length.toLong); w.putBytes(defBytes)
-    w.putVlq(inner.blob.length.toLong); w.putBytes(inner.blob)
+    inner.foreach { c => w.putVlq(c.blob.length.toLong); w.putBytes(c.blob) }
     val blob = w.result()
     // the level/header overhead is identical under the reference policy, so
-    // encoded <= refPolicy is inherited from the inner chunk's invariant
-    val overhead = (blob.length - inner.blob.length).toLong
-    EncodedChunk(blob, inner.codecId, numRows,
-      rawSize = 4L * numRows + elems.rawSize,
+    // encoded <= refPolicy is inherited from the inner chunks' invariants
+    val overhead = blob.length - innerBytes
+    EncodedChunk(blob, inner(0).codecId, numRows,
+      rawSize = 4L * numRows + leaves.map(_.rawSize).sum,
       encodedSize = blob.length.toLong,
-      refPolicySize = inner.refPolicySize + overhead,
-      dictEntries = inner.dictEntries)
+      refPolicySize = inner.map(_.refPolicySize).sum + overhead,
+      dictEntries = inner(0).dictEntries)
   }
 
-  /** Decoded MAP chunk: null-suppressed key and value vectors plus per-slot
-    * repetition (0 = first entry of a row, 1 = continuation) and definition
-    * levels (0 = null map, 1 = empty map, 2 = entry with null value, 3 =
-    * entry with value) — the same one-level shredding as LIST with the
-    * repeated group carrying two leaves (key required, value optional), the
-    * reference's MAP_KEY_VALUE structure
-    * (`/root/reference/src/schema/types.rs:800-854`). Keys exist for every
-    * slot with def >= 2; values only for def == 3. */
-  final case class DecodedMap(keys: ColVec, vals: ColVec, rep: Array[Byte],
-      defs: Array[Byte], numRows: Int)
-
-  /** True iff `blob` is a version-4 (MAP) chunk. */
-  def isMapChunk(blob: Array[Byte]): Boolean =
-    blob.length > 2 && blob(0) == 'G'.toByte && blob(1) == 'C'.toByte &&
-      blob(2) == 4.toByte
-
-  /** Encode a MAP column chunk: one rep/def stream pair shared by both
-    * leaves + two nested v1 chunks (keys, non-null values), each through the
-    * normal auto-selector.
-    * Chunk layout (version 4):
-    * {{{
-    * 'G' 'C' 4 u8(keyPhysicalType) u8(valPhysicalType)
-    * vlq(numRows) vlq(numSlots)
-    * vlq(repByteLen) repBytes(RLE w1)
-    * vlq(defByteLen) defBytes(RLE w2)
-    * vlq(keyBlobLen) keyBlob(version-1 chunk, one key per def>=2 slot)
-    * vlq(valBlobLen) valBlob(version-1 chunk, one value per def==3 slot)
-    * }}} */
-  def encodeMapChunk(keys: ColVec, vals: ColVec, rep: Array[Byte],
-      defs: Array[Byte], numRows: Int): EncodedChunk = {
-    require(rep.length == defs.length, "rep/def stream length mismatch")
-    val kInner = encodeAuto(keys)
-    val vInner = encodeAuto(vals)
-    val repBytes = RleHybridEncoder.levels(rep, rep.length, 1)
-    val defBytes = RleHybridEncoder.levels(defs, defs.length, 2)
-    val w = new BitWriter(kInner.blob.length + vInner.blob.length +
-      repBytes.length + defBytes.length + 64)
-    w.putAligned('G'.toLong, 1); w.putAligned('C'.toLong, 1)
-    w.putAligned(4L, 1)
-    w.putAligned(keys.physicalType.toLong, 1)
-    w.putAligned(vals.physicalType.toLong, 1)
-    w.putVlq(numRows.toLong)
-    w.putVlq(rep.length.toLong)
-    w.putVlq(repBytes.length.toLong); w.putBytes(repBytes)
-    w.putVlq(defBytes.length.toLong); w.putBytes(defBytes)
-    w.putVlq(kInner.blob.length.toLong); w.putBytes(kInner.blob)
-    w.putVlq(vInner.blob.length.toLong); w.putBytes(vInner.blob)
-    val blob = w.result()
-    // level/header overhead is policy-invariant, so encoded <= refPolicy is
-    // inherited from the two inner chunks' invariants
-    val overhead = (blob.length - kInner.blob.length - vInner.blob.length).toLong
-    EncodedChunk(blob, kInner.codecId, numRows,
-      rawSize = 4L * numRows + keys.rawSize + vals.rawSize,
-      encodedSize = blob.length.toLong,
-      refPolicySize = kInner.refPolicySize + vInner.refPolicySize + overhead,
-      dictEntries = kInner.dictEntries)
-  }
-
-  def decodeMapChunk(blob: Array[Byte]): DecodedMap = {
+  /** The inverse of [[encodeRepeatedChunk]]; the version gives the leaf
+    * count. */
+  def decodeRepeatedChunk(blob: Array[Byte]): DecodedRepeated = {
     val r = new BitReader(blob)
     require(r.getAligned(1) == 'G'.toLong && r.getAligned(1) == 'C'.toLong,
       "bad chunk magic")
-    require(r.getAligned(1) == 4L, "not a map chunk")
-    r.getAligned(1) // key physical type (the nested blobs self-describe)
-    r.getAligned(1) // value physical type
+    val version = r.getAligned(1)
+    val (container, names) = RepeatedLeaves.getOrElse(version,
+      throw new IllegalArgumentException(s"not an array or map chunk (version $version)"))
+    r.getAligned(1) // first leaf's physical type (the nested blobs self-describe)
+    r.getAligned(1) // element codec or value physical type (informational)
     val numRows = checkedDense(r.getVlq(), blob.length, "row count")
     val numSlots = checkedDense(r.getVlq(), blob.length, "slot count")
     val rep = readLevels(blob, r, numSlots, 1, "rep bytes")
     val defs = readLevels(blob, r, numSlots, 2, "def bytes")
-    val kInner = decodeInner(blob, r, "key blob")
-    require(kInner.defLevels == null, "map key chunk must be version 1")
-    val vInner = decodeInner(blob, r, "value blob")
-    require(vInner.defLevels == null, "map value chunk must be version 1")
-    DecodedMap(kInner.vec, vInner.vec, rep, defs, numRows)
-  }
-
-  def decodeArrayChunk(blob: Array[Byte]): DecodedArray = {
-    val r = new BitReader(blob)
-    require(r.getAligned(1) == 'G'.toLong && r.getAligned(1) == 'C'.toLong,
-      "bad chunk magic")
-    require(r.getAligned(1) == 3L, "not an array chunk")
-    r.getAligned(1) // element physical type (the nested blob self-describes)
-    r.getAligned(1) // element primary codec (informational)
-    val numRows = checkedDense(r.getVlq(), blob.length, "row count")
-    val numSlots = checkedDense(r.getVlq(), blob.length, "slot count")
-    val rep = readLevels(blob, r, numSlots, 1, "rep bytes")
-    val defs = readLevels(blob, r, numSlots, 2, "def bytes")
-    val inner = decodeInner(blob, r, "element blob")
-    require(inner.defLevels == null, "array element chunk must be version 1")
-    DecodedArray(inner.vec, rep, defs, numRows)
+    val leaves = names.map { leaf =>
+      val inner = decodeInner(blob, r, s"$leaf blob")
+      require(inner.defLevels == null, s"$container $leaf chunk must be version 1")
+      inner.vec
+    }
+    DecodedRepeated(leaves.toArray, rep, defs, numRows)
   }
 
   // ----------------------------------------------------------- chunk decode

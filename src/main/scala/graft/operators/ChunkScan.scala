@@ -214,14 +214,10 @@ object ChunkScanExec {
     require(c.blob != null, s"$dt chunk without a blob")
     val blob = BlockCodec.maybeUnwrap(c.blob)
     val (vec, n) = dt match {
-      case at: ArrayType if ChunkCodec.isArrayChunk(blob) =>
-        val d = ChunkCodec.decodeArrayChunk(blob)
-        (GraftColumnVector.list(at, d.elems, d.rep, d.defs, d.numRows), d.numRows)
-      case mt: MapType if ChunkCodec.isMapChunk(blob) =>
-        val d = ChunkCodec.decodeMapChunk(blob)
-        (GraftColumnVector.map(mt, d.keys, d.vals, d.rep, d.defs, d.numRows), d.numRows)
       case _: ArrayType | _: MapType =>
-        throw new IllegalArgumentException(s"$dt column without a nested chunk")
+        require(ChunkCodec.isRepeatedChunk(blob), s"$dt column without a nested chunk")
+        val d = ChunkCodec.decodeRepeatedChunk(blob)
+        (GraftColumnVector.repeated(dt, d.leaves, d.rep, d.defs, d.numRows), d.numRows)
       case _ =>
         // a flat chunk's raw size counts 4 length bytes per non-null value
         val d = ChunkCodec.decodeWithLevels(blob, c.rawBytes - 4 * (c.numValues - c.numNulls))

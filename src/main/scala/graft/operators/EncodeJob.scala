@@ -67,41 +67,26 @@ object EncodeJob {
   val DefaultChunkRows = 16384
   val DefaultChunkRawBytes: Long = 32L * 1024 * 1024
 
-  /** Map a Spark type to our physical type + extractor into column buffers.
-    * LIST columns report their ELEMENT physical type (the chunk blob
-    * self-describes arrayness via its version byte). */
-  private def physicalTypeOf(dt: DataType): Int = dt match {
-    case BooleanType => PhysicalType.Bool
-    case IntegerType | DateType => PhysicalType.Int32
-    case LongType | TimestampType | TimestampNTZType => PhysicalType.Int64
-    case FloatType => PhysicalType.Float
-    case DoubleType => PhysicalType.Double
-    case StringType | BinaryType => PhysicalType.Bytes
-    // unscaled INT64 for precision <= 18, the reference's INT64 DECIMAL
-    // representation (`/root/reference/src/schema/types.rs:312-343`)
-    case dt: DecimalType if dt.precision <= 18 => PhysicalType.Int64
-    // wider decimals: two's-complement big-endian unscaled FLBA bytes
-    case _: DecimalType => PhysicalType.Bytes
-    // container leaves carry ElemBuf's type contract (single-level
-    // nesting, primitive/string leaves) — validate it here so an
-    // unsupported element type fails on the driver, not mid-task inside
-    // ElemBuf on an executor
-    case ArrayType(et, _) => physicalTypeOf(elemLeaf(et, "LIST element"))
-    // a MAP chunk self-describes both leaf types; the manifest column
-    // carries the key's (the prunable side)
-    case MapType(kt, vt, _) =>
-      elemLeaf(vt, "MAP value")
-      physicalTypeOf(elemLeaf(kt, "MAP key"))
-    case other => throw new IllegalArgumentException(
-      s"unsupported column type $other (flat + LIST/MAP schemas only)")
-  }
-
-  /** The leaf types ElemBuf can buffer (LIST elements, MAP keys/values). */
-  private def elemLeaf(dt: DataType, what: String): DataType = dt match {
-    case IntegerType | LongType | FloatType | DoubleType | BooleanType |
-         StringType | BinaryType => dt
-    case other => throw new IllegalArgumentException(
-      s"unsupported $what type $other (primitive/string leaves only)")
+  /** Fail fast on the driver for what a task would otherwise crash on
+    * mid-encode: a column the chunk pipeline doesn't cover (STRUCT is
+    * supported by the parquet FILE writer only), a type the builders
+    * refuse, and a forced codec the encoder would not apply — one for an
+    * unknown column, or for a MAP column, whose key and value leaves can
+    * differ in physical type. */
+  private def checkEncodable(schema: StructType,
+      forcedCodecs: Map[String, Int]): Unit = {
+    schema.fields.foreach(f => f.dataType match {
+      case st: StructType => throw new IllegalArgumentException(
+        s"unsupported column type $st (flat + LIST/MAP schemas only)")
+      case _ =>
+    })
+    ColBuilder.check(schema)
+    forcedCodecs.keys.foreach { name =>
+      val dt = schema.find(_.name == name).map(_.dataType)
+      require(dt.isDefined, s"forcedCodecs names unknown column $name")
+      require(!dt.get.isInstanceOf[MapType], s"forcedCodecs cannot force " +
+        s"MAP column $name: its key and value leaves can differ in physical type")
+    }
   }
 
   /** Salted repartition + deterministic in-partition sort, then
@@ -121,11 +106,7 @@ object EncodeJob {
     val spark = df.sparkSession
     import spark.implicits._
     val schema = df.schema
-    // fail fast on the driver for schemas the CHUNK pipeline doesn't
-    // cover (e.g. STRUCT — supported by the parquet FILE writer only):
-    // otherwise ColBuilder.apply accepts the column and the task crashes
-    // mid-encode on an executor with an opaque builder error
-    schema.fields.foreach(f => physicalTypeOf(f.dataType))
+    checkEncodable(schema, forcedCodecs)
     // Spark forbids hashing MAP columns (same map, different hashcode), so
     // the salt derives from every hashable column; a row's map values still
     // land with it.
@@ -228,39 +209,23 @@ object EncodeJob {
         while (c < nCols) {
           val nRows = builders(c).rowCount
           val nNulls = builders(c).numNulls
-          // (vec, levels for the hash, encoded chunk) per column kind
+          val forced = forcedCodecs.getOrElse(fields(c).name, -1)
+          // (the vec the stats and manifest type read, the hash, the encoded
+          // chunk); a repeated column's vec is its first leaf, for a MAP the
+          // key (the prunable side)
           val (vec, hashHex, chunk) = builders(c) match {
-            case ab: ColBuilder.ArrayBuilder =>
-              val (elems, rep, defsArr) = ab.buildArray()
-              ab.clear()
-              // hash identity = rep stream + def stream + element values
-              val levelId = new Array[Byte](rep.length * 2)
-              System.arraycopy(rep, 0, levelId, 0, rep.length)
-              System.arraycopy(defsArr, 0, levelId, rep.length, defsArr.length)
-              val forced = forcedCodecs.getOrElse(fields(c).name, -1)
-              (elems, ColVecHash.sha256Hex(elems, levelId),
-                ChunkCodec.encodeArrayChunk(elems, rep, defsArr, nRows, forced))
-            case mb: ColBuilder.MapBuilder =>
-              val (keys, vals, rep, defsArr) = mb.buildMap()
-              mb.clear()
-              // hash identity = rep + def streams + keys + values
-              val levelId = new Array[Byte](rep.length * 2)
-              System.arraycopy(rep, 0, levelId, 0, rep.length)
-              System.arraycopy(defsArr, 0, levelId, rep.length, defsArr.length)
-              (keys, ColVecHash.sha256HexPair(keys, vals, levelId),
-                ChunkCodec.encodeMapChunk(keys, vals, rep, defsArr, nRows))
+            case rb: ColBuilder.RepeatedBuilder =>
+              val (leaves, rep, defs) = rb.buildRepeated()
+              rb.clear()
+              // hash identity = rep stream + def stream + each leaf's values
+              (leaves(0), ColVecHash.sha256Hex(leaves.toSeq, rep ++ defs),
+                ChunkCodec.encodeRepeatedChunk(leaves, rep, defs, nRows, forced))
             case b =>
               val v = b.build()
               val levels = b.defLevels
               b.clear()
-              val ch = forcedCodecs.get(fields(c).name) match {
-                case Some(codec) =>
-                  val blob = ChunkCodec.encodeWith(v, codec, levels)
-                  EncodedChunk(blob, codec, v.length, v.rawSize,
-                    blob.length.toLong, blob.length.toLong, 0)
-                case None => ChunkCodec.encodeAuto(v, defLevels = levels)
-              }
-              (v, ColVecHash.sha256Hex(v, levels), ch)
+              (v, ColVecHash.sha256Hex(v, levels),
+                ChunkCodec.encodeChunk(v, forced, levels))
           }
           // optional general-purpose block compression on top of the chunk
           // encoding (reference compression.rs); kept only when it shrinks,
@@ -501,14 +466,17 @@ object EncodeJob {
   * iterators do). Returns the raw-size delta used for chunk-cut accounting.
   * Nulls are tracked as definition levels (0 = null, 1 = present); the
   * value buffer holds only non-null values, mirroring Parquet page
-  * semantics. */
+  * semantics. Nested columns buffer their leaves in these same flat
+  * builders: LIST and MAP through one [[ColBuilder.RepeatedBuilder]],
+  * STRUCT through [[ColBuilder.StructBuilder]], each over the
+  * [[ColBuilder.nestedLeaf]] types. */
 sealed abstract class ColBuilder {
   private var levels = new Array[Byte](1024)
   private var nRows = 0
   private var nNulls = 0
 
-  // overridable (not final): ArrayBuilder replaces the whole row protocol
-  // with slot-level rep/def tracking
+  // overridable (not final): the nested builders replace the whole row
+  // protocol with their own level tracking
   def add(row: SpecializedGetters, i: Int): Long = {
     if (nRows == levels.length) levels = java.util.Arrays.copyOf(levels, nRows << 1)
     if (row.isNullAt(i)) {
@@ -613,88 +581,48 @@ object ColBuilder {
         r.getDecimal(i, dt.precision, dt.scale)
           .toJavaBigDecimal.unscaledValue(), len))
     }
-    case ArrayType(et, _) => new ArrayBuilder(et)
-    case MapType(kt, vt, _) => new MapBuilder(kt, vt)
+    case ArrayType(et, _) =>
+      new RepeatedBuilder(Array(ColBuilder(nestedLeaf(et, "LIST element"))))
+    case MapType(kt, vt, _) =>
+      new RepeatedBuilder(Array(ColBuilder(nestedLeaf(kt, "MAP key")),
+        ColBuilder(nestedLeaf(vt, "MAP value"))))
     case st: StructType => new StructBuilder(st)
     case other => throw new IllegalArgumentException(
       s"unsupported column type $other (flat + LIST/MAP/STRUCT schemas only)")
   }
 
-  /** LIST column buffer: shreds each array row into per-slot rep/def levels
-    * (rep 0 = first slot of the row, 1 = continuation; def 0 = null array,
-    * 1 = empty array, 2 = null element, 3 = element) and appends non-null
-    * element VALUES to a typed element buffer — the write direction of the
-    * reference's record shredding (`/root/reference/src/record/`). */
-  final class ArrayBuilder(elemDt: DataType) extends ColBuilder {
-    private var rep = new Array[Byte](1024)
-    private var defs = new Array[Byte](1024)
-    private var nSlots = 0
-    private var nR = 0
-    private var nN = 0
-    private val elems = ElemBuf(elemDt)
-
-    private def slot(r: Byte, d: Byte): Unit = {
-      if (nSlots == rep.length) {
-        rep = java.util.Arrays.copyOf(rep, nSlots << 1)
-        defs = java.util.Arrays.copyOf(defs, nSlots << 1)
-      }
-      rep(nSlots) = r; defs(nSlots) = d; nSlots += 1
-    }
-
-    override def add(row: SpecializedGetters, i: Int): Long = {
-      nR += 1
-      if (row.isNullAt(i)) { nN += 1; slot(0, 0); 4L }
-      else {
-        val arr = row.getArray(i)
-        val m = arr.numElements()
-        if (m == 0) { slot(0, 1); 4L }
-        else {
-          var delta = 4L
-          var j = 0
-          while (j < m) {
-            val r: Byte = if (j == 0) 0 else 1
-            if (arr.isNullAt(j)) slot(r, 2)
-            else { slot(r, 3); delta += elems.append(arr, j) }
-            j += 1
-          }
-          delta
-        }
-      }
-    }
-
-    override def rowCount: Int = nR
-    override def numNulls: Int = nN
-    override def defLevels: Array[Byte] =
-      throw new UnsupportedOperationException("use buildArray for LIST columns")
-    override def clear(): Unit = { nSlots = 0; nR = 0; nN = 0; elems.clear() }
-
-    def buildArray(): (ColVec, Array[Byte], Array[Byte]) =
-      (elems.build(), java.util.Arrays.copyOf(rep, nSlots),
-        java.util.Arrays.copyOf(defs, nSlots))
-
-    protected def addValue(row: SpecializedGetters, i: Int): Long =
-      throw new UnsupportedOperationException
-    protected def clearValues(): Unit = ()
-    def build(): ColVec = throw new UnsupportedOperationException(
-      "use buildArray for LIST columns")
+  /** The leaf types a nested column can hold (LIST element, MAP key or
+    * value, STRUCT field): single-level nesting, primitive/string leaves.
+    * Returns `dt`, or throws naming `what`. */
+  def nestedLeaf(dt: DataType, what: String): DataType = dt match {
+    case IntegerType | LongType | FloatType | DoubleType | BooleanType |
+         StringType | BinaryType => dt
+    case other => throw new IllegalArgumentException(
+      s"unsupported $what type $other (primitive/string leaves only)")
   }
 
-  /** MAP column buffer: shreds each map row into per-entry rep/def levels
-    * (rep 0 = first entry of the row, 1 = continuation; def 0 = null map,
-    * 1 = empty map, 2 = entry with null value, 3 = entry with value) and
-    * appends keys (every entry) / non-null values to typed buffers — the
-    * repeated key_value group of the reference's MAP shredding
-    * (`/root/reference/src/record/`). Entry order is whatever the incoming
-    * Map iterates; MAP semantics are unordered, and the roundtrip contract
-    * is key-set + per-key-value equality, not entry order. */
-  final class MapBuilder(keyDt: DataType, valDt: DataType) extends ColBuilder {
+  /** Driver-side check of a schema against [[apply]]: throws the
+    * IllegalArgumentException a task would otherwise throw mid-write. */
+  def check(schema: StructType): Unit =
+    schema.fields.foreach(f => ColBuilder(f.dataType).release())
+
+  /** LIST or MAP column buffer, the one repeated-column shredding (the
+    * write direction of the reference's record shredding, its
+    * `src/record/`). A row becomes entries that share one
+    * rep/def stream: rep 0 = first entry of the row, 1 = continuation;
+    * def 0 = null row, 1 = empty row, 2 = entry whose last leaf is null,
+    * 3 = entry with every leaf present. `leaves` are flat builders: a LIST
+    * has one optional leaf (its elements); a MAP has a required key leaf,
+    * which appends at every entry, and an optional value leaf. A leaf
+    * buffers only its non-null values. MAP entry order is whatever the
+    * incoming map iterates; MAP semantics are unordered, and the roundtrip
+    * contract is key-set + per-key-value equality, not entry order. */
+  final class RepeatedBuilder(leaves: Array[ColBuilder]) extends ColBuilder {
     private var rep = new Array[Byte](1024)
     private var defs = new Array[Byte](1024)
     private var nSlots = 0
     private var nR = 0
     private var nN = 0
-    private val keys = ElemBuf(keyDt)
-    private val vals = ElemBuf(valDt)
 
     private def slot(r: Byte, d: Byte): Unit = {
       if (nSlots == rep.length) {
@@ -706,43 +634,43 @@ object ColBuilder {
 
     override def add(row: SpecializedGetters, i: Int): Long = {
       nR += 1
-      if (row.isNullAt(i)) { nN += 1; slot(0, 0); 4L }
-      else {
-        val m = row.getMap(i)
-        val sz = m.numElements()
-        if (sz == 0) { slot(0, 1); 4L }
-        else {
-          val ka = m.keyArray()
-          val va = m.valueArray()
-          var delta = 4L
-          var j = 0
-          while (j < sz) {
-            val r: Byte = if (j == 0) 0 else 1
-            delta += keys.append(ka, j)
-            if (va.isNullAt(j)) slot(r, 2)
-            else { slot(r, 3); delta += vals.append(va, j) }
-            j += 1
-          }
-          delta
-        }
+      if (row.isNullAt(i)) { nN += 1; slot(0, 0); return 4L }
+      // the last leaf's array sets the entry count; a MAP's keys precede it
+      val map = if (leaves.length == 1) null else row.getMap(i)
+      val keys = if (map == null) null else map.keyArray()
+      val last = if (map == null) row.getArray(i) else map.valueArray()
+      val m = last.numElements()
+      if (m == 0) { slot(0, 1); return 4L }
+      var delta = 4L
+      var j = 0
+      while (j < m) {
+        val r: Byte = if (j == 0) 0 else 1
+        val d: Byte = if (last.isNullAt(j)) 2 else 3
+        slot(r, d)
+        if (keys != null) delta += leaves(0).add(keys, j)
+        delta += leaves(leaves.length - 1).add(last, j)
+        j += 1
       }
+      delta
     }
 
     override def rowCount: Int = nR
     override def numNulls: Int = nN
     override def defLevels: Array[Byte] =
-      throw new UnsupportedOperationException("use buildMap for MAP columns")
-    override def clear(): Unit = { nSlots = 0; nR = 0; nN = 0; keys.clear(); vals.clear() }
+      throw new UnsupportedOperationException("use buildRepeated for LIST/MAP columns")
+    override def clear(): Unit = { nSlots = 0; nR = 0; nN = 0; leaves.foreach(_.clear()) }
+    override def release(): Unit = leaves.foreach(_.release())
 
-    def buildMap(): (ColVec, ColVec, Array[Byte], Array[Byte]) =
-      (keys.build(), vals.build(), java.util.Arrays.copyOf(rep, nSlots),
+    /** (each leaf's non-null values, rep levels, def levels). */
+    def buildRepeated(): (Array[ColVec], Array[Byte], Array[Byte]) =
+      (leaves.map(_.build()), java.util.Arrays.copyOf(rep, nSlots),
         java.util.Arrays.copyOf(defs, nSlots))
 
     protected def addValue(row: SpecializedGetters, i: Int): Long =
       throw new UnsupportedOperationException
     protected def clearValues(): Unit = ()
     def build(): ColVec = throw new UnsupportedOperationException(
-      "use buildMap for MAP columns")
+      "use buildRepeated for LIST/MAP columns")
   }
 
   /** STRUCT column buffer: a non-repeated nested group. Every subfield
@@ -750,11 +678,11 @@ object ColBuilder {
     * optional field): per-row def 0 = struct null, 1 = field null,
     * 2 = present — the write direction of the reference's group shredding
     * for flat groups (`/root/reference/src/record/`, no rep levels needed
-    * because nothing repeats). Subfields are restricted to the ElemBuf
-    * primitive types (int/long/float/double/bool/string/binary). */
+    * because nothing repeats). Subfields are [[nestedLeaf]] types. */
   final class StructBuilder(val st: StructType) extends ColBuilder {
     private val n = st.fields.length
-    private val bufs: Array[ElemBuf] = st.fields.map(f => ElemBuf(f.dataType))
+    private val bufs: Array[ColBuilder] =
+      st.fields.map(f => ColBuilder(nestedLeaf(f.dataType, "STRUCT field")))
     private var defs: Array[Array[Byte]] = Array.fill(n)(new Array[Byte](1024))
     private var nR = 0
     private var nN = 0
@@ -777,8 +705,8 @@ object ColBuilder {
         var delta = 0L
         var j = 0
         while (j < this.n) {
-          if (inner.isNullAt(j)) defs(j)(nR - 1) = 1
-          else { defs(j)(nR - 1) = 2; delta += bufs(j).append(inner, j) }
+          defs(j)(nR - 1) = if (inner.isNullAt(j)) 1 else 2
+          delta += bufs(j).add(inner, j)
           j += 1
         }
         delta + n
@@ -792,6 +720,7 @@ object ColBuilder {
     override def clear(): Unit = {
       nR = 0; nN = 0; bufs.foreach(_.clear())
     }
+    override def release(): Unit = bufs.foreach(_.release())
 
     /** Per-subfield (values, def levels); def arrays are `rowCount` long. */
     def buildStruct(): Array[(ColVec, Array[Byte])] =
@@ -803,110 +732,6 @@ object ColBuilder {
     protected def clearValues(): Unit = ()
     def build(): ColVec = throw new UnsupportedOperationException(
       "use buildStruct for STRUCT columns")
-  }
-
-  /** Typed element-value buffer for Array/Map/Struct builders — reads the
-    * value at `ordinal` straight off a catalyst container (ArrayData or a
-    * nested InternalRow both implement SpecializedGetters), no boxing. */
-  private sealed abstract class ElemBuf {
-    def append(g: SpecializedGetters, ordinal: Int): Long
-    def build(): ColVec
-    def clear(): Unit
-  }
-
-  private object ElemBuf {
-    def apply(dt: DataType): ElemBuf = dt match {
-      case IntegerType => new IntEB
-      case LongType => new LongEB
-      case FloatType => new FloatEB
-      case DoubleType => new DoubleEB
-      case BooleanType => new BoolEB
-      case StringType => new BytesEB(fromString = true)
-      case BinaryType => new BytesEB(fromString = false)
-      case other => throw new IllegalArgumentException(
-        s"unsupported LIST-element / STRUCT-field type $other")
-    }
-
-    private final class IntEB extends ElemBuf {
-      private var a = new Array[Int](1024); private var n = 0
-      def append(g: SpecializedGetters, i: Int): Long = {
-        if (n == a.length) a = java.util.Arrays.copyOf(a, n << 1)
-        a(n) = g.getInt(i); n += 1; 4L
-      }
-      def build(): ColVec = IntVec(java.util.Arrays.copyOf(a, n))
-      def clear(): Unit = n = 0
-    }
-    private final class LongEB extends ElemBuf {
-      private var a = new Array[Long](1024); private var n = 0
-      def append(g: SpecializedGetters, i: Int): Long = {
-        if (n == a.length) a = java.util.Arrays.copyOf(a, n << 1)
-        a(n) = g.getLong(i); n += 1; 8L
-      }
-      def build(): ColVec = LongVec(java.util.Arrays.copyOf(a, n))
-      def clear(): Unit = n = 0
-    }
-    private final class FloatEB extends ElemBuf {
-      private var a = new Array[Float](1024); private var n = 0
-      def append(g: SpecializedGetters, i: Int): Long = {
-        if (n == a.length) a = java.util.Arrays.copyOf(a, n << 1)
-        a(n) = g.getFloat(i); n += 1; 4L
-      }
-      def build(): ColVec = FloatVec(java.util.Arrays.copyOf(a, n))
-      def clear(): Unit = n = 0
-    }
-    private final class DoubleEB extends ElemBuf {
-      private var a = new Array[Double](1024); private var n = 0
-      def append(g: SpecializedGetters, i: Int): Long = {
-        if (n == a.length) a = java.util.Arrays.copyOf(a, n << 1)
-        a(n) = g.getDouble(i); n += 1; 8L
-      }
-      def build(): ColVec = DoubleVec(java.util.Arrays.copyOf(a, n))
-      def clear(): Unit = n = 0
-    }
-    private final class BoolEB extends ElemBuf {
-      private var a = new Array[Boolean](1024); private var n = 0
-      def append(g: SpecializedGetters, i: Int): Long = {
-        if (n == a.length) a = java.util.Arrays.copyOf(a, n << 1)
-        a(n) = g.getBoolean(i); n += 1; 1L
-      }
-      def build(): ColVec = BoolVec(java.util.Arrays.copyOf(a, n))
-      def clear(): Unit = n = 0
-    }
-    private final class BytesEB(fromString: Boolean) extends ElemBuf {
-      private var data = new Array[Byte](1 << 14)
-      private var offsets = new Array[Int](1024)
-      private var n = 0
-      offsets(0) = 0
-      def append(g: SpecializedGetters, i: Int): Long = {
-        if (n + 1 == offsets.length)
-          offsets = java.util.Arrays.copyOf(offsets, offsets.length << 1)
-        val end = offsets(n)
-        var len = 0
-        if (fromString) {
-          // UTF8String bytes copy once, row buffer -> arena
-          val u = g.getUTF8String(i)
-          len = u.numBytes()
-          if (end + len > data.length) grow(end + len)
-          u.writeToMemory(data, Platform.BYTE_ARRAY_OFFSET + end)
-        } else {
-          val b = g.getBinary(i)
-          len = b.length
-          if (end + len > data.length) grow(end + len)
-          System.arraycopy(b, 0, data, end, len)
-        }
-        n += 1
-        offsets(n) = end + len
-        4L + len
-      }
-      private def grow(need: Int): Unit = {
-        var cap = data.length << 1
-        while (cap < need) cap <<= 1
-        data = java.util.Arrays.copyOf(data, cap)
-      }
-      def build(): ColVec =
-        BytesVec(data, java.util.Arrays.copyOf(offsets, n + 1))
-      def clear(): Unit = { n = 0; offsets(0) = 0 }
-    }
   }
 
   /** `conv == null` means the column is a STRING: its UTF8String view is
@@ -1026,20 +851,15 @@ object ColBuilder {
   * is decodable-side reproducible). For chunks with nulls the 0/1 def-level
   * bytes are hashed before the values, so validity is part of identity. */
 object ColVecHash {
-  def sha256Hex(vec: ColVec, defLevels: Array[Byte] = null): String = {
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    if (defLevels != null) md.update(defLevels)
-    updateWith(md, vec)
-    other2hex(md.digest())
-  }
+  def sha256Hex(vec: ColVec, defLevels: Array[Byte] = null): String =
+    sha256Hex(Seq(vec), defLevels)
 
-  /** Hash identity for MAP chunks: level streams, then keys, then values. */
-  def sha256HexPair(keys: ColVec, vals: ColVec,
-      levels: Array[Byte]): String = {
+  /** The level bytes (when non-null), then each vector's values in order:
+    * a repeated chunk's identity is its rep + def streams and its leaves. */
+  def sha256Hex(vecs: Seq[ColVec], levels: Array[Byte]): String = {
     val md = java.security.MessageDigest.getInstance("SHA-256")
-    md.update(levels)
-    updateWith(md, keys)
-    updateWith(md, vals)
+    if (levels != null) md.update(levels)
+    vecs.foreach(updateWith(md, _))
     other2hex(md.digest())
   }
 

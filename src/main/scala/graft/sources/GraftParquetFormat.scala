@@ -198,9 +198,11 @@ final class GraftBatchWrite(dir: String, schema: StructType,
     val io = GraftIO.forPath(dir)
     io.mkdirs(dir)
     val codec = PqCodec.parse(codecName)
-    // fail misconfigured per-column props at the DRIVER, before any task —
-    // and BEFORE the Overwrite truncation below: validating after the
-    // delete would destroy the existing table on a typo'd column path
+    // fail unsupported column types and misconfigured per-column props at
+    // the DRIVER, before any task — and BEFORE the Overwrite truncation
+    // below: validating after the delete would destroy the existing table
+    // on a typo'd column path
+    graft.operators.ColBuilder.check(schema)
     if (!props.isEmpty) props.resolveFor(schema, codec)
     if (truncate)
       io.list(dir).filter(e => !e.isDir && e.name.endsWith(".parquet"))
@@ -807,8 +809,8 @@ final class GraftColumnarPartitionReader(fp: GraftFilePartition,
   * returns a view over the arena bytes (no copy, no String), and nullable
   * columns translate row → value slot through one precomputed int map
   * (values are null-suppressed in the ColVec). A LIST or MAP vector
-  * ([[GraftColumnVector.list]], [[GraftColumnVector.map]]) holds no values:
-  * its rows index `offsets` into child vectors over the entry slots. */
+  * ([[GraftColumnVector.repeated]]) holds no values: its rows index
+  * `offsets` into child vectors over the entry slots. */
 final class GraftColumnVector private (dt: DataType, decoded: ColVec,
     valIdx: Array[Int], offsets: Array[Int], kids: Array[ColumnVector])
     extends ColumnVector(dt) {
@@ -909,28 +911,31 @@ object GraftColumnVector {
       m
     }
 
-  /** A LIST column from its one-level shredding: rep 0 starts a row; def 0
-    * = null array, 1 = empty, 2 = null element, 3 = element; `elems` holds
-    * the non-null elements. */
-  def list(dt: ArrayType, elems: ColVec, rep: Array[Byte], defs: Array[Byte],
-      numRows: Int): GraftColumnVector = {
-    val (offsets, rowSlots, entryDefs) = shredded(rep, defs, numRows)
-    require(entryDefs.count(_ == 3) == elems.length, "LIST chunk: element count " +
-      s"${elems.length} disagrees with the levels")
-    new GraftColumnVector(dt, null, rowSlots, offsets,
-      Array(new GraftColumnVector(dt.elementType, elems, entryDefs, 3)))
-  }
-
-  /** A MAP column from the same shredding with two leaves: every entry
-    * (def >= 2) has a key, and a value where def == 3. */
-  def map(dt: MapType, keys: ColVec, vals: ColVec, rep: Array[Byte],
+  /** A LIST or MAP column from its one-level shredding: rep 0 starts a row;
+    * def 0 = null row, 1 = empty, 2 = entry whose last leaf is null, 3 =
+    * entry with every leaf. A LIST's one leaf holds its non-null elements;
+    * a MAP's key leaf holds a key per entry (def >= 2) and its value leaf
+    * the non-null values. A leaf count the type does not have fails like a
+    * column without a nested chunk. */
+  def repeated(dt: DataType, leaves: Array[ColVec], rep: Array[Byte],
       defs: Array[Byte], numRows: Int): GraftColumnVector = {
+    val leafTypes = dt match {
+      case ArrayType(et, _) => Seq(et)
+      case MapType(kt, vt, _) => Seq(kt, vt)
+      case _ => Seq.empty
+    }
+    require(leafTypes.nonEmpty && leaves.length == leafTypes.length,
+      s"$dt column without a nested chunk")
     val (offsets, rowSlots, entryDefs) = shredded(rep, defs, numRows)
-    require(entryDefs.length == keys.length && entryDefs.count(_ == 3) == vals.length,
-      s"MAP chunk: ${keys.length} keys, ${vals.length} values disagree with the levels")
-    new GraftColumnVector(dt, null, rowSlots, offsets,
-      Array(new GraftColumnVector(dt.keyType, keys, null, 1),
-        new GraftColumnVector(dt.valueType, vals, entryDefs, 3)))
+    val required = leaves.init
+    require(required.forall(_.length == entryDefs.length) &&
+      leaves.last.length == entryDefs.count(_ == 3),
+      s"$dt chunk: leaf value counts ${leaves.map(_.length).mkString(", ")} " +
+        "disagree with the levels")
+    val kids = required.indices.map(k =>
+      new GraftColumnVector(leafTypes(k), required(k), null, 1)) :+
+      new GraftColumnVector(leafTypes.last, leaves.last, entryDefs, 3)
+    new GraftColumnVector(dt, null, rowSlots, offsets, kids.toArray)
   }
 
   /** Rep/def levels as (row offsets into the entry slots, the row null

@@ -260,39 +260,27 @@ object ParquetFileWriter {
       while (c < nCols) {
         val f = fields(c)
         builders(c) match {
-          case ab: ColBuilder.ArrayBuilder =>
-            // one repeated leaf: <name>.list.element (3-level LIST), our
-            // rep/def streams are exactly parquet's for this structure
-            val (elems, rep, defsArr) = ab.buildArray()
-            val et = f.dataType.asInstanceOf[ArrayType].elementType
-            chunks += writeColumnChunk(write, () => pos,
-              Seq(f.name, "list", "element"), et, elems,
-              rep, defsArr, rep.length, defWidth = 2, maxDef = 3, codec,
-              pageVersion, encPolicy,
-              pages => pendingIdx += ((rowGroups.length, chunks.length, pages)),
-              colProps = propsOf(Seq(f.name, "list", "element")))
-          case mb: ColBuilder.MapBuilder =>
-            // two leaves sharing one rep stream: key (maxDef 2, required)
-            // and value (maxDef 3, optional)
-            val (keys, vals, rep, defsArr) = mb.buildMap()
-            val MapType(kt, vt, _) = f.dataType: @unchecked
-            val keyDefs = new Array[Byte](defsArr.length)
-            var i = 0
-            while (i < defsArr.length) {
-              keyDefs(i) = math.min(defsArr(i).toInt, 2).toByte; i += 1
+          case rb: ColBuilder.RepeatedBuilder =>
+            // our rep/def streams are exactly parquet's for a 3-level LIST
+            // (one leaf, <name>.list.element) and a MAP key_value group (a
+            // key leaf, required: maxDef 2, and a value leaf: maxDef 3)
+            val (leaves, rep, defsArr) = rb.buildRepeated()
+            // (leaf path, leaf type, max def level) per leaf
+            val leafCols = f.dataType match {
+              case ArrayType(et, _) => Seq((Seq(f.name, "list", "element"), et, 3))
+              case MapType(kt, vt, _) =>
+                Seq((Seq(f.name, "key_value", "key"), kt, 2),
+                  (Seq(f.name, "key_value", "value"), vt, 3))
             }
-            chunks += writeColumnChunk(write, () => pos,
-              Seq(f.name, "key_value", "key"), kt, keys,
-              rep, keyDefs, rep.length, defWidth = 2, maxDef = 2, codec,
-              pageVersion, encPolicy,
-              pages => pendingIdx += ((rowGroups.length, chunks.length, pages)),
-              colProps = propsOf(Seq(f.name, "key_value", "key")))
-            chunks += writeColumnChunk(write, () => pos,
-              Seq(f.name, "key_value", "value"), vt, vals,
-              rep, defsArr, rep.length, defWidth = 2, maxDef = 3, codec,
-              pageVersion, encPolicy,
-              pages => pendingIdx += ((rowGroups.length, chunks.length, pages)),
-              colProps = propsOf(Seq(f.name, "key_value", "value")))
+            leafCols.zip(leaves).foreach { case ((path, dt, maxDef), vec) =>
+              val levels =
+                if (maxDef == 3) defsArr else defsArr.map(d => math.min(d, 2).toByte)
+              chunks += writeColumnChunk(write, () => pos, path, dt, vec,
+                rep, levels, rep.length, defWidth = 2, maxDef = maxDef, codec,
+                pageVersion, encPolicy,
+                pages => pendingIdx += ((rowGroups.length, chunks.length, pages)),
+                colProps = propsOf(path))
+            }
           case sb: ColBuilder.StructBuilder =>
             // non-repeated group: one leaf chunk per subfield, maxDef 2
             // (optional group + optional field), no rep stream
@@ -853,7 +841,9 @@ object ParquetSink {
       encPolicy: Int = EncPolicy.Plain,
       int96Timestamps: Boolean = false,
       props: WriterProps = WriterProps.empty): DataFrame = {
-    // fail on bad per-column props at the DRIVER, before tasks launch
+    // fail on bad column types or per-column props at the DRIVER, before
+    // tasks launch
+    ColBuilder.check(df.schema)
     if (!props.isEmpty) props.resolveFor(df.schema, codec, int96Timestamps)
     val spark = df.sparkSession
     import spark.implicits._
@@ -903,7 +893,8 @@ object ParquetSink {
       encPolicy: Int = EncPolicy.Plain,
       props: WriterProps = WriterProps.empty): DataFrame = {
     val spark = df.sparkSession
-    if (!props.isEmpty) props.resolveFor(df.schema, codec) // driver-side check
+    ColBuilder.check(df.schema) // driver-side checks
+    if (!props.isEmpty) props.resolveFor(df.schema, codec)
     val lineageDir = s"$dir/_lineage"
     val schema = df.schema
     TaskCommit.runResumable[InternalRow, FileLineageRow](spark, dir,
@@ -951,6 +942,7 @@ object ParquetSink {
       partitionCols.contains(f.name))
     require(dataFields.nonEmpty, "all columns are partition columns")
     val dataSchema = StructType(dataFields.toSeq)
+    ColBuilder.check(dataSchema)
     val allFields = df.schema.fields
     val pIdx = partitionCols.map(df.schema.fieldIndex).toArray
     val dIdx = dataFields.map(f => df.schema.fieldIndex(f.name)).toArray

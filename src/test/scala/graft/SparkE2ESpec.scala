@@ -2361,6 +2361,40 @@ class SparkE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e2.getMessage.contains("LIST element"))
   }
 
+  test("forcedCodecs naming a MAP column or an unknown column fails on the driver") {
+    val sp = spark
+    import sp.implicits._
+    val df = Seq((1L, Map("a" -> 1L))).toDF("id", "m")
+    val e1 = intercept[IllegalArgumentException](EncodeJob.encode(df, 2,
+      Seq.empty, Seq.empty, forcedCodecs = Map("m" -> CodecId.Plain)))
+    assert(e1.getMessage.contains("MAP column m"))
+    val e2 = intercept[IllegalArgumentException](EncodeJob.encode(df, 2,
+      Seq.empty, Seq.empty, forcedCodecs = Map("nope" -> CodecId.Plain)))
+    assert(e2.getMessage.contains("unknown column nope"))
+  }
+
+  test("file sinks refuse an unsupported nested leaf type on the driver") {
+    import graft.sources.{GraftParquetFormat, ParquetSink}
+    val sp = spark
+    import sp.implicits._
+    val bad = Seq((1L, Seq(java.sql.Date.valueOf("2024-01-02")))).toDF("id", "ds")
+    val dir = java.nio.file.Files.createTempDirectory("graft-badtype").toString
+    Seq[() => Any](() => ParquetSink.write(bad, s"$dir/w"),
+      () => ParquetSink.writeResumable(bad, s"$dir/r"),
+      () => ParquetSink.writePartitioned(bad, s"$dir/p", Seq("id"))).foreach { w =>
+      val e = intercept[IllegalArgumentException](w())
+      assert(e.getMessage.contains("LIST element"))
+    }
+    // the DSv2 overwrite refuses before it truncates the existing table
+    val table = s"$dir/t"
+    Seq(1L, 2L).toDF("id").write.format(GraftParquetFormat.Name)
+      .mode("overwrite").save(table)
+    val e = intercept[IllegalArgumentException](bad.write
+      .format(GraftParquetFormat.Name).mode("overwrite").save(table))
+    assert(e.getMessage.contains("LIST element"))
+    assert(spark.read.format(GraftParquetFormat.Name).load(table).count() == 2)
+  }
+
   test("resume after a lost lineage write does not duplicate chunks") {
     val out = java.nio.file.Files.createTempDirectory("graft-resume2").toString
     val df = code(600L, 2)

@@ -151,18 +151,20 @@ class CodecRoundtripSpec extends AnyFunSuite {
     val defs = Array[Byte](3, 2, 3, 0, 1, 3)
     val keys = BytesVec.of(Array("a", "b", "c", "z").map(_.getBytes))
     val vals = LongVec(Array(1L, 3L, 9L))
-    val chunk = ChunkCodec.encodeMapChunk(keys, vals, rep, defs, numRows = 4)
-    assert(ChunkCodec.isMapChunk(chunk.blob))
-    assert(!ChunkCodec.isArrayChunk(chunk.blob))
+    val chunk = ChunkCodec.encodeRepeatedChunk(Array(keys, vals), rep, defs,
+      numRows = 4)
+    assert(ChunkCodec.isRepeatedChunk(chunk.blob))
+    assert(chunk.blob(2) == 4, "a two-leaf chunk is version 4, not the LIST version 3")
     assert(chunk.encodedSize <= chunk.refPolicySize)
-    val dm = ChunkCodec.decodeMapChunk(chunk.blob)
+    val dm = ChunkCodec.decodeRepeatedChunk(chunk.blob)
     assert(dm.numRows == 4)
     assert(dm.rep.toSeq == rep.toSeq && dm.defs.toSeq == defs.toSeq)
-    assert(dm.keys.asInstanceOf[BytesVec].length == 4)
+    val Array(dKeys, dVals) = dm.leaves
+    assert(dKeys.asInstanceOf[BytesVec].length == 4)
     assert((0 until 4).map(i =>
-      new String(dm.keys.asInstanceOf[BytesVec].valueBytes(i))) ==
+      new String(dKeys.asInstanceOf[BytesVec].valueBytes(i))) ==
       Seq("a", "b", "c", "z"))
-    assert(dm.vals.asInstanceOf[LongVec].values.toSeq == Seq(1L, 3L, 9L))
+    assert(dVals.asInstanceOf[LongVec].values.toSeq == Seq(1L, 3L, 9L))
   }
 
   test("fsst compresses token-pool text well below plain") {

@@ -3,17 +3,20 @@ package graft.sources
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core._
+import graft.operators.EncodeJob
 
 /** Byte pins for every encode path: a seeded nullable table written by
   * [[ParquetFileWriter]] under five writer configurations, and the same
   * column vectors encoded as `GC` chunk blobs (the auto-selector, every
   * codec the column's type allows, and each blob wrapped with every
   * [[BlockCodec]]); plus nested LIST / MAP / struct rows as files and as
-  * `GC` array and map chunks. The SHA-256 of every file and blob must match the
+  * `GC` array and map chunks, both from hand-shredded levels and from the
+  * chunk encoder's own builders. The SHA-256 of every file and blob must match the
   * pinned value, so a refactor of the value codecs, the dictionary builder
   * or the block codec cannot change a written byte unnoticed.
   *
@@ -197,8 +200,8 @@ class CodecBytesPinSpec extends AnyFunSuite {
     val present = mapSlots.filter(_ != null).flatten
     val keys = BytesVec.of(present.map(_._1.getBytes("UTF-8")))
     val vals = LongVec(present.map(_._2).filter(_ != null).map(_.longValue).toArray)
-    (schema, rows, ChunkCodec.encodeArrayChunk(elems, aRep, aDef, m),
-      ChunkCodec.encodeMapChunk(keys, vals, mRep, mDef, m))
+    (schema, rows, ChunkCodec.encodeRepeatedChunk(Array(elems), aRep, aDef, m),
+      ChunkCodec.encodeRepeatedChunk(Array(keys, vals), mRep, mDef, m))
   }
 
   private def nestedHashes(): Map[String, String] = {
@@ -214,6 +217,19 @@ class CodecBytesPinSpec extends AnyFunSuite {
     }
     (files ++ Seq("nested/gc-array" -> sha(arrChunk.blob),
       "nested/gc-map" -> sha(mapChunk.blob))).toMap
+  }
+
+  test("the chunk encoder's own LIST/MAP shredding gives the pinned blobs") {
+    val (schema, rows, _, _) = nested
+    val listAndMap = StructType(schema.fields.take(2))
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(listAndMap)
+    val in = rows.iterator.map(r =>
+      toCatalyst(Row(r.get(0), r.get(1))).asInstanceOf[InternalRow])
+    val out = EncodeJob.encodePartition(0, listAndMap, in,
+      chunkRows = rows.size, chunkRawBytes = Long.MaxValue).toSeq
+    assert(out.map(c => (c.chunkIdx, c.column)) == Seq((0, "arr"), (0, "m")))
+    assert(out.map(c => sha(c.blob)) ==
+      Seq(pinned("nested/gc-array"), pinned("nested/gc-map")))
   }
 
   test("writer files and chunk blobs are byte-identical to the pinned hashes") {

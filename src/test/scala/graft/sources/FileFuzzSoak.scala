@@ -22,7 +22,7 @@ object FileFuzzSoak {
 
   private val leafTypes: Vector[DataType] = Vector(IntegerType, LongType,
     FloatType, DoubleType, BooleanType, StringType, BinaryType)
-  private val elemTypes: Vector[DataType] = leafTypes // ElemBuf-supported set
+  private val elemTypes: Vector[DataType] = leafTypes // ColBuilder.nestedLeaf set
 
   private def randType(rnd: scala.util.Random): DataType =
     rnd.nextInt(10) match {

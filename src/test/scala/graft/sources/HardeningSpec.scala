@@ -106,7 +106,7 @@ class HardeningSpec extends AnyFunSuite {
       w.putVlq(Int.MaxValue.toLong) // forged slot count
     }
     val e2 = intercept[IllegalArgumentException](
-      ChunkCodec.decodeArrayChunk(hugeSlots))
+      ChunkCodec.decodeRepeatedChunk(hugeSlots))
     assert(e2.getMessage.contains("slot count"))
     val hugeMap = blob { w =>
       w.putAligned(4L, 1) // map chunk
@@ -115,7 +115,7 @@ class HardeningSpec extends AnyFunSuite {
       w.putVlq(Int.MaxValue.toLong) // forged row count
     }
     val e3 = intercept[IllegalArgumentException](
-      ChunkCodec.decodeMapChunk(hugeMap))
+      ChunkCodec.decodeRepeatedChunk(hugeMap))
     assert(e3.getMessage.contains("row count"))
   }
 
