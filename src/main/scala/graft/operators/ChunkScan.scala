@@ -14,6 +14,7 @@ import org.apache.spark.sql.classic.ClassicConversions._
 import org.apache.spark.sql.execution.{FilterExec, ProjectExec, RowToColumnarExec,
   SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
 
@@ -87,6 +88,11 @@ object ChunkScanStrategy extends SparkStrategy {
   * into one [[ColumnarBatch]] of [[GraftColumnVector]]s per group. With no
   * column required (`count()`), a group answers from its `numValues`.
   *
+  * The decoded partitions are then packed into at most one task per slot
+  * (`spark.sql.leafNodeDefaultParallelism`, else the default
+  * parallelism): a lookup whose groups are mostly pruned costs a few
+  * tasks, not one per child partition.
+  *
   * The child's chunk rows are read in whichever form it produces them:
   * rows (a cached chunk table's `InMemoryTableScanExec`) or batches (a
   * stored one's vectorized parquet scan), and a blob is copied out only
@@ -124,11 +130,16 @@ final case class ChunkScanExec(output: Seq[Attribute], fields: Seq[Int],
       if (child.supportsColumnar)
         child.executeColumnar().mapPartitions(_.flatMap(_.rowIterator().asScala))
       else child.execute()
-    rows.mapPartitions { chunkRows =>
+    val batches = rows.mapPartitions { chunkRows =>
       val groups = ChunkScanExec.readGroups(chunkRows, ords, cols.toSet, keep, m)
       groups.foreach { case (at, g) => ChunkScanExec.requireComplete(at, g.chunks, n) }
       groups.iterator.flatMap { case (_, g) => ChunkScanExec.scanGroup(g, cols, types, m) }
     }
+    // packed after grouping, so the same-partition check still sees each
+    // child partition on its own
+    val slots = conf.getConf(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM)
+      .getOrElse(sparkContext.defaultParallelism)
+    if (batches.getNumPartitions > slots) batches.coalesce(slots) else batches
   }
 
   /** Spark's columnar transitions put a `RowToColumnarExec` over a row

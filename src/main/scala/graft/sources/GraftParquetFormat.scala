@@ -10,6 +10,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Tabl
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, CountStar, Max, Min}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.sources._
@@ -29,9 +30,9 @@ import graft.core.{BoolVec, BytesVec, ColVec, DoubleVec, FloatVec, IntVec, LongV
   * at planning and, as join keys, via runtime filtering (DPP); both fold
   * into one [[ScanBounds]]. `=`, `IN`, `<`, `<=`, `>` and `>=` push on
   * INT32/INT64 and string columns, `startsWith` on string columns. The
-  * bounds drop Hive partition directories and row groups at planning,
-  * then row groups by footer stats and bloom filters and pages by page
-  * stats inside each task. All filters are also RETURNED as residuals, so
+  * bounds drop Hive partition directories and row groups (by footer stats,
+  * then bloom filters) at planning, and pages by page stats inside each
+  * task. All filters are also RETURNED as residuals, so
   * Spark re-applies them exactly — pruning stays a sound superset, never
   * a semantic change.
   *
@@ -449,6 +450,22 @@ object GraftScan {
   val FooterPlanLimit = 4096
 }
 
+/** A summed DSv2 driver metric of [[GraftScan]]'s planning. Spark builds
+  * each subclass by name, hence one no-argument class per metric. */
+sealed abstract class PlanMetric(key: String, desc: String) extends CustomSumMetric {
+  override def name(): String = key
+  override def description(): String = desc
+  def value(v: Long): CustomTaskMetric = new CustomTaskMetric {
+    override def name(): String = key
+    override def value(): Long = v
+  }
+}
+final class RowGroupsListed extends PlanMetric("rowGroupsListed", "row groups listed")
+final class RowGroupsStatsPruned
+    extends PlanMetric("rowGroupsStatsPruned", "row groups pruned by stats")
+final class RowGroupsBloomPruned
+    extends PlanMetric("rowGroupsBloomPruned", "row groups pruned by bloom")
+
 final class GraftScan(dir: String, schema: StructType,
     bounds: ScanBounds = ScanBounds.empty, limit: Int = -1)
     extends Scan with Batch with SupportsReportStatistics
@@ -483,17 +500,30 @@ final class GraftScan(dir: String, schema: StructType,
   def runtimeFilteredColumns: Seq[String] =
     rt.probes.drop(bounds.probes.size).map(_._1).distinct
 
+  // row groups listed, after stats and after blooms in the last planning
+  private var planned = (0L, 0L, 0L)
+  private val planMetrics =
+    Array[PlanMetric](new RowGroupsListed, new RowGroupsStatsPruned, new RowGroupsBloomPruned)
+
+  override def supportedCustomMetrics(): Array[CustomMetric] = planMetrics.toArray[CustomMetric]
+  override def reportDriverMetrics(): Array[CustomTaskMetric] = {
+    val (listed, afterStats, afterBloom) = planned
+    planMetrics.zip(Seq(listed, listed - afterStats, afterStats - afterBloom))
+      .map { case (m, v) => m.value(v) }
+  }
+
   override def readSchema(): StructType = schema
   override def description(): String =
     s"GraftParquetScan[$dir] cols=${schema.fieldNames.mkString(",")}" +
       rt.describe + (if (limit >= 0) s" limit=$limit" else "")
   override def toBatch: Batch = this
 
-  /** Row-group-granular scheduling with PLANNING-time stat pruning: one
-    * footer-tail read per file on the driver turns each surviving row
-    * group into its own task, so (a) a single huge file parallelizes
+  /** Row-group-granular scheduling with PLANNING-time pruning: one
+    * footer-tail read per file on the driver turns each row group that
+    * survives the pushed ranges and then the pushed `=`/`IN` probes' bloom
+    * filters into its own task, so (a) a single huge file parallelizes
     * across executors instead of serializing into one task, and (b) files
-    * and row groups excluded by pushed ranges never get a task at all.
+    * and row groups excluded by pushed bounds never get a task at all.
     * Past [[GraftScan.FooterPlanLimit]] files the driver skips the footer
     * reads (planning stays O(listing) on huge directories) and falls back
     * to per-file tasks with the same pruning done task-side. */
@@ -512,15 +542,20 @@ final class GraftScan(dir: String, schema: StructType,
     val files = listingSized.map { case (p, kvs, _) => (p, kvs) }.filter {
       case (_, kvs) => kvs.forall { case (k, v) => rt.admitsPartition(k, v) }
     }
+    planned = (0L, 0L, 0L)
     if (files.length > GraftScan.FooterPlanLimit)
       files.map { case (p, kvs) =>
         GraftFilePartition(p, partValues = kvs): InputPartition
       }.toArray
     else files.flatMap { case (p, kvs) =>
       val meta = ParquetFileReader.readFooterOnly(p)
+      val fileBounds = rt.withoutColumns(kvs.map(_._1).toSet)
+      val stats = GraftFlatScan.pruneRowGroups(meta, null, fileBounds)
+      val rgs = GraftFlatScan.bloomPrune(p, meta, stats, fileBounds.probes)
+      val (l, s, b) = planned
+      planned = (l + meta.rowGroups.size, s + stats.size, b + rgs.size)
       val flatOk = GraftFlatScan.isFlat(meta)
-      GraftFlatScan.pruneRowGroups(meta, null, rt).map(rg =>
-        GraftFilePartition(p, Seq(rg), flatOk, kvs): InputPartition)
+      rgs.map(rg => GraftFilePartition(p, Seq(rg), flatOk, kvs): InputPartition)
     }.toArray
   }
 
@@ -594,8 +629,8 @@ final class GraftScan(dir: String, schema: StructType,
 }
 
 /** One scan task: a file, or a slice of its row groups (`rgs == null` ⇒
-  * all, with stat pruning done task-side). `flatOk` is stamped at planning
-  * time (footer already in hand) and gates the columnar fast path — only a
+  * all, with stats and bloom pruning done task-side). `flatOk` is stamped
+  * at planning time (footer already in hand) and gates the columnar fast path — only a
   * fully flat file qualifies; the >FooterPlanLimit fallback leaves it
   * false, keeping the always-correct row path. */
 final case class GraftFilePartition(path: String, rgs: Seq[Int] = null,
@@ -623,23 +658,26 @@ private[sources] object GraftFlatScan {
         rgs.intersect(ParquetFileReader.rowGroupsOverlapping(meta, col, lo, hi))
     }
 
-  /** One task's footer, the row groups it reads (the planned ones, or
-    * all, that pass the footer stats and then the bloom filters) and the
-    * bounds on its file's own columns: partition-column bounds were
-    * resolved against directory names at planning. */
+  /** One task's footer, the row groups it reads and the bounds on its
+    * file's own columns: partition-column bounds were resolved against
+    * directory names at planning. Planned row groups already passed the
+    * footer stats and the bloom filters on the driver; a whole-file task
+    * (past [[GraftScan.FooterPlanLimit]]) applies both here. */
   def taskRowGroups(fp: GraftFilePartition,
       bounds: ScanBounds): (PqFileMeta, Seq[Int], ScanBounds) = {
     val meta = ParquetFileReader.readFooterOnly(fp.path)
     val fileBounds = bounds.withoutColumns(fp.partValues.map(_._1).toSet)
-    (meta, bloomPrune(fp.path, meta, pruneRowGroups(meta, fp.rgs, fileBounds),
-      fileBounds.probes), fileBounds)
+    val rgs = pruneRowGroups(meta, fp.rgs, fileBounds)
+    (meta, if (fp.rgs != null) rgs else bloomPrune(fp.path, meta, rgs, fileBounds.probes),
+      fileBounds)
   }
 
   /** Bloom-filter row-group pruning for pushed equality/IN conjuncts:
     * drops a surviving row group when some conjunct's bloom filter rules
-    * out every candidate value. Task-side by design — the driver's
-    * planning stays footer-tail-only, and each bloom read is one small
-    * ranged read that happens INSTEAD of fetching the group's chunks.
+    * out every candidate value. Planning runs it on the driver, after the
+    * stats, so a probe's pruned row groups never get a task; each bloom
+    * is one small ranged read. Whole-file tasks past
+    * [[GraftScan.FooterPlanLimit]] run it task-side instead.
     * Chunks without a filter (or with an unparseable one) always survive;
     * residual Spark filters keep semantics exact either way. */
   def bloomPrune(path: String, meta: PqFileMeta, rgs: Seq[Int],

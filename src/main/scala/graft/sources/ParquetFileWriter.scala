@@ -232,12 +232,15 @@ object ParquetFileWriter {
         .createToCatalystConverter(schema)
     def addRow(row: Row): Unit = add(toInternal(row).asInstanceOf[InternalRow])
 
-    /** Flush the tail row group, write the footer, return total rows. */
-    def close(): Long = {
-      flushRowGroup(buffered)
-      finish()
-      totalRows
-    }
+    /** Flush the tail row group, write the footer, return total rows. The
+      * builders' arenas go back to the thread's pool whether or not this
+      * succeeds (an aborting task closes the writer too). */
+    def close(): Long =
+      try {
+        flushRowGroup(buffered)
+        finish()
+        totalRows
+      } finally builders.foreach(_.release())
 
     /** Per-column write accounting across all flushed row groups (call
       * after close()): (dotted column path, encodings used, uncompressed

@@ -430,12 +430,18 @@ class SparkE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(expect.nonEmpty)
     assert(exact(DecodeJob.decodeWhere(chunks, li.schema, "l_orderkey", lo, hi)) == expect)
     // every column chunk of a row range split across partitions: the
-    // same-partition error, never a partial count
-    val e = intercept[Exception](DecodeJob.decodeWhere(chunks.repartition(3),
-      li.schema, "l_orderkey", lo, hi).count())
-    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-    assert(causes.exists(c => c.isInstanceOf[IllegalArgumentException] &&
-      c.getMessage.contains("must share a partition")), e)
+    // same-partition error, never a partial count — also when the read is
+    // packed into one task, which checks each chunk partition on its own
+    def splitFails(): Unit = {
+      val e = intercept[Exception](DecodeJob.decodeWhere(chunks.repartition(3),
+        li.schema, "l_orderkey", lo, hi).count())
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      assert(causes.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+        c.getMessage.contains("must share a partition")), e)
+    }
+    splitFails()
+    spark.conf.set("spark.sql.leafNodeDefaultParallelism", "1")
+    try splitFails() finally spark.conf.unset("spark.sql.leafNodeDefaultParallelism")
     // a chunk table written with .write.parquet and read back
     val out = java.nio.file.Files.createTempDirectory("graft-where").toString
     chunks.write.parquet(s"$out/chunks")

@@ -2,7 +2,11 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,7 +17,8 @@ import graft.core.{BytesVec, LongVec}
   * (Spark-written blooms parsed by us, our blooms read by parquet-mr), and
   * the DSv2 scan's bloom row-group pruning — including an I/O proof that
   * pruned groups are never read. */
-class BloomFilterSpec extends AnyFunSuite with BeforeAndAfterAll {
+class BloomFilterSpec extends AnyFunSuite with BeforeAndAfterAll
+    with AdaptiveSparkPlanHelper {
 
   @transient private var spark: SparkSession = _
 
@@ -256,6 +261,78 @@ class BloomFilterSpec extends AnyFunSuite with BeforeAndAfterAll {
     val miss = spark.read.format(GraftParquetFormat.Name).load(dir)
       .where($"commit" === probe).collect()
     assert(miss.isEmpty)
+  }
+
+  /** One file of 8 row groups of 500 rows: `id` ascending, `commit`
+    * (bloom-filtered) and `tag` (no bloom) scattered, so every group's
+    * min/max spans nearly their whole domain and stats cannot prune. */
+  private def plantedScatter(): (String, String, StructType, Int => String) = {
+    val dir = tmpDir("bloom-plan")
+    val path = s"$dir/p.parquet"
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("commit", StringType, nullable = false),
+      StructField("tag", StringType, nullable = false)))
+    def commit(i: Int) = f"c${i * 2654435761L % 1000003}%07d"
+    val w = new ParquetFileWriter.IncrementalFileWriter(path, schema,
+      rowGroupRows = 500, codec = PqCodec.Uncompressed, bloomCols = Set("commit"),
+      bloomFpp = 1e-4)
+    (0 until 4000).foreach(i => w.addRow(Row(i.toLong, commit(i), f"t${i * 40503L % 9973}%04d")))
+    w.close()
+    (dir, path, schema, commit)
+  }
+
+  test("planning probes blooms: a row group gets a task only if its bloom admits the value") {
+    val (dir, path, schema, commit) = plantedScatter()
+    val meta = ParquetFileReader.readFooterOnly(path)
+    assert(meta.rowGroups.size == 8)
+    def bytes(v: String): Array[Byte] = v.getBytes("UTF-8")
+    def planned(b: ScanBounds): Seq[Int] =
+      new GraftScan(dir, schema, b).planInputPartitions().toSeq
+        .flatMap(_.asInstanceOf[GraftFilePartition].rgs)
+    def byStats(b: ScanBounds): Seq[Int] = GraftFlatScan.pruneRowGroups(meta, null, b)
+    // an `=` probe: exactly the row group holding the value, where the
+    // stats alone keep all eight
+    Seq(7, 1234, 2600, 3999).foreach { i =>
+      val b = ScanBounds.empty.in("commit", Seq(bytes(commit(i))))
+      assert(byStats(b) == (0 until 8), i)
+      assert(planned(b) == Seq(i / 500), i)
+    }
+    // a missing value: no task at all
+    val missing = ScanBounds.empty.in("commit", Seq(bytes("c0500000x")))
+    assert(byStats(missing) == (0 until 8))
+    assert(planned(missing).isEmpty)
+    // a probe on a column without a bloom plans what the stats plan
+    val tag = ScanBounds.empty.in("tag", Seq(bytes("t5000")))
+    assert(byStats(tag).size > 1)
+    assert(planned(tag) == byStats(tag))
+    // a whole-file task (past FooterPlanLimit) probes the blooms itself;
+    // a planned task reads its row groups without probing them again
+    val hit = ScanBounds.empty.in("commit", Seq(bytes(commit(1234))))
+    assert(GraftFlatScan.taskRowGroups(GraftFilePartition(path), hit)._2 == Seq(2))
+    assert(GraftFlatScan.taskRowGroups(GraftFilePartition(path, 0 until 8), hit)._2 ==
+      (0 until 8))
+    // the rows equal Spark's own reader's
+    val ours = spark.read.format(GraftParquetFormat.Name).load(dir)
+    val native = spark.read.parquet(dir)
+    def ids(df: DataFrame, p: Column): Seq[Long] =
+      df.where(p).select("id").collect().map(_.getLong(0)).sorted.toSeq
+    assert(ids(ours, col("commit") === commit(1234)) == Seq(1234L))
+    Seq(col("commit") === commit(1234), col("commit") === "c0500000x",
+        col("tag") === "t5000", col("commit").isin(commit(7), commit(3999)))
+      .foreach(p => assert(ids(ours, p) == ids(native, p), p))
+  }
+
+  test("the scan reports its planning as driver metrics") {
+    val (dir, _, _, commit) = plantedScatter()
+    val df = spark.read.format(GraftParquetFormat.Name).load(dir)
+      .where(col("commit") === commit(1234)).select("id")
+    assert(df.collect().map(_.getLong(0)).toSeq == Seq(1234L))
+    val scans = collect(df.queryExecution.executedPlan) { case b: BatchScanExec => b }
+    assert(scans.size == 1, df.queryExecution.executedPlan)
+    val m = scans.head.metrics.map { case (k, v) => k -> v.value }
+    assert(m("rowGroupsListed") == 8 && m("rowGroupsStatsPruned") == 0 &&
+      m("rowGroupsBloomPruned") == 7, m)
   }
 
   test("hashVec covers every vector type with distinct-value dedup") {
