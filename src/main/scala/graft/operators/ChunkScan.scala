@@ -20,6 +20,8 @@ import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
 
 import graft.core.{BlockCodec, ChunkCodec}
 import graft.sources.GraftColumnVector
+import graft.sources.GraftColumnVector.{Prim, Repeated}
+import graft.sources.ParquetFileReader.DecodedChunk
 
 /** Stats range of a chunk read: keep the row ranges whose `colIdx` chunk
   * may hold a value in [lower, upper] (bounds as [[graft.core.MinMax]]
@@ -224,18 +226,28 @@ object ChunkScanExec {
   private def decodeColumn(dt: DataType, c: Chunk, rows: Int): GraftColumnVector = {
     require(c.blob != null, s"$dt chunk without a blob")
     val blob = BlockCodec.maybeUnwrap(c.blob)
-    val (vec, n) = dt match {
+    dt match {
       case _: ArrayType | _: MapType =>
         require(ChunkCodec.isRepeatedChunk(blob), s"$dt column without a nested chunk")
         val d = ChunkCodec.decodeRepeatedChunk(blob)
-        (GraftColumnVector.repeated(dt, d.leaves, d.rep, d.defs, d.numRows), d.numRows)
+        val shape = repeatedShape(dt)
+        require(d.leaves.length == shape.children.size, s"$dt column without a nested chunk")
+        require(d.numRows == rows,
+          s"row-count mismatch in chunk group: $dt chunk has ${d.numRows}, expected $rows")
+        val (defs, reps) = (d.defs.map(_.toInt), d.rep.map(_.toInt))
+        GraftColumnVector.build(shape, d.leaves.map(DecodedChunk(_, defs, reps)), rows)
       case _ =>
         // a flat chunk's raw size counts 4 length bytes per non-null value
         val d = ChunkCodec.decodeWithLevels(blob, c.rawBytes - 4 * (c.numValues - c.numNulls))
         val defs = if (d.defLevels == null) null else d.defLevels.map(_.toInt)
-        (new GraftColumnVector(dt, d.vec, defs, 1), d.numRows)
+        GraftColumnVector.build(Prim(dt, 1, 0), Array(DecodedChunk(d.vec, defs, null)), rows)
     }
-    require(n == rows, s"row-count mismatch in chunk group: $dt chunk has $n, expected $rows")
-    vec
+  }
+
+  /** The shape of a version 3 (LIST) or 4 (MAP) chunk's shared levels
+    * ([[ChunkCodec.DecodedRepeated]]): a MAP's key is present from def 2. */
+  private def repeatedShape(dt: DataType): Repeated = dt match {
+    case ArrayType(et, _) => Repeated(dt, 1, 2, 1, Seq(Prim(et, 3, 0)))
+    case MapType(kt, vt, _) => Repeated(dt, 1, 2, 1, Seq(Prim(kt, 2, 0), Prim(vt, 3, 1)))
   }
 }

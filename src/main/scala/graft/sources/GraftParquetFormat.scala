@@ -14,12 +14,11 @@ import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, Cus
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.sources._
-import org.apache.spark.sql.types.{ArrayType, DataType, Decimal, IntegerType,
-  LongType, MapType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.sql.vectorized.{ColumnarArray, ColumnarMap, ColumnVector}
+import org.apache.spark.sql.vectorized.ColumnVector
 
-import graft.core.{BoolVec, BytesVec, ColVec, DoubleVec, FloatVec, IntVec, LongVec}
+import graft.core.{IntVec, LongVec}
 
 /** DataSource V2 front-end for [[ParquetSource]]:
   * `spark.read.format("graft.sources.GraftParquetFormat").load(dir)`.
@@ -543,24 +542,30 @@ final class GraftScan(dir: String, schema: StructType,
       case (_, kvs) => kvs.forall { case (k, v) => rt.admitsPartition(k, v) }
     }
     planned = (0L, 0L, 0L)
+    // each task carries the bounds on its file's own columns, runtime
+    // narrowing included: Spark plans partitions after filter()
+    def fileBounds(kvs: Seq[(String, String)]) = rt.withoutColumns(kvs.map(_._1).toSet)
     if (files.length > GraftScan.FooterPlanLimit)
       files.map { case (p, kvs) =>
-        GraftFilePartition(p, partValues = kvs): InputPartition
+        GraftFilePartition(p, bounds = fileBounds(kvs), partValues = kvs): InputPartition
       }.toArray
     else files.flatMap { case (p, kvs) =>
       val meta = ParquetFileReader.readFooterOnly(p)
-      val fileBounds = rt.withoutColumns(kvs.map(_._1).toSet)
-      val stats = GraftFlatScan.pruneRowGroups(meta, null, fileBounds)
-      val rgs = GraftFlatScan.bloomPrune(p, meta, stats, fileBounds.probes)
+      val bounds = fileBounds(kvs)
+      val stats = GraftFlatScan.pruneRowGroups(meta, null, bounds)
+      val rgs = GraftFlatScan.bloomPrune(p, meta, stats, bounds.probes)
       val (l, s, b) = planned
       planned = (l + meta.rowGroups.size, s + stats.size, b + rgs.size)
-      val flatOk = GraftFlatScan.isFlat(meta)
-      rgs.map(rg => GraftFilePartition(p, Seq(rg), flatOk, kvs): InputPartition)
+      rgs.map(rg => GraftFilePartition(p, Seq(rg), bounds, kvs): InputPartition)
     }.toArray
   }
 
+  /** Every file, flat or nested, reads through the one columnar reader. */
+  override def columnarSupportMode(): Scan.ColumnarSupportMode =
+    Scan.ColumnarSupportMode.SUPPORTED
+
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(schema, rt, limit)
+    new GraftReaderFactory(schema, limit)
 
   /** Exact row count + uncompressed byte size from footer tails only —
     * feeds Catalyst's join planning (a small graft-parquet table becomes
@@ -628,26 +633,20 @@ final class GraftScan(dir: String, schema: StructType,
   }
 }
 
-/** One scan task: a file, or a slice of its row groups (`rgs == null` ⇒
-  * all, with stats and bloom pruning done task-side). `flatOk` is stamped
-  * at planning time (footer already in hand) and gates the columnar fast path — only a
-  * fully flat file qualifies; the >FooterPlanLimit fallback leaves it
-  * false, keeping the always-correct row path. */
+/** One scan task of [[GraftColumnarPartitionReader]], flat or nested file
+  * alike: a file, or a slice of its row groups (`rgs == null` ⇒ all, with
+  * stats and bloom pruning done task-side, as planned past
+  * [[GraftScan.FooterPlanLimit]] files). `bounds` are the pushed bounds on
+  * the file's own columns, runtime (DPP) narrowing included. */
 final case class GraftFilePartition(path: String, rgs: Seq[Int] = null,
-    flatOk: Boolean = false,
+    bounds: ScanBounds = ScanBounds.empty,
     partValues: Seq[(String, String)] = Nil) extends InputPartition
 
-/** Shared flat-scan core: row-group + page-level pruning resolved into
-  * column-major typed batches — per column the non-null values as a
-  * [[ColVec]] plus def levels, straight from the one page decoder
-  * ([[ParquetFileReader.decodeChunk]]), restricted to the kept row ranges.
-  * Feeds the columnar batch reader (zero-copy, behind
-  * [[GraftColumnVector]]). */
+/** Shared scan core: row-group + page-level pruning resolved into
+  * column-major batches — each projected field's leaves straight from the
+  * one page decoder ([[ParquetFileReader.decodeChunk]]), restricted to the
+  * kept row ranges, and assembled zero-copy by [[GraftColumnVector.build]]. */
 private[sources] object GraftFlatScan {
-
-  /** Root group of primitives only — no nesting, no repeated fields. */
-  def isFlat(meta: PqFileMeta): Boolean = meta.schema.size > 1 &&
-    meta.schema.drop(1).forall(se => se.numChildren == 0 && se.repetition != 2)
 
   /** Row groups surviving the pushed ranges (planning-time list reused
     * when present — re-filtering stat ranges is a no-op). */
@@ -658,18 +657,14 @@ private[sources] object GraftFlatScan {
         rgs.intersect(ParquetFileReader.rowGroupsOverlapping(meta, col, lo, hi))
     }
 
-  /** One task's footer, the row groups it reads and the bounds on its
-    * file's own columns: partition-column bounds were resolved against
-    * directory names at planning. Planned row groups already passed the
-    * footer stats and the bloom filters on the driver; a whole-file task
-    * (past [[GraftScan.FooterPlanLimit]]) applies both here. */
-  def taskRowGroups(fp: GraftFilePartition,
-      bounds: ScanBounds): (PqFileMeta, Seq[Int], ScanBounds) = {
+  /** One task's footer and the row groups it reads. Planned row groups
+    * already passed the footer stats and the bloom filters on the driver;
+    * a whole-file task (past [[GraftScan.FooterPlanLimit]]) applies both
+    * here. */
+  def taskRowGroups(fp: GraftFilePartition): (PqFileMeta, Seq[Int]) = {
     val meta = ParquetFileReader.readFooterOnly(fp.path)
-    val fileBounds = bounds.withoutColumns(fp.partValues.map(_._1).toSet)
-    val rgs = pruneRowGroups(meta, fp.rgs, fileBounds)
-    (meta, if (fp.rgs != null) rgs else bloomPrune(fp.path, meta, rgs, fileBounds.probes),
-      fileBounds)
+    val rgs = pruneRowGroups(meta, fp.rgs, fp.bounds)
+    (meta, if (fp.rgs != null) rgs else bloomPrune(fp.path, meta, rgs, fp.bounds.probes))
   }
 
   /** Bloom-filter row-group pruning for pushed equality/IN conjuncts:
@@ -706,22 +701,27 @@ private[sources] object GraftFlatScan {
     } finally in.close()
   }
 
-  /** Projected columns' typed values for one row group: page statistics
-    * of the filter columns narrow the decoded row ranges; only overlapping
-    * pages of projected chunks are decoded, and only fetched chunks are
-    * read from disk at all. Per field: (non-null values, def levels or null
-    * — present only for OPTIONAL columns, whose max level is 1), plus the
-    * kept row count. Residual Spark-side filters re-apply afterwards, so a
-    * stat-less page surviving is only a missed skip, never a wrong row. */
+  /** The projected fields' vectors for one row group and its kept row
+    * count; only their leaves are fetched and decoded. When all those
+    * leaves are flat, page statistics of the filter columns narrow the rows
+    * (a repeated leaf cannot be cut to row ranges). Residual Spark-side
+    * filters re-apply afterwards, so a stat-less page surviving is only a
+    * missed skip, never a wrong row. */
   def columnBatch(fetch: ParquetFileReader.ChunkFetcher, meta: PqFileMeta,
       rg: Int, fields: Array[StructField], bounds: ScanBounds):
-      (Array[(ColVec, Array[Int])], Int) = {
-    // fetched (buffer, rebased meta) per column name: a filter column that
-    // is also projected reads its byte range once, not twice
-    val cache = scala.collection.mutable.Map.empty[String,
+      (Array[ColumnVector], Int) = {
+    // fetched (buffer, rebased meta) per chunk: a filter column that is
+    // also projected reads its byte range once, not twice
+    val cache = scala.collection.mutable.Map.empty[Seq[String],
       (Array[Byte], PqColumnMeta)]
-    def fetched(name: String, cm: PqColumnMeta): (Array[Byte], PqColumnMeta) =
-      cache.getOrElseUpdate(name, fetch.fetch(cm))
+    def fetched(cm: PqColumnMeta): (Array[Byte], PqColumnMeta) =
+      cache.getOrElseUpdate(cm.pathInSchema, fetch.fetch(cm))
+    val byName = ParquetSource.fields(meta).map { case (f, s) => f.name -> s }.toMap
+    val shapes = fields.map(f => GraftColumnVector.project(byName.getOrElse(f.name,
+      throw new IllegalArgumentException(s"${fetch.path} has no column ${f.name}")),
+      f.dataType))
+    val leaves = ParquetFileReader.leafColumns(meta, rg)
+    val used = shapes.flatMap(_.leaves)
     val nRows = meta.rowGroups(rg).numRows
     var keep: Seq[(Long, Long)] = Seq((0L, nRows))
     // page row ranges passing `keepFn` for one filter column: from the
@@ -729,8 +729,7 @@ private[sources] object GraftFlatScan {
     // (two tiny ranged reads, NO chunk bytes — a filter-only column's
     // chunk is then never fetched at all), else by walking page headers
     // inside the fetched chunk
-    def colRanges(c: String, cm: PqColumnMeta,
-        keepFn: PqStats => Boolean): Seq[(Long, Long)] =
+    def colRanges(cm: PqColumnMeta, keepFn: PqStats => Boolean): Seq[(Long, Long)] =
       if (cm.columnIndexOffset >= 0 && cm.columnIndexLength > 0 &&
           cm.offsetIndexOffset >= 0 && cm.offsetIndexLength > 0) {
         val ci = ParquetMeta.parseColumnIndex(
@@ -739,45 +738,36 @@ private[sources] object GraftFlatScan {
           fetch.range(cm.offsetIndexOffset, cm.offsetIndexLength), 0)
         ParquetFileReader.indexRowRanges(ci, oi, nRows, keepFn)
       } else {
-        val (b, rcm) = fetched(c, cm)
+        val (b, rcm) = fetched(cm)
         ParquetFileReader.pageRowRanges(b, rcm, keepFn)
       }
-    bounds.ranges.foreach { case (c, (lo, hi)) =>
-      ParquetFileReader.chunkFor(meta, rg, c).foreach { cm =>
-        keep = ParquetFileReader.intersectRowRanges(keep,
-          colRanges(c, cm, ParquetFileReader.statsOverlap(cm.typ, _, lo, hi)))
+    if (used.forall(leaves(_).maxRep == 0))
+      bounds.ranges.foreach { case (c, (lo, hi)) =>
+        ParquetFileReader.chunkFor(meta, rg, c).foreach { cm =>
+          keep = ParquetFileReader.intersectRowRanges(keep,
+            colRanges(cm, ParquetFileReader.statsOverlap(cm.typ, _, lo, hi)))
+        }
       }
-    }
     if (keep.isEmpty) return (Array.empty, 0)
     val kept = keep.map(r => r._2 - r._1).sum.toInt
-    val byName = ParquetFileReader.flatColumns(meta, rg)
-      .map(c => c.name -> c).toMap
     val rowRanges = if (keep == Seq((0L, nRows))) null else keep
-    (fields.map { f =>
-      val col = byName(f.name)
-      val (b, rcm) = fetched(f.name, col.meta)
-      val d = ParquetFileReader.decodeChunk(b,
-        ParquetFileReader.leafOf(col.copy(meta = rcm)), rowRanges)
-      (d.values, d.defs)
-    }, kept)
+    val decoded = new Array[ParquetFileReader.DecodedChunk](leaves.size)
+    used.foreach { i =>
+      val (b, rcm) = fetched(leaves(i).meta)
+      decoded(i) = ParquetFileReader.decodeChunk(b, leaves(i).copy(meta = rcm), rowRanges)
+    }
+    (shapes.map(GraftColumnVector.build(_, decoded, kept): ColumnVector), kept)
   }
 }
 
-final class GraftReaderFactory(schema: StructType, bounds: ScanBounds,
-    limit: Int = -1) extends PartitionReaderFactory {
+final class GraftReaderFactory(schema: StructType, limit: Int = -1)
+    extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new GraftPartitionReader(p.asInstanceOf[GraftFilePartition], schema, bounds, limit)
-
-  /** Columnar path: every flat file (stamped at planning) with a column to
-    * read. Spark then plans a codegen'd ColumnarToRow instead of this
-    * source converting row-by-row through external Rows. */
-  override def supportColumnarReads(p: InputPartition): Boolean =
-    p.asInstanceOf[GraftFilePartition].flatOk && schema.nonEmpty
+    throw new UnsupportedOperationException("the graft parquet scan is columnar only")
 
   override def createColumnarReader(p: InputPartition):
       PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    new GraftColumnarPartitionReader(p.asInstanceOf[GraftFilePartition], schema,
-      bounds, limit)
+    new GraftColumnarPartitionReader(p.asInstanceOf[GraftFilePartition], schema, limit)
 }
 
 /** Vectorized scan output: one ColumnarBatch per (pruned) row group, with
@@ -787,14 +777,14 @@ final class GraftReaderFactory(schema: StructType, bounds: ScanBounds,
   * and string bytes never materialize a java.lang.String. Partition
   * columns become constant vectors. */
 final class GraftColumnarPartitionReader(fp: GraftFilePartition,
-    schema: StructType, bounds: ScanBounds, limit: Int)
+    schema: StructType, limit: Int)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
   import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
   import org.apache.spark.sql.vectorized.ColumnarBatch
 
   private val partMap = fp.partValues.toMap
   private val fileFields = schema.fields.filter(f => !partMap.contains(f.name))
-  private val (meta, rgs, fileBounds) = GraftFlatScan.taskRowGroups(fp, bounds)
+  private val (meta, rgs) = GraftFlatScan.taskRowGroups(fp)
   private val rgIt = rgs.iterator
   private var remaining = if (limit >= 0) limit else Int.MaxValue
   private var batch: ColumnarBatch = _
@@ -804,19 +794,14 @@ final class GraftColumnarPartitionReader(fp: GraftFilePartition,
     while (rgIt.hasNext && remaining > 0) {
       val fetch = new ParquetFileReader.ChunkFetcher(fp.path)
       val (cols, n0) =
-        try GraftFlatScan.columnBatch(fetch, meta, rgIt.next(), fileFields,
-          fileBounds)
+        try GraftFlatScan.columnBatch(fetch, meta, rgIt.next(), fileFields, fp.bounds)
         finally fetch.close()
       val n = math.min(n0, remaining)
       if (n > 0) {
         var fi = -1
         batch = new ColumnarBatch(schema.fields.map { f =>
           if (partMap.contains(f.name)) constVec(f.dataType, partMap(f.name), n)
-          else {
-            fi += 1
-            val (vec, defs) = cols(fi)
-            new GraftColumnVector(f.dataType, vec, defs, 1): ColumnVector
-          }
+          else { fi += 1; cols(fi) }
         }, n)
         remaining -= n
         return true
@@ -840,219 +825,4 @@ final class GraftColumnarPartitionReader(fp: GraftFilePartition,
 
   override def get(): ColumnarBatch = batch
   override def close(): Unit = if (batch != null) batch.close()
-}
-
-/** Zero-copy Spark ColumnVector over a decoded [[graft.core.ColVec]]:
-  * primitive getters index the decode arrays directly, `getUTF8String`
-  * returns a view over the arena bytes (no copy, no String), and nullable
-  * columns translate row → value slot through one precomputed int map
-  * (values are null-suppressed in the ColVec). A LIST or MAP vector
-  * ([[GraftColumnVector.repeated]]) holds no values: its rows index
-  * `offsets` into child vectors over the entry slots. */
-final class GraftColumnVector private (dt: DataType, decoded: ColVec,
-    valIdx: Array[Int], offsets: Array[Int], kids: Array[ColumnVector])
-    extends ColumnVector(dt) {
-
-  /** A flat column: `defs == null` means no nulls, else a value is present
-    * where its def level equals `maxDef`. */
-  def this(dt: DataType, decoded: ColVec, defs: Array[Int], maxDef: Int) =
-    this(dt, decoded, GraftColumnVector.slots(defs, maxDef), null, null)
-
-  // INT96 timestamps decode as raw 12-byte values: convert to micros once
-  private val vec: ColVec = decoded match {
-    case b: BytesVec if dt == org.apache.spark.sql.types.TimestampType =>
-      LongVec(Array.tabulate(b.length)(i =>
-        ParquetFileReader.int96ToMicros(b.valueBytes(i))))
-    case v => v
-  }
-
-  private var nNulls = -1
-
-  @inline private def slot(rowId: Int): Int =
-    if (valIdx == null) rowId else valIdx(rowId)
-
-  override def isNullAt(rowId: Int): Boolean =
-    valIdx != null && valIdx(rowId) == -1
-  override def hasNull: Boolean = numNulls > 0
-  override def numNulls: Int = {
-    if (nNulls < 0) {
-      var c = 0
-      if (valIdx != null) {
-        var i = 0
-        while (i < valIdx.length) { if (valIdx(i) == -1) c += 1; i += 1 }
-      }
-      nNulls = c
-    }
-    nNulls
-  }
-
-  override def getBoolean(rowId: Int): Boolean =
-    vec.asInstanceOf[BoolVec].values(slot(rowId))
-  override def getInt(rowId: Int): Int =
-    vec.asInstanceOf[IntVec].values(slot(rowId))
-  override def getLong(rowId: Int): Long =
-    vec.asInstanceOf[LongVec].values(slot(rowId))
-  override def getFloat(rowId: Int): Float =
-    vec.asInstanceOf[FloatVec].values(slot(rowId))
-  override def getDouble(rowId: Int): Double =
-    vec.asInstanceOf[DoubleVec].values(slot(rowId))
-  override def getUTF8String(rowId: Int):
-      org.apache.spark.unsafe.types.UTF8String = {
-    val b = vec.asInstanceOf[BytesVec]
-    val s = slot(rowId)
-    org.apache.spark.unsafe.types.UTF8String.fromBytes(
-      b.data, b.start(s), b.len(s))
-  }
-  override def getBinary(rowId: Int): Array[Byte] = {
-    val b = vec.asInstanceOf[BytesVec]
-    val s = slot(rowId)
-    java.util.Arrays.copyOfRange(b.data, b.start(s), b.start(s) + b.len(s))
-  }
-  /** Unscaled int32/int64, or two's-complement big-endian unscaled bytes
-    * (the FLBA layout of wide decimals). */
-  override def getDecimal(rowId: Int, precision: Int, scale: Int): Decimal = {
-    val s = slot(rowId)
-    vec match {
-      case IntVec(vs) => Decimal.createUnsafe(vs(s), precision, scale)
-      case LongVec(vs) => Decimal.createUnsafe(vs(s), precision, scale)
-      case b: BytesVec => Decimal(new java.math.BigDecimal(
-        new java.math.BigInteger(b.data, b.start(s), b.len(s)), scale), precision, scale)
-      case other => throw new UnsupportedOperationException(s"decimal over $other")
-    }
-  }
-  override def getArray(rowId: Int): ColumnarArray =
-    new ColumnarArray(kids(0), offsets(rowId), offsets(rowId + 1) - offsets(rowId))
-  override def getMap(rowId: Int): ColumnarMap =
-    new ColumnarMap(kids(0), kids(1), offsets(rowId), offsets(rowId + 1) - offsets(rowId))
-
-  override def getByte(rowId: Int): Byte =
-    throw new UnsupportedOperationException("byte")
-  override def getShort(rowId: Int): Short =
-    throw new UnsupportedOperationException("short")
-  override def getChild(ordinal: Int): ColumnVector = kids(ordinal)
-  override def close(): Unit = ()
-}
-
-object GraftColumnVector {
-
-  /** rowId -> value index (-1 = null); null (identity) when no nulls. */
-  private def slots(defs: Array[Int], maxDef: Int): Array[Int] =
-    if (defs == null) null
-    else {
-      val m = new Array[Int](defs.length)
-      var i = 0
-      var vi = 0
-      while (i < defs.length) {
-        if (defs(i) == maxDef) { m(i) = vi; vi += 1 } else m(i) = -1
-        i += 1
-      }
-      m
-    }
-
-  /** A LIST or MAP column from its one-level shredding: rep 0 starts a row;
-    * def 0 = null row, 1 = empty, 2 = entry whose last leaf is null, 3 =
-    * entry with every leaf. A LIST's one leaf holds its non-null elements;
-    * a MAP's key leaf holds a key per entry (def >= 2) and its value leaf
-    * the non-null values. A leaf count the type does not have fails like a
-    * column without a nested chunk. */
-  def repeated(dt: DataType, leaves: Array[ColVec], rep: Array[Byte],
-      defs: Array[Byte], numRows: Int): GraftColumnVector = {
-    val leafTypes = dt match {
-      case ArrayType(et, _) => Seq(et)
-      case MapType(kt, vt, _) => Seq(kt, vt)
-      case _ => Seq.empty
-    }
-    require(leafTypes.nonEmpty && leaves.length == leafTypes.length,
-      s"$dt column without a nested chunk")
-    val (offsets, rowSlots, entryDefs) = shredded(rep, defs, numRows)
-    val required = leaves.init
-    require(required.forall(_.length == entryDefs.length) &&
-      leaves.last.length == entryDefs.count(_ == 3),
-      s"$dt chunk: leaf value counts ${leaves.map(_.length).mkString(", ")} " +
-        "disagree with the levels")
-    val kids = required.indices.map(k =>
-      new GraftColumnVector(leafTypes(k), required(k), null, 1)) :+
-      new GraftColumnVector(leafTypes.last, leaves.last, entryDefs, 3)
-    new GraftColumnVector(dt, null, rowSlots, offsets, kids.toArray)
-  }
-
-  /** Rep/def levels as (row offsets into the entry slots, the row null
-    * map, each entry's def level); entries are the slots with def >= 2. */
-  private def shredded(rep: Array[Byte], defs: Array[Byte],
-      numRows: Int): (Array[Int], Array[Int], Array[Int]) = {
-    require(rep.length == defs.length, "rep/def stream length mismatch")
-    val offsets = new Array[Int](numRows + 1)
-    val rowDefs = new Array[Int](numRows)
-    val entryDefs = new Array[Int](defs.length)
-    var row = -1
-    var entries = 0
-    var i = 0
-    while (i < defs.length) {
-      if (rep(i) == 0) {
-        row += 1
-        require(row < numRows, s"nested levels: more than $numRows rows")
-        offsets(row) = entries
-        rowDefs(row) = if (defs(i) == 0) 0 else 1
-      } else require(row >= 0 && defs(i) >= 2, s"nested levels: bad continuation slot $i")
-      if (defs(i) >= 2) { entryDefs(entries) = defs(i); entries += 1 }
-      i += 1
-    }
-    require(row + 1 == numRows, s"nested levels: ${row + 1} rows, expected $numRows")
-    offsets(numRows) = entries
-    (offsets, slots(rowDefs, 1), java.util.Arrays.copyOf(entryDefs, entries))
-  }
-}
-
-final class GraftPartitionReader(fp: GraftFilePartition, schema: StructType,
-    bounds: ScanBounds, limit: Int = -1) extends PartitionReader[InternalRow] {
-
-  private val toCatalyst =
-    CatalystTypeConverters.createToCatalystConverter(schema)
-  private val partMap = fp.partValues.toMap
-  // requested fields that live in the FILE vs in the directory path
-  private val fileFields = schema.fields.filter(f => !partMap.contains(f.name))
-  private def partConst(f: StructField): Any = {
-    val v = partMap(f.name)
-    if (f.dataType == LongType) v.toLong else v
-  }
-
-  private val it: Iterator[InternalRow] = {
-    // footer tail only — data bytes are fetched per projected chunk below,
-    // so a k-of-n column projection reads k/n of the file's data I/O
-    val (meta, rgs, _) = GraftFlatScan.taskRowGroups(fp, bounds)
-    val proj = fileFields.map(_.name).toSet
-    // rgs.iterator keeps row-group decode lazy: a pushed limit stops
-    // before trailing row groups are ever decompressed
-    val rows =
-      if (fileFields.isEmpty)
-        // partition-column-only projection (e.g. SELECT lang): residual
-        // file-column filters force their columns into the schema, so this
-        // branch can only carry partition filters — already applied
-        rgs.iterator.flatMap { rg =>
-          val row = toCatalyst(org.apache.spark.sql.Row.fromSeq(
-            schema.fields.toSeq.map(partConst))).asInstanceOf[InternalRow]
-          Iterator.fill(meta.rowGroups(rg).numRows.toInt)(row)
-        }
-      else rgs.iterator.flatMap { rg =>
-        val fetch = new ParquetFileReader.ChunkFetcher(fp.path)
-        // readRowsFetched materializes the row group before returning,
-        // so the fetcher can close eagerly
-        val groupRows =
-          try ParquetFileReader.readRowsFetched(fetch, meta, rg, proj)
-          finally fetch.close()
-        groupRows.iterator.map { g =>
-          toCatalyst(org.apache.spark.sql.Row.fromSeq(
-            schema.fields.toSeq.map(f =>
-              if (partMap.contains(f.name)) partConst(f)
-              else ParquetSource.externalValue(g(f.name), f.dataType))))
-            .asInstanceOf[InternalRow]
-        }
-      }
-    if (limit >= 0) rows.take(limit) else rows
-  }
-
-  private var cur: InternalRow = _
-  override def next(): Boolean = { val h = it.hasNext; if (h) cur = it.next(); h }
-  override def get(): InternalRow = cur
-  override def close(): Unit = ()
 }

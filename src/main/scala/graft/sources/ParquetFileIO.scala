@@ -3,6 +3,8 @@ package graft.sources
 import scala.collection.immutable.ArraySeq
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.sql.types.{StringType, StructType}
+
 import graft.core._
 
 /** Real `.parquet` FILE interop — the reference's most user-visible
@@ -156,14 +158,14 @@ object ParquetFileReader {
   // (null-suppressed) plus def/rep levels, with no per-value boxing:
   // primitives land in primitive arrays, byte-like values (BYTE_ARRAY,
   // INT96, FIXED_LEN_BYTE_ARRAY) in one arena shared across pages. Record
-  // assembly, the row reader, the columnar scan and the aggregate fallback
-  // are views over it ([[readTriplets]], [[readColumn]],
-  // [[readColumnRowRanges]], [[readColumnVec]]), so every chunk and page
+  // assembly ([[readTriplets]]), the flat column views ([[readColumn]],
+  // [[readColumnRowRanges]], [[readColumnVec]]), the columnar file scan and
+  // the aggregate fallback all decode through it, so every chunk and page
   // guard lives here, once.
 
   /** One decoded chunk (or its kept rows): non-null values, def levels
     * (null when maxDef == 0) and rep levels (null when maxRep == 0). */
-  private[sources] final case class DecodedChunk(values: ColVec,
+  private[graft] final case class DecodedChunk(values: ColVec,
       defs: Array[Int], reps: Array[Int])
 
   /** Decode one column chunk. With `ranges` (ascending disjoint chunk-row
@@ -573,7 +575,7 @@ object ParquetFileReader {
     * entry points take (buffer, chunk meta) with offsets drawn from the
     * meta, so handing them the fetched buffer plus rebased meta reuses
     * the whole decode layer unchanged. */
-  final class ChunkFetcher(path: String) extends AutoCloseable {
+  final class ChunkFetcher(val path: String) extends AutoCloseable {
     private val in = GraftIO.forPath(path).open(path)
     private val fileLen = in.length
     def fetch(cm: PqColumnMeta): (Array[Byte], PqColumnMeta) = {
@@ -836,27 +838,18 @@ object ParquetFileReader {
   private def readRowsVia(tripletsOf: LeafColumn => Triplets,
       meta: PqFileMeta, rg: Int,
       projection: Set[String]): IndexedSeq[PqGroupVal] = {
-    val (rootChildren, _) = schemaTree(meta)
-    val kept =
-      if (projection == null) rootChildren
-      else rootChildren.filter(c => projection.contains(c.elem.name))
+    val kept = ParquetSource.fields(meta)
+      .filter { case (f, _) => projection == null || projection.contains(f.name) }
     val leafCols = leafColumns(meta, rg)
     val trips = new Array[Triplets](leafCols.size)
-    kept.foreach(c => leafIdxsOf(c).foreach(i =>
-      trips(i) = tripletsOf(leafCols(i))))
-    val tripsSeq = scala.collection.immutable.ArraySeq.unsafeWrapArray(trips)
-    val readers = kept.map(c => buildReader(c, 0, 0, tripsSeq))
-    val names = kept.map(_.elem.name)
+    kept.foreach(_._2.leaves.foreach(i => trips(i) = tripletsOf(leafCols(i))))
+    val readers = kept.map(f => buildReader(f._2, 0, 0, trips))
+    val names = kept.map(_._1.name)
     val n = meta.rowGroups(rg).numRows
     // loosest physical bound: bools pack 8 values per uncompressed byte
     require(n >= 0 && n <= 8L * math.max(16L, meta.rowGroups(rg).totalByteSize),
       s"row group claims $n rows in ${meta.rowGroups(rg).totalByteSize} bytes")
     (0 until n.toInt).map(_ => PqGroupVal(names, readers.map(_.read())))
-  }
-
-  private def leafIdxsOf(node: SchemaNode): Seq[Int] = node match {
-    case l: SchemaLeaf => Seq(l.leafIdx)
-    case g: SchemaGroup => g.children.flatMap(leafIdxsOf)
   }
 
   /** Assembly reader tree — the reference's `Reader` combinators
@@ -943,70 +936,25 @@ object ParquetFileReader {
     def advance(): Unit = children.foreach(_.advance())
   }
 
-  /** Build the reader for `node` in parent context (pdef, prep). */
-  private def buildReader(node: SchemaNode, pdef: Int, prep: Int,
-      trips: IndexedSeq[Triplets]): RReader = node match {
-    case l: SchemaLeaf =>
-      val base = new PrimReader(trips(l.leafIdx), converterFor(l.elem))
-      l.elem.repetition match {
-        case 2 => new RepeatedReader(pdef, prep, base)
-        case 1 => new OptionReader(pdef, base)
-        case _ => base
-      }
-    case g: SchemaGroup if g.elem.repetition == 2 =>
-      // unannotated repeated group (e.g. repeated_no_annotation.parquet):
-      // a list whose element is the group itself
-      new RepeatedReader(pdef, prep, innerReader(g, pdef + 1, prep + 1, trips))
-    case g: SchemaGroup =>
-      val se = g.elem
-      val d = if (se.repetition == 1) pdef + 1 else pdef
-      val isList = se.convertedType == PqConvertedType.List
-      val isMap = se.convertedType == PqConvertedType.Map ||
-        se.convertedType == PqConvertedType.MapKeyValue
-      val body: RReader =
-        if (isList) {
-          val rep = g.children.head // the repeated child
-          rep match {
-            // 3-level LIST: repeated single-field wrapper group — element is
-            // the field (parquet LogicalTypes backward-compat rule: a
-            // single-field repeated group named "array" or "<name>_tuple" IS
-            // the element)
-            case rg: SchemaGroup if rg.elem.repetition == 2 &&
-                rg.children.size == 1 && rg.elem.name != "array" &&
-                !rg.elem.name.endsWith("_tuple") =>
-              new RepeatedReader(d, prep,
-                buildReader(rg.children.head, d + 1, prep + 1, trips))
-            // 2-level legacy: the repeated node is the element
-            case other =>
-              new RepeatedReader(d, prep, innerReader(other, d + 1, prep + 1, trips))
-          }
-        } else if (isMap) {
-          val kv = g.children.head.asInstanceOf[SchemaGroup] // repeated key_value
-          new KeyValueReader(d, prep,
-            buildReader(kv.children(0), d + 1, prep + 1, trips),
-            buildReader(kv.children(1), d + 1, prep + 1, trips))
-        } else {
-          new GroupReader(g.children.map(_.elem.name),
-            g.children.map(c => buildReader(c, d, prep, trips)))
-        }
-      if (se.repetition == 1) new OptionReader(pdef, body) else body
+  /** Build the reader for shape `s` in parent context (pdef, prep): the
+    * footer walk that types a field ([[ParquetSource.fields]]) also
+    * decides how its records assemble. */
+  private def buildReader(s: GraftColumnVector.Shape, pdef: Int, prep: Int,
+      trips: Array[Triplets]): RReader = {
+    import GraftColumnVector.{Group, Prim, Repeated}
+    val body = s match {
+      case Prim(dt, _, leaf) => new PrimReader(trips(leaf), if (dt != StringType) identity
+        else (v: Any) => new String(v.asInstanceOf[Array[Byte]], java.nio.charset.StandardCharsets.UTF_8))
+      case Group(st: StructType, d, fields) =>
+        new GroupReader(st.fieldNames.toSeq, fields.map(buildReader(_, d, prep, trips)))
+      case Repeated(_, d, entryDef, entryRep, Seq(e)) =>
+        new RepeatedReader(d, prep, buildReader(e, entryDef, entryRep, trips))
+      case Repeated(_, d, entryDef, entryRep, Seq(k, v)) => new KeyValueReader(d, prep,
+        buildReader(k, entryDef, entryRep, trips), buildReader(v, entryDef, entryRep, trips))
+      case other => throw new IllegalArgumentException(s"no record reader for $other")
+    }
+    if (s.defined > pdef) new OptionReader(pdef, body) else body
   }
-
-  /** Reader for a repeated node treated as the element itself (no extra
-    * Option/Repeated wrapper — the enclosing RepeatedReader owns the loop). */
-  private def innerReader(node: SchemaNode, d: Int, r: Int,
-      trips: IndexedSeq[Triplets]): RReader = node match {
-    case l: SchemaLeaf => new PrimReader(trips(l.leafIdx), converterFor(l.elem))
-    case g: SchemaGroup => new GroupReader(g.children.map(_.elem.name),
-      g.children.map(c => buildReader(c, d, r, trips)))
-  }
-
-  private def converterFor(se: PqSchemaElement): Any => Any =
-    if (se.typ == PqType.ByteArray &&
-      (se.convertedType == PqConvertedType.Utf8 || se.convertedType == 4 /*ENUM*/ ))
-      (v: Any) => new String(v.asInstanceOf[Array[Byte]],
-        java.nio.charset.StandardCharsets.UTF_8)
-    else identity[Any]
 
   // -------------------------------------------------------------- utilities
 

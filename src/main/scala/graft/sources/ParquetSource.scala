@@ -3,45 +3,86 @@ package graft.sources
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
-import graft.sources.ParquetFileReader.PqGroupVal
+import graft.sources.GraftColumnVector.{Group, Prim, Repeated, Shape}
+import graft.sources.ParquetFileReader.{PqGroupVal, SchemaGroup, SchemaLeaf, SchemaNode}
 
-/** The Spark face of a Parquet footer and its assembled values, shared by
-  * the DataSource V2 reader ([[GraftParquetFormat]], the one read path for
-  * `.parquet` files): the Spark schema of a footer, and the external-row
-  * value of an assembled Parquet value.
+/** The Spark face of a Parquet footer and its assembled values: the Spark
+  * schema of a footer with each field's vector shape (what the DataSource
+  * V2 reader, [[GraftParquetFormat]], reads `.parquet` files by), and the
+  * external-row value of a value assembled by the library's row API.
   */
 object ParquetSource {
 
-  /** Spark schema from a parquet footer (flat / LIST / MAP subset — the
-    * shapes [[ParquetFileWriter]] emits, which is also the common shape of
-    * externally-written files). */
-  def sparkSchema(meta: PqFileMeta): StructType = {
+  /** Spark schema of a parquet footer: flat, LIST (3-level and legacy
+    * 2-level), MAP (and MAP_KEY_VALUE), STRUCT and bare repeated fields,
+    * nested to any depth. */
+  def sparkSchema(meta: PqFileMeta): StructType = StructType(fields(meta).map(_._1))
+
+  /** Each top-level footer field as a Spark field and the shape
+    * [[GraftColumnVector.build]] assembles its vector by, from one walk
+    * over the footer schema, so a field's type and its vector cannot
+    * disagree. A shape the walk cannot map fails with an
+    * IllegalArgumentException naming the column. */
+  def fields(meta: PqFileMeta): Seq[(StructField, Shape)] = {
     val (rootChildren, _) = ParquetFileReader.schemaTree(meta)
-    StructType(rootChildren.map(n => StructField(n.elem.name, dataTypeOf(n),
-      nullable = n.elem.repetition != 0)))
+    rootChildren.map { n =>
+      val s = shapeOf(n, 0, 0, n.elem.name)
+      (StructField(n.elem.name, s.dt, nullable = n.elem.repetition != 0), s)
+    }
   }
 
-  private def dataTypeOf(node: ParquetFileReader.SchemaNode): DataType =
+  /** The shape of `node` under parent def level `pdef` and rep level
+    * `prep`; `path` names it in errors. */
+  private def shapeOf(node: SchemaNode, pdef: Int, prep: Int, path: String): Shape = {
+    val se = node.elem
+    // a bare repeated field is a non-null list of itself
+    if (se.repetition == 2) {
+      val e = element(node, pdef + 1, prep + 1, path)
+      return Repeated(ArrayType(e.dt), pdef, pdef + 1, prep + 1, Seq(e))
+    }
+    val d = pdef + (if (se.repetition == 1) 1 else 0)
+    def fail(why: String) = throw new IllegalArgumentException(s"column $path: $why")
+    def in(c: SchemaNode) = s"$path.${c.elem.name}"
     node match {
-      case l: ParquetFileReader.SchemaLeaf => leafType(l.elem)
-      case g: ParquetFileReader.SchemaGroup
-          if g.elem.convertedType == PqConvertedType.List =>
-        g.children.head match {
-          case rg: ParquetFileReader.SchemaGroup if rg.children.size == 1 =>
-            ArrayType(dataTypeOf(rg.children.head))
-          case other => ArrayType(dataTypeOf(other))
+      case l: SchemaLeaf => Prim(leafType(l.elem, path), l.maxDef, l.leafIdx)
+      case g: SchemaGroup if se.convertedType == PqConvertedType.List =>
+        val e = g.children match {
+          // 3-level: the repeated group's one field is the element, unless
+          // the group is a legacy 2-level element ("array", "<name>_tuple")
+          case Seq(rg: SchemaGroup) if rg.elem.repetition == 2 && rg.children.size == 1 &&
+              rg.elem.name != "array" && !rg.elem.name.endsWith("_tuple") =>
+            shapeOf(rg.children.head, d + 1, prep + 1, s"${in(rg)}.${rg.children.head.elem.name}")
+          // legacy 2-level: the repeated field is the element
+          case Seq(r) if r.elem.repetition == 2 => element(r, d + 1, prep + 1, in(r))
+          case _ => fail("a LIST group must hold exactly one repeated field")
         }
-      case g: ParquetFileReader.SchemaGroup
-          if g.elem.convertedType == PqConvertedType.Map ||
-            g.elem.convertedType == PqConvertedType.MapKeyValue =>
-        val kv = g.children.head.asInstanceOf[ParquetFileReader.SchemaGroup]
-        MapType(dataTypeOf(kv.children(0)), dataTypeOf(kv.children(1)))
-      case g: ParquetFileReader.SchemaGroup =>
-        StructType(g.children.map(c => StructField(c.elem.name, dataTypeOf(c),
-          nullable = c.elem.repetition != 0)))
+        Repeated(ArrayType(e.dt), d, d + 1, prep + 1, Seq(e))
+      case g: SchemaGroup if se.convertedType == PqConvertedType.Map ||
+          se.convertedType == PqConvertedType.MapKeyValue => g.children match {
+        case Seq(kv: SchemaGroup) if kv.elem.repetition == 2 && kv.children.size == 2 =>
+          val Seq(k, v) = kv.children.map(c => shapeOf(c, d + 1, prep + 1, s"${in(kv)}.${c.elem.name}"))
+          Repeated(MapType(k.dt, v.dt), d, d + 1, prep + 1, Seq(k, v))
+        case _ => fail("a MAP group must hold one repeated key-value group")
+      }
+      case g: SchemaGroup => struct(g, d, prep, path)
+    }
+  }
+
+  /** A repeated field as its own list's (required) element. */
+  private def element(node: SchemaNode, d: Int, r: Int, path: String): Shape =
+    node match {
+      case l: SchemaLeaf => Prim(leafType(l.elem, path), l.maxDef, l.leafIdx)
+      case g: SchemaGroup => struct(g, d, r, path)
     }
 
-  private def leafType(se: PqSchemaElement): DataType = se.typ match {
+  private def struct(g: SchemaGroup, d: Int, r: Int, path: String): Shape = {
+    val kids = g.children.map(c => shapeOf(c, d, r, s"$path.${c.elem.name}"))
+    Group(StructType(g.children.zip(kids).map { case (c, k) =>
+      StructField(c.elem.name, k.dt, nullable = c.elem.repetition != 0)
+    }), d, kids)
+  }
+
+  private def leafType(se: PqSchemaElement, path: String): DataType = se.typ match {
     case PqType.Boolean => BooleanType
     case PqType.Int32 =>
       if (se.convertedType == PqConvertedType.Date) DateType
@@ -66,7 +107,7 @@ object ParquetSource {
       if (se.convertedType == PqConvertedType.Decimal)
         DecimalType(se.precision, se.scale)
       else BinaryType
-    case other => throw new IllegalArgumentException(s"leaf type $other")
+    case other => throw new IllegalArgumentException(s"column $path: leaf type $other")
   }
 
   /** Assembled parquet value -> Spark external-row value for `dt`. */

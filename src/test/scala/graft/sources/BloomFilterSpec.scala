@@ -309,8 +309,8 @@ class BloomFilterSpec extends AnyFunSuite with BeforeAndAfterAll
     // a whole-file task (past FooterPlanLimit) probes the blooms itself;
     // a planned task reads its row groups without probing them again
     val hit = ScanBounds.empty.in("commit", Seq(bytes(commit(1234))))
-    assert(GraftFlatScan.taskRowGroups(GraftFilePartition(path), hit)._2 == Seq(2))
-    assert(GraftFlatScan.taskRowGroups(GraftFilePartition(path, 0 until 8), hit)._2 ==
+    assert(GraftFlatScan.taskRowGroups(GraftFilePartition(path, bounds = hit))._2 == Seq(2))
+    assert(GraftFlatScan.taskRowGroups(GraftFilePartition(path, 0 until 8, hit))._2 ==
       (0 until 8))
     // the rows equal Spark's own reader's
     val ours = spark.read.format(GraftParquetFormat.Name).load(dir)

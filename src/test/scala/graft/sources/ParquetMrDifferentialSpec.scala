@@ -3,6 +3,8 @@ package graft.sources
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
@@ -20,8 +22,10 @@ import graft.core.{BoolVec, BytesVec, ColVec, DoubleVec, FloatVec, IntVec, LongV
   * PLAIN. Then three of our reads must equal Spark's native read value for
   * value: record assembly ([[ParquetFileReader.readFileRows]]), the typed
   * column decode ([[ParquetFileReader.readColumnVec]]) on the flat columns,
-  * and the `graft` DSv2 scan with and without a pushed range filter. */
-class ParquetMrDifferentialSpec extends AnyFunSuite with BeforeAndAfterAll {
+  * and the `graft` DSv2 scan (columnar for flat and nested files alike)
+  * whole, projected to `id` and with a pushed range filter. */
+class ParquetMrDifferentialSpec extends AnyFunSuite with BeforeAndAfterAll
+    with AdaptiveSparkPlanHelper {
 
   @transient private var spark: SparkSession = _
   private lazy val tmp =
@@ -208,15 +212,28 @@ class ParquetMrDifferentialSpec extends AnyFunSuite with BeforeAndAfterAll {
       rowsById(recs.map(g => Row.fromSeq(schema.fields.toSeq.map(f =>
         ParquetSource.externalValue(g(f.name), f.dataType))))), exp)
 
-    // the DSv2 scan, whole and with a pushed range filter
+    // the DSv2 scan, whole, projected to `id` and with a pushed range
+    // filter; every scan columnar, whatever the file's shape
     val ours = spark.read.format(GraftParquetFormat.Name).load(dir)
     assertSameRows(s"$name DSv2 $dir", rowsById(ours.collect().toSeq), exp)
+    assertColumnar(s"$name DSv2 $dir", ours)
+    val ids = ours.select("id")
+    assertSameRows(s"$name DSv2 id $dir", rowsById(ids.collect().toSeq),
+      rowsById(native.select("id").collect().toSeq))
+    assertColumnar(s"$name DSv2 id $dir", ids)
     val filtered = ours.where(col("id").between(lo, hi))
     assert(filtered.queryExecution.executedPlan.toString.contains("ranges="),
       s"$name: range filter not pushed")
     assertSameRows(s"$name DSv2 filtered $dir",
       rowsById(filtered.collect().toSeq),
       rowsById(native.where(col("id").between(lo, hi)).collect().toSeq))
+    assertColumnar(s"$name DSv2 filtered $dir", filtered)
+  }
+
+  /** Every DSv2 scan `df` ran (it must have run) was columnar. */
+  private def assertColumnar(what: String, df: DataFrame): Unit = {
+    val scans = collect(df.queryExecution.executedPlan) { case b: BatchScanExec => b }
+    assert(scans.nonEmpty && scans.forall(_.supportsColumnar), s"$what: $scans")
   }
 
   /** The typed column decode on every flat column of every row group of
