@@ -13,9 +13,11 @@ import graft.sources.ParquetFileReader.DecodedChunk
   * (values are null-suppressed in the ColVec). A STRUCT, LIST or MAP vector
   * holds no values: its null map marks null rows, a STRUCT's children share
   * its rows, and a LIST's or MAP's rows index `offsets` into child vectors
-  * over its entries. Built only by [[GraftColumnVector.build]]. */
+  * over its entries. A null row reads as its type's default (0, false or
+  * null), as in Spark's own vectors. Built only by
+  * [[GraftColumnVector.build]]. */
 final class GraftColumnVector private (dt: DataType, decoded: ColVec,
-    valIdx: Array[Int], offsets: Array[Int], kids: Array[ColumnVector])
+    valIdx: Array[Int], offsets: Array[Int], kids: Array[GraftColumnVector])
     extends ColumnVector(dt) {
 
   // INT96 timestamps decode as raw 12-byte values: convert to micros once
@@ -46,32 +48,43 @@ final class GraftColumnVector private (dt: DataType, decoded: ColVec,
     nNulls
   }
 
-  override def getBoolean(rowId: Int): Boolean =
-    vec.asInstanceOf[BoolVec].values(slot(rowId))
-  override def getInt(rowId: Int): Int =
-    vec.asInstanceOf[IntVec].values(slot(rowId))
-  override def getLong(rowId: Int): Long =
-    vec.asInstanceOf[LongVec].values(slot(rowId))
-  override def getFloat(rowId: Int): Float =
-    vec.asInstanceOf[FloatVec].values(slot(rowId))
-  override def getDouble(rowId: Int): Double =
-    vec.asInstanceOf[DoubleVec].values(slot(rowId))
+  override def getBoolean(rowId: Int): Boolean = {
+    val s = slot(rowId)
+    s >= 0 && vec.asInstanceOf[BoolVec].values(s)
+  }
+  override def getInt(rowId: Int): Int = {
+    val s = slot(rowId)
+    if (s < 0) 0 else vec.asInstanceOf[IntVec].values(s)
+  }
+  override def getLong(rowId: Int): Long = {
+    val s = slot(rowId)
+    if (s < 0) 0L else vec.asInstanceOf[LongVec].values(s)
+  }
+  override def getFloat(rowId: Int): Float = {
+    val s = slot(rowId)
+    if (s < 0) 0f else vec.asInstanceOf[FloatVec].values(s)
+  }
+  override def getDouble(rowId: Int): Double = {
+    val s = slot(rowId)
+    if (s < 0) 0d else vec.asInstanceOf[DoubleVec].values(s)
+  }
   override def getUTF8String(rowId: Int):
       org.apache.spark.unsafe.types.UTF8String = {
-    val b = vec.asInstanceOf[BytesVec]
     val s = slot(rowId)
+    if (s < 0) return null
+    val b = vec.asInstanceOf[BytesVec]
     org.apache.spark.unsafe.types.UTF8String.fromBytes(
       b.data, b.start(s), b.len(s))
   }
   override def getBinary(rowId: Int): Array[Byte] = {
-    val b = vec.asInstanceOf[BytesVec]
     val s = slot(rowId)
-    java.util.Arrays.copyOfRange(b.data, b.start(s), b.start(s) + b.len(s))
+    if (s < 0) null else vec.asInstanceOf[BytesVec].valueBytes(s)
   }
   /** Unscaled int32/int64, or two's-complement big-endian unscaled bytes
     * (the FLBA layout of wide decimals). */
   override def getDecimal(rowId: Int, precision: Int, scale: Int): Decimal = {
     val s = slot(rowId)
+    if (s < 0) return null
     vec match {
       case IntVec(vs) => Decimal.createUnsafe(vs(s), precision, scale)
       case LongVec(vs) => Decimal.createUnsafe(vs(s), precision, scale)
@@ -89,8 +102,26 @@ final class GraftColumnVector private (dt: DataType, decoded: ColVec,
     throw new UnsupportedOperationException("byte")
   override def getShort(rowId: Int): Short =
     throw new UnsupportedOperationException("short")
-  override def getChild(ordinal: Int): ColumnVector = kids(ordinal)
+  override def getChild(ordinal: Int): GraftColumnVector = kids(ordinal)
   override def close(): Unit = ()
+
+  /** Non-null row `rowId`'s value as the library's row API boxes it:
+    * Boolean, Int, Long, Float, Double, or a copy of its raw bytes (INT96
+    * unconverted). */
+  private[sources] def value(rowId: Int): Any = {
+    val s = slot(rowId)
+    decoded match {
+      case BoolVec(a) => a(s)
+      case IntVec(a) => a(s)
+      case LongVec(a) => a(s)
+      case FloatVec(a) => a(s)
+      case DoubleVec(a) => a(s)
+      case b: BytesVec => b.valueBytes(s)
+    }
+  }
+
+  /** A LIST or MAP row's entries: their positions in the child vectors. */
+  private[sources] def entries(rowId: Int): Range = offsets(rowId) until offsets(rowId + 1)
 }
 
 /** The one place where rep/def levels become vectors (the Dremel level
@@ -202,11 +233,11 @@ object GraftColumnVector {
 
   /** The child vectors of a node, each required to hold `count` positions. */
   private def children(kids: Seq[Shape], leaves: Int => DecodedChunk,
-      entry: Int, rep: Int, count: Int): Array[ColumnVector] =
+      entry: Int, rep: Int, count: Int): Array[GraftColumnVector] =
     kids.map { k =>
       val (v, n) = node(k, leaves, entry, rep)
       require(n == count, s"${k.dt} levels hold $n positions, expected $count")
-      v: ColumnVector
+      v
     }.toArray
 
   /** rowId -> value index (-1 = null); null (identity) when no nulls. */

@@ -13,6 +13,7 @@ import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -702,7 +703,8 @@ private[sources] object GraftFlatScan {
   }
 
   /** The projected fields' vectors for one row group and its kept row
-    * count; only their leaves are fetched and decoded. When all those
+    * count; only their leaves are fetched and decoded, and a field the
+    * file lacks reads as nulls, as in Spark's native reader. When all those
     * leaves are flat, page statistics of the filter columns narrow the rows
     * (a repeated leaf cannot be cut to row ranges). Residual Spark-side
     * filters re-apply afterwards, so a stat-less page surviving is only a
@@ -717,11 +719,9 @@ private[sources] object GraftFlatScan {
     def fetched(cm: PqColumnMeta): (Array[Byte], PqColumnMeta) =
       cache.getOrElseUpdate(cm.pathInSchema, fetch.fetch(cm))
     val byName = ParquetSource.fields(meta).map { case (f, s) => f.name -> s }.toMap
-    val shapes = fields.map(f => GraftColumnVector.project(byName.getOrElse(f.name,
-      throw new IllegalArgumentException(s"${fetch.path} has no column ${f.name}")),
-      f.dataType))
+    val shapes = fields.map(f => byName.get(f.name).map(GraftColumnVector.project(_, f.dataType)))
     val leaves = ParquetFileReader.leafColumns(meta, rg)
-    val used = shapes.flatMap(_.leaves)
+    val used = shapes.flatten.flatMap(_.leaves)
     val nRows = meta.rowGroups(rg).numRows
     var keep: Seq[(Long, Long)] = Seq((0L, nRows))
     // page row ranges passing `keepFn` for one filter column: from the
@@ -756,7 +756,13 @@ private[sources] object GraftFlatScan {
       val (b, rcm) = fetched(leaves(i).meta)
       decoded(i) = ParquetFileReader.decodeChunk(b, leaves(i).copy(meta = rcm), rowRanges)
     }
-    (shapes.map(GraftColumnVector.build(_, decoded, kept): ColumnVector), kept)
+    (fields.zip(shapes).map {
+      case (_, Some(s)) => GraftColumnVector.build(s, decoded, kept)
+      case (f, None) =>
+        val v = new OnHeapColumnVector(kept, f.dataType)
+        v.putNulls(0, kept)
+        v
+    }, kept)
   }
 }
 
@@ -779,7 +785,6 @@ final class GraftReaderFactory(schema: StructType, limit: Int = -1)
 final class GraftColumnarPartitionReader(fp: GraftFilePartition,
     schema: StructType, limit: Int)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
   import org.apache.spark.sql.vectorized.ColumnarBatch
 
   private val partMap = fp.partValues.toMap

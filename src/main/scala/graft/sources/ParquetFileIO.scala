@@ -3,9 +3,11 @@ package graft.sources
 import scala.collection.immutable.ArraySeq
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types.{BinaryType, BooleanType, DoubleType, FloatType,
+  IntegerType, LongType, StringType, StructType}
 
 import graft.core._
+import graft.sources.GraftColumnVector.{Group, Prim, Repeated, Shape}
 
 /** Real `.parquet` FILE interop — the reference's most user-visible
   * capability (`/root/reference/src/file/reader.rs:145-283`,
@@ -14,8 +16,10 @@ import graft.core._
   * ([[graft.core.ValueCodec]]) and pages decompress in
   * [[graft.core.BlockCodec]], the code the `GC` chunk container runs. This
   * layer adds only the PAR1 container (thrift footer, page headers, levels,
-  * offsets) and the record re-assembly (the reference's
-  * `src/record/reader.rs` Dremel layer).
+  * offsets) and the row API's boxing of assembled records (the reference's
+  * `src/record/reader.rs` Dremel layer): records assemble in
+  * [[GraftColumnVector.build]], the builder the DSv2 file scan and the `GC`
+  * chunk scan use, so rep/def levels map to values and nulls in one place.
   *
   * Reader: flat AND nested schemas (LIST / MAP / struct groups, legacy
   * 2-level lists, unannotated repeated fields), data pages V1 AND V2 (v2:
@@ -42,11 +46,7 @@ object ParquetFileReader {
     * null-suppressed (one entry per slot with def == maxDef). `defs`/`reps`
     * are null when the respective max level is 0 (all zeros). */
   final case class Triplets(values: IndexedSeq[Any], defs: Array[Int],
-      reps: Array[Int], maxDef: Int) {
-    def slots: Int = if (defs != null) defs.length else values.length
-    def defAt(i: Int): Int = if (defs == null) 0 else defs(i)
-    def repAt(i: Int): Int = if (reps == null) 0 else reps(i)
-  }
+      reps: Array[Int], maxDef: Int)
 
   // ------------------------------------------------------------ schema tree
 
@@ -81,11 +81,20 @@ object ParquetFileReader {
     val n = bytes.length
     require(n > 12 && bytes(0) == 'P' && bytes(1) == 'A' && bytes(2) == 'R' &&
       bytes(3) == '1', "not a parquet file (magic)")
-    require(bytes(n - 4) == 'P' && bytes(n - 3) == 'A' && bytes(n - 2) == 'R' &&
-      bytes(n - 1) == '1', "not a parquet file (trailer magic)")
-    val footerLen = (bytes(n - 8) & 0xFF) | ((bytes(n - 7) & 0xFF) << 8) |
-      ((bytes(n - 6) & 0xFF) << 16) | ((bytes(n - 5) & 0xFF) << 24)
-    ParquetMeta.parseFileMeta(bytes, n - 8 - footerLen)
+    ParquetMeta.parseFileMeta(bytes, n - 8 - footerLength(bytes, n - 8, n, "parquet bytes"))
+  }
+
+  /** The footer length in the 8-byte trailer at `trailer(at)` of the
+    * `n`-byte file `what`, which must be longer than 12 bytes: the trailer
+    * must end in the magic and the footer fit between it and the leading
+    * magic. */
+  private def footerLength(trailer: Array[Byte], at: Int, n: Long, what: String): Int = {
+    require(trailer(at + 4) == 'P' && trailer(at + 5) == 'A' && trailer(at + 6) == 'R' &&
+      trailer(at + 7) == '1', s"$what: not a parquet file (trailer magic)")
+    val len = (trailer(at) & 0xFF) | ((trailer(at + 1) & 0xFF) << 8) |
+      ((trailer(at + 2) & 0xFF) << 16) | ((trailer(at + 3) & 0xFF) << 24)
+    require(len > 0 && len <= n - 12, s"$what: bad footer length $len")
+    len
   }
 
   /** Process-wide footer cache. One query reads each footer 2-3× on the
@@ -128,12 +137,7 @@ object ParquetFileReader {
       require(n > 12, s"$path too short to be a parquet file")
       val tail = new Array[Byte](8)
       in.readFully(n - 8, tail)
-      require(tail(4) == 'P' && tail(5) == 'A' && tail(6) == 'R' &&
-        tail(7) == '1', s"$path: not a parquet file (trailer magic)")
-      val footerLen = (tail(0) & 0xFF) | ((tail(1) & 0xFF) << 8) |
-        ((tail(2) & 0xFF) << 16) | ((tail(3) & 0xFF) << 24)
-      require(footerLen > 0 && footerLen <= n - 12,
-        s"$path: bad footer length $footerLen")
+      val footerLen = footerLength(tail, 0, n, path)
       val buf = new Array[Byte](footerLen)
       in.readFully(n - 8 - footerLen, buf)
       ParquetMeta.parseFileMeta(buf, 0)
@@ -158,10 +162,10 @@ object ParquetFileReader {
   // (null-suppressed) plus def/rep levels, with no per-value boxing:
   // primitives land in primitive arrays, byte-like values (BYTE_ARRAY,
   // INT96, FIXED_LEN_BYTE_ARRAY) in one arena shared across pages. Record
-  // assembly ([[readTriplets]]), the flat column views ([[readColumn]],
-  // [[readColumnRowRanges]], [[readColumnVec]]), the columnar file scan and
-  // the aggregate fallback all decode through it, so every chunk and page
-  // guard lives here, once.
+  // assembly ([[readRows]]), the triplet view ([[readTriplets]]), the flat
+  // column views ([[readColumn]], [[readColumnRowRanges]],
+  // [[readColumnVec]]), the columnar file scan and the aggregate fallback
+  // all decode through it, so every chunk and page guard lives here, once.
 
   /** One decoded chunk (or its kept rows): non-null values, def levels
     * (null when maxDef == 0) and rep levels (null when maxRep == 0). */
@@ -504,25 +508,25 @@ object ParquetFileReader {
     case b: BytesVec => IndexedSeq.tabulate(b.length)(b.valueBytes)
   }
 
-  /** Per-row boxed values of a flat column, nulls inline. */
-  private[sources] def rowValues(v: ColVec, defs: Array[Int],
-      maxDef: Int): IndexedSeq[Any] = {
-    val vals = boxed(v)
-    if (defs == null) vals
-    else {
-      val out = new Array[Any](defs.length)
-      var vi = 0
-      var i = 0
-      while (i < defs.length) {
-        if (defs(i) == maxDef) { out(i) = vals(vi); vi += 1 }
-        i += 1
-      }
-      ArraySeq.unsafeWrapArray(out)
+  /** Per-row boxed values of a decoded flat chunk of `col`, nulls inline:
+    * its vector from [[GraftColumnVector.build]], boxed row by row. */
+  private def flatRows(d: DecodedChunk, col: Column): IndexedSeq[Any] = {
+    val dt = col.typ match {
+      case PqType.Boolean => BooleanType
+      case PqType.Int32 => IntegerType
+      case PqType.Int64 => LongType
+      case PqType.Float => FloatType
+      case PqType.Double => DoubleType
+      case _ => BinaryType // BYTE_ARRAY, INT96 and FIXED_LEN_BYTE_ARRAY: raw bytes
     }
+    val s = Prim(dt, col.maxDef, 0)
+    val rows = if (d.defs != null) d.defs.length else d.values.length
+    val v = GraftColumnVector.build(s, _ => d, rows)
+    IndexedSeq.tabulate(rows)(boxRow(s, v, _))
   }
 
-  /** Raw value/def/rep triplets of one column chunk — the record layer's
-    * boxing view over [[decodeChunk]]. Values: Boolean | Int | Long |
+  /** Raw value/def/rep triplets of one column chunk — a boxing view over
+    * [[decodeChunk]]. Values: Boolean | Int | Long |
     * Float | Double | Array[Byte] (BYTE_ARRAY / INT96 / FLBA raw). */
   def readTriplets(bytes: Array[Byte], col: LeafColumn): Triplets = {
     val d = decodeChunk(bytes, col)
@@ -624,11 +628,9 @@ object ParquetFileReader {
   }
 
   /** Decode one FLAT column chunk to per-row values (nulls inline) — a
-    * boxing view over the one page decoder ([[readColumnVec]]). */
-  def readColumn(bytes: Array[Byte], col: Column): IndexedSeq[Any] = {
-    val (vec, defs) = readColumnVec(bytes, col)
-    rowValues(vec, defs, col.maxDef)
-  }
+    * boxing view over the one page decoder. */
+  def readColumn(bytes: Array[Byte], col: Column): IndexedSeq[Any] =
+    flatRows(decodeChunk(bytes, leafOf(col)), col)
 
   /** Read a whole flat file: (column names, per-column values). */
   def readFile(path: String): (Seq[String], Seq[IndexedSeq[Any]]) = {
@@ -785,10 +787,8 @@ object ParquetFileReader {
     * ranges are never decompressed or decoded. A boxing view over the one
     * page decoder. */
   def readColumnRowRanges(bytes: Array[Byte], col: Column,
-      ranges: Seq[(Long, Long)]): IndexedSeq[Any] = {
-    val d = decodeChunk(bytes, leafOf(col), ranges)
-    rowValues(d.values, d.defs, col.maxDef)
-  }
+      ranges: Seq[(Long, Long)]): IndexedSeq[Any] =
+    flatRows(decodeChunk(bytes, leafOf(col), ranges), col)
 
   // --------------------------------------------------- record assembly
 
@@ -824,7 +824,7 @@ object ParquetFileReader {
     * ReadSchema pushdown, applied inside our own source. */
   def readRows(bytes: Array[Byte], meta: PqFileMeta, rg: Int,
       projection: Set[String] = null): IndexedSeq[PqGroupVal] =
-    readRowsVia(lc => readTriplets(bytes, lc), meta, rg, projection)
+    readRowsVia(decodeChunk(bytes, _), meta, rg, projection)
 
   /** [[readRows]] over a [[ChunkFetcher]]: only the projected chunks'
     * byte ranges are ever read from disk. */
@@ -832,129 +832,47 @@ object ParquetFileReader {
       projection: Set[String] = null): IndexedSeq[PqGroupVal] =
     readRowsVia(lc => {
       val (b, c) = fetch.fetchLeaf(lc)
-      readTriplets(b, c)
+      decodeChunk(b, c)
     }, meta, rg, projection)
 
-  private def readRowsVia(tripletsOf: LeafColumn => Triplets,
+  /** The kept fields' vectors, each built by [[GraftColumnVector.build]]
+    * from the shape that types it ([[ParquetSource.fields]]), boxed row by
+    * row. */
+  private def readRowsVia(decode: LeafColumn => DecodedChunk,
       meta: PqFileMeta, rg: Int,
       projection: Set[String]): IndexedSeq[PqGroupVal] = {
     val kept = ParquetSource.fields(meta)
       .filter { case (f, _) => projection == null || projection.contains(f.name) }
-    val leafCols = leafColumns(meta, rg)
-    val trips = new Array[Triplets](leafCols.size)
-    kept.foreach(_._2.leaves.foreach(i => trips(i) = tripletsOf(leafCols(i))))
-    val readers = kept.map(f => buildReader(f._2, 0, 0, trips))
-    val names = kept.map(_._1.name)
     val n = meta.rowGroups(rg).numRows
     // loosest physical bound: bools pack 8 values per uncompressed byte
     require(n >= 0 && n <= 8L * math.max(16L, meta.rowGroups(rg).totalByteSize),
       s"row group claims $n rows in ${meta.rowGroups(rg).totalByteSize} bytes")
-    (0 until n.toInt).map(_ => PqGroupVal(names, readers.map(_.read())))
+    val leafCols = leafColumns(meta, rg)
+    val decoded = new Array[DecodedChunk](leafCols.size)
+    kept.foreach(_._2.leaves.foreach(i => decoded(i) = decode(leafCols(i))))
+    val cols = kept.map { case (_, s) => (s, GraftColumnVector.build(s, decoded, n.toInt)) }
+    val names = kept.map(_._1.name)
+    (0 until n.toInt).map(i => PqGroupVal(names, cols.map { case (s, v) => boxRow(s, v, i) }))
   }
 
-  /** Assembly reader tree — the reference's `Reader` combinators
-    * (`/root/reference/src/record/reader.rs:98-489`): each node stores the
-    * def/rep levels of its PARENT context; `read()` consumes one value,
-    * `advance()` consumes one slot when an ancestor is null/empty. */
-  private sealed trait RReader {
-    def hasNext: Boolean
-    def currentDef: Int
-    def currentRep: Int
-    def read(): Any
-    def advance(): Unit
-  }
-
-  private final class PrimReader(t: Triplets, convert: Any => Any) extends RReader {
-    private var i = 0
-    private var vi = 0
-    def hasNext: Boolean = i < t.slots
-    def currentDef: Int = t.defAt(i)
-    def currentRep: Int = t.repAt(i)
-    def read(): Any = {
-      val v = if (t.defAt(i) == t.maxDef) { val x = t.values(vi); vi += 1; convert(x) }
-        else null
-      i += 1
-      v
-    }
-    def advance(): Unit = { if (t.defAt(i) == t.maxDef) vi += 1; i += 1 }
-  }
-
-  private final class OptionReader(pdef: Int, child: RReader) extends RReader {
-    def hasNext: Boolean = child.hasNext
-    def currentDef: Int = child.currentDef
-    def currentRep: Int = child.currentRep
-    def read(): Any =
-      if (child.currentDef > pdef) child.read()
-      else { child.advance(); null }
-    def advance(): Unit = child.advance()
-  }
-
-  /** reference record/reader.rs:346-391 — loop one list instance. */
-  private final class RepeatedReader(pdef: Int, prep: Int, child: RReader)
-      extends RReader {
-    def hasNext: Boolean = child.hasNext
-    def currentDef: Int = child.currentDef
-    def currentRep: Int = child.currentRep
-    def read(): Any = {
-      val out = Vector.newBuilder[Any]
-      var done = false
-      while (!done) {
-        if (child.currentDef > pdef) out += child.read()
-        else { child.advance(); done = true }
-        if (!done && (!child.hasNext || child.currentRep <= prep)) done = true
+  /** Row `i` of `v`, the vector of shape `s`, boxed as [[readFileRows]]
+    * returns it. */
+  private def boxRow(s: Shape, v: GraftColumnVector, i: Int): Any =
+    if (v.isNullAt(i)) null
+    else s match {
+      case p: Prim => v.value(i) match {
+        case b: Array[Byte] if p.dt == StringType =>
+          new String(b, java.nio.charset.StandardCharsets.UTF_8)
+        case x => x
       }
-      out.result()
+      case g: Group => PqGroupVal(g.dt.asInstanceOf[StructType].fieldNames.toSeq,
+        g.fields.indices.map(k => boxRow(g.fields(k), v.getChild(k), i)))
+      case Repeated(_, _, _, _, Seq(e)) =>
+        v.entries(i).map(j => boxRow(e, v.getChild(0), j)).toVector
+      case Repeated(_, _, _, _, Seq(k, x)) =>
+        v.entries(i).map(j => (boxRow(k, v.getChild(0), j), boxRow(x, v.getChild(1), j))).toVector
+      case other => throw new IllegalArgumentException(s"no row form for $other")
     }
-    def advance(): Unit = child.advance()
-  }
-
-  /** reference record/reader.rs:393-444 — parallel key/value readers. */
-  private final class KeyValueReader(pdef: Int, prep: Int, kr: RReader,
-      vr: RReader) extends RReader {
-    def hasNext: Boolean = kr.hasNext
-    def currentDef: Int = kr.currentDef
-    def currentRep: Int = kr.currentRep
-    def read(): Any = {
-      val out = Vector.newBuilder[(Any, Any)]
-      var done = false
-      while (!done) {
-        if (kr.currentDef > pdef) { val k = kr.read(); val v = vr.read(); out += (k -> v) }
-        else { kr.advance(); vr.advance(); done = true }
-        if (!done && (!kr.hasNext || kr.currentRep <= prep)) done = true
-      }
-      out.result()
-    }
-    def advance(): Unit = { kr.advance(); vr.advance() }
-  }
-
-  private final class GroupReader(names: Seq[String], children: Seq[RReader])
-      extends RReader {
-    def hasNext: Boolean = children.head.hasNext
-    def currentDef: Int = children.head.currentDef
-    def currentRep: Int = children.head.currentRep
-    def read(): Any = PqGroupVal(names, children.map(_.read()))
-    def advance(): Unit = children.foreach(_.advance())
-  }
-
-  /** Build the reader for shape `s` in parent context (pdef, prep): the
-    * footer walk that types a field ([[ParquetSource.fields]]) also
-    * decides how its records assemble. */
-  private def buildReader(s: GraftColumnVector.Shape, pdef: Int, prep: Int,
-      trips: Array[Triplets]): RReader = {
-    import GraftColumnVector.{Group, Prim, Repeated}
-    val body = s match {
-      case Prim(dt, _, leaf) => new PrimReader(trips(leaf), if (dt != StringType) identity
-        else (v: Any) => new String(v.asInstanceOf[Array[Byte]], java.nio.charset.StandardCharsets.UTF_8))
-      case Group(st: StructType, d, fields) =>
-        new GroupReader(st.fieldNames.toSeq, fields.map(buildReader(_, d, prep, trips)))
-      case Repeated(_, d, entryDef, entryRep, Seq(e)) =>
-        new RepeatedReader(d, prep, buildReader(e, entryDef, entryRep, trips))
-      case Repeated(_, d, entryDef, entryRep, Seq(k, v)) => new KeyValueReader(d, prep,
-        buildReader(k, entryDef, entryRep, trips), buildReader(v, entryDef, entryRep, trips))
-      case other => throw new IllegalArgumentException(s"no record reader for $other")
-    }
-    if (s.defined > pdef) new OptionReader(pdef, body) else body
-  }
 
   // -------------------------------------------------------------- utilities
 

@@ -8,9 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Guard: Parquet data files are read in ONE way, columnar, and rep/def
   * levels become vectors in ONE place (`GraftColumnVector.build`), shared by
-  * the file scan and the `GC` chunk scan. A row reader over data files, a
-  * per-file flatness gate or a one-level nested-vector copy under the main
-  * sources is a second read path that can drift from the first. */
+  * the file scan, the `GC` chunk scan and the library's row API. A row
+  * reader over data files, a per-file flatness gate, a one-level
+  * nested-vector copy or a second record assembler under the main sources
+  * is a second read path that can drift from the first. */
 class SingleFileReaderSpec extends AnyFunSuite {
 
   private val main = Paths.get("src/main/scala")
@@ -49,6 +50,14 @@ class SingleFileReaderSpec extends AnyFunSuite {
     }
     assert(sites("def build(").count(_.startsWith(builder.toString)) == 1)
     val callers = files.filter(_._2.contains("GraftColumnVector.build(")).map(_._1.getFileName.toString)
-    assert(callers.sorted == Seq("ChunkScan.scala", "GraftParquetFormat.scala"), callers)
+    assert(callers.sorted ==
+      Seq("ChunkScan.scala", "GraftParquetFormat.scala", "ParquetFileIO.scala"), callers)
+  }
+
+  test("one record assembler: the row API boxes GraftColumnVector.build's vectors") {
+    Seq("RReader", "buildReader", "rowValues").foreach { name =>
+      val at = sites(name)
+      assert(at.isEmpty, s"$name is back:" + at.mkString("\n", "\n", ""))
+    }
   }
 }

@@ -119,6 +119,22 @@ class HardeningSpec extends AnyFunSuite {
     assert(e3.getMessage.contains("row count"))
   }
 
+  // ------------------------------------- forged Parquet footers
+
+  test("a trailer's footer length that does not fit the bytes fails with IllegalArgumentException") {
+    // PAR1, 8 filler bytes, the 4-byte LE footer length, PAR1
+    def file(footerLen: Int): Array[Byte] = {
+      val b = java.nio.ByteBuffer.allocate(20).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      b.put("PAR1".getBytes("US-ASCII")).put(new Array[Byte](8))
+        .putInt(footerLen).put("PAR1".getBytes("US-ASCII"))
+      b.array()
+    }
+    Seq(1000, -5, 0, Int.MaxValue).foreach { len =>
+      val e = intercept[IllegalArgumentException](ParquetFileReader.readFooter(file(len)))
+      assert(e.getMessage.contains(s"bad footer length $len"), e.getMessage)
+    }
+  }
+
   // ------------------------------------- forged Parquet page headers
 
   test("a page claiming an implausible uncompressed size fails before allocating") {

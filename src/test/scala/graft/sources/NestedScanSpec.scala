@@ -6,7 +6,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
@@ -214,17 +213,19 @@ class NestedScanSpec extends AnyFunSuite with BeforeAndAfterAll
       c.getMessage.contains("column bad")), e)
   }
 
+  /** `df` as the one Spark-written file `dir/name.parquet`. */
+  private def place(dir: String, df: DataFrame, name: String): Unit = {
+    Files.createDirectories(Paths.get(dir))
+    val src = sparkFile(s"$dir-$name", df)
+    Files.move(Paths.get(src), Paths.get(s"$dir/$name.parquet"),
+      StandardCopyOption.REPLACE_EXISTING)
+  }
+
   test("a directory of one flat and one nested file reads through one columnar scan") {
     val dir = s"$tmp/mixed"
-    Files.createDirectories(Paths.get(dir))
-    def place(df: DataFrame, name: String): Unit = {
-      val src = sparkFile(s"$tmp/mixed-$name", df)
-      Files.move(Paths.get(src), Paths.get(s"$dir/$name.parquet"),
-        StandardCopyOption.REPLACE_EXISTING)
-    }
     val base = spark.range(0, n).selectExpr("id", "concat('s', id) AS s")
-    place(base, "a-flat")
-    place(base.selectExpr("id + 100000 AS id", "s",
+    place(dir, base, "a-flat")
+    place(dir, base.selectExpr("id + 100000 AS id", "s",
       "IF(id % 4 = 0, NULL, sequence(0, id % 3)) AS arr"), "b-nested")
     sameAsNative("mixed id, s", dir)(_.select("id", "s"))
     assert(ours(dir).columns.toSeq == Seq("id", "s"))
@@ -233,6 +234,18 @@ class NestedScanSpec extends AnyFunSuite with BeforeAndAfterAll
       sorted(spark.read.parquet(dir).select("id", "s").collect().toSeq))
     assert(scans(all).forall(_.supportsColumnar))
     assert(all.count() == 2L * n)
+  }
+
+  test("a directory whose later file lacks a column reads nulls there, as Spark's native reader does") {
+    val dir = s"$tmp/missing"
+    val base = spark.range(0, n).selectExpr("id")
+    place(dir, base.selectExpr("id", "IF(id % 4 = 0, NULL, sequence(0, id % 3)) AS arr"), "a-nested")
+    place(dir, base.selectExpr("id + 100000 AS id"), "b-flat")
+    assert(ours(dir).columns.toSeq == Seq("id", "arr"))
+    sameAsNative("missing whole", dir)(identity)
+    sameAsNative("missing arr only", dir)(_.select("arr"))
+    sameAsNative("missing filtered", dir)(_.where(col("id") > 99990L))
+    assert(ours(dir).where(col("arr").isNull).count() == n + n / 4)
   }
 
   test("a partition-only projection and a count read columnar batches without vectors") {
@@ -254,17 +267,61 @@ class NestedScanSpec extends AnyFunSuite with BeforeAndAfterAll
     val schema = ours(dir).schema
     val factory = new GraftReaderFactory(schema)
     intercept[UnsupportedOperationException](factory.createReader(GraftFilePartition(path)))
-    // Spark's own row conversion: element by element, nulls checked first
-    val unsafe = UnsafeProjection.create(schema)
     val toRow = CatalystTypeConverters.createToScalaConverter(schema)
     val reader = factory.createColumnarReader(GraftFilePartition(path))
     val rows =
       try Iterator.continually(reader.next()).takeWhile(identity).flatMap { _ =>
-        reader.get().rowIterator().asScala.map(r =>
-          toRow(unsafe(r).copy()).asInstanceOf[Row])
+        reader.get().rowIterator().asScala.map(r => toRow(r.copy()).asInstanceOf[Row])
       }.toList
       finally reader.close()
     assert(sorted(rows) == sorted(spark.read.parquet(dir).collect().toSeq))
+  }
+
+  test("a null slot reads as its type's default, so Spark copies batch rows holding null elements") {
+    import org.apache.spark.sql.types._
+    import org.apache.spark.sql.vectorized.ColumnarBatch
+    import graft.core.{BytesVec, LongVec}
+    import GraftColumnVector.{Prim, Repeated}
+    // [1, null, 3], null, [], [null]: an optional list of optional bigint
+    val longs = ParquetFileReader.DecodedChunk(LongVec(Array(1L, 3L)),
+      Array(3, 2, 3, 0, 1, 2), Array(0, 1, 1, 0, 0, 0))
+    val arr = GraftColumnVector.build(
+      Repeated(ArrayType(LongType), 1, 2, 1, Seq(Prim(LongType, 3, 0))), _ => longs, 4)
+    // "a", null, null, "d": an optional string
+    val strs = ParquetFileReader.DecodedChunk(
+      BytesVec("ad".getBytes("UTF-8"), Array(0, 1, 2)), Array(1, 0, 0, 1), null)
+    val str = GraftColumnVector.build(Prim(StringType, 1, 0), _ => strs, 4)
+    val el = arr.getChild(0)
+    assert(el.isNullAt(1) && !el.isNullAt(2) && el.getLong(1) == 0L && el.getLong(2) == 3L)
+    assert(str.isNullAt(1) && str.getUTF8String(1) == null && str.getBinary(2) == null)
+    val schema = StructType(Seq(StructField("a", ArrayType(LongType)), StructField("s", StringType)))
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    val batch = new ColumnarBatch(Array(arr, str), 4)
+    assert((0 until 4).map(i => toRow(batch.getRow(i).copy())) == Seq(
+      Row(Seq(1L, null, 3L), "a"), Row(null, null), Row(Seq(), null), Row(Seq(null), "d")))
+  }
+
+  test("ChunkTool parquet-read prints our writer's LIST, MAP and STRUCT rows, nulls included") {
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("arr", ArrayType(IntegerType)),
+      StructField("m", MapType(StringType, LongType)),
+      StructField("st", StructType(Seq(StructField("s", StringType), StructField("n", IntegerType))))))
+    val rows = Seq(
+      Row(0L, Seq(1, null, 3), Map[String, java.lang.Long]("a" -> 1L, "b" -> null), Row("x", 7)),
+      Row(1L, null, Map.empty[String, Long], Row(null, null)),
+      Row(2L, Seq.empty[Int], null, null),
+      Row(3L, Seq(4), Map("c" -> 3L), Row("y", 8)))
+    val path = s"$tmp/tool.parquet"
+    ParquetFileWriter.writeFile(path, schema, rows.iterator)
+    val out = new java.io.ByteArrayOutputStream
+    Console.withOut(out)(graft.ChunkTool.main(Array("parquet-read", path, "3")))
+    assert(out.toString("UTF-8").linesIterator.toSeq == Seq(
+      "id\tarr\tm\tst",
+      "0\t[1, null, 3]\t[a -> 1, b -> null]\t{s: x, n: 7}",
+      "1\tnull\t[]\t{s: null, n: null}",
+      "2\t[]\tnull\tnull"))
   }
 
   test("runtime (DPP) join-key bounds reach the tasks and narrow a row group to its pages") {
