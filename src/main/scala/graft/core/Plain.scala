@@ -56,7 +56,23 @@ object PlainCodec {
   def decode(physicalType: Int, buf: Array[Byte], numValues: Int): ColVec =
     decodeSlice(physicalType, buf, 0, buf.length, numValues)
 
+  /** Fixed value width of a physical type (0 for booleans and byte arrays). */
+  private def width(physicalType: Int): Int = physicalType match {
+    case PhysicalType.Int32 | PhysicalType.Float => 4
+    case PhysicalType.Int64 | PhysicalType.Double => 8
+    case _ => 0
+  }
+
   def decodeSlice(physicalType: Int, buf: Array[Byte], off: Int, len: Int,
+      numValues: Int): ColVec = {
+    require(numValues >= 0 && off >= 0 && len >= 0 && off.toLong + len <= buf.length,
+      s"PLAIN: $numValues values in [$off, $off + $len) of a ${buf.length}-byte buffer")
+    require(numValues.toLong * width(physicalType) <= len,
+      s"PLAIN: $numValues values of ${width(physicalType)} bytes need more than $len bytes")
+    decodeChecked(physicalType, buf, off, len, numValues)
+  }
+
+  private def decodeChecked(physicalType: Int, buf: Array[Byte], off: Int, len: Int,
       numValues: Int): ColVec = physicalType match {
     case PhysicalType.Bool =>
       require((numValues + 7L) / 8 <= len,
@@ -100,7 +116,10 @@ object PlainCodec {
       var total = 0
       var i = 0
       while (i < numValues) {
+        require(bb.remaining >= 4, s"PLAIN byte-array page truncated at value $i")
         val n = bb.getInt()
+        require(n >= 0 && n <= bb.remaining,
+          s"PLAIN byte-array value $i claims $n bytes past page end")
         offsets(i) = total
         total += n
         bb.position(bb.position() + n)

@@ -50,7 +50,7 @@ object ChunkScan {
   def dataFrame(chunks: Dataset[ChunkRow], schema: StructType,
       range: Option[ChunkRange]): DataFrame = {
     val spark = chunks.sparkSession
-    ChunkScanStrategy.install(spark)
+    GraftStrategies.install(spark)
     val rows = chunks.queryExecution.analyzed
     val child = Project(Fields.map(f => rows.output.find(_.name == f).getOrElse(
       throw new IllegalArgumentException(s"chunk table has no $f column"))), rows)
@@ -74,12 +74,6 @@ object ChunkScanStrategy extends SparkStrategy {
       (if (projects.map(_.toAttribute) == cols) filtered
        else ProjectExec(projects, filtered)) :: Nil
     case _ => Nil
-  }
-
-  /** Add the strategy to `spark` once (Pathling's `SqlStrategy.setup` pattern). */
-  def install(spark: SparkSession): Unit = synchronized {
-    val s = spark.experimental
-    if (!s.extraStrategies.contains(this)) s.extraStrategies = this +: s.extraStrategies
   }
 }
 

@@ -342,27 +342,25 @@ object EncodeJob {
     val metaPath = s"$outDir/_encode_meta"
     val metaNow = routingMeta(numPartitions, partitionKeys, sortKeys,
       blockCodec, df.schema.fieldNames.toSeq)
-    if (io.status(metaPath).isDefined) {
-      val prev = new String(io.readAll(metaPath),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-      require(prev == metaNow,
+    TaskCommit.readMarker(metaPath) match {
+      case Some(prev) => require(prev == metaNow,
         s"resume config mismatch for $outDir\n  checkpoint: $prev\n" +
           s"  this run:   $metaNow\nRe-run with the checkpoint's settings," +
           " or encode into a fresh outDir")
-    } else {
-      // no marker + existing lineage = a checkpoint from before routing
-      // markers existed (or a hand-pruned dir). Proceeding would PIN this
-      // run's config as the checkpoint's truth with no way to know it
-      // matches — the silent-mask bug with extra steps — so refuse and
-      // tell the user how to assert the original settings themselves.
-      require(!io.list(lineageDir).exists(e =>
-          !e.isDir && e.name.startsWith("part-") && e.name.endsWith(".parquet")),
-        s"$outDir has lineage rows but no _encode_meta routing marker " +
-          "(checkpoint predates the marker, or it was deleted). If this " +
-          s"run's settings match the original encode, create the marker " +
-          s"yourself:\n  echo '$metaNow' > $metaPath\nOtherwise encode " +
-          "into a fresh outDir")
-      writeRoutingMarker(outDir, metaNow)
+      case None =>
+        // no marker + existing lineage = a checkpoint from before routing
+        // markers existed (or a hand-pruned dir). Proceeding would PIN this
+        // run's config as the checkpoint's truth with no way to know it
+        // matches — the silent-mask bug with extra steps — so refuse and
+        // tell the user how to assert the original settings themselves.
+        require(!io.list(lineageDir).exists(e =>
+            !e.isDir && e.name.startsWith("part-") && e.name.endsWith(".parquet")),
+          s"$outDir has lineage rows but no _encode_meta routing marker " +
+            "(checkpoint predates the marker, or it was deleted). If this " +
+            s"run's settings match the original encode, create the marker " +
+            s"yourself:\n  echo '$metaNow' > $metaPath\nOtherwise encode " +
+            "into a fresh outDir")
+        writeRoutingMarker(outDir, metaNow)
     }
     TaskCommit.runResumable[ChunkRow, LineageRow](spark, chunksDir, lineageDir)(
       done => encode(df, numPartitions, partitionKeys, sortKeys,
@@ -397,15 +395,9 @@ object EncodeJob {
       s" sortKeys=${sortKeys.mkString(",")} blockCodec=$blockCodec" +
       s" columns=${columns.mkString(",")}"
 
-  /** Write (or overwrite) a checkpoint's routing marker through the commit
-    * protocol: a crash mid-write must not leave a truncated marker that
-    * blocks all future resumes of an otherwise healthy checkpoint. */
+  /** Write (or overwrite) a checkpoint's routing marker. */
   private[graft] def writeRoutingMarker(outDir: String, meta: String): Unit =
-    graft.sources.TaskCommit.write(s"$outDir/_encode_meta") { stage =>
-      val out = graft.sources.GraftIO.forPath(stage).create(stage)
-      try out.write(meta.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
+    graft.sources.TaskCommit.writeMarker(s"$outDir/_encode_meta", meta)
 
   private lazy val chunkSchema = Encoders.product[ChunkRow].schema
 

@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.types.{ArrayType, DataType, Decimal, MapType, StructType, TimestampType}
+import org.apache.spark.sql.types.{ArrayType, DataType, Decimal, MapType, StructField, StructType,
+  TimestampType}
 import org.apache.spark.sql.vectorized.{ColumnarArray, ColumnarMap, ColumnVector}
 
 import graft.core.{BoolVec, BytesVec, ColVec, DoubleVec, FloatVec, IntVec, LongVec}
@@ -138,27 +139,48 @@ object GraftColumnVector {
     /** The leaf indexes under the node, in order. */
     def leaves: Seq[Int] = this match {
       case p: Prim => Seq(p.leaf)
-      case g: Group => g.fields.flatMap(_.leaves)
+      case g: Group => g.fields.flatMap(_.leaves) match {
+        case Seq() => g.witness
+        case ls => ls
+      }
       case r: Repeated => r.children.flatMap(_.leaves)
+      case _: Missing => Nil
     }
   }
   /** A primitive held by leaf `leaf`; `defined` is the leaf's max def. */
   final case class Prim(dt: DataType, defined: Int, leaf: Int) extends Shape
-  /** A STRUCT: one child per field of `dt`, in its order. */
-  final case class Group(dt: DataType, defined: Int, fields: Seq[Shape]) extends Shape
+  /** A STRUCT: one child per field of `dt`, in its order. When none of
+    * them is in the file, the `witness` leaf is read for its levels alone. */
+  final case class Group(dt: DataType, defined: Int, fields: Seq[Shape],
+      witness: Seq[Int] = Nil) extends Shape
   /** A LIST (one child) or MAP (key, value): its repeated group holds an
     * entry at def level `entryDef` and starts one at rep level `entryRep`. */
   final case class Repeated(dt: DataType, defined: Int, entryDef: Int,
       entryRep: Int, children: Seq[Shape]) extends Shape
+  /** A field the file lacks: null at every position, as in Spark's reader. */
+  final case class Missing(dt: DataType) extends Shape {
+    def defined: Int = Int.MaxValue
+  }
+
+  /** The shape of field `f` in a file that lacks it; a read that requires
+    * the field fails, as Spark's does. */
+  def missing(f: StructField): Missing = {
+    require(f.nullable, s"the file has no field ${f.name}, which the read requires")
+    Missing(f.dataType)
+  }
 
   /** `s` narrowed to the type a scan asks for: a STRUCT keeps the fields
     * `dt` names, in `dt`'s order (Spark's nested column pruning), so only
-    * their leaves are read. */
+    * their leaves are read; a field the file lacks is [[Missing]]. */
   def project(s: Shape, dt: DataType): Shape = (s, dt) match {
     case (g: Group, st: StructType) =>
       val byName = g.dt.asInstanceOf[StructType].fieldNames.zip(g.fields).toMap
-      Group(st, g.defined, st.fields.toSeq.map(f => project(byName.getOrElse(f.name,
-        throw new IllegalArgumentException(s"${g.dt} has no field ${f.name}")), f.dataType)))
+      val fields = st.fields.toSeq.map(f =>
+        byName.get(f.name).fold[Shape](missing(f))(project(_, f.dataType)))
+      // a struct's own nulls come from its leaves, so one lacking every
+      // field asked for still reads one of the file's (as Spark's does)
+      Group(st, g.defined, fields,
+        if (fields.exists(_.leaves.nonEmpty)) Nil else g.leaves.take(1))
     case (r: Repeated, ArrayType(et, _)) if r.children.size == 1 =>
       r.copy(dt = dt, children = Seq(project(r.children.head, et)))
     case (r: Repeated, MapType(kt, vt, _)) if r.children.size == 2 =>
@@ -171,11 +193,8 @@ object GraftColumnVector {
     * (indexed by [[Prim.leaf]]; only the shape's own entries are read).
     * Levels that disagree with the values, the row count or each other
     * fail with an IllegalArgumentException. */
-  def build(s: Shape, leaves: Int => DecodedChunk, rows: Int): GraftColumnVector = {
-    val (v, n) = node(s, leaves, 0, 0)
-    require(n == rows, s"${s.dt} levels hold $n rows, expected $rows")
-    v
-  }
+  def build(s: Shape, leaves: Int => DecodedChunk, rows: Int): GraftColumnVector =
+    children(Seq(s), leaves, 0, 0, rows).head
 
   /** Node `s` over the positions of its nearest repeated ancestor: the
     * slots at rep <= `rep` and def >= `entry` (every rep 0 slot at top
@@ -228,17 +247,32 @@ object GraftColumnVector {
         children(g.fields, leaves, entry, rep, pos))
       case r: Repeated => new GraftColumnVector(r.dt, null, m, java.util.Arrays.copyOf(offsets, pos + 1),
         children(r.children, leaves, entryDef, entryRep, entries))
+      case m: Missing => throw new IllegalStateException(s"no levels for a missing ${m.dt}")
     }, pos)
   }
 
   /** The child vectors of a node, each required to hold `count` positions. */
   private def children(kids: Seq[Shape], leaves: Int => DecodedChunk,
       entry: Int, rep: Int, count: Int): Array[GraftColumnVector] =
-    kids.map { k =>
-      val (v, n) = node(k, leaves, entry, rep)
-      require(n == count, s"${k.dt} levels hold $n positions, expected $count")
-      v
+    kids.map {
+      case m: Missing => nulls(m.dt, count)
+      case k =>
+        val (v, n) = node(k, leaves, entry, rep)
+        require(n == count, s"${k.dt} levels hold $n positions, expected $count")
+        v
     }.toArray
+
+  /** A vector of `count` nulls; a STRUCT's children share its positions,
+    * a LIST's or MAP's hold no entries. */
+  private def nulls(dt: DataType, count: Int): GraftColumnVector = {
+    val kids = dt match {
+      case st: StructType => st.fields.map(f => nulls(f.dataType, count))
+      case ArrayType(et, _) => Array(nulls(et, 0))
+      case MapType(kt, vt, _) => Array(nulls(kt, 0), nulls(vt, 0))
+      case _ => null
+    }
+    new GraftColumnVector(dt, null, Array.fill(count)(-1), new Array[Int](count + 1), kids)
+  }
 
   /** rowId -> value index (-1 = null); null (identity) when no nulls. */
   private def slots(defs: Array[Int], maxDef: Int, values: Int): Array[Int] =

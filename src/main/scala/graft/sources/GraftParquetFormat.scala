@@ -4,6 +4,7 @@ import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -20,6 +21,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.ColumnVector
 
 import graft.core.{IntVec, LongVec}
+import graft.operators.GraftStrategies
 
 /** DataSource V2 front-end for [[ParquetSource]]:
   * `spark.read.format("graft.sources.GraftParquetFormat").load(dir)`.
@@ -53,9 +55,14 @@ class GraftParquetFormat extends TableProvider {
     StructType(base.fields ++ GraftParquetFormat.partitionFields(fps))
   }
 
+  /** Every read resolves its table here, with an inferred schema or a
+    * given one, so this is where the session gets the Graft strategies. */
   override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: JMap[String, String]): Table =
+      properties: JMap[String, String]): Table = {
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .foreach(GraftStrategies.install)
     new GraftParquetTable(properties.get("path"), schema)
+  }
 
   override def supportsExternalMetadata(): Boolean = true
 }
@@ -719,9 +726,10 @@ private[sources] object GraftFlatScan {
     def fetched(cm: PqColumnMeta): (Array[Byte], PqColumnMeta) =
       cache.getOrElseUpdate(cm.pathInSchema, fetch.fetch(cm))
     val byName = ParquetSource.fields(meta).map { case (f, s) => f.name -> s }.toMap
-    val shapes = fields.map(f => byName.get(f.name).map(GraftColumnVector.project(_, f.dataType)))
+    val shapes = fields.map(f => byName.get(f.name).fold[GraftColumnVector.Shape](
+      GraftColumnVector.missing(f))(GraftColumnVector.project(_, f.dataType)))
     val leaves = ParquetFileReader.leafColumns(meta, rg)
-    val used = shapes.flatten.flatMap(_.leaves)
+    val used = shapes.flatMap(_.leaves)
     val nRows = meta.rowGroups(rg).numRows
     var keep: Seq[(Long, Long)] = Seq((0L, nRows))
     // page row ranges passing `keepFn` for one filter column: from the
@@ -756,13 +764,7 @@ private[sources] object GraftFlatScan {
       val (b, rcm) = fetched(leaves(i).meta)
       decoded(i) = ParquetFileReader.decodeChunk(b, leaves(i).copy(meta = rcm), rowRanges)
     }
-    (fields.zip(shapes).map {
-      case (_, Some(s)) => GraftColumnVector.build(s, decoded, kept)
-      case (f, None) =>
-        val v = new OnHeapColumnVector(kept, f.dataType)
-        v.putNulls(0, kept)
-        v
-    }, kept)
+    (shapes.map(GraftColumnVector.build(_, decoded, kept): ColumnVector), kept)
   }
 }
 

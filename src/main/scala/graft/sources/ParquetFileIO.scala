@@ -62,6 +62,8 @@ object ParquetFileReader {
     val leaves = ArrayBuffer.empty[SchemaLeaf]
     var pos = 1
     def parse(pdef: Int, prep: Int): SchemaNode = {
+      require(pos < meta.schema.length,
+        s"schema: child counts claim more than ${meta.schema.length} elements")
       val se = meta.schema(pos)
       pos += 1
       val d = pdef + (if (se.repetition == 1 || se.repetition == 2) 1 else 0)
@@ -72,6 +74,7 @@ object ParquetFileReader {
         leaf
       } else SchemaGroup(se, (0 until se.numChildren).map(_ => parse(d, r)))
     }
+    require(meta.schema.nonEmpty, "schema: no root element")
     val root = meta.schema.head
     val children = (0 until root.numChildren).map(_ => parse(0, 0))
     (children, leaves.toIndexedSeq)

@@ -890,6 +890,10 @@ object ParquetSink {
     * sidecar `_lineage/part-<pid>.parquet` — so a killed job loses only
     * the partitions in flight. A lineage read that fails while sidecars
     * exist refuses the run instead of rewriting over the checkpoint.
+    * A partition id names the same rows only under the same input
+    * partitioning, so the first run pins the input's partition count in
+    * `_lineage/_write_meta` and a resume at another count is refused (a
+    * checkpoint from before the marker adopts this run's count).
     * Returns the full `_lineage` table. */
   def writeResumable(df: DataFrame, dir: String, codec: Int = PqCodec.Snappy,
       rowGroupRows: Int = 1 << 16, pageVersion: Int = 1,
@@ -900,8 +904,20 @@ object ParquetSink {
     if (!props.isEmpty) props.resolveFor(df.schema, codec)
     val lineageDir = s"$dir/_lineage"
     val schema = df.schema
+    val rows = df.queryExecution.toRdd
+    val metaPath = s"$lineageDir/_write_meta"
+    val metaNow = s"v1 partitions=${rows.getNumPartitions}"
+    TaskCommit.readMarker(metaPath) match {
+      case Some(prev) => require(prev == metaNow,
+        s"resume partitioning mismatch for $dir\n  checkpoint: $prev\n" +
+          s"  this run:   $metaNow\nResume with the checkpoint's input " +
+          "partitioning, or write into a fresh dir")
+      case None =>
+        GraftIO.forPath(lineageDir).mkdirs(lineageDir)
+        TaskCommit.writeMarker(metaPath, metaNow)
+    }
     TaskCommit.runResumable[InternalRow, FileLineageRow](spark, dir,
-        lineageDir)(_ => df.queryExecution.toRdd) { (pid, it, stage) =>
+        lineageDir)(_ => rows) { (pid, it, stage) =>
       val w = new ParquetFileWriter.IncrementalFileWriter(stage, schema,
         rowGroupRows, codec, pageVersion, encPolicy = encPolicy,
         props = props)

@@ -36,7 +36,13 @@ object ThriftCompact {
   val TStruct = 12
 
   final class Reader(val buf: Array[Byte], var pos: Int) {
-    def u8(): Int = { val b = buf(pos) & 0xFF; pos += 1; b }
+    def u8(): Int = {
+      require(pos >= 0 && pos < buf.length,
+        s"thrift: read at $pos past the end of a ${buf.length}-byte buffer")
+      val b = buf(pos) & 0xFF
+      pos += 1
+      b
+    }
 
     def varint(): Long = {
       var shift = 0
@@ -480,7 +486,10 @@ object ParquetMeta {
         last = id
       }
     }
-    if (meta != null && (oiOff >= 0 || ciOff >= 0))
+    // the reader needs every chunk's ColumnMetaData (an encrypted column
+    // carries it elsewhere, which this reader does not support)
+    require(meta != null, "thrift ColumnChunk without meta_data")
+    if (oiOff >= 0 || ciOff >= 0)
       meta.copy(offsetIndexOffset = oiOff, offsetIndexLength = oiLen,
         columnIndexOffset = ciOff, columnIndexLength = ciLen)
     else meta

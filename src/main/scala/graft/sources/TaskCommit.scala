@@ -81,6 +81,23 @@ object TaskCommit {
         Set.empty
     }
 
+  /** The text of the marker file at `path`, if there is one. */
+  def readMarker(path: String): Option[String] = {
+    val io = GraftIO.forPath(path)
+    io.status(path).map(_ =>
+      new String(io.readAll(path), java.nio.charset.StandardCharsets.UTF_8).trim)
+  }
+
+  /** Write (or overwrite) the marker file at `path` through a stage file:
+    * a crash mid-write must not leave a truncated marker that blocks every
+    * later resume of a healthy checkpoint. */
+  def writeMarker(path: String, text: String): Unit =
+    write(path) { stage =>
+      val out = GraftIO.forPath(stage).create(stage)
+      try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+    }
+
   /** Commit `rows` (case-class instances of `schema`) as the lineage
     * sidecar at `path`, zstd pages. */
   def writeSidecar(path: String, schema: StructType, rows: Seq[Product]): Unit =

@@ -2580,6 +2580,31 @@ class SparkE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.read.parquet(dir).count() == 4000L)
   }
 
+  test("writeResumable refuses a resume whose input is partitioned differently") {
+    import graft.sources.ParquetSink
+    val dir = java.nio.file.Files.createTempDirectory("graft-wrparts").toString
+    def input(parts: Int) = spark.range(0L, 10000L, 1L, parts)
+      .select(col("id"), (col("id") * 7919L % 1009L).as("k"))
+    ParquetSink.writeResumable(input(4), dir)
+    // a kill lost one partition's file and sidecar
+    Seq(dir, s"$dir/_lineage").foreach(d =>
+      java.nio.file.Files.delete(java.nio.file.Paths.get(s"$d/part-00002.parquet")))
+    // partition ids of an 8-way split name other rows: resuming would
+    // duplicate some and drop others
+    val e = intercept[IllegalArgumentException](ParquetSink.writeResumable(input(8), dir))
+    assert(e.getMessage.contains("partitioning mismatch"), e.getMessage)
+    assert(spark.read.parquet(dir).count() == 7500L)
+    // the same partitioning resumes, whole
+    ParquetSink.writeResumable(input(4), dir)
+    val back = spark.read.parquet(dir)
+    assert(back.count() == 10000L && back.distinct().count() == 10000L)
+    // a checkpoint from before the marker resumes and gains one
+    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$dir/_lineage/_write_meta"))
+    ParquetSink.writeResumable(input(4), dir)
+    assert(graft.sources.TaskCommit.readMarker(s"$dir/_lineage/_write_meta")
+      .contains("v1 partitions=4"))
+  }
+
   test("streaming parquet replay clears stale files under a file: URI outDir") {
     val out = java.nio.file.Files.createTempDirectory("graft-streamuri").toString
     val stale = new java.io.File(s"$out/batch=0/part-00007.parquet")

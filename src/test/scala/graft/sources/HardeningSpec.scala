@@ -135,6 +135,64 @@ class HardeningSpec extends AnyFunSuite {
     }
   }
 
+  /** A footer of one required INT64 leaf under a root that claims
+    * `rootChildren` children, and one row group whose column chunk has
+    * no ColumnMetaData. */
+  private def forgedFooter(rootChildren: Int): Array[Byte] = {
+    import ThriftCompact._
+    val w = new Writer
+    w.i32Field(1, 0, 1)
+    w.fieldHeader(2, TList, 1)
+    w.listHeader(TStruct, 2)
+    w.fieldHeader(4, TBinary, 0); w.string("schema"); w.i32Field(5, 4, rootChildren); w.stop()
+    w.i32Field(1, 0, PqType.Int64); w.i32Field(3, 1, 0)
+    w.fieldHeader(4, TBinary, 3); w.string("a"); w.stop()
+    w.i64Field(3, 2, 1L)
+    w.fieldHeader(4, TList, 3)
+    w.listHeader(TStruct, 1)
+    w.fieldHeader(1, TList, 0)
+    w.listHeader(TStruct, 1)
+    w.i64Field(2, 0, 4L); w.stop() // ColumnChunk { 2: file_offset }
+    w.i64Field(2, 1, 8L); w.i64Field(3, 2, 1L); w.stop()
+    w.stop()
+    w.result()
+  }
+
+  test("a footer cut short fails in the thrift reader with IllegalArgumentException") {
+    val bytes = forgedFooter(1)
+    Seq(1, bytes.length / 2, bytes.length - 3).foreach { k =>
+      val e = intercept[IllegalArgumentException](ParquetMeta.parseFileMeta(bytes.take(k), 0))
+      assert(e.getMessage.contains("thrift"), e.getMessage)
+    }
+  }
+
+  test("a column chunk without metadata fails with IllegalArgumentException") {
+    val e = intercept[IllegalArgumentException](
+      ParquetFileReader.leafColumns(ParquetMeta.parseFileMeta(forgedFooter(1), 0), 0))
+    assert(e.getMessage.contains("meta_data"), e.getMessage)
+  }
+
+  test("schema child counts past the element list fail with IllegalArgumentException") {
+    val meta = PqFileMeta(1, Seq(PqSchemaElement("schema", numChildren = 2),
+      PqSchemaElement("a", typ = PqType.Int64, repetition = 0)), 0L, Nil, "")
+    val e = intercept[IllegalArgumentException](ParquetFileReader.schemaTree(meta))
+    assert(e.getMessage.contains("schema"), e.getMessage)
+    intercept[IllegalArgumentException](ParquetFileReader.schemaTree(meta.copy(schema = Nil)))
+  }
+
+  test("PLAIN values past their slice fail with IllegalArgumentException") {
+    Seq(PhysicalType.Int32 -> 4, PhysicalType.Int64 -> 8, PhysicalType.Float -> 4,
+        PhysicalType.Double -> 8).foreach { case (t, w) =>
+      val e = intercept[IllegalArgumentException](PlainCodec.decodeSlice(t, new Array[Byte](3 * w), 0, 3 * w - 1, 3))
+      assert(e.getMessage.contains("PLAIN"), e.getMessage)
+    }
+    // a length prefix past the page end
+    val page = java.nio.ByteBuffer.allocate(8).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .putInt(2).put("ab".getBytes("US-ASCII")).put(Array[Byte](9, 0)).array()
+    intercept[IllegalArgumentException](PlainCodec.decodeSlice(PhysicalType.Bytes, page, 0, 8, 2))
+    assert(PlainCodec.decodeSlice(PhysicalType.Bytes, page, 0, 6, 1).length == 1)
+  }
+
   // ------------------------------------- forged Parquet page headers
 
   test("a page claiming an implausible uncompressed size fails before allocating") {

@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -246,6 +247,34 @@ class NestedScanSpec extends AnyFunSuite with BeforeAndAfterAll
     sameAsNative("missing arr only", dir)(_.select("arr"))
     sameAsNative("missing filtered", dir)(_.where(col("id") > 99990L))
     assert(ours(dir).where(col("arr").isNull).count() == n + n / 4)
+  }
+
+  test("a STRUCT lacking a nested field in a later file reads nulls there, as Spark's native reader does") {
+    val dir = s"$tmp/missing-nested"
+    val base = spark.range(0, n).selectExpr("id")
+    place(dir, base.selectExpr("id",
+      "IF(id % 4 = 0, NULL, named_struct('a', id, 'b', IF(id % 5 = 0, NULL, concat('s', id)), " +
+        "'c', named_struct('x', id * 2, 'y', IF(id % 6 = 0, NULL, array(id))))) AS st"), "a-full")
+    place(dir, base.selectExpr("id + 100000 AS id",
+      "IF(id % 3 = 0, NULL, named_struct('a', id, 'c', named_struct('x', id * 3))) AS st"),
+      "b-lacking")
+    val schema = ours(dir).schema
+    val native = spark.read.schema(schema).parquet(dir)
+    Seq[DataFrame => DataFrame](identity, _.select("st.b"), _.select("st.c.y", "id"),
+        _.where(col("st.b").isNull).select("id")).foreach { q =>
+      assert(sorted(q(ours(dir)).collect().toSeq) == sorted(q(native).collect().toSeq),
+        q(ours(dir)).queryExecution.executedPlan)
+    }
+    assert(ours(dir).where(col("st.b").isNull && col("st").isNotNull).count() ==
+      (n - n / 3) + (n / 5 - n / 20))
+    // a field the read requires fails as Spark's reader does
+    val required = StructType(schema.fields.map(f => if (f.name != "st") f else
+      f.copy(dataType = StructType(f.dataType.asInstanceOf[StructType].fields.map(g =>
+        if (g.name == "b") g.copy(nullable = false) else g)))))
+    val e = intercept[Exception](spark.read.schema(required).format(GraftParquetFormat.Name)
+      .load(dir).select("st.b").collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage.contains("no field b, which the read requires")), e)
   }
 
   test("a partition-only projection and a count read columnar batches without vectors") {
